@@ -331,11 +331,41 @@ object StreamBench {
         ("rocksdb", () => run(Rocks)))))
     }
 
-    // shared staging for the fold-family subjects (fold/foldexp): the
-    // sharded doc fixture, its count, and the checkpointed corpus
-    // fingerprint frame are built ONCE even when both subjects run
+    // one timed pass of a fold-family subject: re-init the index to
+    // corpus-only BEFORE the timer starts (a pass must not probe a prior
+    // pass's folds; the init write is the pay-once ingest price OUTSIDE
+    // the timed window), then drive the gates' OWN per-batch step
+    // (StreamGateQueries.FoldStep: cadence, clock, admit-and-fold) over
+    // `stream`, so the bench can never price a shape the gates don't
+    // verify. Returns the seconds and the step (its policy counter).
+    import graft.operators.{Sampling, StandingIndex, TextOps}
+    import graft.queries.{LlmQueries, StreamGateQueries => SGQ}
+    def foldPass(
+        name: String, stream: DataFrame, corpus: DataFrame, keys: Seq[String],
+        clock: SGQ.Clock, cadence: SGQ.Cadence,
+        admit: (DataFrame, StandingIndex, Long, Long) => DataFrame): (Double, SGQ.FoldStep) = {
+      val ix = new StandingIndex(spark, name, 4, keys)
+      ix.init(corpus, maxEventMs = clock.corpusStamp)
+      val ck = Files.createTempDirectory(s"graft-$name-ck").toString
+      val step = new SGQ.FoldStep(spark, ix, clock, cadence, ck, name, admit)
+      val t0 = System.nanoTime()
+      stream.writeStream
+        .queryName(name)
+        .outputMode("append")
+        .trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", ck)
+        .foreachBatch { (batch: DataFrame, batchId: Long) => step(batch, batchId); () }
+        .start()
+        .awaitTermination()
+      ((System.nanoTime() - t0) / 1e9, step)
+    }
+    val admitFp: (DataFrame, StandingIndex, Long, Long) => DataFrame =
+      LlmQueries.admitAndFold(_, _, _, _)
+
+    // shared staging for the fold-family subjects (fold/foldexp/foldcmp):
+    // the sharded doc fixture, its count, and the checkpointed corpus
+    // fingerprint frame are built ONCE even when several subjects run
     lazy val foldFixture: (String, Long, DataFrame) = {
-      import graft.operators.{Sampling, TextOps}
       val docsPath = s"target/streambench_folddocs$shards"
       Tables.shardedDocuments(spark, base, shards)
         .repartition(32).write.mode("overwrite").parquet(docsPath)
@@ -350,84 +380,37 @@ object StreamBench {
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),
       StructField("n_chars", LongType)))
+    // the fixture's 32 files as a fingerprinted doc stream
+    def fpStream(filesPerTrigger: Int): DataFrame =
+      spark.readStream.schema(foldDocsSchema)
+        .option("maxFilesPerTrigger", filesPerTrigger.toString)
+        .parquet(foldFixture._1)
+        .select($"doc_id",
+          TextOps.bagFingerprint(TextOps.normText($"text")).as("fingerprint"))
 
     if (subjects("fold")) {
-      // continuous ingest with per-batch index folds (q91's shape).
-      // Each pass re-inits the index to corpus-only BEFORE its timer
-      // starts (a pass must not probe a prior pass's folds; the init
-      // write is OUTSIDE the timed window, the pay-once ingest price) —
-      // the timed run measures fingerprint + segmented probe + the
-      // per-batch fold publications only.
-      import graft.operators.{StandingIndex, TextOps}
-      val (docsPath, rows, corpusFp) = foldFixture
-      val docsSchema = foldDocsSchema
-      def run(): Double = {
-        val ix = new StandingIndex(spark, "sbfold", 4, Seq("fingerprint"))
-        ix.init(corpusFp)
-        val ck = Files.createTempDirectory("graft-sbfold-ck").toString
-        val t0 = System.nanoTime()
-        val q = spark.readStream.schema(docsSchema)
-          .option("maxFilesPerTrigger", "8") // 32 fixture files → 4 batches
-          .parquet(docsPath)
-          .select($"doc_id",
-            TextOps.bagFingerprint(TextOps.normText($"text")).as("fingerprint"))
-          .writeStream
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ck)
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            // the gate's exact per-batch spelling — shared helper, so the
-            // bench can never measure a shape the gate doesn't verify
-            graft.queries.LlmQueries.admitAndFold(batch, ix, batchId)
-            ()
-          }
-          .start()
-        q.awaitTermination()
-        (System.nanoTime() - t0) / 1e9
-      }
-      jsonLine("stream_fold", rows, measure(Seq(("fold", () => run()))))
+      // continuous ingest with per-batch index folds (q91's shape): the
+      // timed run measures fingerprint + segmented probe + the per-batch
+      // fold publications only
+      val (_, rows, corpusFp) = foldFixture
+      jsonLine("stream_fold", rows, measure(Seq(("fold", () =>
+        foldPass("sbfold", fpStream(8), corpusFp, Seq("fingerprint"), // 4 batches
+          SGQ.Clock.Never, SGQ.Cadence.Never, admitFp)._1))))
     }
 
     if (subjects("foldexp")) {
       // `fold` with a dedup HORIZON (q98's shape): each batch first
-      // expires segments stamped behind batchId − 2, then runs the SAME
-      // admitAndFold helper with the fold stamped at the batch position
-      // — the measured delta vs the `fold` subject is the per-batch
-      // price of the horizon (an expire = one pointer read, plus a
-      // retire-commit and a reclaim drop on the batches where a segment
-      // crosses the horizon; index state stays O(horizon × batch)).
-      // The corpus is stamped pre-batch-0, exactly the gate's clock.
-      import graft.operators.{StandingIndex, TextOps}
-      val (docsPath, rows, corpusFp) = foldFixture
-      val docsSchema = foldDocsSchema
-      def run(): Double = {
-        val ix = new StandingIndex(spark, "sbfoldexp", 4, Seq("fingerprint"))
-        ix.init(corpusFp, maxEventMs = -1L)
-        val ck = Files.createTempDirectory("graft-sbfoldexp-ck").toString
-        val t0 = System.nanoTime()
-        val q = spark.readStream.schema(docsSchema)
-          .option("maxFilesPerTrigger", "8") // 32 fixture files → 4 batches
-          .parquet(docsPath)
-          .select($"doc_id",
-            TextOps.bagFingerprint(TextOps.normText($"text")).as("fingerprint"))
-          .writeStream
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ck)
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            // the q98 gate's exact per-batch spelling: horizon first,
-            // then the shared probe + stamped fold
-            ix.expire(expireBeforeMs =
-              batchId - graft.queries.StreamGateQueries.ExpiryHorizon)
-            graft.queries.LlmQueries.admitAndFold(batch, ix, batchId,
-              maxEventMs = batchId)
-            ()
-          }
-          .start()
-        q.awaitTermination()
-        (System.nanoTime() - t0) / 1e9
-      }
-      jsonLine("stream_foldexp", rows, measure(Seq(("foldexp", () => run()))))
+      // expires segments stamped behind batchId − 2, then folds stamped
+      // at the batch position — the measured delta vs the `fold` subject
+      // is the per-batch price of the horizon (an expire = one pointer
+      // read, plus a retire-commit and a reclaim drop on the batches
+      // where a segment crosses the horizon; index state stays
+      // O(horizon × batch)). The corpus is stamped pre-batch-0, exactly
+      // the gate's clock.
+      val (_, rows, corpusFp) = foldFixture
+      jsonLine("stream_foldexp", rows, measure(Seq(("foldexp", () =>
+        foldPass("sbfoldexp", fpStream(8), corpusFp, Seq("fingerprint"),
+          SGQ.Clock.BatchHorizon, SGQ.Cadence.Never, admitFp)._1))))
     }
 
     if (subjects("foldcmp")) {
@@ -438,44 +421,18 @@ object StreamBench {
       // asserted, the gate's non-vacuity fence), and what it buys is
       // the bounded probe fan-out: the no-policy arm's last batch
       // probes 16 strictly-earlier segments, the policy arm never more
-      // than k. Both arms drive the gate's exact per-batch helper
-      // (admitAndFold), so the bench can never price a shape the q111
-      // gate doesn't verify.
-      import graft.operators.{StandingIndex, TextOps}
-      val (docsPath, rows, corpusFp) = foldFixture
-      val docsSchema = foldDocsSchema
-      def run(policy: Option[Int], tag: String): Double = {
-        val ix = new StandingIndex(spark, s"sbfoldcmp$tag", 4, Seq("fingerprint"))
-        ix.init(corpusFp)
-        val ck = Files.createTempDirectory("graft-sbfoldcmp-ck").toString
-        val fired = new java.util.concurrent.atomic.AtomicInteger(0)
-        val t0 = System.nanoTime()
-        val q = spark.readStream.schema(docsSchema)
-          .option("maxFilesPerTrigger", "2") // 32 fixture files → 16 batches
-          .parquet(docsPath)
-          .select($"doc_id",
-            TextOps.bagFingerprint(TextOps.normText($"text")).as("fingerprint"))
-          .writeStream
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ck)
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            policy.foreach { k =>
-              if (ix.compactIfOver(k, coverAtMost = batchId)) fired.incrementAndGet()
-            }
-            graft.queries.LlmQueries.admitAndFold(batch, ix, batchId)
-            ()
-          }
-          .start()
-        q.awaitTermination()
-        val secs = (System.nanoTime() - t0) / 1e9
-        policy.foreach { _ => require(fired.get >= 2,
-          s"foldcmp policy arm must fire >= 2 compactions, got ${fired.get}") }
+      // than k.
+      val (_, rows, corpusFp) = foldFixture
+      def run(cadence: SGQ.Cadence, tag: String): Double = {
+        val (secs, step) = foldPass(s"sbfoldcmp$tag", fpStream(2), // 16 batches
+          corpusFp, Seq("fingerprint"), SGQ.Clock.Never, cadence, admitFp)
+        if (cadence != SGQ.Cadence.Never) require(step.policyFired.get >= 2,
+          s"foldcmp policy arm must fire >= 2 compactions, got ${step.policyFired.get}")
         secs
       }
       jsonLine("stream_foldcmp", rows, measure(Seq(
-        ("nopolicy", () => run(None, "np")),
-        ("policy", () => run(Some(4), "p")))))
+        ("nopolicy", () => run(SGQ.Cadence.Never, "np")),
+        ("policy", () => run(SGQ.Cadence.Policy(4), "p")))))
     }
 
     if (subjects("wmfold")) {
@@ -493,8 +450,6 @@ object StreamBench {
       //     (plannedWatermarkMs: lastProgress read + tmp+ATOMIC_MOVE
       //     record), the max-event aggregate, expiry at
       //     committedWatermark − Hms, fold stamped at the batch max.
-      import graft.operators.{Sampling, StandingIndex, TextOps}
-      import graft.queries.{LlmQueries, StreamGateQueries => SGQ}
       val nSlices = 4
       // the GATE's staging discipline at bench scale: hash-group slices,
       // wmEventTs geometry, one file per slice with ascending mod times
@@ -517,62 +472,27 @@ object StreamBench {
       val stagedDir = stagedP.toString
       val rows = spark.read.parquet(stagedDir).count()
       val corpusFp = Tables.documents(spark, base)
-        .filter(graft.operators.Sampling.uniform01($"doc_id") >= 0.3)
+        .filter(Sampling.uniform01($"doc_id") >= 0.3)
         .select(TextOps.bagFingerprint(TextOps.normText($"text")).as("fingerprint"))
         .localCheckpoint()
       val wmDocsSchema = StructType(Seq(
         StructField("doc_id", LongType), StructField("text", StringType),
         StructField("event_ts", TimestampType)))
-      def run(wmClock: Boolean): Double = {
-        val tag = if (wmClock) "wm" else "pos"
-        val ix = new StandingIndex(spark, s"sbwm$tag", 4, Seq("fingerprint"))
-        ix.init(corpusFp, maxEventMs =
-          if (wmClock) SGQ.WmT0 - SGQ.WmStepMs else -1L)
-        val ck = Files.createTempDirectory(s"graft-sbwm$tag-ck").toString
-        val qn = s"sbwm${tag}_q"
-        val t0 = System.nanoTime()
+      def run(clock: SGQ.Clock, tag: String): Double = {
         val read = spark.readStream.schema(wmDocsSchema)
           .option("maxFilesPerTrigger", "1")
           .parquet(stagedDir)
-        val incoming =
-          if (!wmClock)
-            read.select($"doc_id",
-              TextOps.bagFingerprint(TextOps.normText($"text")).as("fingerprint"))
-          else read
-            .select($"doc_id",
-              TextOps.bagFingerprint(TextOps.normText($"text")).as("fingerprint"),
-              $"event_ts")
+        val fp = TextOps.bagFingerprint(TextOps.normText($"text")).as("fingerprint")
+        val stream =
+          if (clock != SGQ.Clock.Watermark) read.select($"doc_id", fp)
+          else read.select($"doc_id", fp, $"event_ts")
             .withWatermark("event_ts", s"${SGQ.WmDelayMs / 1000} seconds")
-        val q = incoming.writeStream
-          .queryName(qn)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ck)
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            if (!wmClock) {
-              // q98's exact per-batch cycle
-              ix.expire(expireBeforeMs = batchId - SGQ.ExpiryHorizon)
-              LlmQueries.admitAndFold(batch, ix, batchId, maxEventMs = batchId)
-            } else {
-              // q108/q115's exact per-batch cycle — the gates' OWN
-              // wmClockStep (checkpoint once + recorded planning
-              // watermark + expiry + max-event stamp), so the bench
-              // can never price a shape the gates don't verify
-              val (src, stampMs) = SGQ.wmClockStep(spark, ck, qn, batchId, ix, batch)
-              stampMs.foreach { stamp =>
-                LlmQueries.admitAndFold(src.select($"doc_id", $"fingerprint"),
-                  ix, batchId, maxEventMs = stamp)
-              }
-            }
-            ()
-          }
-          .start()
-        q.awaitTermination()
-        (System.nanoTime() - t0) / 1e9
+        foldPass(s"sbwm$tag", stream, corpusFp, Seq("fingerprint"), clock,
+          SGQ.Cadence.Never, admitFp)._1
       }
       jsonLine("stream_wmfold", rows, measure(Seq(
-        ("posclock", () => run(wmClock = false)),
-        ("wmclock", () => run(wmClock = true)))))
+        ("posclock", () => run(SGQ.Clock.BatchHorizon, "pos")),
+        ("wmclock", () => run(SGQ.Clock.Watermark, "wm")))))
     }
 
     if (subjects("neardup")) {
@@ -581,11 +501,8 @@ object StreamBench {
       // frame serves probe and fold, admitByBandFrame's law), probe the
       // standing band index's strictly-earlier segments, exact-confirm
       // candidates against the shingle doc store, fold the admitted band
-      // keys. Index init + doc-store shingling are the pay-once ingest
-      // price OUTSIDE the timed window; each pass re-inits to
-      // corpus-only. Stateless, like `fold`.
-      import graft.operators.{Sampling, StandingIndex}
-      import graft.queries.LlmQueries
+      // keys. Doc-store shingling is the pay-once ingest price OUTSIDE
+      // the timed window. Stateless, like `fold`.
       val docsPath = s"target/streambench_nddocs$shards"
       Tables.shardedDocuments(spark, base, shards)
         .repartition(32).write.mode("overwrite").parquet(docsPath)
@@ -598,33 +515,13 @@ object StreamBench {
           LlmQueries.shingleDocs(Tables.documents(spark, base)
             .filter(Sampling.uniform01($"doc_id") >= 0.3)))
         .select($"doc_id", $"band", $"bk").localCheckpoint()
-      val docsSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType),
-        StructField("lang", StringType), StructField("source", StringType),
-        StructField("n_chars", LongType)))
-      def run(): Double = {
-        val ix = new StandingIndex(spark, "sbndfold", 4, Seq("band", "bk"))
-        ix.init(corpusBands)
-        val ck = Files.createTempDirectory("graft-sbnd-ck").toString
-        val t0 = System.nanoTime()
-        val q = spark.readStream.schema(docsSchema)
-          .option("maxFilesPerTrigger", "8") // 32 fixture files → 4 batches
-          .parquet(docsPath)
-          .writeStream
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ck)
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            // the q96 gate's exact per-batch spelling — the SAME helper
-            // the gate drives, so bench and gate can never drift
-            LlmQueries.neardupAdmitAndFold(batch, ix, batchId, docStoreSh)
-            ()
-          }
-          .start()
-        q.awaitTermination()
-        (System.nanoTime() - t0) / 1e9
-      }
-      jsonLine("stream_neardup_fold", rows, measure(Seq(("neardup", () => run()))))
+      def stream = spark.readStream.schema(foldDocsSchema)
+        .option("maxFilesPerTrigger", "8") // 32 fixture files → 4 batches
+        .parquet(docsPath)
+      jsonLine("stream_neardup_fold", rows, measure(Seq(("neardup", () =>
+        foldPass("sbndfold", stream, corpusBands, Seq("band", "bk"),
+          SGQ.Clock.Never, SGQ.Cadence.Never,
+          LlmQueries.neardupAdmitAndFold(_, _, _, docStoreSh, _))._1))))
     }
 
     if (subjects("vecfold")) {
@@ -633,14 +530,11 @@ object StreamBench {
       // sign-LSH bucket — the checkpointed frame serves probe and
       // fold), probe the standing bucket index's strictly-earlier
       // segments with the exact integer-scaled-cosine confirm, fold the
-      // admitted sketch rows. Index init is the pay-once ingest price
-      // OUTSIDE the timed window; each pass re-inits to corpus-only.
-      // Stateless, like `fold`/`neardup`. The sharded fixture's
-      // isometry (rotation + odd-shard negation) preserves within-shard
-      // semantic structure bit-exactly, so the probe load is the real
-      // admission shape, not a degenerate all-admit.
-      import graft.operators.{Sampling, StandingIndex}
-      import graft.queries.LlmQueries
+      // admitted sketch rows. Stateless, like `fold`/`neardup`. The
+      // sharded fixture's isometry (rotation + odd-shard negation)
+      // preserves within-shard semantic structure bit-exactly, so the
+      // probe load is the real admission shape, not a degenerate
+      // all-admit.
       val vecsPath = s"target/streambench_vecs$shards"
       Tables.shardedEmbeddings(spark, base, shards)
         .repartition(32).write.mode("overwrite").parquet(vecsPath)
@@ -653,29 +547,13 @@ object StreamBench {
         StructField("vec_id", LongType),
         StructField("embedding", ArrayType(FloatType)),
         StructField("label", IntegerType)))
-      def run(): Double = {
-        val ix = new StandingIndex(spark, "sbvecfold", 4, Seq("bucket"))
-        ix.init(corpusFrame)
-        val ck = Files.createTempDirectory("graft-sbvec-ck").toString
-        val t0 = System.nanoTime()
-        val q = spark.readStream.schema(vecsSchema)
-          .option("maxFilesPerTrigger", "8") // 32 fixture files → 4 batches
-          .parquet(vecsPath)
-          .writeStream
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ck)
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            // the q100 gate's exact per-batch spelling — the SAME helper
-            // the gate drives, so bench and gate can never drift
-            LlmQueries.vectorAdmitAndFold(batch, ix, batchId)
-            ()
-          }
-          .start()
-        q.awaitTermination()
-        (System.nanoTime() - t0) / 1e9
-      }
-      jsonLine("stream_vector_fold", rows, measure(Seq(("vecfold", () => run()))))
+      def stream = spark.readStream.schema(vecsSchema)
+        .option("maxFilesPerTrigger", "8") // 32 fixture files → 4 batches
+        .parquet(vecsPath)
+      jsonLine("stream_vector_fold", rows, measure(Seq(("vecfold", () =>
+        foldPass("sbvecfold", stream, corpusFrame, Seq("bucket"),
+          SGQ.Clock.Never, SGQ.Cadence.Never,
+          LlmQueries.vectorAdmitAndFold(_, _, _, _))._1))))
     }
 
     if (subjects("scale")) {

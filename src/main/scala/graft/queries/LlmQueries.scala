@@ -1097,7 +1097,7 @@ object LlmQueries {
     // is checkpointed inside `labels`, and with the node universe served
     // from the checkpointed shingle base (dedupLabels) the replayed part
     // is one narrow neighborhood-min aggregate + join of two-long rows —
-    // a same-JVM A/B (Q40Probe) showed checkpointing `labels` here costs
+    // a same-JVM A/B (round 18) showed checkpointing `labels` here costs
     // more (one extra eager job) than the replay it saves, at sf0.1 and
     // by the same argument at scale. Sizes stay a groupBy + join
     // (map-side combinable), NOT a window count over canonical_id — a
@@ -1647,15 +1647,7 @@ object LlmQueries {
     val cand = candCorpus.unionByName(candBatch).distinct()
     val blockerSh = corpusSh.unionByName(batchSh)
       .select($"doc_id".as("blocker"), $"sh".as("sh_b"))
-    // size prefilter below the array join-back (round 18, guide §3.2):
-    // J ≥ 0.8 needs shingle-set sizes within 5:4, checked on one int per
-    // doc before any candidate pulls full arrays (neardupPairs' rule)
-    val slim = cand
-      .join(batchSh.select($"doc_id", size($"sh").as("ni")), "doc_id")
-      .join(blockerSh.select($"blocker", size($"sh_b").as("nb")), "blocker")
-      .filter(least($"ni", $"nb") * 5 >= greatest($"ni", $"nb") * 4)
-      .select($"doc_id", $"blocker")
-    val rejected = slim
+    val rejected = cand
       .join(batchSh.select($"doc_id", $"sh".as("sh_i")), "doc_id")
       .join(blockerSh, "blocker")
       .withColumn("common", size(array_intersect($"sh_i", $"sh_b")))
@@ -1669,10 +1661,11 @@ object LlmQueries {
       .orderBy($"doc_id")
   }
 
-  /** ONE micro-batch of FOLD-based streaming admission — q91's per-batch
-    * step, shared by the oracle-gated gate (StreamGateQueries
-    * .streamingFoldGate) and StreamBench's `fold` throughput subject so
-    * bench and gate can never drift: probe the standing fingerprint
+  /** ONE micro-batch of FOLD-based streaming admission — the
+    * fingerprint modality's admit-and-fold, called through the fold-gate
+    * driver's per-batch step (StreamGateQueries.FoldStep) by the gates
+    * and StreamBench's fold subjects alike, so bench and gate can never
+    * drift: probe the standing fingerprint
     * index's STRICTLY-EARLIER segments (`segmentsUpTo(batchId)` — a
     * replayed batch must not even resolve its own crashed fold), keep
     * the smallest-id holder per fingerprint within the batch, and fold
@@ -1709,10 +1702,10 @@ object LlmQueries {
       .select($"doc_id", graft.operators.TextOps.shingles($"toks", 3).as("sh"))
   }
 
-  /** ONE micro-batch of the streamed NEAR-DUP maintenance cycle — q96's
-    * per-batch step, shared by the oracle-gated gate
-    * (StreamGateQueries.neardupFoldGate) and StreamBench's `neardup`
-    * throughput subject so bench and gate can never drift
+  /** ONE micro-batch of the streamed NEAR-DUP maintenance cycle — the
+    * near-dup modality's admit-and-fold, called through
+    * StreamGateQueries.FoldStep by the gates and StreamBench's `neardup`
+    * subject alike, so bench and gate can never drift
     * ([[admitAndFold]]'s discipline on the fuzzy modality): shingle +
     * band the arriving batch ONCE (the checkpointed band frame serves
     * every per-segment probe branch, the in-batch self-join, AND the
@@ -1750,10 +1743,10 @@ object LlmQueries {
     sv.select($"bucket", $"vec_id".as("blocker"), $"v".as("bv"), $"nsq".as("bn"))
   }
 
-  /** ONE micro-batch of the streamed VECTOR maintenance cycle — q100's
-    * per-batch step, shared by the oracle-gated gate
-    * (StreamGateQueries.vectorFoldGate) and StreamBench's `vecfold`
-    * throughput subject so bench and gate can never drift: sketch the
+  /** ONE micro-batch of the streamed VECTOR maintenance cycle — the
+    * vector modality's admit-and-fold, called through
+    * StreamGateQueries.FoldStep by the gates and StreamBench's `vecfold`
+    * subject alike, so bench and gate can never drift: sketch the
     * arriving batch ONCE ([[vectorSketch]], checkpointed — the frame
     * serves every per-segment probe branch, the in-batch self-join, AND
     * the fold), admit against the standing bucket index's

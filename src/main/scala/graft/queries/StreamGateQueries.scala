@@ -1381,58 +1381,50 @@ object StreamGateQueries {
         $"events".as("n_events"))
   }
 
-  /** Shared run1/run2 drive loop for every crash-and-replay gate.
-    * `failAt = None` drives one clean run to termination and requires
-    * ≥ 3 data micro-batches. `failAt = Some(_)` requires run 1 to
-    * terminate with the injected mid-batch failure (the cause chain
-    * must carry `injectedMsg` and the driver-side `failMarker` must
-    * exist — proof the injection actually fired rather than the stream
-    * dying for an unrelated reason), then restarts against the same
-    * checkpoint and requires the replay to cover multiple batches
-    * (the replayed batch plus the undelivered files). Returns the
-    * final (clean or replayed) query so callers can inspect
-    * `lastProgress` for their stateful-operator contracts.
-    */
-  private def driveRuns(
-      tag: String, failAt: Option[Long], injectedMsg: String,
-      failMarker: java.nio.file.Path)(
-      runOnce: String => StreamingQuery): StreamingQuery =
-    driveCrashSchedule(tag,
-      failAt.toSeq.map(_ => (injectedMsg, failMarker)))(runOnce)
-
-  /** The ONE per-batch cadence-policy probe shared by every
-    * policy-composed gate (q111/q113/q114/q119–q123): fire
-    * `compactIfOver` bounded to committed covers, count the firing for
-    * the ≥ 2-firings non-vacuity fence, and assert the bounded-fan-out
-    * law from the SAME pointer read the decision used (one read per
-    * batch on the no-fire path) — extracted so the law's spelling can
-    * never drift per gate copy.
-    */
-  private def policyProbe(
-      tag: String, ix: graft.operators.StandingIndex, k: Int, batchId: Long,
-      policyFired: java.util.concurrent.atomic.AtomicInteger): Unit = {
-    val (fired, live) = ix.compactIfOverCounted(k, coverAtMost = batchId)
-    if (fired) policyFired.incrementAndGet()
-    require(live <= k,
-      s"$tag: the cadence policy must bound live segments to <= $k " +
-        s"at every probe point, got $live at batch $batchId")
-  }
-
-  /** The ONE crash-schedule drive loop behind every fault-injection
-    * gate — the single-crash gates through [[driveRuns]] and the soak
-    * gate's multi-crash schedule directly — so the injection
+  /** The ONE sink-with-injection → drive → stateful-operator-count →
+    * read-back skeleton behind every foreachBatch crash gate: the
+    * mid-batch-failure gates (q70/q72/q76/q82/q83), streaming admission
+    * (q84/q87) and every fold gate ([[foldGate]]), so the injection
     * verification discipline (cause-chain walk, injected-message
     * matching, marker checks, restart accounting) can never drift per
-    * gate. `injected` is one (message, marker) pair per scheduled
-    * crash: each run must either terminate CLEAN (ending the drive) or
-    * die with ONE of the scheduled injections; the drive requires
-    * exactly `injected.size` restarts, every marker fired, and the
-    * final run multi-batch (the replayed batch plus the undelivered
-    * files). An empty schedule is the clean single-run drive.
+    * gate. Each micro-batch's `sink` output OVERWRITES its own
+    * batch-keyed dir — Spark's exactly-once recipe for the at-least-once
+    * foreachBatch — and only then does the FIRST attempt of each batch
+    * in `crashes` die: after the durable write, before the engine's
+    * commit (q70's crash shape). Each run must either terminate CLEAN
+    * (ending the drive) or die with ONE of the scheduled injections; the
+    * drive requires exactly `crashes.size` restarts against the same
+    * checkpoint, every marker fired, the final run multi-batch (the
+    * replayed batch plus the undelivered files), and the final query to
+    * report exactly `statefulOps` stateful operators (`why` says which).
+    * An empty schedule is the clean single-run drive, whose real failure
+    * propagates raw. Drops the staged source; returns the union of the
+    * batch dirs.
     */
-  private def driveCrashSchedule(
-      tag: String, injected: Seq[(String, java.nio.file.Path)])(
-      runOnce: String => StreamingQuery): StreamingQuery = {
+  private def crashGate(
+      s: SparkSession, tag: String, staged: String, ck: String,
+      crashes: Seq[Long], statefulOps: Int, why: String,
+      outputMode: String = "append")(
+      stream: DataFrame)(sink: (DataFrame, Long) => Option[DataFrame]): DataFrame = {
+    val out = Files.createTempDirectory(s"graft-$tag-out").toString
+    // driver-side first-attempt markers: underscore-prefixed, outside the
+    // batch_* read-back glob, so the replay of a crashed batch completes
+    def marker(b: Long) = Paths.get(out, f"_fail_injected_$b%06d")
+    def injected(b: Long) = s"$tag injected mid-batch failure (first attempt of batch $b)"
+    def runOnce(run: String): StreamingQuery = stream.writeStream
+      .queryName(s"${gateName(tag)}_$run")
+      .outputMode(outputMode)
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", ck)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        sink(batch, batchId).foreach(
+          _.write.mode("overwrite").parquet(f"$out/batch_$batchId%06d"))
+        if (crashes.contains(batchId) && !Files.exists(marker(batchId))) {
+          Files.createFile(marker(batchId))
+          throw new RuntimeException(injected(batchId))
+        }
+      }
+      .start()
     var restarts = 0
     var query = runOnce("run1")
     var terminated = false
@@ -1442,82 +1434,61 @@ object StreamGateQueries {
       }
       err match {
         case None => terminated = true
-        case Some(e) if injected.isEmpty =>
+        case Some(e) if crashes.isEmpty =>
           throw e // a clean drive's real failure propagates raw
         case Some(e) =>
           val chain = Iterator.iterate[Throwable](e)(_.getCause)
             .takeWhile(_ != null).take(10).toSeq
           if (!chain.exists(t => Option(t.getMessage).exists(m =>
-              injected.exists { case (msg, _) => m.contains(msg) })))
+              crashes.exists(b => m.contains(injected(b))))))
             throw new IllegalStateException(
               s"$tag run ${restarts + 1} must terminate with an injected " +
                 s"mid-batch failure, got: $e", e)
           restarts += 1
-          require(restarts <= injected.size,
-            s"$tag crashed more times ($restarts) than injected (${injected.size})")
+          require(restarts <= crashes.size,
+            s"$tag crashed more times ($restarts) than injected (${crashes.size})")
           query = runOnce(s"run${restarts + 1}")
       }
     }
-    require(restarts == injected.size,
-      s"$tag must survive ${injected.size} crash-replay cycle(s), got $restarts")
-    injected.foreach { case (msg, marker) =>
-      require(Files.exists(marker), s"$tag fault injection did not fire: $msg")
+    require(restarts == crashes.size,
+      s"$tag must survive ${crashes.size} crash-replay cycle(s), got $restarts")
+    crashes.foreach { b =>
+      require(Files.exists(marker(b)), s"$tag fault injection did not fire: ${injected(b)}")
     }
-    requireMultiBatch(query, if (injected.isEmpty) tag else s"$tag final run")
-    query
+    requireMultiBatch(query, if (crashes.isEmpty) tag else s"$tag final run")
+    val stateful = Option(query.lastProgress)
+      .map(_.stateOperators.map(_.operatorName).toSeq).getOrElse(Seq.empty)
+    require(stateful.size == statefulOps,
+      s"$tag must run $statefulOps stateful operator(s) ($why), got $stateful")
+    dropStaged(staged)
+    s.read.parquet(s"$out/batch_*")
   }
 
-  /** Shared fault-injection harness for the mid-batch-failure gates —
-    * ONE implementation of the injection, error-chain inspection, and
-    * replay requires, so the state-API gates (q70 FMGWS, q72 TWS) and
-    * the chained-pipeline gate (q76, TWO state stores restored to the
-    * same committed version) can never drift apart. See q70's scaladoc
-    * for the recovery contract and determinism argument; `statefulOps`
-    * pins how many stateful operators the replayed query must report —
-    * the chained case is the harder replay (join buffers AND window
-    * state must restore consistently to batch `failAt − 1`'s commit).
+  /** The query-name prefix of a [[crashGate]] run (`<prefix>_run<k>`) —
+    * what [[plannedWatermarkMs]] finds the live query by.
+    */
+  private def gateName(tag: String): String = s"${tag}_gate"
+
+  /** Shared fault-injection harness for the mid-batch-failure gates, so
+    * the state-API gates (q70 FMGWS, q72 TWS) and the chained-pipeline
+    * gate (q76, TWO state stores restored to the same committed version)
+    * can never drift apart. See q70's scaladoc for the recovery contract
+    * and determinism argument; `statefulOps` pins how many stateful
+    * operators the replayed query must report — the chained case is the
+    * harder replay (join buffers AND window state must restore
+    * consistently to batch 1's commit).
     */
   private def midBatchFailureGate(
       s: SparkSession, dir: String, tag: String,
       pipeline: String => DataFrame,
       sortCols: Seq[String],
       statefulOps: Int): DataFrame = {
-    import s.implicits._
     val staged = stageTimeSplit(s, dir, tag, n = 6)
-    val out = Files.createTempDirectory(s"graft-$tag-out").toString
     val ck = Files.createTempDirectory(s"graft-$tag-ck").toString
-    val failAt = 2L
-    val injectedMsg = s"$tag injected mid-batch failure (first attempt of batch $failAt)"
-    // driver-side first-attempt marker: underscore-prefixed, outside the
-    // batch_* read-back glob, so the second invocation of batch `failAt`
-    // (the replay) runs to completion
-    val failMarker = Paths.get(out, "_fail_injected")
-    def runOnce(run: String): StreamingQuery = {
-      pipeline(staged)
-        .writeStream
-        .queryName(s"${tag}_midbatch_failure_$run")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ck)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // idempotent batch-keyed overwrite FIRST: the crash below lands
-          // after the sink work is durably on disk, so the replay must
-          // cope with a fully-written uncommitted attempt
-          batch.write.mode("overwrite").parquet(f"$out/batch_$batchId%06d")
-          if (batchId == failAt && !Files.exists(failMarker)) {
-            Files.createFile(failMarker)
-            throw new RuntimeException(injectedMsg)
-          }
-        }
-        .start()
-    }
-    val run2 = driveRuns(tag, Some(failAt), injectedMsg, failMarker)(runOnce)
-    val stateful = Option(run2.lastProgress)
-      .map(_.stateOperators.map(_.operatorName).toSeq).getOrElse(Seq.empty)
-    require(stateful.size == statefulOps,
-      s"$tag replay must restore $statefulOps stateful operator(s), got $stateful")
-    dropStaged(staged)
-    s.read.parquet(s"$out/batch_*").orderBy(sortCols.map(col): _*)
+    crashGate(s, tag, staged, ck, crashes = Seq(2L), statefulOps,
+        why = "the replay must restore them")(pipeline(staged))(
+        (batch, _) => Some(batch))
+      .orderBy(sortCols.map(col): _*)
   }
 
   /** q72 — q70's mid-batch failure on the OTHER state API and backend:
@@ -1888,55 +1859,20 @@ object StreamGateQueries {
     // the crash variant stages 6 files so the replay run still covers
     // ≥ 3 data micro-batches (replayed batch 2 + files 3-5), q70's layout
     val staged = stageDocSplit(s, dir, tag, n = if (failAt.isDefined) 6 else 4)
-    val corpus = Tables.documents(s, dir)
-      .select(
-        graft.operators.TextOps.bagFingerprint(
-          graft.operators.TextOps.normText($"text")).as("fingerprint"),
-        graft.operators.Sampling.uniform01($"doc_id").as("u"))
-      .filter($"u" >= 0.3)
-      .select($"fingerprint")
-    val out = Files.createTempDirectory(s"graft-$tag-out").toString
     val ck = Files.createTempDirectory(s"graft-$tag-ck").toString
-    val injectedMsg = s"$tag injected mid-batch failure (first attempt of batch ${failAt.getOrElse(-1L)})"
-    val failMarker = Paths.get(out, "_fail_injected")
-    def runOnce(run: String): StreamingQuery = {
-      val incoming = s.readStream
-        .schema(StructType(Seq(
-          StructField("doc_id", LongType), StructField("text", StringType))))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-        .select($"doc_id",
-          graft.operators.TextOps.bagFingerprint(
-            graft.operators.TextOps.normText($"text")).as("fingerprint"))
-      incoming
-        .join(corpus, Seq("fingerprint"), "left_anti")
-        .groupBy($"fingerprint")
-        .agg(min($"doc_id").as("doc_id"), count(lit(1)).as("batch_dups"))
-        .writeStream
-        .queryName(s"${tag}_streaming_admission_$run")
-        .outputMode("update")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ck)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // idempotent batch-keyed overwrite (the q64/q70 sink discipline)
-          batch.withColumn("_batch", lit(batchId))
-            .write.mode("overwrite").parquet(f"$out/batch_$batchId%06d")
-          if (failAt.contains(batchId) && !Files.exists(failMarker)) {
-            Files.createFile(failMarker)
-            throw new RuntimeException(injectedMsg)
-          }
-        }
-        .start()
-    }
-    val query = driveRuns(tag, failAt, injectedMsg, failMarker)(runOnce)
-    val stateful = Option(query.lastProgress)
-      .map(_.stateOperators.map(_.operatorName).toSeq).getOrElse(Seq.empty)
-    require(stateful.size == 1,
-      s"$tag must run ONE stateful operator (the admission agg; the " +
-        s"stream-static probe is stateless), got $stateful")
-    dropStaged(staged)
+    val stream = s.readStream
+      .schema(StructType(docFields))
+      .option("maxFilesPerTrigger", "1")
+      .parquet(staged)
+      .select($"doc_id", fingerprint($"text"))
+      .join(fingerprintCorpus(s, dir), Seq("fingerprint"), "left_anti")
+      .groupBy($"fingerprint")
+      .agg(min($"doc_id").as("doc_id"), count(lit(1)).as("batch_dups"))
     val latest = Window.partitionBy($"fingerprint").orderBy($"_batch".desc)
-    s.read.parquet(s"$out/batch_*")
+    crashGate(s, tag, staged, ck, failAt.toSeq, statefulOps = 1,
+        why = "the admission agg; the stream-static probe is stateless",
+        outputMode = "update")(stream)(
+        (batch, batchId) => Some(batch.withColumn("_batch", lit(batchId))))
       .withColumn("_rn", row_number().over(latest))
       .filter($"_rn" === 1)
       .select($"doc_id", $"fingerprint", $"batch_dups")
@@ -1987,7 +1923,7 @@ object StreamGateQueries {
     * count is bounded by compaction off the ingest path.
     */
   def q91StreamingFold(s: SparkSession, dir: String): DataFrame =
-    streamingFoldGate(s, dir, "q91", failAt = None)
+    foldGate(s, dir, "q91", Fingerprints, Schedule(4))
 
   /** q92 — the mid-batch crash at the INDEX-FOLD shape: q91's pipeline
     * with the sink's first attempt of data batch 2 dying AFTER both its
@@ -2004,7 +1940,7 @@ object StreamGateQueries {
     * batch-dir union must meet q91's oracle verbatim.
     */
   def q92MidBatchFailureFold(s: SparkSession, dir: String): DataFrame =
-    streamingFoldGate(s, dir, "q92", failAt = Some(2L))
+    foldGate(s, dir, "q92", Fingerprints, Schedule(6, crashes = Seq(2L)))
 
   /** q94 — COMPACTION DURING CONTINUOUS INGEST: q91's streaming fold
     * pipeline with a compaction injected at the head of batch 2 —
@@ -2032,7 +1968,7 @@ object StreamGateQueries {
     * fails the hash.
     */
   def q94CompactedStreamingFold(s: SparkSession, dir: String): DataFrame =
-    streamingFoldGate(s, dir, "q94", failAt = None, compactAt = Some(1L))
+    foldGate(s, dir, "q94", Fingerprints, Schedule(4, cadence = Cadence.AtBatch2))
 
   /** q95 — q94's mid-stream compaction COMPOSED with q92's mid-batch
     * crash: batch 2's first attempt compacts (bounded, covers ≤ 2),
@@ -2048,7 +1984,8 @@ object StreamGateQueries {
     * verbatim.
     */
   def q95CompactedFoldCrash(s: SparkSession, dir: String): DataFrame =
-    streamingFoldGate(s, dir, "q95", failAt = Some(2L), compactAt = Some(1L))
+    foldGate(s, dir, "q95", Fingerprints,
+      Schedule(6, cadence = Cadence.AtBatch2, crashes = Seq(2L)))
 
   /** q111 — the COMPACTION-CADENCE POLICY as code: q91's continuous fold
     * loop over a LONG horizon (10 micro-batches) where compaction fires
@@ -2066,102 +2003,380 @@ object StreamGateQueries {
     * crash anywhere replays it idempotently (q95's law).
     */
   def q111PolicyCompactedFold(s: SparkSession, dir: String): DataFrame =
-    streamingFoldGate(s, dir, "q111", failAt = None,
-      autoCompactOver = Some(4), nOverride = Some(10))
+    foldGate(s, dir, "q111", Fingerprints, Schedule(10, cadence = Cadence.Policy(4)))
 
-  /** Shared harness behind q91/q92 (clean/crashed), q94/q95 (with a
-    * harness-scheduled mid-stream compaction), and q111 (policy-driven
-    * compaction cadence + long horizon) — one implementation of the
-    * probe, sink, fold, compact, and read-back. See q91's scaladoc for
-    * semantics, q70's for the injection contract, q94's for the
-    * coverage argument, q111's for the cadence-policy contract.
+  /** The ONE streaming fold-gate driver behind all 32 fold gates
+    * (q91–q123): a gate is a [[FoldModality]] (what is folded) run on a
+    * [[Schedule]] (how long, on which clock, compacted when, crashed
+    * where). The driver stages the modality's incoming rows as
+    * `schedule.n` files (one per micro-batch), inits the standing index
+    * with the corpus stamped at the clock's pre-batch-0 stamp, streams
+    * the modality's in-stream projection (with `withWatermark` on the
+    * watermark clock), and runs each micro-batch through [[FoldStep]] —
+    * compaction cadence, then the clock's expiry, then the modality's
+    * admit-and-fold — into [[crashGate]]'s batch-keyed sink with the
+    * schedule's injected crashes. Fences, on top of the skeleton's drive
+    * and STATELESS checks: the watermark window law and advancing engine
+    * watermarks on the watermark clock (q108), ≥ 2 policy firings on a
+    * policy cadence (q111), the modality's non-vacuity fence, and a
+    * gate's own `soak` fences (q123). Each gate's scaladoc carries its
+    * semantics; q91's the fold law, q70's the injection contract, q94's
+    * the coverage argument, q98's and q108's the two expiry clocks,
+    * q111's the cadence policy.
     */
-  private def streamingFoldGate(
-      s: SparkSession, dir: String, tag: String, failAt: Option[Long],
-      compactAt: Option[Long] = None, autoCompactOver: Option[Int] = None,
-      nOverride: Option[Int] = None): DataFrame = {
-    import s.implicits._
-    val policyFired = new java.util.concurrent.atomic.AtomicInteger(0)
-    val staged = stageDocSplit(s, dir, tag,
-      n = nOverride.getOrElse(if (failAt.isDefined) 6 else 4))
-    val corpus = Tables.documents(s, dir)
-      .select(
-        graft.operators.TextOps.bagFingerprint(
-          graft.operators.TextOps.normText($"text")).as("fingerprint"),
-        graft.operators.Sampling.uniform01($"doc_id").as("u"))
-      .filter($"u" >= 0.3)
-      .select($"fingerprint")
+  private[graft] def foldGate(
+      s: SparkSession, dir: String, tag: String, m: FoldModality,
+      schedule: Schedule, soak: Option[Soak] = None): DataFrame = {
+    val wm = schedule.clock == Clock.Watermark
+    if (wm) requireWmWindowLaw(tag)
+    val staged = m.stage(s, dir, tag, schedule.n, schedule.clock,
+      allowEmpty = soak.isDefined)
+    val corpus = m.corpus(s, dir, tag, expiring = schedule.clock != Clock.Never)
     val ix = new graft.operators.StandingIndex(
-      s, s"${tag}_fp_ix", buckets = 4, keys = Seq("fingerprint"))
-    ix.init(corpus)
-    val out = Files.createTempDirectory(s"graft-$tag-out").toString
+      s, foldIxName(tag, m), buckets = 4, keys = m.keys)
+    ix.init(corpus.rows, maxEventMs = schedule.clock.corpusStamp)
     val ck = Files.createTempDirectory(s"graft-$tag-ck").toString
-    val injectedMsg = s"$tag injected mid-batch failure (first attempt of batch ${failAt.getOrElse(-1L)})"
-    val failMarker = Paths.get(out, "_fail_injected")
-    def runOnce(run: String): StreamingQuery = {
-      val incoming = s.readStream
-        .schema(StructType(Seq(
-          StructField("doc_id", LongType), StructField("text", StringType))))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-        .select($"doc_id",
-          graft.operators.TextOps.bagFingerprint(
-            graft.operators.TextOps.normText($"text")).as("fingerprint"))
-      incoming
-        .writeStream
-        .queryName(s"${tag}_streaming_fold_$run")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ck)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // q94/q95: the mid-stream compaction, at the head of the batch
-          // AFTER `compactAt` — i.e. strictly after batch `compactAt`'s
-          // COMMIT — and BOUNDED to committed folds (covers <= batchId).
-          // Running it inside batch `compactAt` after the sink would open
-          // a crash window (compact done, batch commit not), whose replay
-          // finds segmentsUpTo(compactAt) empty and wedges; here a crash
-          // anywhere in THIS batch just replays the same bounded compact
-          // idempotently, and a crashed replay fold (cover batchId + 1)
-          // can never be subsumed — Hudi's async-compaction discipline
-          // (compaction plans only committed file slices)
-          if (compactAt.contains(batchId - 1)) ix.compact(coverAtMost = batchId)
-          // q111: the cadence POLICY decides — compact the committed
-          // prefix (covers <= batchId, q94's bounded discipline) when
-          // the live count exceeds k; the policy, not the harness, is
-          // what must keep the probe fan-out bounded
-          autoCompactOver.foreach(k =>
-            policyProbe(tag, ix, k, batchId, policyFired))
-          // probe strictly-earlier segments + keyed fold — the ONE
-          // spelling (LlmQueries.admitAndFold, shared with StreamBench's
-          // fold subject); see q92's scaladoc for the replay contract
-          val admitted = LlmQueries.admitAndFold(batch, ix, batchId)
-          admitted.select($"doc_id", $"fingerprint")
-            .write.mode("overwrite").parquet(f"$out/batch_$batchId%06d")
-          if (failAt.contains(batchId) && !Files.exists(failMarker)) {
-            Files.createFile(failMarker)
-            throw new RuntimeException(injectedMsg)
-          }
-        }
-        .start()
-    }
-    val query = driveRuns(tag, failAt, injectedMsg, failMarker)(runOnce)
-    val stateful = Option(query.lastProgress)
-      .map(_.stateOperators.map(_.operatorName).toSeq).getOrElse(Seq.empty)
-    require(stateful.isEmpty,
-      s"$tag must run STATELESS (the standing index is the cross-batch " +
-        s"state), got $stateful")
+    val step = new FoldStep(s, ix, schedule.clock, schedule.cadence, ck,
+      gateName(tag), corpus.admit)
+    val eventTs = if (wm) Seq(StructField("event_ts", TimestampType)) else Nil
+    val read = s.readStream
+      .schema(StructType(m.fields ++ eventTs))
+      .option("maxFilesPerTrigger", "1")
+      .parquet(staged)
+      .select(m.incoming ++ eventTs.map(f => col(f.name)): _*)
+    val stream =
+      if (wm) read.withWatermark("event_ts", s"${WmDelayMs / 1000} seconds") else read
+    val result = crashGate(s, tag, staged, ck, schedule.crashes, statefulOps = 0,
+        why = "STATELESS: the standing index is the cross-batch state; " +
+          "the watermark operator holds no store")(stream) { (batch, batchId) =>
+        def folded = step(batch, batchId).map(_.select(col(m.id),
+          lit(batchId + 1).cast("int").as("batch"), col(m.out)))
+        soak.fold(folded)(_.around(batchId)(folded))
+      }
+      .select(m.resultCols(schedule.clock).map(col): _*)
+      .orderBy(m.id)
+    // the engine must actually have reported advancing watermarks — a
+    // silently-absent watermark would leave every expire() a no-op and
+    // collapse the gate into the never-expiring shape (q108's fence)
+    if (wm) require(step.sawWm.get >= schedule.n - 2,
+      s"$tag: the engine must report a committed event-time watermark " +
+        s"from batch 2 on, got ${step.sawWm.get} reports")
     // q111's non-vacuity fence: a policy that never fired would silently
-    // degrade the gate to q91 and prove nothing about cadence
-    autoCompactOver.foreach { _ =>
-      require(policyFired.get >= 2,
+    // degrade the gate to its harness-free twin and prove nothing
+    schedule.cadence match {
+      case Cadence.Policy(_) => require(step.policyFired.get >= 2,
         s"$tag: the cadence policy must fire >= 2 compactions across the " +
-          s"run, got ${policyFired.get}")
+          s"run, got ${step.policyFired.get}")
+      case _ =>
     }
-    dropStaged(staged)
-    s.read.parquet(s"$out/batch_*")
-      .select($"doc_id", $"fingerprint")
-      .orderBy($"doc_id")
+    soak.foreach(_.check(step.policyFired.get))
+    corpus.fence(result, schedule.n)
+    result
   }
+
+  private[graft] def foldIxName(tag: String, m: FoldModality): String =
+    s"${tag}_${m.name}_ix"
+
+  /** The clock a fold [[Schedule]] stamps folds with and expires on. The
+    * two expiring clocks run the SAME horizon recurrence (q108's window
+    * law makes the ms clock batch-exact), so their oracles and fences
+    * coincide.
+    */
+  private[graft] sealed trait Clock {
+    /** The stamp the corpus is folded with, before batch 0. */
+    def corpusStamp: Long
+  }
+  private[graft] object Clock {
+    /** Never expires: corpus and every fold stamped `Long.MaxValue`. */
+    case object Never extends Clock { def corpusStamp = Long.MaxValue }
+    /** q98's batch-position clock: folds stamped `batchId`, expiry at
+      * `batchId − H` before the probe; the corpus, stamped −1, expires
+      * exactly when batch H's threshold passes it.
+      */
+    case object BatchHorizon extends Clock { def corpusStamp = -1L }
+    /** q108's production clock: folds stamped with the batch's max event
+      * time, expiry at `committedWatermark − horizonMs`; the corpus is
+      * stamped one step before batch 0's events.
+      */
+    case object Watermark extends Clock { def corpusStamp = WmT0 - WmStepMs }
+  }
+
+  /** When a fold [[Schedule]] compacts the standing index — always at
+    * the head of a batch and bounded to committed folds
+    * (`coverAtMost = batchId`): compacting inside a batch after its sink
+    * would open a crash window (compact durable, batch commit not) whose
+    * replay finds no segment covering the earlier batch and wedges;
+    * here a crash anywhere in the batch replays the same bounded compact
+    * idempotently, and a crashed replay fold (cover `batchId + 1`) can
+    * never be subsumed — Hudi's async-compaction discipline.
+    */
+  private[graft] sealed trait Cadence
+  private[graft] object Cadence {
+    case object Never extends Cadence
+    /** q94's harness-scheduled compact at the head of batch 2, strictly
+      * after batch 1's COMMIT.
+      */
+    case object AtBatch2 extends Cadence
+    /** q111's policy: `compactIfOver(k)` at every batch head, with live
+      * segments ≤ k asserted at every probe point.
+      */
+    final case class Policy(k: Int) extends Cadence
+  }
+
+  /** A fold gate's run: `n` staged files (one per micro-batch), the
+    * index clock, the compaction cadence, and the batches whose first
+    * attempt crashes after all durable effects.
+    */
+  private[graft] final case class Schedule(
+      n: Int, clock: Clock = Clock.Never, cadence: Cadence = Cadence.Never,
+      crashes: Seq[Long] = Nil)
+
+  /** ONE micro-batch of a fold schedule — the cadence's compaction, then
+    * the clock's expiry and stamp, then the modality's admit-and-fold
+    * (`admit(batch, ix, batchId, stampMs)`) — shared by [[foldGate]] and
+    * StreamBench's fold subjects, so bench and gate measure one
+    * spelling. Returns the admitted frame, or None for a rowless
+    * watermark-clock batch (nothing arrived, nothing to probe or fold).
+    * `policyFired` and `sawWm` count for the gates' non-vacuity fences.
+    */
+  private[graft] final class FoldStep(
+      s: SparkSession, ix: graft.operators.StandingIndex,
+      clock: Clock, cadence: Cadence, ck: String, qn: String,
+      admit: (DataFrame, graft.operators.StandingIndex, Long, Long) => DataFrame) {
+    val policyFired = new java.util.concurrent.atomic.AtomicInteger(0)
+    val sawWm = new java.util.concurrent.atomic.AtomicInteger(0)
+
+    def apply(batch: DataFrame, batchId: Long): Option[DataFrame] = {
+      cadence match {
+        case Cadence.AtBatch2 => if (batchId == 2L) ix.compact(coverAtMost = batchId)
+        case Cadence.Policy(k) =>
+          // the bounded-fan-out law from the SAME pointer read the
+          // decision used (one read per batch on the no-fire path)
+          val (fired, live) = ix.compactIfOverCounted(k, coverAtMost = batchId)
+          if (fired) policyFired.incrementAndGet()
+          require(live <= k,
+            s"$qn: the cadence policy must bound live segments to <= $k " +
+              s"at every probe point, got $live at batch $batchId")
+        case Cadence.Never =>
+      }
+      // expiry first (q98's ordering): entries behind the horizon stop
+      // blocking BEFORE this batch probes
+      val (src, stampMs) = clock match {
+        case Clock.Never => (batch, Some(Long.MaxValue))
+        case Clock.BatchHorizon =>
+          ix.expire(expireBeforeMs = batchId - ExpiryHorizon)
+          (batch, Some(batchId))
+        case Clock.Watermark =>
+          // record + expire BEFORE the checkpoint: the record must be the
+          // step's FIRST durable act — a crash during the (multi-second)
+          // checkpoint must still find the planning watermark recorded,
+          // or the replay (whose restarted query has a null lastProgress)
+          // could never re-derive this batch's expiry threshold
+          plannedWatermarkMs(s, ck, qn, batchId).foreach { wm =>
+            if (wm > 0L) sawWm.incrementAndGet()
+            ix.expire(expireBeforeMs = wm - WmHorizonMs)
+          }
+          // CHECKPOINT the batch once: foreachBatch re-executes the whole
+          // micro-batch plan per action with no column pruning through
+          // it, so a second raw action (the stamp aggregate) cost one
+          // full extra batch execution (+3.7 s/batch measured at the 100×
+          // decade)
+          val src = batch.localCheckpoint()
+          val maxRow = src.agg(max(unix_millis(col("event_ts")))).head
+          (src, if (maxRow.isNullAt(0)) None else Some(maxRow.getLong(0)))
+      }
+      stampMs.map(admit(src.drop("event_ts"), ix, batchId, _))
+    }
+  }
+
+  /** One run's corpus side of a [[FoldModality]]: the index rows folded
+    * before batch 0, the existing per-batch admit-and-fold call over
+    * them, and the modality's non-vacuity fence over the gate's result
+    * (and its `n`).
+    */
+  private[graft] final case class FoldCorpus(
+      rows: DataFrame,
+      admit: (DataFrame, graft.operators.StandingIndex, Long, Long) => DataFrame,
+      fence: (DataFrame, Int) => Unit)
+
+  /** What a fold gate folds: the staging split, the staged schema and
+    * its in-stream projection, the index keys, the corpus side
+    * ([[FoldCorpus]]), and the sink's `(id, batch, out)` columns.
+    */
+  private[graft] sealed abstract class FoldModality(
+      val name: String, val id: String, val out: String, val keys: Seq[String]) {
+    def stage(s: SparkSession, dir: String, tag: String, n: Int, clock: Clock,
+        allowEmpty: Boolean): String
+    def fields: Seq[StructField]
+    def incoming: Seq[Column] = fields.map(f => col(f.name))
+    def resultCols(clock: Clock): Seq[String] = Seq(id, "batch", out)
+    def corpus(s: SparkSession, dir: String, tag: String, expiring: Boolean): FoldCorpus
+  }
+
+  /** The exact bag-fingerprint modality (q91/q98/q108): the index holds
+    * fingerprints, a batch admits the smallest-id holder per fingerprint
+    * absent from every strictly-earlier segment
+    * ([[LlmQueries.admitAndFold]]).
+    */
+  private[graft] case object Fingerprints
+      extends FoldModality("fp", "doc_id", "fingerprint", Seq("fingerprint")) {
+    // never-expiring: doc_id-ordered quantile files, so first wins across
+    // batches = smallest id wins (q91's boundary-free oracle); expiring:
+    // the oracle-pinned hash groups the windowed recurrence needs (q98)
+    def stage(s: SparkSession, dir: String, tag: String, n: Int, clock: Clock,
+        allowEmpty: Boolean): String =
+      if (clock == Clock.Never) stageDocSplit(s, dir, tag, n)
+      else stageDocHashSplit(s, dir, tag, n, eventTs = clock == Clock.Watermark,
+        allowEmpty = allowEmpty)
+    def fields: Seq[StructField] = docFields
+    override def incoming: Seq[Column] = Seq(col("doc_id"), fingerprint(col("text")))
+    // q91's oracle is q73's admitted set, which has no batch column
+    override def resultCols(clock: Clock): Seq[String] =
+      if (clock == Clock.Never) Seq(id, out) else super.resultCols(clock)
+    def corpus(s: SparkSession, dir: String, tag: String,
+        expiring: Boolean): FoldCorpus = {
+      val fps = fingerprintCorpus(s, dir)
+      FoldCorpus(fps, LlmQueries.admitAndFold(_, _, _, _), (result, _) =>
+        // non-vacuity fence: expiry must have RE-OPENED at least one
+        // corpus-blocked fingerprint (an admission the never-expiring
+        // gate would reject) — otherwise the gate silently collapses into
+        // q91 and proves nothing about the horizon
+        if (expiring) require(result.join(fps, "fingerprint").count() > 0,
+          s"$tag must admit at least one post-expiry corpus duplicate, got none"))
+    }
+  }
+
+  /** The text NEAR-DUP modality (q96/q104/q115): the index holds MinHash
+    * band keys, a batch admits by q75's exact-Jaccard semantics against
+    * strictly-earlier segments with blocker shingles served from the
+    * full document store by id — the point lookup a bucket-pruned doc
+    * store (q53) serves at 100 TB ([[LlmQueries.neardupAdmitAndFold]]).
+    */
+  private[graft] case object NearDups
+      extends FoldModality("band", "doc_id", "n_shingles", Seq("band", "bk")) {
+    def stage(s: SparkSession, dir: String, tag: String, n: Int, clock: Clock,
+        allowEmpty: Boolean): String =
+      stageDocHashSplit(s, dir, tag, n, eventTs = clock == Clock.Watermark,
+        allowEmpty = allowEmpty)
+    def fields: Seq[StructField] = docFields
+    def corpus(s: SparkSession, dir: String, tag: String,
+        expiring: Boolean): FoldCorpus = {
+      import s.implicits._
+      // the confirm step's doc store: every blocker's shingles fetched by
+      // id (one checkpointed frame shared by all batches)
+      val docStoreSh = LlmQueries.shingleDocs(Tables.documents(s, dir))
+        .localCheckpoint()
+      val corpusBands = {
+        val b = LlmQueries.minhashBands(docStoreSh
+            .filter(graft.operators.Sampling.uniform01($"doc_id") >= 0.3))
+          .select($"doc_id", $"band", $"bk")
+        // the expiring fence below re-probes against the corpus index
+        if (expiring) b.localCheckpoint() else b
+      }
+      FoldCorpus(corpusBands, LlmQueries.neardupAdmitAndFold(_, _, _, docStoreSh, _),
+        (result, _) => if (expiring) {
+          // non-vacuity fence: expiry must have RE-OPENED at least one
+          // corpus-blocked doc — a late admission with a CONFIRMED corpus
+          // near-duplicate (band-candidate + exact Jaccard >= 0.8), which
+          // the never-expiring gate would reject; otherwise the expiring
+          // gate silently collapses into q96
+          val lateSh = docStoreSh
+            .join(result.filter($"batch" > ExpiryHorizon).select($"doc_id"), "doc_id")
+            .localCheckpoint()
+          val lateCand = LlmQueries.minhashBands(lateSh)
+            .select($"doc_id", $"band", $"bk")
+            .join(corpusBands.select($"doc_id".as("blocker"), $"band", $"bk"),
+              Seq("band", "bk"))
+            .select($"doc_id", $"blocker").distinct()
+          val reopened = lateCand
+            .join(lateSh.select($"doc_id", $"sh".as("sh_i")), "doc_id")
+            .join(docStoreSh.select($"doc_id".as("blocker"), $"sh".as("sh_b")), "blocker")
+            .withColumn("common", size(array_intersect($"sh_i", $"sh_b")))
+            .filter($"common".cast("double") /
+              (size($"sh_i") + size($"sh_b") - $"common") >= 0.8)
+            .select($"doc_id").distinct().count()
+          require(reopened > 0,
+            s"$tag must admit at least one post-expiry corpus near-duplicate, got none")
+        })
+    }
+  }
+
+  /** The EMBEDDING modality (q100/q102/q117): the index holds sign-LSH
+    * bucketed sketch rows, a batch admits by q80's exact
+    * integer-scaled-cosine semantics against strictly-earlier segments
+    * ([[LlmQueries.vectorAdmitAndFold]]).
+    */
+  private[graft] case object Vectors
+      extends FoldModality("vec", "vec_id", "bucket", Seq("bucket")) {
+    def stage(s: SparkSession, dir: String, tag: String, n: Int, clock: Clock,
+        allowEmpty: Boolean): String =
+      stageVecHashSplit(s, dir, tag, n, eventTs = clock == Clock.Watermark,
+        allowEmpty = allowEmpty)
+    def fields: Seq[StructField] = Seq(
+      StructField("vec_id", LongType), StructField("embedding", ArrayType(FloatType)))
+    def corpus(s: SparkSession, dir: String, tag: String,
+        expiring: Boolean): FoldCorpus = {
+      import s.implicits._
+      val corpusFrame = LlmQueries.vectorIndexRows(
+          LlmQueries.vectorSketch(Tables.embeddings(s, dir))
+            .filter(graft.operators.Sampling.uniform01($"vec_id") >= 0.5))
+        .localCheckpoint() // reused by the non-vacuity fences below
+      FoldCorpus(corpusFrame, LlmQueries.vectorAdmitAndFold(_, _, _, _), (result, n) =>
+        if (!expiring) {
+          // non-vacuity fence (never-expiring shape): at least one
+          // rejection must be attributable to a FOLD (an earlier batch's
+          // admission), not the corpus or the in-batch self-join —
+          // otherwise the gate silently collapses into a streamed q80 and
+          // proves nothing about index maintenance. The no-fold baseline
+          // replays each batch's admission against the corpus segment
+          // ALONE; strictly more admissions there means a fold blocked
+          // somebody here.
+          val grpCol = (graft.operators.Sampling.hash60(
+            concat(lit("g"), $"vec_id".cast("string"))) % n + 1).cast("int")
+          val stagedSv = LlmQueries.vectorSketch(Tables.embeddings(s, dir)
+              .filter(graft.operators.Sampling.uniform01($"vec_id") < 0.5))
+            .withColumn("g", grpCol).localCheckpoint()
+          val noFold = (1 to n).map { k =>
+            LlmQueries.admitByVectorSegments(
+              stagedSv.filter($"g" === k).drop("g"), Seq(corpusFrame)).count()
+          }.sum
+          val admittedCount = result.count()
+          require(noFold > admittedCount,
+            s"$tag: folds must block at least one vector " +
+              s"(no-fold admissions $noFold vs admitted $admittedCount)")
+        } else {
+          // non-vacuity fence (expiring shape): expiry must have
+          // RE-OPENED at least one corpus-blocked vector — an admission
+          // in a batch past the horizon whose confirmed corpus
+          // near-duplicate would have rejected it under the
+          // never-expiring gate; otherwise the gate collapses into q100
+          val lateSv = LlmQueries.vectorSketch(Tables.embeddings(s, dir))
+            .join(result.filter($"batch" > ExpiryHorizon).select($"vec_id"), "vec_id")
+          val reopened = lateSv.join(corpusFrame, "bucket")
+            .withColumn("cosine", graft.operators.VectorOps.cosineFromParts(
+              graft.operators.VectorOps.dotL($"v", $"bv"), $"nsq", $"bn"))
+            .filter($"cosine" >= 0.4)
+            .select($"vec_id").distinct().count()
+          require(reopened > 0,
+            s"$tag must admit at least one post-expiry corpus near-duplicate, got none")
+        })
+    }
+  }
+
+  /** The doc staging schema of the text modalities. */
+  private val docFields = Seq(
+    StructField("doc_id", LongType), StructField("text", StringType))
+
+  /** A doc's bag fingerprint — q73's spelling. */
+  private def fingerprint(text: Column): Column =
+    graft.operators.TextOps.bagFingerprint(
+      graft.operators.TextOps.normText(text)).as("fingerprint")
+
+  /** q73's corpus side (`u ≥ 0.3`) as fingerprints. */
+  private def fingerprintCorpus(s: SparkSession, dir: String): DataFrame =
+    Tables.documents(s, dir)
+      .filter(graft.operators.Sampling.uniform01(col("doc_id")) >= 0.3)
+      .select(fingerprint(col("text")))
 
   /** q91/q92's oracle: q73's admitted set (smallest-id holder per
     * non-corpus-blocked fingerprint) without the in-batch dup count —
@@ -2210,7 +2425,7 @@ object StreamGateQueries {
     * index is the cross-batch state).
     */
   def q96StreamingNeardupFold(s: SparkSession, dir: String): DataFrame =
-    neardupFoldGate(s, dir, "q96", failAt = None)
+    foldGate(s, dir, "q96", NearDups, Schedule(4))
 
   /** q97 — q96's pipeline crashed on the first attempt of batch 2 after
     * both durable effects (admissions dir + band-key fold), then
@@ -2221,7 +2436,7 @@ object StreamGateQueries {
     * batch-dir union meets q96's oracle for the 6-batch layout verbatim.
     */
   def q97NeardupFoldCrash(s: SparkSession, dir: String): DataFrame =
-    neardupFoldGate(s, dir, "q97", failAt = Some(2L))
+    foldGate(s, dir, "q97", NearDups, Schedule(6, crashes = Seq(2L)))
 
   /** q109 — q94's MID-STREAM COMPACTION on the NEAR-DUP modality: q96's
     * continuous banded-fold loop with the bounded head-of-batch compact
@@ -2234,172 +2449,7 @@ object StreamGateQueries {
     * rows shifts some batch's candidate set and fails the hash.
     */
   def q109CompactedNeardupFold(s: SparkSession, dir: String): DataFrame =
-    neardupFoldGate(s, dir, "q109", failAt = None, compactAt = Some(1L))
-
-  /** Shared harness behind q96/q97 (never-expiring), q104/q105
-    * (`horizon = Some(H)` — per-batch expire + stamped folds + the
-    * post-expiry re-admission fence), and q109 (`compactAt` — the
-    * bounded head-of-batch mid-stream compaction), the
-    * `streamingFoldGate(compactAt)` parametrization pattern: one
-    * drive/sink/probe spelling for the whole near-dup gate family.
-    */
-  private def neardupFoldGate(
-      s: SparkSession, dir: String, tag: String, failAt: Option[Long],
-      horizon: Option[Long] = None, compactAt: Option[Long] = None,
-      wmClock: Boolean = false,
-      autoCompactOver: Option[Int] = None): DataFrame = {
-    import s.implicits._
-    require(!(wmClock && horizon.isDefined),
-      s"$tag: wmClock IS the expiry clock — horizon is the batch-position spelling")
-    if (wmClock) requireWmWindowLaw(tag)
-    val policyFired = new java.util.concurrent.atomic.AtomicInteger(0)
-    // the two expiry clocks run the SAME horizon recurrence (the window
-    // law makes the ms clock batch-exact), so the fences and oracle of
-    // the batch-position spelling apply verbatim to the watermark one
-    val fenceHorizon = if (wmClock) Some(ExpiryHorizon) else horizon
-    val n =
-      if (failAt.isDefined) 6 else if (fenceHorizon.isDefined) 5 else 4
-    val staged = stageDocHashSplit(s, dir, tag, n, eventTs = wmClock)
-    // the confirm step's doc store: every blocker's shingles fetched by
-    // id (at 100 TB the q53 bucket-pruned point lookup; here one
-    // checkpointed frame shared by all batches)
-    val docStoreSh = LlmQueries.shingleDocs(Tables.documents(s, dir))
-      .localCheckpoint()
-    val corpusSh = docStoreSh
-      .filter(graft.operators.Sampling.uniform01($"doc_id") >= 0.3)
-    val corpusBands = {
-      val b = LlmQueries.minhashBands(corpusSh).select($"doc_id", $"band", $"bk")
-      // the expiring fence below re-probes against the corpus index
-      if (fenceHorizon.isDefined) b.localCheckpoint() else b
-    }
-    val ix = new graft.operators.StandingIndex(
-      s, s"${tag}_band_ix", buckets = 4, keys = Seq("band", "bk"))
-    // expiring shape: the corpus folded BEFORE batch 0 — stamp -1 on the
-    // batch-position clock, one full step before batch 0's events on the
-    // watermark clock — so it expires when batch H's threshold passes
-    ix.init(corpusBands, maxEventMs =
-      if (wmClock) WmT0 - WmStepMs
-      else if (horizon.isDefined) -1L
-      else Long.MaxValue)
-    val out = Files.createTempDirectory(s"graft-$tag-out").toString
-    val ck = Files.createTempDirectory(s"graft-$tag-ck").toString
-    val qn = s"${tag}_neardup_fold"
-    val sawWm = new java.util.concurrent.atomic.AtomicInteger(0)
-    val injectedMsg = s"$tag injected mid-batch failure (first attempt of batch ${failAt.getOrElse(-1L)})"
-    val failMarker = Paths.get(out, "_fail_injected")
-    def runOnce(run: String): StreamingQuery = {
-      val fields = Seq(
-        StructField("doc_id", LongType), StructField("text", StringType)) ++
-        (if (wmClock) Seq(StructField("event_ts", TimestampType)) else Seq.empty)
-      val read = s.readStream
-        .schema(StructType(fields))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-      val incoming = if (!wmClock) read
-        else read.withWatermark("event_ts", s"${WmDelayMs / 1000} seconds")
-      incoming
-        .writeStream
-        .queryName(s"${qn}_$run")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ck)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // q109: the bounded head-of-batch compact (q94's placement
-          // discipline) — strictly after batch `compactAt`'s commit,
-          // bounded to committed folds
-          if (compactAt.contains(batchId - 1)) ix.compact(coverAtMost = batchId)
-          // q119/q120: the cadence POLICY at the head of the batch,
-          // bounded to committed covers and BEFORE the expire — q113's
-          // fully-composed loop on the NEAR-DUP modality (under the
-          // watermark clock every band fold is distinctly stamped, so a
-          // policy firing is always a mixed-stamp merge)
-          autoCompactOver.foreach(k =>
-            policyProbe(tag, ix, k, batchId, policyFired))
-          // expiry first (q98's ordering): entries behind the horizon
-          // stop blocking BEFORE this batch probes. Two spellings of
-          // the SAME threshold: the batch-position clock (q104/q105)
-          // expires at batchId − H here; the production watermark clock
-          // (q115/q116) expires inside [[wmClockStep]] below at
-          // committedWatermark − Hms, re-derived on replay from the
-          // recorded planning watermark (q112's discipline)
-          horizon.foreach(h => ix.expire(expireBeforeMs = batchId - h))
-          // wmClock: the ONE watermark-clock step ([[wmClockStep]] —
-          // checkpoint once, record/read the planning watermark, expire
-          // at committedWatermark − Hms, max-event stamp)
-          val (src, stampMs) =
-            if (wmClock) wmClockStep(s, ck, qn, batchId, ix, batch,
-              onWm = wm => { if (wm > 0L) sawWm.incrementAndGet(); () })
-            else (batch,
-              Some(if (horizon.isDefined) batchId else Long.MaxValue))
-          stampMs.foreach { stamp =>
-            // then the ONE per-batch spelling (LlmQueries
-            // .neardupAdmitAndFold, shared with StreamBench's neardup
-            // subject): shingle + band once, probe strictly-earlier
-            // surviving segments, fold the admitted band keys
-            val admitted = LlmQueries.neardupAdmitAndFold(
-              src.select($"doc_id", $"text"), ix, batchId, docStoreSh,
-              maxEventMs = stamp)
-            admitted
-              .select($"doc_id", lit(batchId + 1).cast("int").as("batch"),
-                $"n_shingles")
-              .write.mode("overwrite").parquet(f"$out/batch_$batchId%06d")
-          }
-          if (failAt.contains(batchId) && !Files.exists(failMarker)) {
-            Files.createFile(failMarker)
-            throw new RuntimeException(injectedMsg)
-          }
-        }
-        .start()
-    }
-    val query = driveRuns(tag, failAt, injectedMsg, failMarker)(runOnce)
-    val stateful = Option(query.lastProgress)
-      .map(_.stateOperators.map(_.operatorName).toSeq).getOrElse(Seq.empty)
-    require(stateful.isEmpty,
-      s"$tag must run STATELESS (the standing index is the cross-batch " +
-        s"state; the watermark operator holds no store), got $stateful")
-    // the engine must actually have reported advancing watermarks — a
-    // silently-absent watermark would leave every expire() a no-op and
-    // collapse the gate into the never-expiring shape (q108's fence)
-    if (wmClock) require(sawWm.get >= n - 2,
-      s"$tag: the engine must report a committed event-time watermark " +
-        s"from batch 2 on, got ${sawWm.get} reports")
-    // q119/q120's non-vacuity fence (q111's): a policy that never fired
-    // would silently degrade the gate to q115 and prove nothing
-    autoCompactOver.foreach { _ =>
-      require(policyFired.get >= 2,
-        s"$tag: the cadence policy must fire >= 2 compactions across the " +
-          s"run, got ${policyFired.get}")
-    }
-    dropStaged(staged)
-    val result = s.read.parquet(s"$out/batch_*")
-      .select($"doc_id", $"batch", $"n_shingles")
-      .orderBy($"doc_id")
-    fenceHorizon.foreach { h =>
-      // non-vacuity fence: expiry must have RE-OPENED at least one
-      // corpus-blocked doc — a late admission with a CONFIRMED corpus
-      // near-duplicate (band-candidate + exact Jaccard >= 0.8), which
-      // the never-expiring gate would reject; otherwise the expiring
-      // gate silently collapses into q96
-      val lateSh = docStoreSh
-        .join(result.filter($"batch" > h).select($"doc_id"), "doc_id")
-        .localCheckpoint()
-      val lateCand = LlmQueries.minhashBands(lateSh)
-        .select($"doc_id", $"band", $"bk")
-        .join(corpusBands.select($"doc_id".as("blocker"), $"band", $"bk"),
-          Seq("band", "bk"))
-        .select($"doc_id", $"blocker").distinct()
-      val reopened = lateCand
-        .join(lateSh.select($"doc_id", $"sh".as("sh_i")), "doc_id")
-        .join(docStoreSh.select($"doc_id".as("blocker"), $"sh".as("sh_b")), "blocker")
-        .withColumn("common", size(array_intersect($"sh_i", $"sh_b")))
-        .filter($"common".cast("double") /
-          (size($"sh_i") + size($"sh_b") - $"common") >= 0.8)
-        .select($"doc_id").distinct().count()
-      require(reopened > 0,
-        s"$tag must admit at least one post-expiry corpus near-duplicate, got none")
-    }
-    result
-  }
+    foldGate(s, dir, "q109", NearDups, Schedule(4, cadence = Cadence.AtBatch2))
 
   /** q96/q97's oracle: the sequential near-dup recurrence unrolled over
     * the gate's exact hash-group batch layout (see q96's scaladoc).
@@ -2431,7 +2481,7 @@ object StreamGateQueries {
     * — the SAME generator as q89/q96/q97.
     */
   def q104ExpiringNeardupFold(s: SparkSession, dir: String): DataFrame =
-    neardupFoldGate(s, dir, "q104", failAt = None, horizon = Some(ExpiryHorizon))
+    foldGate(s, dir, "q104", NearDups, Schedule(5, Clock.BatchHorizon))
 
   /** q105 — q104's pipeline crashed on the first attempt of batch 2
     * after its durable effects (expire + fold + sink), then replayed:
@@ -2440,7 +2490,8 @@ object StreamGateQueries {
     * stamped re-fold of the deterministic band keys.
     */
   def q105ExpiringNeardupCrash(s: SparkSession, dir: String): DataFrame =
-    neardupFoldGate(s, dir, "q105", failAt = Some(2L), horizon = Some(ExpiryHorizon))
+    foldGate(s, dir, "q105", NearDups,
+      Schedule(6, Clock.BatchHorizon, crashes = Seq(2L)))
 
   /** q115 — q104's expiring NEAR-DUP fold with the expiry clock spelled
     * the way a production deployment spells it (q108's watermark clock
@@ -2461,7 +2512,7 @@ object StreamGateQueries {
     * post-expiry corpus re-admission, exactly q104's.
     */
   def q115WatermarkNeardupFold(s: SparkSession, dir: String): DataFrame =
-    neardupFoldGate(s, dir, "q115", failAt = None, wmClock = true)
+    foldGate(s, dir, "q115", NearDups, Schedule(5, Clock.Watermark))
 
   /** q116 — q115's pipeline crashed on the first attempt of batch 2
     * after ALL durable effects (the recorded planning watermark, the
@@ -2474,7 +2525,8 @@ object StreamGateQueries {
     * band keys AND the identical max-event stamp.
     */
   def q116WatermarkNeardupCrash(s: SparkSession, dir: String): DataFrame =
-    neardupFoldGate(s, dir, "q116", failAt = Some(2L), wmClock = true)
+    foldGate(s, dir, "q116", NearDups,
+      Schedule(6, Clock.Watermark, crashes = Seq(2L)))
 
   /** q119 — q113's FULLY-COMPOSED PRODUCTION LOOP on the NEAR-DUP
     * modality: q115's watermark-clocked expiring band fold with
@@ -2492,8 +2544,8 @@ object StreamGateQueries {
     * re-admission.
     */
   def q119PolicyNeardupFold(s: SparkSession, dir: String): DataFrame =
-    neardupFoldGate(s, dir, "q119", failAt = None, wmClock = true,
-      autoCompactOver = Some(2))
+    foldGate(s, dir, "q119", NearDups,
+      Schedule(5, Clock.Watermark, Cadence.Policy(2)))
 
   /** q120 — q119's pipeline crashed on the first attempt of batch 2
     * after ALL durable effects, then replayed: q114's crash cell on the
@@ -2506,8 +2558,8 @@ object StreamGateQueries {
     * stamped band keys. The ≥ 2-firings fence spans the whole drive.
     */
   def q120PolicyNeardupCrash(s: SparkSession, dir: String): DataFrame =
-    neardupFoldGate(s, dir, "q120", failAt = Some(2L), wmClock = true,
-      autoCompactOver = Some(2))
+    foldGate(s, dir, "q120", NearDups,
+      Schedule(6, Clock.Watermark, Cadence.Policy(2), crashes = Seq(2L)))
 
 
   /** q98 — streamed EXPIRING dedup: q91's continuous fold loop with a
@@ -2534,7 +2586,7 @@ object StreamGateQueries {
     * is O(horizon × batch), never O(stream).
     */
   def q98ExpiringFold(s: SparkSession, dir: String): DataFrame =
-    expiringFoldGate(s, dir, "q98", failAt = None)
+    foldGate(s, dir, "q98", Fingerprints, Schedule(5, Clock.BatchHorizon))
 
   /** q99 — q98's pipeline crashed on the first attempt of batch 2 after
     * its durable effects (expire + fold + sink), then replayed. The
@@ -2547,14 +2599,11 @@ object StreamGateQueries {
     * exactly-once matrix.
     */
   def q99ExpiringFoldCrash(s: SparkSession, dir: String): DataFrame =
-    expiringFoldGate(s, dir, "q99", failAt = Some(2L))
+    foldGate(s, dir, "q99", Fingerprints,
+      Schedule(6, Clock.BatchHorizon, crashes = Seq(2L)))
 
-  /** Batches a fold blocks for in the expiring gates (see q98).
-    * `private[graft]` so StreamBench's `foldexp` subject prices exactly
-    * the horizon the gates verify — a bench-side literal could silently
-    * drift if this changed.
-    */
-  private[graft] val ExpiryHorizon = 2L
+  /** Batches a fold blocks for in the expiring gates (see q98). */
+  private val ExpiryHorizon = 2L
 
   /** q106 — COMPACTION UNDER EXPIRING CONTINUOUS INGEST: q98's horizon
     * recurrence with q94's head-of-batch bounded compaction injected at
@@ -2578,7 +2627,8 @@ object StreamGateQueries {
     * — both shift admissions and fail the hash.
     */
   def q106ExpiringCompactedFold(s: SparkSession, dir: String): DataFrame =
-    expiringFoldGate(s, dir, "q106", failAt = None, compactAt = Some(1L))
+    foldGate(s, dir, "q106", Fingerprints,
+      Schedule(5, Clock.BatchHorizon, Cadence.AtBatch2))
 
   /** q107 — q106's pipeline crashed on the first attempt of batch 2
     * after ALL its durable effects (the bounded compact, the expiry
@@ -2592,93 +2642,8 @@ object StreamGateQueries {
     * expiry at once — the full maintenance stack under one failure.
     */
   def q107ExpiringCompactCrash(s: SparkSession, dir: String): DataFrame =
-    expiringFoldGate(s, dir, "q107", failAt = Some(2L), compactAt = Some(1L))
-
-  /** Shared harness behind q98/q99 (clean/crashed) and q106/q107 (with a
-    * mid-stream bounded compaction — `compactAt`, the
-    * streamingFoldGate parametrization pattern).
-    */
-  private def expiringFoldGate(
-      s: SparkSession, dir: String, tag: String, failAt: Option[Long],
-      compactAt: Option[Long] = None): DataFrame = {
-    import s.implicits._
-    val n = if (failAt.isDefined) 6 else 5
-    val staged = stageDocHashSplit(s, dir, tag, n)
-    val corpus = Tables.documents(s, dir)
-      .select(
-        graft.operators.TextOps.bagFingerprint(
-          graft.operators.TextOps.normText($"text")).as("fingerprint"),
-        graft.operators.Sampling.uniform01($"doc_id").as("u"))
-      .filter($"u" >= 0.3)
-      .select($"fingerprint")
-    val ix = new graft.operators.StandingIndex(
-      s, s"${tag}_fp_ix", buckets = 4, keys = Seq("fingerprint"))
-    // the corpus folded BEFORE batch 0 — stamp -1 on the batch-position
-    // clock, so it expires exactly when batch H's threshold passes it
-    ix.init(corpus, maxEventMs = -1L)
-    val out = Files.createTempDirectory(s"graft-$tag-out").toString
-    val ck = Files.createTempDirectory(s"graft-$tag-ck").toString
-    val injectedMsg = s"$tag injected mid-batch failure (first attempt of batch ${failAt.getOrElse(-1L)})"
-    val failMarker = Paths.get(out, "_fail_injected")
-    def runOnce(run: String): StreamingQuery = {
-      val incoming = s.readStream
-        .schema(StructType(Seq(
-          StructField("doc_id", LongType), StructField("text", StringType))))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-        .select($"doc_id",
-          graft.operators.TextOps.bagFingerprint(
-            graft.operators.TextOps.normText($"text")).as("fingerprint"))
-      incoming
-        .writeStream
-        .queryName(s"${tag}_expiring_fold_$run")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ck)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // q106/q107: the bounded head-of-batch compact (q94's
-          // placement discipline), BEFORE the expire — it merges
-          // mixed-stamp committed segments into an entry-level-stamped
-          // generation, and the expire right after must still retire
-          // exactly the horizon's entries from it
-          if (compactAt.contains(batchId - 1)) ix.compact(coverAtMost = batchId)
-          // horizon next: segments (and merged-generation ENTRIES) whose
-          // stamp fell behind batchId − H stop blocking BEFORE this
-          // batch probes (retire/rewrite → next cycle reclaims); then
-          // the standard probe + stamped fold
-          ix.expire(expireBeforeMs = batchId - ExpiryHorizon)
-          val admitted = LlmQueries.admitAndFold(batch, ix, batchId,
-            maxEventMs = batchId)
-          admitted
-            .select($"doc_id", lit(batchId + 1).cast("int").as("batch"),
-              $"fingerprint")
-            .write.mode("overwrite").parquet(f"$out/batch_$batchId%06d")
-          if (failAt.contains(batchId) && !Files.exists(failMarker)) {
-            Files.createFile(failMarker)
-            throw new RuntimeException(injectedMsg)
-          }
-        }
-        .start()
-    }
-    val query = driveRuns(tag, failAt, injectedMsg, failMarker)(runOnce)
-    val stateful = Option(query.lastProgress)
-      .map(_.stateOperators.map(_.operatorName).toSeq).getOrElse(Seq.empty)
-    require(stateful.isEmpty,
-      s"$tag must run STATELESS (the standing index is the cross-batch " +
-        s"state), got $stateful")
-    dropStaged(staged)
-    val result = s.read.parquet(s"$out/batch_*")
-      .select($"doc_id", $"batch", $"fingerprint")
-      .orderBy($"doc_id")
-    // non-vacuity fence: expiry must have RE-OPENED at least one
-    // corpus-blocked fingerprint (an admission that q91's never-expiring
-    // gate would reject) — otherwise this gate silently collapses into
-    // q91 and proves nothing about the horizon
-    val reopened = result.join(corpus, "fingerprint").count()
-    require(reopened > 0,
-      s"$tag must admit at least one post-expiry corpus duplicate, got none")
-    result
-  }
+    foldGate(s, dir, "q107", Fingerprints,
+      Schedule(6, Clock.BatchHorizon, Cadence.AtBatch2, crashes = Seq(2L)))
 
   /** q98/q99's oracle: per-batch admission windows unrolled over the
     * hash-group layout — batch k (1-based group) is blocked by the
@@ -2782,7 +2747,7 @@ object StreamGateQueries {
     * is committed state by construction.
     */
   def q108WatermarkExpiringFold(s: SparkSession, dir: String): DataFrame =
-    watermarkFoldGate(s, dir, "q108", failAt = None)
+    foldGate(s, dir, "q108", Fingerprints, Schedule(5, Clock.Watermark))
 
   /** q112 — q108's pipeline crashed on the first attempt of batch 2
     * after ALL its durable effects (the recorded planning watermark,
@@ -2797,7 +2762,8 @@ object StreamGateQueries {
     * oracle verbatim.
     */
   def q112WatermarkExpiryCrash(s: SparkSession, dir: String): DataFrame =
-    watermarkFoldGate(s, dir, "q112", failAt = Some(2L))
+    foldGate(s, dir, "q112", Fingerprints,
+      Schedule(6, Clock.Watermark, crashes = Seq(2L)))
 
   /** q113 — the FULL PRODUCTION LOOP in one gate: q108's
     * watermark-clocked expiring fold with compaction fired by the
@@ -2821,7 +2787,8 @@ object StreamGateQueries {
     * ≥ 1 post-expiry corpus re-admission.
     */
   def q113PolicyExpiringWatermarkFold(s: SparkSession, dir: String): DataFrame =
-    watermarkFoldGate(s, dir, "q113", failAt = None, autoCompactOver = Some(2))
+    foldGate(s, dir, "q113", Fingerprints,
+      Schedule(5, Clock.Watermark, Cadence.Policy(2)))
 
   /** q114 — q113's pipeline crashed on the first attempt of batch 2
     * after ALL durable effects, then replayed: the crash cell of the
@@ -2838,7 +2805,8 @@ object StreamGateQueries {
     * oracle verbatim.
     */
   def q114PolicyExpiryCrash(s: SparkSession, dir: String): DataFrame =
-    watermarkFoldGate(s, dir, "q114", failAt = Some(2L), autoCompactOver = Some(2))
+    foldGate(s, dir, "q114", Fingerprints,
+      Schedule(6, Clock.Watermark, Cadence.Policy(2), crashes = Seq(2L)))
 
   /** The watermark-clock WINDOW LAW (q108's scaladoc): slack =
     * D + Hms − (H − 2)·step must sit strictly inside
@@ -2927,151 +2895,6 @@ object StreamGateQueries {
     }.toOption.flatten
   }
 
-  /** ONE watermark-clocked maintenance step — the per-batch idiom every
-    * production-clock gate (q108/q112–q118) and StreamBench's `wmclock`
-    * arm share, so the checkpoint-once discipline can never drift per
-    * copy: (1) CHECKPOINT the batch once — foreachBatch re-executes the
-    * whole micro-batch plan per action with no column pruning through
-    * it, so a second raw action (the stamp aggregate) cost one full
-    * extra batch execution (+3.7 s/batch measured at the 100× decade);
-    * (2) read this batch's recorded planning watermark
-    * ([[plannedWatermarkMs]]) and drive expiry at
-    * `committedWatermark − horizonMs` (`onWm` sees the raw watermark
-    * first — the gates' sawWm fence); (3) return the checkpointed frame
-    * with its max-event stamp (None for a rowless batch: nothing
-    * arrived, nothing to probe or fold — the defensive fence).
-    */
-  private[graft] def wmClockStep(
-      s: SparkSession, ck: String, qn: String, batchId: Long,
-      ix: graft.operators.StandingIndex, batch: DataFrame,
-      onWm: Long => Unit = _ => ()): (DataFrame, Option[Long]) = {
-    // record + expire BEFORE the checkpoint: the record must be the
-    // step's FIRST durable act — a crash during the (multi-second)
-    // checkpoint materialization must still find the planning watermark
-    // recorded, or the replay (whose restarted query has a null
-    // lastProgress) could never re-derive this batch's expiry threshold
-    // and would skip the expire a crash-free run performed
-    plannedWatermarkMs(s, ck, qn, batchId).foreach { wm =>
-      onWm(wm)
-      ix.expire(expireBeforeMs = wm - WmHorizonMs)
-    }
-    val src = batch.localCheckpoint()
-    val maxRow = src.agg(max(unix_millis(col("event_ts")))).head
-    (src, if (maxRow.isNullAt(0)) None else Some(maxRow.getLong(0)))
-  }
-
-  /** Shared harness behind q108 (clean) and q112 (crashed + replayed) —
-    * see q108's scaladoc for the window law and the recorded-watermark
-    * replay discipline.
-    */
-  private def watermarkFoldGate(
-      s: SparkSession, dir: String, tag: String, failAt: Option[Long],
-      autoCompactOver: Option[Int] = None): DataFrame = {
-    import s.implicits._
-    val policyFired = new java.util.concurrent.atomic.AtomicInteger(0)
-    requireWmWindowLaw(tag)
-    val n = if (failAt.isDefined) 6 else 5
-    val staged = stageDocHashSplit(s, dir, tag, n, eventTs = true)
-    val corpus = Tables.documents(s, dir)
-      .select(
-        graft.operators.TextOps.bagFingerprint(
-          graft.operators.TextOps.normText($"text")).as("fingerprint"),
-        graft.operators.Sampling.uniform01($"doc_id").as("u"))
-      .filter($"u" >= 0.3)
-      .select($"fingerprint")
-    val ix = new graft.operators.StandingIndex(
-      s, s"${tag}_fp_ix", buckets = 4, keys = Seq("fingerprint"))
-    // the corpus ingested one step before batch 0's events — its entries
-    // fall out of the horizon exactly when batch H's threshold passes
-    ix.init(corpus, maxEventMs = WmT0 - WmStepMs)
-    val out = Files.createTempDirectory(s"graft-$tag-out").toString
-    val ck = Files.createTempDirectory(s"graft-$tag-ck").toString
-    val qn = s"${tag}_watermark_fold"
-    val sawWm = new java.util.concurrent.atomic.AtomicInteger(0)
-    val injectedMsg = s"$tag injected mid-batch failure (first attempt of batch ${failAt.getOrElse(-1L)})"
-    val failMarker = Paths.get(out, "_fail_injected")
-    def runOnce(run: String): StreamingQuery = {
-      val incoming = s.readStream
-        .schema(StructType(Seq(
-          StructField("doc_id", LongType), StructField("text", StringType),
-          StructField("event_ts", TimestampType))))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-        .select($"doc_id",
-          graft.operators.TextOps.bagFingerprint(
-            graft.operators.TextOps.normText($"text")).as("fingerprint"),
-          $"event_ts")
-        .withWatermark("event_ts", s"${WmDelayMs / 1000} seconds")
-      incoming
-        .writeStream
-        .queryName(s"${qn}_$run")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ck)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // q113/q114: the cadence POLICY fires the entry-stamped
-          // compact at the head of the batch, bounded to committed
-          // covers (q94's placement discipline) and BEFORE the expire —
-          // under the watermark clock every fold carries a distinct
-          // event-time stamp, so a policy-fired merge is always
-          // mixed-stamp (q106's entry-level machinery) and the expire
-          // right after must still retire exactly the horizon's entries
-          // from the merged generation, here policy-triggered rather
-          // than harness-scheduled
-          autoCompactOver.foreach(k =>
-            policyProbe(tag, ix, k, batchId, policyFired))
-          // the ONE watermark-clock step ([[wmClockStep]]): checkpoint
-          // once, read/record the planning watermark, expire at
-          // committedWatermark − Hms, return the max-event stamp
-          val (src, stampMs) = wmClockStep(s, ck, qn, batchId, ix, batch,
-            onWm = wm => { if (wm > 0L) sawWm.incrementAndGet(); () })
-          stampMs.foreach { batchMaxEventMs =>
-            val admitted = LlmQueries.admitAndFold(
-              src.select($"doc_id", $"fingerprint"), ix, batchId,
-              maxEventMs = batchMaxEventMs)
-            admitted
-              .select($"doc_id", lit(batchId + 1).cast("int").as("batch"),
-                $"fingerprint")
-              .write.mode("overwrite").parquet(f"$out/batch_$batchId%06d")
-          }
-          if (failAt.contains(batchId) && !Files.exists(failMarker)) {
-            Files.createFile(failMarker)
-            throw new RuntimeException(injectedMsg)
-          }
-        }
-        .start()
-    }
-    val query = driveRuns(tag, failAt, injectedMsg, failMarker)(runOnce)
-    val stateful = Option(query.lastProgress)
-      .map(_.stateOperators.map(_.operatorName).toSeq).getOrElse(Seq.empty)
-    require(stateful.isEmpty,
-      s"$tag must run STATELESS (the standing index is the cross-batch " +
-        s"state; the watermark operator holds no store), got $stateful")
-    // the engine must actually have reported advancing watermarks — a
-    // silently-absent watermark would leave every expire() a no-op and
-    // collapse this gate into q91's never-expiring shape
-    require(sawWm.get >= n - 2,
-      s"$tag: the engine must report a committed event-time watermark " +
-        s"from batch 2 on, got ${sawWm.get} reports")
-    // q113's non-vacuity fence (q111's): a policy that never fired would
-    // silently degrade the gate to q108 and prove nothing about cadence
-    autoCompactOver.foreach { _ =>
-      require(policyFired.get >= 2,
-        s"$tag: the cadence policy must fire >= 2 compactions across the " +
-          s"run, got ${policyFired.get}")
-    }
-    dropStaged(staged)
-    val result = s.read.parquet(s"$out/batch_*")
-      .select($"doc_id", $"batch", $"fingerprint")
-      .orderBy($"doc_id")
-    // q98's non-vacuity fence: watermark-clocked expiry must have
-    // RE-OPENED at least one corpus-blocked fingerprint
-    val reopened = result.join(corpus, "fingerprint").count()
-    require(reopened > 0,
-      s"$tag must admit at least one post-expiry corpus duplicate, got none")
-    result
-  }
-
   /** Batches the soak gate (q123) drives, and its crash cadence — 50
     * batches with an injected first-attempt crash every 10th batch
     * (batches 10/20/30/40), per the long-horizon deployment shape the
@@ -3152,29 +2975,19 @@ object StreamGateQueries {
     * source still delivers them as zero-row batches, so slice i =
     * batch i−1 holds and the oracle's per-group CTEs stay aligned).
     */
-  def q123SoakProductionLoop(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val tag = "q123"
-    requireWmWindowLaw(tag)
-    val n = SoakBatches
-    val k = 2
-    val policyFired = new java.util.concurrent.atomic.AtomicInteger(0)
-    val sawWm = new java.util.concurrent.atomic.AtomicInteger(0)
-    val staged = stageDocHashSplit(s, dir, tag, n, eventTs = true, allowEmpty = true)
-    val corpus = Tables.documents(s, dir)
-      .select(
-        graft.operators.TextOps.bagFingerprint(
-          graft.operators.TextOps.normText($"text")).as("fingerprint"),
-        graft.operators.Sampling.uniform01($"doc_id").as("u"))
-      .filter($"u" >= 0.3)
-      .select($"fingerprint")
-    val ixName = s"${tag}_fp_ix"
-    val ix = new graft.operators.StandingIndex(
-      s, ixName, buckets = 4, keys = Seq("fingerprint"))
-    ix.init(corpus, maxEventMs = WmT0 - WmStepMs)
-    val out = Files.createTempDirectory(s"graft-$tag-out").toString
-    val ck = Files.createTempDirectory(s"graft-$tag-ck").toString
-    val qn = s"${tag}_soak_loop"
+  def q123SoakProductionLoop(s: SparkSession, dir: String): DataFrame =
+    foldGate(s, dir, "q123", Fingerprints,
+      Schedule(SoakBatches, Clock.Watermark, Cadence.Policy(2), SoakFailAts),
+      soak = Some(new Soak(s, "q123", foldIxName("q123", Fingerprints))))
+
+  /** q123's own fences, on top of [[foldGate]]'s: the warehouse
+    * file-count bound at every batch head, and after the drive ≥ 10
+    * policy firings and the flat cost trend over the folded batches'
+    * last completed attempts (a replay overwrites its crashed attempt).
+    * A soak stages long and thin, so its empty hash groups are delivered
+    * as zero-row batches ([[writeSlices]] `allowEmpty`).
+    */
+  private[graft] final class Soak(s: SparkSession, tag: String, ixName: String) {
     // the file-count bound: ~8 concurrently-live tables is the steady
     // ceiling under k=2 (live merged gen + in-flight fold + expiry
     // rewrite + retired-with-grace + staging), each ≤ ~12 files (4
@@ -3182,106 +2995,45 @@ object StreamGateQueries {
     // versions and claim tmps. 160 holds a wide margin over the
     // measured steady state while still tripping on a leak of one
     // file per batch well inside the soak's 50 batches
-    val fileBound = 160
-    // last completed wall-time per batch (replays overwrite their
-    // crashed first attempt) — only batches that folded (rowful)
-    val batchNanos = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
-    val failMarker: Long => java.nio.file.Path =
-      b => Paths.get(out, f"_fail_injected_$b%06d")
-    val injectedMsg: Long => String =
-      b => s"$tag injected mid-batch failure (first attempt of batch $b)"
-    def runOnce(run: String): StreamingQuery = {
-      val incoming = s.readStream
-        .schema(StructType(Seq(
-          StructField("doc_id", LongType), StructField("text", StringType),
-          StructField("event_ts", TimestampType))))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-        .select($"doc_id",
-          graft.operators.TextOps.bagFingerprint(
-            graft.operators.TextOps.normText($"text")).as("fingerprint"),
-          $"event_ts")
-        .withWatermark("event_ts", s"${WmDelayMs / 1000} seconds")
-      incoming
-        .writeStream
-        .queryName(s"${qn}_$run")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ck)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val t0 = System.nanoTime()
-          // file-count fence FIRST: the probe sees last batch's steady
-          // state (this batch's grace-reclaim has not run yet — the
-          // widest point of the retain-one cycle)
-          val files = warehouseFileCount(s, ixName)
-          require(files <= fileBound,
-            s"$tag: warehouse file count for '$ixName' must stay bounded " +
-              s"(<= $fileBound) on an infinite stream, got $files at batch " +
-              s"$batchId — an orphan/leak class is accumulating")
-          // q113's per-batch production loop: policy compact (bounded
-          // to committed covers, head-of-batch), watermark-clock step
-          // (record + expire + checkpoint-once), probe + stamped fold
-          policyProbe(tag, ix, k, batchId, policyFired)
-          val (src, stampMs) = wmClockStep(s, ck, qn, batchId, ix, batch,
-            onWm = wm => { if (wm > 0L) sawWm.incrementAndGet(); () })
-          stampMs.foreach { batchMaxEventMs =>
-            val admitted = LlmQueries.admitAndFold(
-              src.select($"doc_id", $"fingerprint"), ix, batchId,
-              maxEventMs = batchMaxEventMs)
-            admitted
-              .select($"doc_id", lit(batchId + 1).cast("int").as("batch"),
-                $"fingerprint")
-              .write.mode("overwrite").parquet(f"$out/batch_$batchId%06d")
-            batchNanos.put(batchId, System.nanoTime() - t0)
-          }
-          if (SoakFailAts.contains(batchId) && !Files.exists(failMarker(batchId))) {
-            Files.createFile(failMarker(batchId))
-            throw new RuntimeException(injectedMsg(batchId))
-          }
-        }
-        .start()
+    private val fileBound = 160
+    private val batchNanos = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
+
+    def around(batchId: Long)(fold: => Option[DataFrame]): Option[DataFrame] = {
+      val t0 = System.nanoTime()
+      // file-count fence FIRST: the probe sees last batch's steady state
+      // (this batch's grace-reclaim has not run yet — the widest point of
+      // the retain-one cycle)
+      val files = warehouseFileCount(s, ixName)
+      require(files <= fileBound,
+        s"$tag: warehouse file count for '$ixName' must stay bounded " +
+          s"(<= $fileBound) on an infinite stream, got $files at batch " +
+          s"$batchId — an orphan/leak class is accumulating")
+      val admitted = fold
+      if (admitted.isDefined) batchNanos.put(batchId, System.nanoTime() - t0)
+      admitted
     }
-    // the shared crash-schedule drive: each injected failure kills the
-    // query once; the restarted run replays its batch from the recorded
-    // planning watermark and carries on — exactly SoakFailAts.size
-    // restarts, then a clean termination
-    val query = driveCrashSchedule(tag,
-      SoakFailAts.map(b => (injectedMsg(b), failMarker(b))))(runOnce)
-    val stateful = Option(query.lastProgress)
-      .map(_.stateOperators.map(_.operatorName).toSeq).getOrElse(Seq.empty)
-    require(stateful.isEmpty,
-      s"$tag must run STATELESS (the standing index is the cross-batch " +
-        s"state; the watermark operator holds no store), got $stateful")
-    require(sawWm.get >= n - 2,
-      s"$tag: the engine must report a committed event-time watermark " +
-        s"from batch 2 on, got ${sawWm.get} reports")
-    require(policyFired.get >= 10,
-      s"$tag: the cadence policy must keep firing across a 50-batch " +
-        s"soak, got ${policyFired.get} firings")
-    // FLAT COST TREND: medians over the non-empty batches' last
-    // completed attempts; a leak-driven O(stream) trend compounds by
-    // the final third, GC/scheduling noise does not survive a median
-    val times = batchNanos.entrySet().asScala.toSeq
-      .sortBy(_.getKey).map(_.getValue.toDouble / 1e6)
-    def median(xs: Seq[Double]): Double = {
-      val s0 = xs.sorted
-      s0((s0.size - 1) / 2)
+
+    def check(policyFirings: Int): Unit = {
+      require(policyFirings >= 10,
+        s"$tag: the cadence policy must keep firing across a 50-batch " +
+          s"soak, got $policyFirings firings")
+      // FLAT COST TREND: medians over the non-empty batches' last
+      // completed attempts; a leak-driven O(stream) trend compounds by
+      // the final third, GC/scheduling noise does not survive a median
+      val times = batchNanos.entrySet().asScala.toSeq
+        .sortBy(_.getKey).map(_.getValue.toDouble / 1e6)
+      def median(xs: Seq[Double]): Double = {
+        val s0 = xs.sorted
+        s0((s0.size - 1) / 2)
+      }
+      val third = times.size / 3
+      val (mid, fin) = (times.slice(third, 2 * third), times.takeRight(third))
+      require(mid.nonEmpty && fin.nonEmpty, s"$tag: too few timed batches (${times.size})")
+      val (medMid, medFin) = (median(mid), median(fin))
+      require(medFin <= 2.5 * medMid,
+        f"$tag: per-batch wall time must stay flat across the soak, got " +
+          f"middle-third median $medMid%.0f ms vs final-third $medFin%.0f ms")
     }
-    val third = times.size / 3
-    val (mid, fin) = (times.slice(third, 2 * third), times.takeRight(third))
-    require(mid.nonEmpty && fin.nonEmpty, s"$tag: too few timed batches (${times.size})")
-    val (medMid, medFin) = (median(mid), median(fin))
-    require(medFin <= 2.5 * medMid,
-      f"$tag: per-batch wall time must stay flat across the soak, got " +
-        f"middle-third median $medMid%.0f ms vs final-third $medFin%.0f ms")
-    dropStaged(staged)
-    val result = s.read.parquet(s"$out/batch_*")
-      .select($"doc_id", $"batch", $"fingerprint")
-      .orderBy($"doc_id")
-    val reopened = result.join(corpus, "fingerprint").count()
-    require(reopened > 0,
-      s"$tag must admit at least one post-expiry corpus duplicate, got none")
-    result
   }
 
   /** Stage the incoming embeddings (content-hash split `u < 0.5`) as
@@ -3296,14 +3048,14 @@ object StreamGateQueries {
     * split the fixture has ZERO confirmed incoming–incoming pairs at
     * sf0.001 (measured), so every fold would be inert and the gate
     * would silently collapse into a streamed q80; at 0.5 the fold path
-    * provably bites at every SF (the [[vectorFoldGate]] fence). Only
+    * provably bites at every SF (the [[Vectors]] no-fold fence). Only
     * (vec_id, embedding) is staged — the sketch (integer scaling, norm,
     * sign-LSH bucket) is computed IN the stream, map-side, where an
     * ingest pipeline computes it.
     */
   private def stageVecHashSplit(
       s: SparkSession, dir: String, tag: String, n: Int,
-      eventTs: Boolean = false): String = {
+      eventTs: Boolean, allowEmpty: Boolean): String = {
     import s.implicits._
     val staged = Files.createTempDirectory(s"graft-$tag-src")
     val scratch = Files.createTempDirectory(s"graft-$tag-part")
@@ -3317,7 +3069,8 @@ object StreamGateQueries {
     // modality — the watermark-window arithmetic stays batch-exact
     val src = if (!eventTs) base
       else base.withColumn("event_ts", wmEventTs($"vec_id"))
-    writeSlices(staged, scratch, src, n, filePrefix = "vecs")
+    writeSlices(staged, scratch, src, n, filePrefix = "vecs",
+      allowEmpty = allowEmpty)
     staged.toString
   }
 
@@ -3347,7 +3100,7 @@ object StreamGateQueries {
     * cross-batch state).
     */
   def q100StreamingVectorFold(s: SparkSession, dir: String): DataFrame =
-    vectorFoldGate(s, dir, "q100", failAt = None)
+    foldGate(s, dir, "q100", Vectors, Schedule(4))
 
   /** q101 — q100's pipeline crashed on the first attempt of batch 2
     * after both durable effects (admissions dir + sketch-row fold), then
@@ -3359,7 +3112,7 @@ object StreamGateQueries {
     * q100's oracle for the 6-batch layout verbatim.
     */
   def q101VectorFoldCrash(s: SparkSession, dir: String): DataFrame =
-    vectorFoldGate(s, dir, "q101", failAt = Some(2L))
+    foldGate(s, dir, "q101", Vectors, Schedule(6, crashes = Seq(2L)))
 
   /** q110 — q94's MID-STREAM COMPACTION on the VECTOR modality: q100's
     * continuous sketch-fold loop with the bounded head-of-batch compact
@@ -3371,171 +3124,7 @@ object StreamGateQueries {
     * VERBATIM.
     */
   def q110CompactedVectorFold(s: SparkSession, dir: String): DataFrame =
-    vectorFoldGate(s, dir, "q110", failAt = None, compactAt = Some(1L))
-
-  /** Shared harness behind q100/q101 (never-expiring), q102/q103
-    * (`horizon = Some(H)` — per-batch expire + stamped folds + the
-    * post-expiry re-admission fence), and q110 (`compactAt` — the
-    * bounded head-of-batch mid-stream compaction) — the
-    * `streamingFoldGate(compactAt)` parametrization pattern on the
-    * vector modality.
-    */
-  private def vectorFoldGate(
-      s: SparkSession, dir: String, tag: String, failAt: Option[Long],
-      horizon: Option[Long] = None, compactAt: Option[Long] = None,
-      wmClock: Boolean = false,
-      autoCompactOver: Option[Int] = None): DataFrame = {
-    import s.implicits._
-    require(!(wmClock && horizon.isDefined),
-      s"$tag: wmClock IS the expiry clock — horizon is the batch-position spelling")
-    if (wmClock) requireWmWindowLaw(tag)
-    val policyFired = new java.util.concurrent.atomic.AtomicInteger(0)
-    // the two expiry clocks run the SAME horizon recurrence (the window
-    // law makes the ms clock batch-exact), so the fences and oracle of
-    // the batch-position spelling apply verbatim to the watermark one
-    val fenceHorizon = if (wmClock) Some(ExpiryHorizon) else horizon
-    val n =
-      if (failAt.isDefined) 6 else if (fenceHorizon.isDefined) 5 else 4
-    val staged = stageVecHashSplit(s, dir, tag, n, eventTs = wmClock)
-    val corpusFrame = LlmQueries.vectorIndexRows(
-        LlmQueries.vectorSketch(Tables.embeddings(s, dir))
-          .filter(graft.operators.Sampling.uniform01($"vec_id") >= 0.5))
-      .localCheckpoint() // reused by the non-vacuity fences below
-    val ix = new graft.operators.StandingIndex(
-      s, s"${tag}_vec_ix", buckets = 4, keys = Seq("bucket"))
-    // expiring shape: the corpus folded BEFORE batch 0 — stamp -1 on the
-    // batch-position clock, one full step before batch 0's events on the
-    // watermark clock — so it expires when batch H's threshold passes
-    ix.init(corpusFrame, maxEventMs =
-      if (wmClock) WmT0 - WmStepMs
-      else if (horizon.isDefined) -1L
-      else Long.MaxValue)
-    val out = Files.createTempDirectory(s"graft-$tag-out").toString
-    val ck = Files.createTempDirectory(s"graft-$tag-ck").toString
-    val qn = s"${tag}_vector_fold"
-    val sawWm = new java.util.concurrent.atomic.AtomicInteger(0)
-    val injectedMsg = s"$tag injected mid-batch failure (first attempt of batch ${failAt.getOrElse(-1L)})"
-    val failMarker = Paths.get(out, "_fail_injected")
-    def runOnce(run: String): StreamingQuery = {
-      val fields = Seq(
-        StructField("vec_id", LongType),
-        StructField("embedding", ArrayType(FloatType))) ++
-        (if (wmClock) Seq(StructField("event_ts", TimestampType)) else Seq.empty)
-      val read = s.readStream
-        .schema(StructType(fields))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-      val incoming = if (!wmClock) read
-        else read.withWatermark("event_ts", s"${WmDelayMs / 1000} seconds")
-      incoming
-        .writeStream
-        .queryName(s"${qn}_$run")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ck)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // q110: the bounded head-of-batch compact (q94's placement
-          // discipline) — strictly after batch `compactAt`'s commit,
-          // bounded to committed folds
-          if (compactAt.contains(batchId - 1)) ix.compact(coverAtMost = batchId)
-          // q121/q122: the cadence POLICY at the head of the batch —
-          // q113's fully-composed loop on the VECTOR modality (every
-          // firing a mixed-stamp merge under the watermark clock)
-          autoCompactOver.foreach(k =>
-            policyProbe(tag, ix, k, batchId, policyFired))
-          // expiry first (q98's ordering), in either spelling: the
-          // batch-position clock (q102/q103) expires at batchId − H
-          // here; the watermark clock (q117/q118) inside [[wmClockStep]]
-          horizon.foreach(h => ix.expire(expireBeforeMs = batchId - h))
-          val (src, stampMs) =
-            if (wmClock) wmClockStep(s, ck, qn, batchId, ix, batch,
-              onWm = wm => { if (wm > 0L) sawWm.incrementAndGet(); () })
-            else (batch,
-              Some(if (horizon.isDefined) batchId else Long.MaxValue))
-          stampMs.foreach { stamp =>
-            // then the ONE per-batch spelling (LlmQueries
-            // .vectorAdmitAndFold, shared with StreamBench's vecfold
-            // subject): sketch once, probe strictly-earlier surviving
-            // segments, fold the admitted sketch rows (the sketch is
-            // deterministic per vector, so the crash replay's re-fold
-            // is byte-identical)
-            val admitted = LlmQueries.vectorAdmitAndFold(
-              src.select($"vec_id", $"embedding"), ix, batchId,
-              maxEventMs = stamp)
-            admitted
-              .select($"vec_id", lit(batchId + 1).cast("int").as("batch"),
-                $"bucket")
-              .write.mode("overwrite").parquet(f"$out/batch_$batchId%06d")
-          }
-          if (failAt.contains(batchId) && !Files.exists(failMarker)) {
-            Files.createFile(failMarker)
-            throw new RuntimeException(injectedMsg)
-          }
-          ()
-        }
-        .start()
-    }
-    val query = driveRuns(tag, failAt, injectedMsg, failMarker)(runOnce)
-    val stateful = Option(query.lastProgress)
-      .map(_.stateOperators.map(_.operatorName).toSeq).getOrElse(Seq.empty)
-    require(stateful.isEmpty,
-      s"$tag must run STATELESS (the standing index is the cross-batch " +
-        s"state; the watermark operator holds no store), got $stateful")
-    // q108's fence: silently-absent watermarks would no-op every expire
-    if (wmClock) require(sawWm.get >= n - 2,
-      s"$tag: the engine must report a committed event-time watermark " +
-        s"from batch 2 on, got ${sawWm.get} reports")
-    // q121/q122's non-vacuity fence (q111's): a policy that never fired
-    // would silently degrade the gate to q117 and prove nothing
-    autoCompactOver.foreach { _ =>
-      require(policyFired.get >= 2,
-        s"$tag: the cadence policy must fire >= 2 compactions across the " +
-          s"run, got ${policyFired.get}")
-    }
-    dropStaged(staged)
-    val result = s.read.parquet(s"$out/batch_*")
-      .select($"vec_id", $"batch", $"bucket")
-      .orderBy($"vec_id")
-    if (fenceHorizon.isEmpty) {
-      // non-vacuity fence (never-expiring shape): at least one rejection
-      // must be attributable to a FOLD (an earlier batch's admission),
-      // not the corpus or the in-batch self-join — otherwise the gate
-      // silently collapses into a streamed q80 and proves nothing about
-      // index maintenance. The no-fold baseline replays each batch's
-      // admission against the corpus segment ALONE; strictly more
-      // admissions there means a fold blocked somebody here.
-      val grpCol = (graft.operators.Sampling.hash60(
-        concat(lit("g"), $"vec_id".cast("string"))) % n + 1).cast("int")
-      val stagedSv = LlmQueries.vectorSketch(Tables.embeddings(s, dir)
-          .filter(graft.operators.Sampling.uniform01($"vec_id") < 0.5))
-        .withColumn("g", grpCol).localCheckpoint()
-      val noFold = (1 to n).map { k =>
-        LlmQueries.admitByVectorSegments(
-          stagedSv.filter($"g" === k).drop("g"), Seq(corpusFrame)).count()
-      }.sum
-      val admittedCount = result.count()
-      require(noFold > admittedCount,
-        s"$tag: folds must block at least one vector " +
-          s"(no-fold admissions $noFold vs admitted $admittedCount)")
-    }
-    fenceHorizon.foreach { h =>
-      // non-vacuity fence (expiring shape): expiry must have RE-OPENED
-      // at least one corpus-blocked vector — an admission in a batch
-      // past the horizon whose confirmed corpus near-duplicate would
-      // have rejected it under the never-expiring gate; otherwise the
-      // expiring gate silently collapses into q100
-      val lateSv = LlmQueries.vectorSketch(Tables.embeddings(s, dir))
-        .join(result.filter($"batch" > h).select($"vec_id"), "vec_id")
-      val reopened = lateSv.join(corpusFrame, "bucket")
-        .withColumn("cosine", graft.operators.VectorOps.cosineFromParts(
-          graft.operators.VectorOps.dotL($"v", $"bv"), $"nsq", $"bn"))
-        .filter($"cosine" >= 0.4)
-        .select($"vec_id").distinct().count()
-      require(reopened > 0,
-        s"$tag must admit at least one post-expiry corpus near-duplicate, got none")
-    }
-    result
-  }
+    foldGate(s, dir, "q110", Vectors, Schedule(4, cadence = Cadence.AtBatch2))
 
   /** q100/q101's oracle: the sequential vector-admission recurrence
     * unrolled over the gate's exact hash-group batch layout. With
@@ -3570,7 +3159,7 @@ object StreamGateQueries {
     * windowed blocker arms.
     */
   def q102ExpiringVectorFold(s: SparkSession, dir: String): DataFrame =
-    vectorFoldGate(s, dir, "q102", failAt = None, horizon = Some(ExpiryHorizon))
+    foldGate(s, dir, "q102", Vectors, Schedule(5, Clock.BatchHorizon))
 
   /** q103 — q102's pipeline crashed on the first attempt of batch 2
     * after its durable effects (expire + fold + sink), then replayed:
@@ -3582,7 +3171,8 @@ object StreamGateQueries {
     * expiry on the vector modality.
     */
   def q103ExpiringVectorCrash(s: SparkSession, dir: String): DataFrame =
-    vectorFoldGate(s, dir, "q103", failAt = Some(2L), horizon = Some(ExpiryHorizon))
+    foldGate(s, dir, "q103", Vectors,
+      Schedule(6, Clock.BatchHorizon, crashes = Seq(2L)))
 
   /** q117 — q102's expiring VECTOR fold under the production watermark
     * clock (q115's twin on the embedding modality, completing the
@@ -3598,7 +3188,7 @@ object StreamGateQueries {
     * watermarks and ≥ 1 post-expiry corpus near-dup re-admission.
     */
   def q117WatermarkVectorFold(s: SparkSession, dir: String): DataFrame =
-    vectorFoldGate(s, dir, "q117", failAt = None, wmClock = true)
+    foldGate(s, dir, "q117", Vectors, Schedule(5, Clock.Watermark))
 
   /** q118 — q117's pipeline crashed on the first attempt of batch 2
     * after ALL durable effects, then replayed: q112's recovery
@@ -3610,7 +3200,8 @@ object StreamGateQueries {
     * max-event stamp.
     */
   def q118WatermarkVectorCrash(s: SparkSession, dir: String): DataFrame =
-    vectorFoldGate(s, dir, "q118", failAt = Some(2L), wmClock = true)
+    foldGate(s, dir, "q118", Vectors,
+      Schedule(6, Clock.Watermark, crashes = Seq(2L)))
 
   /** q121 — q113's fully-composed production loop on the VECTOR
     * modality (q119's twin, completing the composition × modality
@@ -3622,8 +3213,8 @@ object StreamGateQueries {
     * merged generations, q117's oracle VERBATIM plus q111's fences.
     */
   def q121PolicyVectorFold(s: SparkSession, dir: String): DataFrame =
-    vectorFoldGate(s, dir, "q121", failAt = None, wmClock = true,
-      autoCompactOver = Some(2))
+    foldGate(s, dir, "q121", Vectors,
+      Schedule(5, Clock.Watermark, Cadence.Policy(2)))
 
   /** q122 — q121's batch-2 crash after all durable effects, replayed:
     * q114's crash cell on the VECTOR modality — the replay's policy
@@ -3632,8 +3223,8 @@ object StreamGateQueries {
     * (the sketch is deterministic per vector).
     */
   def q122PolicyVectorCrash(s: SparkSession, dir: String): DataFrame =
-    vectorFoldGate(s, dir, "q122", failAt = Some(2L), wmClock = true,
-      autoCompactOver = Some(2))
+    foldGate(s, dir, "q122", Vectors,
+      Schedule(6, Clock.Watermark, Cadence.Policy(2), crashes = Seq(2L)))
 
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -4,8 +4,11 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
+
+import graft.queries.StreamGateQueries.{foldGate, FoldModality, Fingerprints, NearDups, Schedule, Vectors}
 
 /** Bucketed-table co-located joins — the pre-shuffle answer to the
   * biggest cost at 100 TB: writing both sides of a recurring join
@@ -605,6 +608,38 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
         .filter(col("l_linenumber") === 1)
       val uPlan = unpruned.queryExecution.executedPlan.toString
       assert(!uPlan.contains("SelectedBucketsCount: 1 out of 8"), uPlan)
+    }
+  }
+
+  // The crash-replay law of the streaming fold loop, per modality: a
+  // first attempt of batch 2 that dies after all its durable effects
+  // (sink dir, index fold), replayed against the same checkpoint, must
+  // leave exactly the clean run's admitted set. The oracle batteries
+  // check it through the crash gates' hashes; here each modality's row
+  // runs crashed and clean on the same 6-file layout, so a replay bug
+  // fails `sbt test`.
+  Seq[FoldModality](Fingerprints, NearDups, Vectors).foreach { m =>
+    test(s"crash-replay law, ${m.name} fold: a batch-2 crash replays to the clean run's result") {
+      // onQueryStarted runs synchronously inside start(), so every run of
+      // a gate is recorded by the time the gate returns
+      val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new StreamingQueryListener {
+        override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+          started.add(e.name)
+        override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+        override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+      }
+      def runs(tag: String): Int = started.toArray.count(_.toString.startsWith(s"${tag}_"))
+      spark.streams.addListener(listener)
+      try {
+        val clean = foldGate(spark, sf, s"rclean_${m.name}", m, Schedule(6)).collect().toSeq
+        val crashed = foldGate(spark, sf, s"rcrash_${m.name}", m,
+          Schedule(6, crashes = Seq(2L))).collect().toSeq
+        assert(clean.nonEmpty)
+        assert(crashed === clean)
+        assert(runs(s"rclean_${m.name}") === 1)
+        assert(runs(s"rcrash_${m.name}") === 2, "the crashed run restarts exactly once")
+      } finally spark.streams.removeListener(listener)
     }
   }
 }

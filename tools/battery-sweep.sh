@@ -15,6 +15,15 @@ cd "$(git rev-parse --show-toplevel)" || exit 1
 prefix=${1:-/tmp/battery}
 sha=$(git rev-parse HEAD)
 
+# Verify honours SPARK_GRAFT_ONLY for both the queries it runs and the
+# oracle set check_oracle.py compares, so an exported filter would shrink
+# every battery to a subset and the stamp below would claim all five
+# green over it
+if [ -n "${SPARK_GRAFT_ONLY:-}" ]; then
+  echo "[sweep] REFUSED: SPARK_GRAFT_ONLY is set ($SPARK_GRAFT_ONLY) — the sweep must run every query; unset it"
+  exit 1
+fi
+
 if [ -n "$(git status --porcelain src/ build.sbt project/ 2>/dev/null)" ]; then
   echo "[sweep] REFUSED: src/build tree is not clean — the sweep must run on exactly HEAD ($sha)"
   git status --porcelain src/ build.sbt project/
