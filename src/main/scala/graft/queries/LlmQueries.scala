@@ -2397,6 +2397,30 @@ object LlmQueries {
       .orderBy($"doc_id")
   }
 
+  /** The horizon blocker-window shared by every expiring-oracle
+    * generator (q98/q99 fingerprints, q102/q103 vectors, q104/q105 band
+    * keys): for batch `k` (1-based) under horizon H, the corpus (group
+    * 0) blocks iff `k ≤ H`, and earlier batches `j ∈ [lo, k−1]` with
+    * `lo = max(k−H, 1)` block through their admitted sets. ONE
+    * spelling, so the three modalities' expiry windows can never drift;
+    * `horizon = None` is the never-expiring window (corpus always, all
+    * earlier batches). Returns (corpusBlocks, lo).
+    *
+    * The generators that unroll this window ([[neardupSequentialOracle]],
+    * [[vectorSequentialOracle]], `StreamGateQueries.expiringFoldOracle`)
+    * declare EVERY CTE `AS MATERIALIZED`: the adm chain references each
+    * earlier `adm$j` (and the shared candidate/confirm CTEs) once per
+    * later batch, so DuckDB's default inlining re-expands the whole
+    * prefix at every reference — a plan exponential in n that ran q101's
+    * vector oracle out of memory at sf0.1 (and, unrolled to the soak's
+    * n = 50, exhausted file handles re-opening the documents scan).
+    * Materialization evaluates each CTE once, which is also what the
+    * recurrence MEANS.
+    */
+  private[queries] def horizonWindow(
+      k: Int, horizon: Option[Long]): (Boolean, Int) =
+    (horizon.forall(k <= _), horizon.map(h => ((k - h) max 1L).toInt).getOrElse(1))
+
   /** The SEQUENTIAL near-dup fold recurrence unrolled as DuckDB SQL —
     * the shared oracle generator behind q89/q93 (two u-threshold batches)
     * and q96/q97 (n hash-group micro-batches): batches 1..n arrive in
@@ -2412,19 +2436,6 @@ object LlmQueries {
     * expression assigning each doc its group (0 = corpus, 1..n = batch),
     * and must match the gate's staging exactly.
     */
-  /** The horizon blocker-window shared by every expiring-oracle
-    * generator (q98/q99 fingerprints, q102/q103 vectors, q104/q105 band
-    * keys): for batch `k` (1-based) under horizon H, the corpus (group
-    * 0) blocks iff `k ≤ H`, and earlier batches `j ∈ [lo, k−1]` with
-    * `lo = max(k−H, 1)` block through their admitted sets. ONE
-    * spelling, so the three modalities' expiry windows can never drift;
-    * `horizon = None` is the never-expiring window (corpus always, all
-    * earlier batches). Returns (corpusBlocks, lo).
-    */
-  private[queries] def horizonWindow(
-      k: Int, horizon: Option[Long]): (Boolean, Int) =
-    (horizon.forall(k <= _), horizon.map(h => ((k - h) max 1L).toInt).getOrElse(1))
-
   def neardupSequentialOracle(
       grpCase: String, n: Int, horizon: Option[Long] = None): String = {
     require(n >= 1, s"need at least one batch, got $n")
@@ -2437,7 +2448,7 @@ object LlmQueries {
       val earlier = lo.until(k)
         .map(j => s"(gb.g = $j AND conf.blocker IN (SELECT doc_id FROM adm$j))")
       val blockerIs = (corpusArm ++ Seq(s"gb.g = $k") ++ earlier).mkString("\n      OR ")
-      s"""adm$k AS (
+      s"""adm$k AS MATERIALIZED (
          |  SELECT g.doc_id FROM grp g
          |  WHERE g.g = $k AND NOT EXISTS (
          |    SELECT 1 FROM conf
@@ -2448,47 +2459,47 @@ object LlmQueries {
     val outArms = (1 to n)
       .map(k => s"  SELECT doc_id, $k AS batch FROM adm$k")
       .mkString("\n  UNION ALL\n")
-    s"""WITH toks AS (
+    s"""WITH toks AS MATERIALIZED (
       |  SELECT doc_id, string_split(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ' ') AS w
       |  FROM documents),
-      |sh AS (
+      |sh AS MATERIALIZED (
       |  SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS s
       |  FROM toks, unnest(generate_series(1, len(w) - 2)) t(i)),
-      |shx AS (
+      |shx AS MATERIALIZED (
       |  SELECT doc_id, s, ${duckHex8("md5(s)", 1)} % $MinhashP AS x
       |  FROM sh),
-      |seeds AS (SELECT * FROM (VALUES $abRows) t(seed, a, b)),
-      |mh AS (
+      |seeds AS MATERIALIZED (SELECT * FROM (VALUES $abRows) t(seed, a, b)),
+      |mh AS MATERIALIZED (
       |  SELECT doc_id, seed, min((a * x + b) % $MinhashP) AS m
       |  FROM shx CROSS JOIN seeds GROUP BY doc_id, seed),
-      |bandkeys AS (
+      |bandkeys AS MATERIALIZED (
       |  SELECT doc_id, seed // 3 AS band, string_agg(m::VARCHAR, ':' ORDER BY seed) AS bk
       |  FROM mh GROUP BY doc_id, seed // 3),
-      |grp AS (
+      |grp AS MATERIALIZED (
       |  SELECT doc_id, $grpCase AS g
       |  FROM documents),
-      |szs AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-      |cand AS (
+      |szs AS MATERIALIZED (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+      |cand AS MATERIALIZED (
       |  SELECT DISTINCT i.doc_id AS doc_id, c.doc_id AS blocker
       |  FROM bandkeys i
       |  JOIN grp gi ON gi.doc_id = i.doc_id AND gi.g >= 1
       |  JOIN bandkeys c ON c.band = i.band AND c.bk = i.bk
       |  JOIN grp gc ON gc.doc_id = c.doc_id
       |  WHERE gc.g < gi.g OR (gc.g = gi.g AND c.doc_id < i.doc_id)),
-      |inter AS (
+      |inter AS MATERIALIZED (
       |  SELECT c.doc_id, c.blocker, count(*) AS i
       |  FROM cand c
       |  JOIN sh x ON x.doc_id = c.doc_id
       |  JOIN sh y ON y.doc_id = c.blocker AND y.s = x.s
       |  GROUP BY c.doc_id, c.blocker),
-      |conf AS (
+      |conf AS MATERIALIZED (
       |  SELECT inter.doc_id, inter.blocker
       |  FROM inter
       |  JOIN szs na ON na.doc_id = inter.doc_id
       |  JOIN szs nb ON nb.doc_id = inter.blocker
       |  WHERE CAST(i AS DOUBLE) / (na.n + nb.n - i) >= 0.8),
       |$admCtes,
-      |out AS (
+      |out AS MATERIALIZED (
       |$outArms)
       |SELECT out.doc_id, out.batch, CAST(coalesce(szs.n, 0) AS INT) AS n_shingles
       |FROM out LEFT JOIN szs ON szs.doc_id = out.doc_id
@@ -2567,7 +2578,7 @@ object LlmQueries {
       val earlier = lo.until(k)
         .map(j => s"(gb.g = $j AND conf.blocker IN (SELECT vec_id FROM adm$j))")
       val blockerIs = (corpusArm ++ Seq(s"gb.g = $k") ++ earlier).mkString("\n      OR ")
-      s"""adm$k AS (
+      s"""adm$k AS MATERIALIZED (
          |  SELECT g.vec_id FROM grp g
          |  WHERE g.g = $k AND NOT EXISTS (
          |    SELECT 1 FROM conf
@@ -2578,33 +2589,33 @@ object LlmQueries {
     val outArms = (1 to n)
       .map(k => s"  SELECT vec_id, $k AS batch FROM adm$k")
       .mkString("\n  UNION ALL\n")
-    s"""WITH sv AS (
+    s"""WITH sv AS MATERIALIZED (
        |  SELECT vec_id,
        |    list_transform(embedding, x -> CAST(trunc(CAST(x AS DOUBLE) * 10000000.0) AS BIGINT)) AS v
        |  FROM embeddings),
-       |nn AS (SELECT vec_id, v,
+       |nn AS MATERIALIZED (SELECT vec_id, v,
        |         CAST(list_sum(list_transform(v, x -> x * x)) AS BIGINT) AS nsq FROM sv),
-       |pl AS (SELECT $planesSql AS m),
-       |proj AS (
+       |pl AS MATERIALIZED (SELECT $planesSql AS m),
+       |proj AS MATERIALIZED (
        |  SELECT vec_id, p, sum(v[i] * m[p + 1][i]) AS s
        |  FROM nn, pl,
        |       unnest(generate_series(0, ${NumPlanes - 1})) tp(p),
        |       unnest(generate_series(1, len(v))) ti(i)
        |  GROUP BY vec_id, p),
-       |buck AS (
+       |buck AS MATERIALIZED (
        |  SELECT vec_id, string_agg(CASE WHEN s > 0 THEN '1' ELSE '0' END, '' ORDER BY p) AS bucket
        |  FROM proj GROUP BY vec_id),
-       |grp AS (
+       |grp AS MATERIALIZED (
        |  SELECT vec_id, $grpCase AS g
        |  FROM embeddings),
-       |cand AS (
+       |cand AS MATERIALIZED (
        |  SELECT a.vec_id, b.vec_id AS blocker
        |  FROM buck a
        |  JOIN grp ga ON ga.vec_id = a.vec_id AND ga.g >= 1
        |  JOIN buck b ON b.bucket = a.bucket
        |  JOIN grp gb ON gb.vec_id = b.vec_id
        |  WHERE gb.g < ga.g OR (gb.g = ga.g AND b.vec_id < a.vec_id)),
-       |dt AS (
+       |dt AS MATERIALIZED (
        |  SELECT c.vec_id, c.blocker, na.nsq AS qn, nb.nsq AS bn,
        |    CAST(sum(na.v[i] * nb.v[i]) AS BIGINT) AS dot
        |  FROM cand c
@@ -2612,11 +2623,11 @@ object LlmQueries {
        |  JOIN nn nb ON nb.vec_id = c.blocker,
        |       unnest(generate_series(1, len(na.v))) t(i)
        |  GROUP BY c.vec_id, c.blocker, na.nsq, nb.nsq),
-       |conf AS (
+       |conf AS MATERIALIZED (
        |  SELECT vec_id, blocker FROM dt
        |  WHERE CAST(dot AS DOUBLE) / sqrt(CAST(qn AS DOUBLE)) / sqrt(CAST(bn AS DOUBLE)) >= 0.4),
        |$admCtes,
-       |out AS (
+       |out AS MATERIALIZED (
        |$outArms)
        |SELECT out.vec_id, out.batch, buck.bucket
        |FROM out JOIN buck ON buck.vec_id = out.vec_id

@@ -50,34 +50,9 @@ object StreamGateQueries {
     * are disjoint per (start, type) and close monotonically), so the
     * oracle is unchanged.
     */
-  def q49AppendWindowSales(s: SparkSession, dir: String): DataFrame = withConf(s,
-    // events.ts is parquet TIMESTAMP(NANOS) (see Tables.events): the
-    // streaming schema declares the nanos long and converts with an
-    // integral div — ns-since-epoch exceeds double precision. Scoped:
-    // the stream starts (and clones the conf) inside this block.
-    "spark.sql.legacy.parquet.nanosAsLong" -> "true") {
-    import s.implicits._
-    val staged = stageTimeSplit(s, dir, "q49")
-    val events = stagedStream(s, staged)
-    val out = Files.createTempDirectory("graft-q49-out").toString
-    val ck = Files.createTempDirectory("graft-q49-ck").toString
-    val query = StreamJobs.slidingWindowSales(events)
-      .select(
-        date_format($"window.start", "yyyy-MM-dd HH:mm:ss").as("window_start"),
-        date_format($"window.end", "yyyy-MM-dd HH:mm:ss").as("window_end"),
-        $"event_type", $"sales", $"orders")
-      .writeStream
-      .queryName("q49_append_window_sales")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ck)
-      .format("parquet")
-      .start(out)
-    query.awaitTermination()
-    requireMultiBatch(query, "q49")
-    dropStaged(staged)
-    s.read.parquet(out).orderBy($"window_start", $"event_type")
-  }
+  def q49AppendWindowSales(s: SparkSession, dir: String): DataFrame =
+    streamGate(s, "q49", stageTimeSplit(s, dir, "q49"), statefulOps = 1)(windowSales(s))
+      .orderBy("window_start", "event_type")
 
   /** q05's oracle restricted to watermark-closed windows: the stream's
     * final watermark is `max(ts) - 10 min` and append emits windows with
@@ -128,39 +103,10 @@ object StreamGateQueries {
     * µs TIMESTAMP before any comparison, so boundary pairs landing in
     * the same microsecond agree bit-exactly on both sides.
     */
-  def q52StreamStreamJoin(s: SparkSession, dir: String): DataFrame = withConf(s,
-    "spark.sql.legacy.parquet.nanosAsLong" -> "true") {
-    import s.implicits._
-    val staged = stageTimeSplit(s, dir, "q52")
-    def side(kind: String, p: String): DataFrame = stagedStream(s, staged)
-      .filter($"event_type" === kind)
-      .select(
-        $"event_id".as(s"${p}_id"),
-        $"user_id".as(s"${p}_k"),
-        $"ts".as(s"${p}_ts"))
-    val joined = StreamJobs.streamStreamCorrelate(
-      side("click", "l"), side("purchase", "r"),
-      window = "10 minutes", delay = "10 minutes")
-    val out = Files.createTempDirectory("graft-q52-out").toString
-    val ck = Files.createTempDirectory("graft-q52-ck").toString
-    val query = joined
-      .select(
-        $"l_id".as("click_id"), $"r_id".as("purchase_id"),
-        $"l_k".as("user_id"),
-        date_format($"l_ts", "yyyy-MM-dd HH:mm:ss").as("click_time"),
-        date_format($"r_ts", "yyyy-MM-dd HH:mm:ss").as("purchase_time"))
-      .writeStream
-      .queryName("q52_stream_stream_join")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ck)
-      .format("parquet")
-      .start(out)
-    query.awaitTermination()
-    requireMultiBatch(query, "q52")
-    dropStaged(staged)
-    s.read.parquet(out).orderBy($"click_id", $"purchase_id")
-  }
+  def q52StreamStreamJoin(s: SparkSession, dir: String): DataFrame =
+    streamGate(s, "q52", stageTimeSplit(s, dir, "q52"), statefulOps = 1)(
+        clickPurchasePairs(s))
+      .orderBy("click_id", "purchase_id")
 
   val q52Oracle: String =
     """SELECT a.event_id AS click_id, b.event_id AS purchase_id,
@@ -190,37 +136,14 @@ object StreamGateQueries {
     * reproduces that set with a plain LEFT JOIN filtered by the same
     * boundary arithmetic (the q49 pattern lifted to joins).
     */
-  def q54StreamStreamLeftOuter(s: SparkSession, dir: String): DataFrame = withConf(s,
-    "spark.sql.legacy.parquet.nanosAsLong" -> "true") {
+  def q54StreamStreamLeftOuter(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val staged = stageTimeSplit(s, dir, "q54")
-    def side(kind: String, p: String): DataFrame = stagedStream(s, staged)
-      .filter($"event_type" === kind)
-      .select(
-        $"event_id".as(s"${p}_id"),
-        $"user_id".as(s"${p}_k"),
-        $"ts".as(s"${p}_ts"))
-    val joined = StreamJobs.streamStreamCorrelate(
-      side("click", "l"), side("purchase", "r"),
-      window = "10 minutes", delay = "10 minutes", joinType = "left_outer")
-    val out = Files.createTempDirectory("graft-q54-out").toString
-    val ck = Files.createTempDirectory("graft-q54-ck").toString
-    val query = joined
-      .select(
+    streamGate(s, "q54", stageTimeSplit(s, dir, "q54"), statefulOps = 1) { src =>
+      clickPurchase(s, src, joinType = "left_outer").select(
         $"l_id".as("click_id"), $"r_id".as("purchase_id"),
         $"l_k".as("user_id"),
         date_format($"l_ts", "yyyy-MM-dd HH:mm:ss").as("click_time"))
-      .writeStream
-      .queryName("q54_stream_stream_left_outer")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ck)
-      .format("parquet")
-      .start(out)
-    query.awaitTermination()
-    requireMultiBatch(query, "q54")
-    dropStaged(staged)
-    s.read.parquet(out).orderBy($"click_id", $"purchase_id")
+    }.orderBy("click_id", "purchase_id")
   }
 
   /** Matched rows always emit; null-padded rows only for clicks whose
@@ -256,37 +179,13 @@ object StreamGateQueries {
     * coalesces the nullable ids (Spark sorts NULLS FIRST, DuckDB NULLS
     * LAST — never ORDER BY a nullable column in a gate).
     */
-  def q55StreamStreamFullOuter(s: SparkSession, dir: String): DataFrame = withConf(s,
-    "spark.sql.legacy.parquet.nanosAsLong" -> "true") {
+  def q55StreamStreamFullOuter(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val staged = stageTimeSplit(s, dir, "q55")
-    def side(kind: String, p: String): DataFrame = stagedStream(s, staged)
-      .filter($"event_type" === kind)
-      .select(
-        $"event_id".as(s"${p}_id"),
-        $"user_id".as(s"${p}_k"),
-        $"ts".as(s"${p}_ts"))
-    val joined = StreamJobs.streamStreamCorrelate(
-      side("click", "l"), side("purchase", "r"),
-      window = "10 minutes", delay = "10 minutes", joinType = "full_outer")
-    val out = Files.createTempDirectory("graft-q55-out").toString
-    val ck = Files.createTempDirectory("graft-q55-ck").toString
-    val query = joined
-      .select(
+    streamGate(s, "q55", stageTimeSplit(s, dir, "q55"), statefulOps = 1) { src =>
+      clickPurchase(s, src, joinType = "full_outer").select(
         $"l_id".as("click_id"), $"r_id".as("purchase_id"),
         coalesce($"l_k", $"r_k").as("user_id"))
-      .writeStream
-      .queryName("q55_stream_stream_full_outer")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ck)
-      .format("parquet")
-      .start(out)
-    query.awaitTermination()
-    requireMultiBatch(query, "q55")
-    dropStaged(staged)
-    s.read.parquet(out)
-      .orderBy(coalesce($"click_id", lit(-1L)), coalesce($"purchase_id", lit(-1L)))
+    }.orderBy(coalesce($"click_id", lit(-1L)), coalesce($"purchase_id", lit(-1L)))
   }
 
   val q55Oracle: String =
@@ -406,12 +305,19 @@ object StreamGateQueries {
     // deterministic assignment — slices only need to be non-overlapping
     // and non-empty); hash-distributing on _slice then sends each slice
     // to exactly one task, and partitionBy peels the column off, so each
-    // _slice=<i> dir holds exactly one data file of event columns
-    val src = Tables.normalizeTs(
-        s.read.option("basePath", dir).parquet(s"$dir/events*.parquet"))
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value", $"props")
-      .withColumn("_k", sortKey.cast("double"))
-    sliceByKey(staged, tag, src, n, filePrefix = "events")
+    // _slice=<i> dir holds exactly one data file of event columns.
+    // The raw dump's ts may be parquet TIMESTAMP(NANOS) (see Tables.events):
+    // it is read as a nanos long under this scope and converted with an
+    // integral div — ns-since-epoch exceeds double precision. Only this
+    // read needs the scope: the staged files, and so every gate's stream
+    // (`eventsSchema`), carry TimestampType.
+    withConf(s, "spark.sql.legacy.parquet.nanosAsLong" -> "true") {
+      val src = Tables.normalizeTs(
+          s.read.option("basePath", dir).parquet(s"$dir/events*.parquet"))
+        .select($"event_id", $"ts", $"user_id", $"event_type", $"value", $"props")
+        .withColumn("_k", sortKey.cast("double"))
+      sliceByKey(staged, tag, src, n, filePrefix = "events")
+    }
     staged.toString
   }
 
@@ -617,33 +523,10 @@ object StreamGateQueries {
     * the oracle works entirely in `epoch_ms` — the same ns→µs→ms floor on
     * both sides.
     */
-  def q58StreamingSessionize(s: SparkSession, dir: String): DataFrame = withConf(s,
-    "spark.sql.legacy.parquet.nanosAsLong" -> "true") {
-    import s.implicits._
-    val staged = stageTimeSplit(s, dir, "q58")
-    val events = stagedStream(s, staged)
-      .select($"user_id", $"ts", $"value")
-      .withWatermark("ts", "10 minutes")
-    val sessions = StreamJobs.sessionize(events, gapMinutes = 360)
-    val out = Files.createTempDirectory("graft-q58-out").toString
-    val ck = Files.createTempDirectory("graft-q58-ck").toString
-    val query = sessions.toDF()
-      .select($"user_id",
-        unix_millis($"session_start").as("session_start_ms"),
-        unix_millis($"session_end").as("session_end_ms"),
-        $"events".as("n_events"))
-      .writeStream
-      .queryName("q58_streaming_sessionize")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ck)
-      .format("parquet")
-      .start(out)
-    query.awaitTermination()
-    requireMultiBatch(query, "q58")
-    dropStaged(staged)
-    s.read.parquet(out).orderBy($"user_id", $"session_start_ms")
-  }
+  def q58StreamingSessionize(s: SparkSession, dir: String): DataFrame =
+    streamGate(s, "q58", stageTimeSplit(s, dir, "q58"), statefulOps = 1)(
+        sessionPipeline(s, tws = false))
+      .orderBy("user_id", "session_start_ms")
 
   private val GapMs = 360L * 60000    // 6-hour session gap
   private val DelayMs = 10L * 60000   // watermark delay
@@ -687,34 +570,10 @@ object StreamGateQueries {
     * REAL RocksDB commit/load cycles between micro-batches (q58's
     * scaladoc carries the layout-invariance argument).
     */
-  def q62SessionizeTws(s: SparkSession, dir: String): DataFrame = withConf(s,
-    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-    "spark.sql.streaming.stateStore.providerClass" ->
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-    import s.implicits._
-    val staged = stageTimeSplit(s, dir, "q62")
-    val events = stagedStream(s, staged)
-      .select($"user_id", $"ts", $"value")
-      .withWatermark("ts", "10 minutes")
-    val sessions = StreamJobs.sessionizeTws(events, gapMinutes = 360)
-    val out = Files.createTempDirectory("graft-q62-out").toString
-    val ck = Files.createTempDirectory("graft-q62-ck").toString
-    val query = sessions.toDF()
-      .select($"user_id",
-        unix_millis($"session_start").as("session_start_ms"),
-        unix_millis($"session_end").as("session_end_ms"),
-        $"events".as("n_events"))
-      .writeStream
-      .queryName("q62_sessionize_tws")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ck)
-      .format("parquet")
-      .start(out)
-    query.awaitTermination()
-    requireMultiBatch(query, "q62")
-    dropStaged(staged)
-    s.read.parquet(out).orderBy($"user_id", $"session_start_ms")
+  def q62SessionizeTws(s: SparkSession, dir: String): DataFrame = withConf(s, RocksDb) {
+    streamGate(s, "q62", stageTimeSplit(s, dir, "q62"), statefulOps = 1)(
+        sessionPipeline(s, tws = true))
+      .orderBy("user_id", "session_start_ms")
   }
 
   /** q59 — the RIGHT-outer stream–stream interval join, completing the
@@ -725,38 +584,14 @@ object StreamGateQueries {
     * arrive (the boundary q55 pinned on its right side, now isolated).
     * Watermark = min of the per-side watermarks, as q54 established.
     */
-  def q59StreamStreamRightOuter(s: SparkSession, dir: String): DataFrame = withConf(s,
-    "spark.sql.legacy.parquet.nanosAsLong" -> "true") {
+  def q59StreamStreamRightOuter(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val staged = stageTimeSplit(s, dir, "q59")
-    def side(kind: String, p: String): DataFrame = stagedStream(s, staged)
-      .filter($"event_type" === kind)
-      .select(
-        $"event_id".as(s"${p}_id"),
-        $"user_id".as(s"${p}_k"),
-        $"ts".as(s"${p}_ts"))
-    val joined = StreamJobs.streamStreamCorrelate(
-      side("click", "l"), side("purchase", "r"),
-      window = "10 minutes", delay = "10 minutes", joinType = "right_outer")
-    val out = Files.createTempDirectory("graft-q59-out").toString
-    val ck = Files.createTempDirectory("graft-q59-ck").toString
-    val query = joined
-      .select(
+    streamGate(s, "q59", stageTimeSplit(s, dir, "q59"), statefulOps = 1) { src =>
+      clickPurchase(s, src, joinType = "right_outer").select(
         $"l_id".as("click_id"), $"r_id".as("purchase_id"),
         $"r_k".as("user_id"),
         date_format($"r_ts", "yyyy-MM-dd HH:mm:ss").as("purchase_time"))
-      .writeStream
-      .queryName("q59_stream_stream_right_outer")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ck)
-      .format("parquet")
-      .start(out)
-    query.awaitTermination()
-    requireMultiBatch(query, "q59")
-    dropStaged(staged)
-    s.read.parquet(out)
-      .orderBy(coalesce($"click_id", lit(-1L)), $"purchase_id")
+    }.orderBy(coalesce($"click_id", lit(-1L)), $"purchase_id")
   }
 
   /** Matched rows always emit; null-padded rows only for purchases at or
@@ -806,47 +641,10 @@ object StreamGateQueries {
     * operator, and the final closed-window set is decided by the final
     * watermark alone, same as the single-batch run.
     */
-  def q60JoinThenWindow(s: SparkSession, dir: String): DataFrame = withConf(s,
-    "spark.sql.legacy.parquet.nanosAsLong" -> "true") {
-    import s.implicits._
-    val staged = stageTimeSplit(s, dir, "q60")
-    def side(kind: String, p: String, extra: Column*): DataFrame = stagedStream(s, staged)
-      .filter($"event_type" === kind)
-      .select(Seq(
-        $"event_id".as(s"${p}_id"),
-        $"user_id".as(s"${p}_k"),
-        $"ts".as(s"${p}_ts")) ++ extra: _*)
-    val joined = StreamJobs.streamStreamCorrelate(
-      side("click", "l"),
-      side("purchase", "r", $"value".as("r_value")),
-      window = "10 minutes", delay = "10 minutes")
-    val agg = joined
-      .groupBy(window($"r_ts", "10 minutes"))
-      .agg(
-        count(lit(1)).as("n_attributed"),
-        sum($"r_value".cast(DecimalType(12, 2))).cast("double").as("attributed_value"))
-      .select(
-        date_format($"window.start", "yyyy-MM-dd HH:mm:ss").as("window_start"),
-        date_format($"window.end", "yyyy-MM-dd HH:mm:ss").as("window_end"),
-        $"n_attributed", $"attributed_value")
-    val out = Files.createTempDirectory("graft-q60-out").toString
-    val ck = Files.createTempDirectory("graft-q60-ck").toString
-    val query = agg.writeStream
-      .queryName("q60_join_then_window")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ck)
-      .format("parquet")
-      .start(out)
-    query.awaitTermination()
-    val stateful = Option(query.lastProgress)
-      .map(_.stateOperators.map(_.operatorName).toSeq).getOrElse(Seq.empty)
-    require(stateful.size == 2,
-      s"q60 must execute two chained stateful operators, got $stateful")
-    requireMultiBatch(query, "q60")
-    dropStaged(staged)
-    s.read.parquet(out).orderBy($"window_start")
-  }
+  def q60JoinThenWindow(s: SparkSession, dir: String): DataFrame =
+    streamGate(s, "q60", stageTimeSplit(s, dir, "q60"), statefulOps = 2)(
+        src => attributionWindow(clickPurchase(s, src)))
+      .orderBy("window_start")
 
   val q60Oracle: String =
     """WITH j AS (
@@ -885,49 +683,16 @@ object StreamGateQueries {
     * verbatim; a propagation bug shifts the closed-window set and fails
     * the hash).
     */
-  def q63DedupJoinWindow(s: SparkSession, dir: String): DataFrame = withConf(s,
-    "spark.sql.legacy.parquet.nanosAsLong" -> "true") {
-    import s.implicits._
-    val staged = stageTimeSplit(s, dir, "q63")
-    def side(kind: String, p: String, extra: Column*): DataFrame = stagedStream(s, staged)
-      .filter($"event_type" === kind)
-      .select(Seq(
-        $"event_id".as(s"${p}_id"),
-        $"user_id".as(s"${p}_k"),
-        $"ts".as(s"${p}_ts")) ++ extra: _*)
-    val clicks = side("click", "l").withWatermark("l_ts", "10 minutes")
-    val purchases = side("purchase", "r", $"value".as("r_value"))
-      .withWatermark("r_ts", "10 minutes")
-      .dropDuplicatesWithinWatermark("r_id") // stateful op 1: ingest dedup
-    val joined = clicks.join(purchases, expr( // stateful op 2: interval join
-      "l_k = r_k AND r_ts >= l_ts AND r_ts <= l_ts + INTERVAL 10 minutes"))
-    val agg = joined // stateful op 3: windowed aggregation
-      .groupBy(window($"r_ts", "10 minutes"))
-      .agg(
-        count(lit(1)).as("n_attributed"),
-        sum($"r_value".cast(DecimalType(12, 2))).cast("double").as("attributed_value"))
-      .select(
-        date_format($"window.start", "yyyy-MM-dd HH:mm:ss").as("window_start"),
-        date_format($"window.end", "yyyy-MM-dd HH:mm:ss").as("window_end"),
-        $"n_attributed", $"attributed_value")
-    val out = Files.createTempDirectory("graft-q63-out").toString
-    val ck = Files.createTempDirectory("graft-q63-ck").toString
-    val query = agg.writeStream
-      .queryName("q63_dedup_join_window")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ck)
-      .format("parquet")
-      .start(out)
-    query.awaitTermination()
-    val stateful = Option(query.lastProgress)
-      .map(_.stateOperators.map(_.operatorName).toSeq).getOrElse(Seq.empty)
-    require(stateful.size == 3,
-      s"q63 must execute three chained stateful operators, got $stateful")
-    requireMultiBatch(query, "q63")
-    dropStaged(staged)
-    s.read.parquet(out).orderBy($"window_start")
-  }
+  def q63DedupJoinWindow(s: SparkSession, dir: String): DataFrame =
+    streamGate(s, "q63", stageTimeSplit(s, dir, "q63"), statefulOps = 3) { src =>
+      val clicks = side(s, src, "click", "l").withWatermark("l_ts", "10 minutes")
+      val purchases = side(s, src, "purchase", "r")
+        .withWatermark("r_ts", "10 minutes")
+        .dropDuplicatesWithinWatermark("r_id") // stateful op 1: ingest dedup
+      val joined = clicks.join(purchases, expr( // stateful op 2: interval join
+        "l_k = r_k AND r_ts >= l_ts AND r_ts <= l_ts + INTERVAL 10 minutes"))
+      attributionWindow(joined) // stateful op 3: windowed aggregation
+    }.orderBy("window_start")
 
   /** q61 — streaming ingest dedup via `dropDuplicatesWithinWatermark`
     * (ST7's streaming-NATIVE form: the reference dedups downstream with
@@ -956,29 +721,9 @@ object StreamGateQueries {
     * you size the delay to the producer's re-delivery window, not to the
     * topic's retention.
     */
-  def q61StreamDedup(s: SparkSession, dir: String): DataFrame = withConf(s,
-    "spark.sql.legacy.parquet.nanosAsLong" -> "true") {
-    import s.implicits._
-    val staged = stageTimeSplit(s, dir, "q61")
-    val deduped = stagedStream(s, staged)
-      .select($"user_id", $"event_type", $"ts")
-      .withWatermark("ts", "35 days")
-      .dropDuplicatesWithinWatermark("user_id", "event_type")
-      .select($"user_id", $"event_type")
-    val out = Files.createTempDirectory("graft-q61-out").toString
-    val ck = Files.createTempDirectory("graft-q61-ck").toString
-    val query = deduped.writeStream
-      .queryName("q61_stream_dedup")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ck)
-      .format("parquet")
-      .start(out)
-    query.awaitTermination()
-    requireMultiBatch(query, "q61")
-    dropStaged(staged)
-    s.read.parquet(out).orderBy($"user_id", $"event_type")
-  }
+  def q61StreamDedup(s: SparkSession, dir: String): DataFrame =
+    streamGate(s, "q61", stageTimeSplit(s, dir, "q61"), statefulOps = 1)(dedupPipeline(s))
+      .orderBy("user_id", "event_type")
 
   val q61Oracle: String =
     """SELECT DISTINCT user_id, event_type FROM events
@@ -1007,53 +752,21 @@ object StreamGateQueries {
     * set equals the final profile — the same oracle, now proven through
     * cross-batch state accumulation AND re-emission semantics at once.
     */
-  def q64UserProfile(s: SparkSession, dir: String): DataFrame = withConf(s,
-    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-    "spark.sql.streaming.stateStore.providerClass" ->
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+  def q64UserProfile(s: SparkSession, dir: String): DataFrame = withConf(s, RocksDb) {
     import s.implicits._
-    val staged = stageTimeSplit(s, dir, "q64")
-    val events = stagedStream(s, staged)
-      .select($"user_id", $"event_type", $"value")
-    val profiles = StreamJobs.profileTws(events)
-    val out = Files.createTempDirectory("graft-q64-out").toString
-    val ck = Files.createTempDirectory("graft-q64-ck").toString
-    val query = profiles.toDF().writeStream
-      .queryName("q64_user_profile")
-      .outputMode("update")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ck)
-      // foreachBatch is AT-LEAST-ONCE: a retried micro-batch re-invokes
-      // the function with the same batchId, so the write must be
-      // idempotent — each batch overwrites its OWN batch-keyed dir
-      // (Spark's documented exactly-once recipe; a plain append would
-      // leave duplicate same-batch_id snapshots and a duplicate-row
-      // oracle diff on retry — ADVICE r9)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch
-          .select($"user_id", $"n_events",
-            explode($"type_counts").as(Seq("event_type", "n_type")),
-            // try_element_at: a user with fewer than k events has a short
-            // top_values list, and ANSI element_at would throw where the
-            // oracle's (array_agg(...))[k] yields NULL
-            try_element_at($"top_values", lit(1)).as("top1"),
-            try_element_at($"top_values", lit(2)).as("top2"),
-            try_element_at($"top_values", lit(3)).as("top3"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").parquet(f"$out/batch_$batchId%06d")
-      }
-      .start()
-    query.awaitTermination()
-    requireMultiBatch(query, "q64")
-    dropStaged(staged)
-    // latest-wins compaction over the re-emission stream: each user's
-    // newest snapshot IS the profile (W3 over the topic dump)
-    val latest = max($"batch_id").over(Window.partitionBy($"user_id"))
-    s.read.parquet(s"$out/batch_*")
-      .withColumn("_latest", latest).filter($"batch_id" === $"_latest")
-      .select($"user_id", $"event_type", $"n_type", $"n_events",
-        $"top1", $"top2", $"top3")
-      .orderBy($"user_id", $"event_type")
+    streamGate(s, "q64", stageTimeSplit(s, dir, "q64"), statefulOps = 1,
+        sink = Sink.Batches(latestBy = Some("user_id"))) { src =>
+      StreamJobs.profileTws(stagedStream(s, src).select($"user_id", $"event_type", $"value"))
+        .select($"user_id",
+          explode($"type_counts").as(Seq("event_type", "n_type")),
+          $"n_events",
+          // try_element_at: a user with fewer than k events has a short
+          // top_values list, and ANSI element_at would throw where the
+          // oracle's (array_agg(...))[k] yields NULL
+          try_element_at($"top_values", lit(1)).as("top1"),
+          try_element_at($"top_values", lit(2)).as("top2"),
+          try_element_at($"top_values", lit(3)).as("top3"))
+    }.orderBy("user_id", "event_type")
   }
 
   val q64Oracle: String =
@@ -1087,30 +800,10 @@ object StreamGateQueries {
     * StreamingSpec's late-data law where per-batch watermarks are
     * controllable.)
     */
-  def q66DisorderedWindowSales(s: SparkSession, dir: String): DataFrame = withConf(s,
-    "spark.sql.legacy.parquet.nanosAsLong" -> "true") {
-    import s.implicits._
-    val staged = stageTimeSplit(s, dir, "q66", jitterMinutes = 3)
-    val events = stagedStream(s, staged)
-    val out = Files.createTempDirectory("graft-q66-out").toString
-    val ck = Files.createTempDirectory("graft-q66-ck").toString
-    val query = StreamJobs.slidingWindowSales(events)
-      .select(
-        date_format($"window.start", "yyyy-MM-dd HH:mm:ss").as("window_start"),
-        date_format($"window.end", "yyyy-MM-dd HH:mm:ss").as("window_end"),
-        $"event_type", $"sales", $"orders")
-      .writeStream
-      .queryName("q66_disordered_window_sales")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ck)
-      .format("parquet")
-      .start(out)
-    query.awaitTermination()
-    requireMultiBatch(query, "q66")
-    dropStaged(staged)
-    s.read.parquet(out).orderBy($"window_start", $"event_type")
-  }
+  def q66DisorderedWindowSales(s: SparkSession, dir: String): DataFrame =
+    streamGate(s, "q66", stageTimeSplit(s, dir, "q66", jitterMinutes = 3), statefulOps = 1)(
+        windowSales(s))
+      .orderBy("window_start", "event_type")
 
   /** q68 — custom-state sessionization over the DISORDERED feed: the
     * hardest disorder case, because FMGWS state is ORDER-SENSITIVE
@@ -1126,33 +819,10 @@ object StreamGateQueries {
     * arrival disorder ≥ the 6 h gap; the staged feed's is ≤ 6 min). So
     * q58's oracle holds verbatim over the shuffled feed.
     */
-  def q68DisorderedSessionize(s: SparkSession, dir: String): DataFrame = withConf(s,
-    "spark.sql.legacy.parquet.nanosAsLong" -> "true") {
-    import s.implicits._
-    val staged = stageTimeSplit(s, dir, "q68", jitterMinutes = 3)
-    val events = stagedStream(s, staged)
-      .select($"user_id", $"ts", $"value")
-      .withWatermark("ts", "10 minutes")
-    val sessions = StreamJobs.sessionize(events, gapMinutes = 360)
-    val out = Files.createTempDirectory("graft-q68-out").toString
-    val ck = Files.createTempDirectory("graft-q68-ck").toString
-    val query = sessions.toDF()
-      .select($"user_id",
-        unix_millis($"session_start").as("session_start_ms"),
-        unix_millis($"session_end").as("session_end_ms"),
-        $"events".as("n_events"))
-      .writeStream
-      .queryName("q68_disordered_sessionize")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ck)
-      .format("parquet")
-      .start(out)
-    query.awaitTermination()
-    requireMultiBatch(query, "q68")
-    dropStaged(staged)
-    s.read.parquet(out).orderBy($"user_id", $"session_start_ms")
-  }
+  def q68DisorderedSessionize(s: SparkSession, dir: String): DataFrame =
+    streamGate(s, "q68", stageTimeSplit(s, dir, "q68", jitterMinutes = 3), statefulOps = 1)(
+        sessionPipeline(s, tws = false))
+      .orderBy("user_id", "session_start_ms")
 
   /** q69 — q65's growing-topic restart on the OTHER state API and
     * backend: `transformWithState` sessionization on RocksDB, stopped
@@ -1165,47 +835,10 @@ object StreamGateQueries {
     * TWS/RocksDB; StreamingSpec pins the same restore in-process with a
     * key that emits in run 2 PURELY from a run-1 timer.
     */
-  def q69RestartSessionizeTws(s: SparkSession, dir: String): DataFrame = withConf(s,
-    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-    "spark.sql.streaming.stateStore.providerClass" ->
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-    import s.implicits._
-    val staged = Paths.get(stageTimeSplit(s, dir, "q69", n = 6))
-    val live = Files.createTempDirectory("graft-q69-live")
-    stagedDirs.add(live) // crash backstop; dropStaged cleans after run 2
-    val names = {
-      val st = Files.list(staged)
-      try st.iterator().asScala.map(_.getFileName.toString).toSeq.sorted
-      finally st.close()
-    }
-    val out = Files.createTempDirectory("graft-q69-out").toString
-    val ck = Files.createTempDirectory("graft-q69-ck").toString
-    def runOnce(tag: String): Unit = {
-      val events = stagedStream(s, live.toString)
-        .select($"user_id", $"ts", $"value")
-        .withWatermark("ts", "10 minutes")
-      val query = StreamJobs.sessionizeTws(events, gapMinutes = 360).toDF()
-        .select($"user_id",
-          unix_millis($"session_start").as("session_start_ms"),
-          unix_millis($"session_end").as("session_end_ms"),
-          $"events".as("n_events"))
-        .writeStream
-        .queryName(s"q69_restart_sessionize_tws_$tag")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ck)
-        .format("parquet")
-        .start(out)
-      query.awaitTermination()
-      requireMultiBatch(query, s"q69 $tag")
-    }
-    val (first, rest) = names.splitAt(3)
-    first.foreach(n => Files.move(staged.resolve(n), live.resolve(n)))
-    runOnce("run1")
-    rest.foreach(n => Files.move(staged.resolve(n), live.resolve(n)))
-    runOnce("run2")
-    dropStaged(staged.toString, live.toString)
-    s.read.parquet(out).orderBy($"user_id", $"session_start_ms")
+  def q69RestartSessionizeTws(s: SparkSession, dir: String): DataFrame = withConf(s, RocksDb) {
+    streamGate(s, "q69", stageTimeSplit(s, dir, "q69", n = 6), statefulOps = 1,
+        Drive.Restart())(sessionPipeline(s, tws = true))
+      .orderBy("user_id", "session_start_ms")
   }
 
   /** q67 — the q60 attribution chain (stream–stream interval join →
@@ -1221,47 +854,10 @@ object StreamGateQueries {
     * verbatim over the shuffled feed, and the runtime must still report
     * both stateful operators.
     */
-  def q67DisorderedAttribution(s: SparkSession, dir: String): DataFrame = withConf(s,
-    "spark.sql.legacy.parquet.nanosAsLong" -> "true") {
-    import s.implicits._
-    val staged = stageTimeSplit(s, dir, "q67", jitterMinutes = 3)
-    def side(kind: String, p: String, extra: Column*): DataFrame = stagedStream(s, staged)
-      .filter($"event_type" === kind)
-      .select(Seq(
-        $"event_id".as(s"${p}_id"),
-        $"user_id".as(s"${p}_k"),
-        $"ts".as(s"${p}_ts")) ++ extra: _*)
-    val joined = StreamJobs.streamStreamCorrelate(
-      side("click", "l"),
-      side("purchase", "r", $"value".as("r_value")),
-      window = "10 minutes", delay = "10 minutes")
-    val agg = joined
-      .groupBy(window($"r_ts", "10 minutes"))
-      .agg(
-        count(lit(1)).as("n_attributed"),
-        sum($"r_value".cast(DecimalType(12, 2))).cast("double").as("attributed_value"))
-      .select(
-        date_format($"window.start", "yyyy-MM-dd HH:mm:ss").as("window_start"),
-        date_format($"window.end", "yyyy-MM-dd HH:mm:ss").as("window_end"),
-        $"n_attributed", $"attributed_value")
-    val out = Files.createTempDirectory("graft-q67-out").toString
-    val ck = Files.createTempDirectory("graft-q67-ck").toString
-    val query = agg.writeStream
-      .queryName("q67_disordered_attribution")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ck)
-      .format("parquet")
-      .start(out)
-    query.awaitTermination()
-    val stateful = Option(query.lastProgress)
-      .map(_.stateOperators.map(_.operatorName).toSeq).getOrElse(Seq.empty)
-    require(stateful.size == 2,
-      s"q67 must execute two chained stateful operators, got $stateful")
-    requireMultiBatch(query, "q67")
-    dropStaged(staged)
-    s.read.parquet(out).orderBy($"window_start")
-  }
+  def q67DisorderedAttribution(s: SparkSession, dir: String): DataFrame =
+    streamGate(s, "q67", stageTimeSplit(s, dir, "q67", jitterMinutes = 3), statefulOps = 2)(
+        src => attributionWindow(clickPurchase(s, src)))
+      .orderBy("window_start")
 
   /** q65 — CHECKPOINT RESTART through the multi-batch harness: the q58
     * sessionization pipeline run as TWO separate streaming queries over
@@ -1281,46 +877,10 @@ object StreamGateQueries {
     * event is above that watermark, so a restart boundary can never split
     * a session the batch oracle keeps whole.
     */
-  def q65RestartSessionize(s: SparkSession, dir: String): DataFrame = withConf(s,
-    "spark.sql.legacy.parquet.nanosAsLong" -> "true") {
-    import s.implicits._
-    val staged = Paths.get(stageTimeSplit(s, dir, "q65", n = 6))
-    val live = Files.createTempDirectory("graft-q65-live")
-    stagedDirs.add(live) // crash backstop; dropStaged cleans after run 2
-    val names = {
-      val st = Files.list(staged)
-      try st.iterator().asScala.map(_.getFileName.toString).toSeq.sorted
-      finally st.close()
-    }
-    val out = Files.createTempDirectory("graft-q65-out").toString
-    val ck = Files.createTempDirectory("graft-q65-ck").toString
-    def runOnce(tag: String): Unit = {
-      val events = stagedStream(s, live.toString)
-        .select($"user_id", $"ts", $"value")
-        .withWatermark("ts", "10 minutes")
-      val query = StreamJobs.sessionize(events, gapMinutes = 360).toDF()
-        .select($"user_id",
-          unix_millis($"session_start").as("session_start_ms"),
-          unix_millis($"session_end").as("session_end_ms"),
-          $"events".as("n_events"))
-        .writeStream
-        .queryName(s"q65_restart_sessionize_$tag")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ck)
-        .format("parquet")
-        .start(out)
-      query.awaitTermination()
-      requireMultiBatch(query, s"q65 $tag")
-    }
-    val (first, rest) = names.splitAt(3)
-    first.foreach(n => Files.move(staged.resolve(n), live.resolve(n)))
-    runOnce("run1")
-    rest.foreach(n => Files.move(staged.resolve(n), live.resolve(n)))
-    runOnce("run2")
-    dropStaged(staged.toString, live.toString)
-    s.read.parquet(out).orderBy($"user_id", $"session_start_ms")
-  }
+  def q65RestartSessionize(s: SparkSession, dir: String): DataFrame =
+    streamGate(s, "q65", stageTimeSplit(s, dir, "q65", n = 6), statefulOps = 1,
+        Drive.Restart())(sessionPipeline(s, tws = false))
+      .orderBy("user_id", "session_start_ms")
 
   /** q70 — EXACTLY-ONCE through a MID-BATCH FAILURE: the q58
     * sessionization pipeline run into a `foreachBatch` sink whose FIRST
@@ -1357,14 +917,14 @@ object StreamGateQueries {
     * depends on wall clock. q58's scaladoc carries the layout-invariance
     * argument for why the final emitted set is the batch oracle's.
     */
-  def q70MidBatchFailure(s: SparkSession, dir: String): DataFrame = withConf(s,
-    "spark.sql.legacy.parquet.nanosAsLong" -> "true") {
-    midBatchFailureGate(s, dir, "q70", sessionPipeline(s, tws = false),
-      sortCols = Seq("user_id", "session_start_ms"), statefulOps = 1)
-  }
+  def q70MidBatchFailure(s: SparkSession, dir: String): DataFrame =
+    streamGate(s, "q70", stageTimeSplit(s, dir, "q70", n = 6), statefulOps = 1,
+        Drive.CrashBatch2, Sink.Batches())(sessionPipeline(s, tws = false))
+      .orderBy("user_id", "session_start_ms")
 
-  /** The q58 sessionization pipeline over a staged time-split dir — the
-    * subject the single-operator crash gates (q70, q72) replay.
+  /** The q58 sessionization pipeline over a staged time-split dir, on
+    * FMGWS or (`tws`) transformWithState — shared by q58, q62, q65, q68,
+    * q69, q70 and q72.
     */
   private def sessionPipeline(s: SparkSession, tws: Boolean)(staged: String): DataFrame = {
     import s.implicits._
@@ -1381,115 +941,311 @@ object StreamGateQueries {
         $"events".as("n_events"))
   }
 
-  /** The ONE sink-with-injection → drive → stateful-operator-count →
-    * read-back skeleton behind every foreachBatch crash gate: the
-    * mid-batch-failure gates (q70/q72/q76/q82/q83), streaming admission
-    * (q84/q87) and every fold gate ([[foldGate]]), so the injection
-    * verification discipline (cause-chain walk, injected-message
-    * matching, marker checks, restart accounting) can never drift per
-    * gate. Each micro-batch's `sink` output OVERWRITES its own
-    * batch-keyed dir — Spark's exactly-once recipe for the at-least-once
-    * foreachBatch — and only then does the FIRST attempt of each batch
-    * in `crashes` die: after the durable write, before the engine's
-    * commit (q70's crash shape). Each run must either terminate CLEAN
-    * (ending the drive) or die with ONE of the scheduled injections; the
-    * drive requires exactly `crashes.size` restarts against the same
-    * checkpoint, every marker fired, the final run multi-batch (the
-    * replayed batch plus the undelivered files), and the final query to
-    * report exactly `statefulOps` stateful operators (`why` says which).
-    * An empty schedule is the clean single-run drive, whose real failure
-    * propagates raw. Drops the staged source; returns the union of the
-    * batch dirs.
+  /** q49's projection of [[StreamJobs.slidingWindowSales]] over a staged
+    * dir — shared by q49, q66 and q71.
     */
-  private def crashGate(
-      s: SparkSession, tag: String, staged: String, ck: String,
-      crashes: Seq[Long], statefulOps: Int, why: String,
-      outputMode: String = "append")(
-      stream: DataFrame)(sink: (DataFrame, Long) => Option[DataFrame]): DataFrame = {
+  private def windowSales(s: SparkSession)(src: String): DataFrame = {
+    import s.implicits._
+    StreamJobs.slidingWindowSales(stagedStream(s, src))
+      .select(
+        date_format($"window.start", "yyyy-MM-dd HH:mm:ss").as("window_start"),
+        date_format($"window.end", "yyyy-MM-dd HH:mm:ss").as("window_end"),
+        $"event_type", $"sales", $"orders")
+  }
+
+  /** One side of the click → purchase correlation over a staged dir:
+    * `kind` events as `<p>_id`, `<p>_k` (the user), `<p>_ts` and
+    * `<p>_value` — the column contract [[StreamJobs.streamStreamCorrelate]]
+    * joins on (clicks are `l`, purchases `r`).
+    */
+  private def side(s: SparkSession, src: String, kind: String, p: String): DataFrame =
+    stagedStream(s, src)
+      .filter(col("event_type") === kind)
+      .select(
+        col("event_id").as(s"${p}_id"),
+        col("user_id").as(s"${p}_k"),
+        col("ts").as(s"${p}_ts"),
+        col("value").as(s"${p}_value"))
+
+  /** q52's correlation: every purchase joined to each same-user click in
+    * the preceding 10 minutes, both sides watermarked 10 minutes behind
+    * ([[StreamJobs.streamStreamCorrelate]]) — the one spelling behind the
+    * join gates (q52–q59), the attribution chain (q60/q67/q76) and their
+    * restart, late-drop and crash cells.
+    */
+  private def clickPurchase(
+      s: SparkSession, src: String, joinType: String = "inner"): DataFrame =
+    StreamJobs.streamStreamCorrelate(
+      side(s, src, "click", "l"), side(s, src, "purchase", "r"),
+      window = "10 minutes", delay = "10 minutes", joinType = joinType)
+
+  /** q52's pair projection of the inner [[clickPurchase]] — shared by
+    * q52, q77 and q82.
+    */
+  private def clickPurchasePairs(s: SparkSession)(src: String): DataFrame = {
+    import s.implicits._
+    clickPurchase(s, src).select(
+      $"l_id".as("click_id"), $"r_id".as("purchase_id"),
+      $"l_k".as("user_id"),
+      date_format($"l_ts", "yyyy-MM-dd HH:mm:ss").as("click_time"),
+      date_format($"r_ts", "yyyy-MM-dd HH:mm:ss").as("purchase_time"))
+  }
+
+  /** q60's attribution window over a click → purchase join: attributed
+    * purchases per 10-minute tumbling window of `r_ts` — shared by q60,
+    * q63, q67 and q76.
+    */
+  private def attributionWindow(joined: DataFrame): DataFrame =
+    joined
+      .groupBy(window(col("r_ts"), "10 minutes"))
+      .agg(
+        count(lit(1)).as("n_attributed"),
+        sum(col("r_value").cast(DecimalType(12, 2))).cast("double").as("attributed_value"))
+      .select(
+        date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
+        date_format(col("window.end"), "yyyy-MM-dd HH:mm:ss").as("window_end"),
+        col("n_attributed"), col("attributed_value"))
+
+  /** q61's ingest dedup over a staged dir: (user, event type) keys under
+    * the 35-day horizon (q61's sizing rule) — shared by q61 and q83.
+    */
+  private def dedupPipeline(s: SparkSession)(src: String): DataFrame = {
+    import s.implicits._
+    stagedStream(s, src)
+      .select($"user_id", $"event_type", $"ts")
+      .withWatermark("ts", "35 days")
+      .dropDuplicatesWithinWatermark("user_id", "event_type")
+      .select($"user_id", $"event_type")
+  }
+
+  /** q84's admission stream over a staged doc split: fingerprints
+    * computed map-side, a stream–static LEFT-ANTI probe of the corpus's
+    * fingerprint index, and the update-mode first-wins agg (q84's
+    * scaladoc) — shared by q84 and q87.
+    */
+  private def admission(s: SparkSession, dir: String)(src: String): DataFrame = {
+    import s.implicits._
+    s.readStream
+      .schema(StructType(docFields))
+      .option("maxFilesPerTrigger", "1")
+      .parquet(src)
+      .select($"doc_id", fingerprint($"text"))
+      .join(fingerprintCorpus(s, dir), Seq("fingerprint"), "left_anti")
+      .groupBy($"fingerprint")
+      .agg(min($"doc_id").as("doc_id"), count(lit(1)).as("batch_dups"))
+      .select($"doc_id", $"fingerprint", $"batch_dups")
+  }
+
+  /** The RocksDB state store provider — the memory-bounded,
+    * changelog-checkpointed backend, and the one TWS requires.
+    */
+  private val RocksDb = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Where a [[streamGate]] writes, and how it reads the result back. */
+  private sealed trait Sink
+  private object Sink {
+    /** The parquet file sink in append mode: its `_spark_metadata`
+      * manifest commits each batch atomically, and the read-back honors
+      * it.
+      */
+    case object Parquet extends Sink
+    /** `foreachBatch`, which is AT-LEAST-ONCE: a retried micro-batch
+      * re-invokes the function with the same batchId, so each batch's
+      * `frame(batch, batchId)` (None writes nothing) OVERWRITES its own
+      * batch-keyed dir — Spark's documented exactly-once recipe (a plain
+      * append would leave duplicate rows on a retry — ADVICE r9). The
+      * read-back is the union of the batch dirs. With `latestBy` the
+      * query runs in UPDATE mode, which re-emits a key's row in every
+      * batch that touches it (the topic-sink contract), and the read-back
+      * keeps each key's rows from its LATEST batch only — the W3
+      * latest-wins compaction the reference's summary-topic consumers
+      * run (`07_batch_read_kafka_kafka_dedupe.py:65-75`).
+      */
+    final case class Batches(
+        frame: (DataFrame, Long) => Option[DataFrame] = (batch, _) => Some(batch),
+        latestBy: Option[String] = None) extends Sink
+  }
+
+  /** How a [[streamGate]] runs its query to completion. */
+  private sealed trait Drive
+  private object Drive {
+    /** Crash-replay: the FIRST attempt of each batch in `batches` dies
+      * after the [[Sink.Batches]] sink's durable write, before the
+      * engine's commit (q70's crash shape), and the drive restarts
+      * against the same checkpoint until a run terminates clean. Only
+      * that sink injects: on the parquet sink no marker fires and the
+      * drive fails.
+      */
+    final case class Crashes(batches: Seq[Long]) extends Drive
+    /** One clean run — the empty crash schedule. */
+    val Once: Drive = Crashes(Nil)
+    /** q70's crash: the first attempt of data batch 2. */
+    val CrashBatch2: Drive = Crashes(Seq(2L))
+    /** A restart between two clean runs against one checkpoint (q65):
+      * the staged files move into a live dir, files 1–3 before run 1 and
+      * the rest before run 2. With `late` (q71), run 2 also gets a
+      * wholly-late copy of file 1 (event times shifted down 40 days —
+      * staged ts is TimestampType, so the shift is interval arithmetic),
+      * mod-time-ordered BEFORE file 4 so it is judged against the
+      * restored watermark, not a later one; `late(lateFile)` is the
+      * exact number of rows run 2 must drop.
+      */
+    final case class Restart(late: Option[DataFrame => Long] = None) extends Drive
+  }
+
+  /** The ONE stream-gate skeleton behind all 57 streaming gates
+    * (q49–q123): `stream` over the staged source, written by `sink`, run
+    * to completion by `drive`, checked, and read back — so the sink,
+    * drive and verification discipline can never drift per gate.
+    *
+    * Checks, on every gate: every clean run processes ≥ 3 data
+    * micro-batches (a restart run: one per file it admitted) and drops
+    * no row by watermark except exactly the injected late file's count;
+    * the final run reports exactly `statefulOps` stateful operators. The
+    * crash drive (q70's injection contract) additionally requires each
+    * failed run to die with ONE of the scheduled injections (cause-chain
+    * walk, injected-message match), exactly `batches.size` restarts and
+    * every first-attempt marker fired; a clean single run's real failure
+    * propagates raw. Drops the staged source; `ck` is the checkpoint
+    * (the fold gates' [[FoldStep]] records planning watermarks beside
+    * it).
+    */
+  private def streamGate(
+      s: SparkSession, tag: String, staged: String, statefulOps: Int,
+      drive: Drive = Drive.Once, sink: Sink = Sink.Parquet,
+      ck: String = Files.createTempDirectory("graft-gate-ck").toString)(
+      stream: String => DataFrame): DataFrame = {
     val out = Files.createTempDirectory(s"graft-$tag-out").toString
+    val crashes = drive match {
+      case Drive.Crashes(batches) => batches
+      case _ => Nil
+    }
+    val src = drive match {
+      case _: Drive.Restart =>
+        val live = Files.createTempDirectory(s"graft-$tag-live")
+        stagedDirs.add(live) // crash backstop; dropStaged cleans after run 2
+        live.toString
+      case _ => staged
+    }
+    val df = stream(src)
     // driver-side first-attempt markers: underscore-prefixed, outside the
     // batch_* read-back glob, so the replay of a crashed batch completes
     def marker(b: Long) = Paths.get(out, f"_fail_injected_$b%06d")
     def injected(b: Long) = s"$tag injected mid-batch failure (first attempt of batch $b)"
-    def runOnce(run: String): StreamingQuery = stream.writeStream
-      .queryName(s"${gateName(tag)}_$run")
-      .outputMode(outputMode)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ck)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(batch, batchId).foreach(
-          _.write.mode("overwrite").parquet(f"$out/batch_$batchId%06d"))
-        if (crashes.contains(batchId) && !Files.exists(marker(batchId))) {
-          Files.createFile(marker(batchId))
-          throw new RuntimeException(injected(batchId))
+    def start(run: String): StreamingQuery = {
+      val w = df.writeStream
+        .queryName(s"${gateName(tag)}_$run")
+        .trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", ck)
+      sink match {
+        case Sink.Parquet => w.outputMode("append").format("parquet").start(out)
+        case Sink.Batches(frame, latestBy) => w
+          .outputMode(if (latestBy.isDefined) "update" else "append")
+          .foreachBatch { (batch: DataFrame, batchId: Long) =>
+            frame(batch, batchId).foreach { f =>
+              (if (latestBy.isDefined) f.withColumn("_batch", lit(batchId)) else f)
+                .write.mode("overwrite").parquet(f"$out/batch_$batchId%06d")
+            }
+            if (crashes.contains(batchId) && !Files.exists(marker(batchId))) {
+              Files.createFile(marker(batchId))
+              throw new RuntimeException(injected(batchId))
+            }
+          }
+          .start()
+      }
+    }
+    def checked(q: StreamingQuery, run: String, min: Int, drops: Long = 0L): StreamingQuery = {
+      requireMultiBatch(q, s"$tag $run", min)
+      val dropped = q.recentProgress
+        .map(p => p.stateOperators.map(_.numRowsDroppedByWatermark).sum).sum
+      require(dropped == drops,
+        s"$tag $run must drop exactly $drops late rows by watermark, dropped $dropped")
+      q
+    }
+    val last = drive match {
+      case Drive.Crashes(_) =>
+        var restarts = 0
+        var query = start("run1")
+        var terminated = false
+        while (!terminated) {
+          val err = try { query.awaitTermination(); None } catch {
+            case e: Throwable => Some(e)
+          }
+          err match {
+            case None => terminated = true
+            case Some(e) if crashes.isEmpty =>
+              throw e // a clean drive's real failure propagates raw
+            case Some(e) =>
+              val chain = Iterator.iterate[Throwable](e)(_.getCause)
+                .takeWhile(_ != null).take(10).toSeq
+              if (!chain.exists(t => Option(t.getMessage).exists(m =>
+                  crashes.exists(b => m.contains(injected(b))))))
+                throw new IllegalStateException(
+                  s"$tag run ${restarts + 1} must terminate with an injected " +
+                    s"mid-batch failure, got: $e", e)
+              restarts += 1
+              require(restarts <= crashes.size,
+                s"$tag crashed more times ($restarts) than injected (${crashes.size})")
+              query = start(s"run${restarts + 1}")
+          }
         }
-      }
-      .start()
-    var restarts = 0
-    var query = runOnce("run1")
-    var terminated = false
-    while (!terminated) {
-      val err = try { query.awaitTermination(); None } catch {
-        case e: Throwable => Some(e)
-      }
-      err match {
-        case None => terminated = true
-        case Some(e) if crashes.isEmpty =>
-          throw e // a clean drive's real failure propagates raw
-        case Some(e) =>
-          val chain = Iterator.iterate[Throwable](e)(_.getCause)
-            .takeWhile(_ != null).take(10).toSeq
-          if (!chain.exists(t => Option(t.getMessage).exists(m =>
-              crashes.exists(b => m.contains(injected(b))))))
-            throw new IllegalStateException(
-              s"$tag run ${restarts + 1} must terminate with an injected " +
-                s"mid-batch failure, got: $e", e)
-          restarts += 1
-          require(restarts <= crashes.size,
-            s"$tag crashed more times ($restarts) than injected (${crashes.size})")
-          query = runOnce(s"run${restarts + 1}")
-      }
+        require(restarts == crashes.size,
+          s"$tag must survive ${crashes.size} crash-replay cycle(s), got $restarts")
+        crashes.foreach { b =>
+          require(Files.exists(marker(b)), s"$tag fault injection did not fire: ${injected(b)}")
+        }
+        checked(query, if (crashes.isEmpty) "run" else "final run", min = 3)
+      case Drive.Restart(late) =>
+        val names = {
+          val st = Files.list(Paths.get(staged))
+          try st.iterator().asScala.map(_.getFileName.toString).toSeq.sorted
+          finally st.close()
+        }
+        def admit(files: Seq[String]): Unit =
+          files.foreach(n => Files.move(Paths.get(staged, n), Paths.get(src, n)))
+        def run(name: String) = { val q = start(name); q.awaitTermination(); q }
+        // run 1 drains files 1–3: the checkpoint now holds the watermark
+        // their event times pin
+        val (first, rest) = names.splitAt(3)
+        admit(first)
+        checked(run("run1"), "run1", min = first.size)
+        val drops = late.map { count =>
+          val lateTmp = Files.createTempDirectory(s"graft-$tag-late")
+          s.read.parquet(Paths.get(src, names.head).toString)
+            .withColumn("ts", col("ts") - expr("INTERVAL 40 DAYS"))
+            .coalesce(1).write.mode("overwrite").parquet(lateTmp.toString)
+          val part = lateTmp.toFile.listFiles()
+            .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith(".")).head
+          val dst = Paths.get(src, "events-9999-late.parquet")
+          Files.move(part.toPath, dst)
+          Files.setLastModifiedTime(dst, FileTime.fromMillis(1700000000000L + 3 * 60000L + 30000L))
+          deleteTree(lateTmp)
+          count(s.read.parquet(dst.toString))
+        }
+        admit(rest)
+        checked(run("run2"), "run2", min = rest.size + drops.size, drops.getOrElse(0L))
     }
-    require(restarts == crashes.size,
-      s"$tag must survive ${crashes.size} crash-replay cycle(s), got $restarts")
-    crashes.foreach { b =>
-      require(Files.exists(marker(b)), s"$tag fault injection did not fire: ${injected(b)}")
-    }
-    requireMultiBatch(query, if (crashes.isEmpty) tag else s"$tag final run")
-    val stateful = Option(query.lastProgress)
+    val stateful = Option(last.lastProgress)
       .map(_.stateOperators.map(_.operatorName).toSeq).getOrElse(Seq.empty)
     require(stateful.size == statefulOps,
-      s"$tag must run $statefulOps stateful operator(s) ($why), got $stateful")
-    dropStaged(staged)
-    s.read.parquet(s"$out/batch_*")
+      s"$tag must run $statefulOps stateful operator(s), got $stateful")
+    dropStaged(staged, src)
+    sink match {
+      case Sink.Parquet => s.read.parquet(out)
+      case Sink.Batches(_, None) => s.read.parquet(s"$out/batch_*")
+      case Sink.Batches(_, Some(key)) =>
+        s.read.parquet(s"$out/batch_*")
+          .withColumn("_latest", max(col("_batch")).over(Window.partitionBy(col(key))))
+          .filter(col("_batch") === col("_latest"))
+          .drop("_batch", "_latest")
+    }
   }
 
-  /** The query-name prefix of a [[crashGate]] run (`<prefix>_run<k>`) —
+  /** The query-name prefix of a [[streamGate]] run (`<prefix>_run<k>`) —
     * what [[plannedWatermarkMs]] finds the live query by.
     */
   private def gateName(tag: String): String = s"${tag}_gate"
-
-  /** Shared fault-injection harness for the mid-batch-failure gates, so
-    * the state-API gates (q70 FMGWS, q72 TWS) and the chained-pipeline
-    * gate (q76, TWO state stores restored to the same committed version)
-    * can never drift apart. See q70's scaladoc for the recovery contract
-    * and determinism argument; `statefulOps` pins how many stateful
-    * operators the replayed query must report — the chained case is the
-    * harder replay (join buffers AND window state must restore
-    * consistently to batch 1's commit).
-    */
-  private def midBatchFailureGate(
-      s: SparkSession, dir: String, tag: String,
-      pipeline: String => DataFrame,
-      sortCols: Seq[String],
-      statefulOps: Int): DataFrame = {
-    val staged = stageTimeSplit(s, dir, tag, n = 6)
-    val ck = Files.createTempDirectory(s"graft-$tag-ck").toString
-    crashGate(s, tag, staged, ck, crashes = Seq(2L), statefulOps,
-        why = "the replay must restore them")(pipeline(staged))(
-        (batch, _) => Some(batch))
-      .orderBy(sortCols.map(col): _*)
-  }
 
   /** q72 — q70's mid-batch failure on the OTHER state API and backend:
     * `transformWithState` sessionization on RocksDB, crashed on the
@@ -1504,17 +1260,15 @@ object StreamGateQueries {
     * q58's oracle verbatim. See q70's scaladoc for the recovery
     * contract and determinism argument.
     */
-  def q72MidBatchFailureTws(s: SparkSession, dir: String): DataFrame = withConf(s,
-    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-    "spark.sql.streaming.stateStore.providerClass" ->
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-    midBatchFailureGate(s, dir, "q72", sessionPipeline(s, tws = true),
-      sortCols = Seq("user_id", "session_start_ms"), statefulOps = 1)
+  def q72MidBatchFailureTws(s: SparkSession, dir: String): DataFrame = withConf(s, RocksDb) {
+    streamGate(s, "q72", stageTimeSplit(s, dir, "q72", n = 6), statefulOps = 1,
+        Drive.CrashBatch2, Sink.Batches())(sessionPipeline(s, tws = true))
+      .orderBy("user_id", "session_start_ms")
   }
 
   /** q76 — the mid-batch crash applied to the CHAINED pipeline: q60's
     * interval join → tumbling-window aggregation run through
-    * [[midBatchFailureGate]]'s injected sink-side crash (first attempt
+    * [[streamGate]]'s injected sink-side crash (first attempt
     * of data batch 2 dies after its durable batch-keyed write, before
     * the commit). This is the harder replay case the single-operator
     * crash gates (q70/q72) cannot see: TWO state stores — the join's
@@ -1530,33 +1284,10 @@ object StreamGateQueries {
     * any inconsistency between the two restored stores shifts either
     * `n_attributed` or the closed-window set and fails the hash.
     */
-  def q76MidBatchFailureChained(s: SparkSession, dir: String): DataFrame = withConf(s,
-    "spark.sql.legacy.parquet.nanosAsLong" -> "true") {
-    import s.implicits._
-    def pipeline(staged: String): DataFrame = {
-      def side(kind: String, p: String, extra: Column*): DataFrame =
-        stagedStream(s, staged)
-          .filter($"event_type" === kind)
-          .select(Seq(
-            $"event_id".as(s"${p}_id"),
-            $"user_id".as(s"${p}_k"),
-            $"ts".as(s"${p}_ts")) ++ extra: _*)
-      StreamJobs.streamStreamCorrelate(
-          side("click", "l"),
-          side("purchase", "r", $"value".as("r_value")),
-          window = "10 minutes", delay = "10 minutes")
-        .groupBy(window($"r_ts", "10 minutes"))
-        .agg(
-          count(lit(1)).as("n_attributed"),
-          sum($"r_value".cast(DecimalType(12, 2))).cast("double").as("attributed_value"))
-        .select(
-          date_format($"window.start", "yyyy-MM-dd HH:mm:ss").as("window_start"),
-          date_format($"window.end", "yyyy-MM-dd HH:mm:ss").as("window_end"),
-          $"n_attributed", $"attributed_value")
-    }
-    midBatchFailureGate(s, dir, "q76", pipeline,
-      sortCols = Seq("window_start"), statefulOps = 2)
-  }
+  def q76MidBatchFailureChained(s: SparkSession, dir: String): DataFrame =
+    streamGate(s, "q76", stageTimeSplit(s, dir, "q76", n = 6), statefulOps = 2,
+        Drive.CrashBatch2, Sink.Batches())(src => attributionWindow(clickPurchase(s, src)))
+      .orderBy("window_start")
 
   /** q71 — the beyond-tolerance DROP path, oracle-gated: every staged
     * feed so far is constructed so NOTHING drops (that is what makes the
@@ -1589,105 +1320,19 @@ object StreamGateQueries {
     * drop would open 40-day-old windows whose immediate closure emits
     * rows the oracle does not contain — a loud hash mismatch.
     */
-  def q71LateDropWindow(s: SparkSession, dir: String): DataFrame = withConf(s,
-    "spark.sql.legacy.parquet.nanosAsLong" -> "true") {
-    import s.implicits._
-    lateDropGate(s, dir, "q71",
-      pipeline = live => StreamJobs.slidingWindowSales(stagedStream(s, live))
-        .select(
-          date_format($"window.start", "yyyy-MM-dd HH:mm:ss").as("window_start"),
-          date_format($"window.end", "yyyy-MM-dd HH:mm:ss").as("window_end"),
-          $"event_type", $"sales", $"orders"),
-      // the exact drop count the stream must report: distinct late
-      // (window, event_type) groups (see scaladoc — the engine counts
-      // dropped GROUPS post-partial-aggregation, not raw input rows)
-      expectedDrops = late => s.read.parquet(late)
-        .select($"ts", $"event_type")
-        .groupBy(window($"ts", StreamJobs.SalesWindow, StreamJobs.SalesSlide), $"event_type")
-        .count().count(),
-      dropUnit = "late groups",
-      sortCols = Seq($"window_start", $"event_type"))
-  }
-
-  /** Shared two-phase beyond-tolerance-drop harness (see q71's scaladoc
-    * for the layout and determinism argument): phase 1 drains the first
-    * 3 time-split files, PINNING the checkpointed watermark; phase 2
-    * admits a wholly-late copy of file 1 (event times shifted down 40
-    * days — staged ts is TimestampType, so the shift is interval
-    * arithmetic), mod-time-ordered BEFORE the final on-time file so it
-    * is judged against the restored watermark, not a later one. The
-    * gate requires ZERO drops in run 1, `numRowsDroppedByWatermark` ==
-    * the caller-computed EXACT count in run 2, and the read-back to
-    * meet the original clean-run oracle. ONE implementation for the
-    * aggregation gate (q71) and the join gate (q77), so the two
-    * stateful shapes' drop semantics can never drift apart.
-    */
-  private def lateDropGate(
-      s: SparkSession, dir: String, tag: String,
-      pipeline: String => DataFrame,
-      expectedDrops: String => Long,
-      dropUnit: String,
-      sortCols: Seq[Column]): DataFrame = {
-    import s.implicits._
-    val staged = Paths.get(stageTimeSplit(s, dir, tag, n = 4))
-    val live = Files.createTempDirectory(s"graft-$tag-live")
-    stagedDirs.add(live) // crash backstop; dropStaged cleans after run 2
-    val names = {
-      val st = Files.list(staged)
-      try st.iterator().asScala.map(_.getFileName.toString).toSeq.sorted
-      finally st.close()
-    }
-    val out = Files.createTempDirectory(s"graft-$tag-out").toString
-    val ck = Files.createTempDirectory(s"graft-$tag-ck").toString
-    def runOnce(run: String): StreamingQuery =
-      pipeline(live.toString)
-        .writeStream
-        .queryName(s"${tag}_late_drop_$run")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ck)
-        .format("parquet")
-        .start(out)
-    // phase 1: drain the first 3 files — the checkpoint now holds the
-    // pinned watermark derived from file 3's event times
-    def droppedByWatermark(q: StreamingQuery): Long = q.recentProgress
-      .map(p => p.stateOperators.map(_.numRowsDroppedByWatermark).sum).sum
-    val (first, rest) = names.splitAt(3)
-    first.foreach(n => Files.move(staged.resolve(n), live.resolve(n)))
-    val run1 = runOnce("run1")
-    run1.awaitTermination()
-    requireMultiBatch(run1, s"$tag run1")
-    require(droppedByWatermark(run1) == 0,
-      s"$tag run 1 is wholly on-time and must drop nothing")
-    // phase 2a: the late file
-    val expected = {
-      val lateTmp = Files.createTempDirectory(s"graft-$tag-late")
-      s.read.parquet(live.resolve(names.head).toString)
-        .withColumn("ts", $"ts" - expr("INTERVAL 40 DAYS"))
-        .coalesce(1).write.mode("overwrite").parquet(lateTmp.toString)
-      val part = lateTmp.toFile.listFiles()
-        .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith(".")).head
-      val dst = live.resolve("events-9999-late.parquet")
-      Files.move(part.toPath, dst)
-      Files.setLastModifiedTime(dst, FileTime.fromMillis(1700000000000L + 3 * 60000L + 30000L))
-      deleteTree(lateTmp)
-      expectedDrops(dst.toString)
-    }
-    // phase 2b: the final on-time file, then run 2
-    rest.foreach(n => Files.move(staged.resolve(n), live.resolve(n)))
-    val run2 = runOnce("run2")
-    run2.awaitTermination()
-    requireMultiBatch(run2, s"$tag run2", min = 2) // late batch + on-time batch
-    val dropped = droppedByWatermark(run2)
-    require(dropped == expected,
-      s"$tag must drop exactly $expected $dropUnit, dropped $dropped")
-    dropStaged(staged.toString, live.toString)
-    s.read.parquet(out).orderBy(sortCols: _*)
-  }
+  def q71LateDropWindow(s: SparkSession, dir: String): DataFrame =
+    streamGate(s, "q71", stageTimeSplit(s, dir, "q71"), statefulOps = 1,
+        // the exact drop count the stream must report: distinct late
+        // (window, event_type) groups (see scaladoc — the engine counts
+        // dropped GROUPS post-partial-aggregation, not raw input rows)
+        Drive.Restart(late = Some(_.groupBy(
+          window(col("ts"), StreamJobs.SalesWindow, StreamJobs.SalesSlide), col("event_type"))
+          .count().count())))(windowSales(s))
+      .orderBy("window_start", "event_type")
 
   /** q77 — the beyond-tolerance drop at the LAST stateful shape: q52's
-    * stream–stream interval join through [[lateDropGate]]'s two-phase
-    * layout. The join's late-data filter drops each beyond-tolerance
+    * stream–stream interval join through q71's two-phase layout
+    * ([[Drive.Restart]] with a late file). The join's late-data filter drops each beyond-tolerance
     * INPUT ROW before it reaches join state (no partial-agg collapse
     * here, unlike q71 — the exact expected count is the late file's
     * click + purchase rows, each side's filtered stream contributing its
@@ -1698,37 +1343,17 @@ object StreamGateQueries {
     * emit spurious duplicate attribution pairs at 40-day-old times and
     * miss q52's oracle, which contains only the original events' pairs.
     */
-  def q77LateDropJoin(s: SparkSession, dir: String): DataFrame = withConf(s,
-    "spark.sql.legacy.parquet.nanosAsLong" -> "true") {
-    import s.implicits._
-    lateDropGate(s, dir, "q77",
-      pipeline = { live =>
-        def side(kind: String, p: String): DataFrame = stagedStream(s, live)
-          .filter($"event_type" === kind)
-          .select(
-            $"event_id".as(s"${p}_id"),
-            $"user_id".as(s"${p}_k"),
-            $"ts".as(s"${p}_ts"))
-        StreamJobs.streamStreamCorrelate(
-            side("click", "l"), side("purchase", "r"),
-            window = "10 minutes", delay = "10 minutes")
-          .select(
-            $"l_id".as("click_id"), $"r_id".as("purchase_id"),
-            $"l_k".as("user_id"),
-            date_format($"l_ts", "yyyy-MM-dd HH:mm:ss").as("click_time"),
-            date_format($"r_ts", "yyyy-MM-dd HH:mm:ss").as("purchase_time"))
-      },
-      // each late row reaching a join side is dropped individually
-      expectedDrops = late => s.read.parquet(late)
-        .filter($"event_type".isin("click", "purchase")).count(),
-      dropUnit = "late join-input rows",
-      sortCols = Seq($"click_id", $"purchase_id"))
-  }
+  def q77LateDropJoin(s: SparkSession, dir: String): DataFrame =
+    streamGate(s, "q77", stageTimeSplit(s, dir, "q77"), statefulOps = 1,
+        // each late row reaching a join side is dropped individually
+        Drive.Restart(late = Some(_.filter(col("event_type").isin("click", "purchase")).count())))(
+        clickPurchasePairs(s))
+      .orderBy("click_id", "purchase_id")
 
   /** q82 — the mid-batch crash at the stream–stream JOIN shape, the one
     * stateful state layout the failure matrix had not crashed (q70/q72 =
     * per-key session state, q76 = join + window chained): q52's interval
-    * join run through [[midBatchFailureGate]]. The join's state is the
+    * join run through [[Drive.CrashBatch2]]. The join's state is the
     * TWO-SIDED buffered-row store (`StreamingSymmetricHashJoin` keeps
     * every not-yet-evictable input row per side), so the replay contract
     * differs from the aggregation shapes in kind: run 2 must restore
@@ -1743,35 +1368,17 @@ object StreamGateQueries {
     * write, before the commit; the idempotent overwrite makes the replay
     * invisible.
     */
-  def q82MidBatchFailureJoin(s: SparkSession, dir: String): DataFrame = withConf(s,
-    "spark.sql.legacy.parquet.nanosAsLong" -> "true") {
-    import s.implicits._
-    def pipeline(staged: String): DataFrame = {
-      def side(kind: String, p: String): DataFrame = stagedStream(s, staged)
-        .filter($"event_type" === kind)
-        .select(
-          $"event_id".as(s"${p}_id"),
-          $"user_id".as(s"${p}_k"),
-          $"ts".as(s"${p}_ts"))
-      StreamJobs.streamStreamCorrelate(
-          side("click", "l"), side("purchase", "r"),
-          window = "10 minutes", delay = "10 minutes")
-        .select(
-          $"l_id".as("click_id"), $"r_id".as("purchase_id"),
-          $"l_k".as("user_id"),
-          date_format($"l_ts", "yyyy-MM-dd HH:mm:ss").as("click_time"),
-          date_format($"r_ts", "yyyy-MM-dd HH:mm:ss").as("purchase_time"))
-    }
-    midBatchFailureGate(s, dir, "q82", pipeline,
-      sortCols = Seq("click_id", "purchase_id"), statefulOps = 1)
-  }
+  def q82MidBatchFailureJoin(s: SparkSession, dir: String): DataFrame =
+    streamGate(s, "q82", stageTimeSplit(s, dir, "q82", n = 6), statefulOps = 1,
+        Drive.CrashBatch2, Sink.Batches())(clickPurchasePairs(s))
+      .orderBy("click_id", "purchase_id")
 
   /** q83 — the mid-batch crash at the streaming-DEDUP shape, completing
     * the failure matrix across all four stateful state layouts (per-key
     * session state q70/q72, chained join+window q76, two-sided join
     * buffer q82, and the key-presence store here): q61's
     * `dropDuplicatesWithinWatermark` pipeline through
-    * [[midBatchFailureGate]]. Dedup is the shape where a WRONG restored
+    * [[Drive.CrashBatch2]]. Dedup is the shape where a WRONG restored
     * state version is most directly visible in the output: each key
     * emits exactly once per state lifetime, so a replay that restored
     * state one version AHEAD (i.e. kept the failed attempt's
@@ -1783,18 +1390,10 @@ object StreamGateQueries {
     * (q61's sizing rule) spans the fixture, so the emitted key set is
     * batch-layout- and crash-invariant.
     */
-  def q83MidBatchFailureDedup(s: SparkSession, dir: String): DataFrame = withConf(s,
-    "spark.sql.legacy.parquet.nanosAsLong" -> "true") {
-    import s.implicits._
-    def pipeline(staged: String): DataFrame =
-      stagedStream(s, staged)
-        .select($"user_id", $"event_type", $"ts")
-        .withWatermark("ts", "35 days")
-        .dropDuplicatesWithinWatermark("user_id", "event_type")
-        .select($"user_id", $"event_type")
-    midBatchFailureGate(s, dir, "q83", pipeline,
-      sortCols = Seq("user_id", "event_type"), statefulOps = 1)
-  }
+  def q83MidBatchFailureDedup(s: SparkSession, dir: String): DataFrame =
+    streamGate(s, "q83", stageTimeSplit(s, dir, "q83", n = 6), statefulOps = 1,
+        Drive.CrashBatch2, Sink.Batches())(dedupPipeline(s))
+      .orderBy("user_id", "event_type")
 
   /** q84 — STREAMING ingest admission: the per-ingest corpus-dedup shape
     * (q73) run through the REAL streaming engine, which is where a
@@ -1828,7 +1427,9 @@ object StreamGateQueries {
     * window within which one logical batch's duplicates can arrive.
     */
   def q84StreamingAdmission(s: SparkSession, dir: String): DataFrame =
-    streamingAdmissionGate(s, dir, "q84", failAt = None)
+    streamGate(s, "q84", stageDocSplit(s, dir, "q84"), statefulOps = 1,
+        sink = Sink.Batches(latestBy = Some("fingerprint")))(admission(s, dir))
+      .orderBy("doc_id")
 
   /** q87 — the mid-batch crash at the streaming-ADMISSION shape: q84's
     * pipeline with the sink's FIRST attempt of data batch 2 dying after
@@ -1846,38 +1447,11 @@ object StreamGateQueries {
     * compaction must meet q73's oracle verbatim, as in q84.
     */
   def q87MidBatchFailureAdmission(s: SparkSession, dir: String): DataFrame =
-    streamingAdmissionGate(s, dir, "q87", failAt = Some(2L))
-
-  /** Shared harness behind q84 (clean run) and q87 (crashed + replayed
-    * run) — one implementation of the pipeline, sink, and read-back, so
-    * the two gates can never drift. See q84's scaladoc for the
-    * admission semantics and q70's for the injection contract.
-    */
-  private def streamingAdmissionGate(
-      s: SparkSession, dir: String, tag: String, failAt: Option[Long]): DataFrame = {
-    import s.implicits._
-    // the crash variant stages 6 files so the replay run still covers
-    // ≥ 3 data micro-batches (replayed batch 2 + files 3-5), q70's layout
-    val staged = stageDocSplit(s, dir, tag, n = if (failAt.isDefined) 6 else 4)
-    val ck = Files.createTempDirectory(s"graft-$tag-ck").toString
-    val stream = s.readStream
-      .schema(StructType(docFields))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staged)
-      .select($"doc_id", fingerprint($"text"))
-      .join(fingerprintCorpus(s, dir), Seq("fingerprint"), "left_anti")
-      .groupBy($"fingerprint")
-      .agg(min($"doc_id").as("doc_id"), count(lit(1)).as("batch_dups"))
-    val latest = Window.partitionBy($"fingerprint").orderBy($"_batch".desc)
-    crashGate(s, tag, staged, ck, failAt.toSeq, statefulOps = 1,
-        why = "the admission agg; the stream-static probe is stateless",
-        outputMode = "update")(stream)(
-        (batch, batchId) => Some(batch.withColumn("_batch", lit(batchId))))
-      .withColumn("_rn", row_number().over(latest))
-      .filter($"_rn" === 1)
-      .select($"doc_id", $"fingerprint", $"batch_dups")
-      .orderBy($"doc_id")
-  }
+    // 6 staged files, so the replay run still covers >= 3 data
+    // micro-batches (replayed batch 2 + files 3-5), q70's layout
+    streamGate(s, "q87", stageDocSplit(s, dir, "q87", n = 6), statefulOps = 1,
+        Drive.CrashBatch2, Sink.Batches(latestBy = Some("fingerprint")))(admission(s, dir))
+      .orderBy("doc_id")
 
   /** q91 — CONTINUOUS ingest with PER-BATCH INDEX FOLDS: the streaming
     * realization of q89's admit → fold → admit-again cycle, the full
@@ -2014,7 +1588,7 @@ object StreamGateQueries {
     * the modality's in-stream projection (with `withWatermark` on the
     * watermark clock), and runs each micro-batch through [[FoldStep]] —
     * compaction cadence, then the clock's expiry, then the modality's
-    * admit-and-fold — into [[crashGate]]'s batch-keyed sink with the
+    * admit-and-fold — into [[streamGate]]'s batch-keyed sink with the
     * schedule's injected crashes. Fences, on top of the skeleton's drive
     * and STATELESS checks: the watermark window law and advancing engine
     * watermarks on the watermark clock (q108), ≥ 2 policy firings on a
@@ -2039,19 +1613,20 @@ object StreamGateQueries {
     val step = new FoldStep(s, ix, schedule.clock, schedule.cadence, ck,
       gateName(tag), corpus.admit)
     val eventTs = if (wm) Seq(StructField("event_ts", TimestampType)) else Nil
-    val read = s.readStream
-      .schema(StructType(m.fields ++ eventTs))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staged)
-      .select(m.incoming ++ eventTs.map(f => col(f.name)): _*)
-    val stream =
-      if (wm) read.withWatermark("event_ts", s"${WmDelayMs / 1000} seconds") else read
-    val result = crashGate(s, tag, staged, ck, schedule.crashes, statefulOps = 0,
-        why = "STATELESS: the standing index is the cross-batch state; " +
-          "the watermark operator holds no store")(stream) { (batch, batchId) =>
-        def folded = step(batch, batchId).map(_.select(col(m.id),
-          lit(batchId + 1).cast("int").as("batch"), col(m.out)))
-        soak.fold(folded)(_.around(batchId)(folded))
+    // STATELESS: the standing index is the cross-batch state; the
+    // watermark operator holds no store
+    val result = streamGate(s, tag, staged, statefulOps = 0,
+        Drive.Crashes(schedule.crashes), Sink.Batches { (batch, batchId) =>
+          def folded = step(batch, batchId).map(_.select(col(m.id),
+            lit(batchId + 1).cast("int").as("batch"), col(m.out)))
+          soak.fold(folded)(_.around(batchId)(folded))
+        }, ck) { src =>
+        val read = s.readStream
+          .schema(StructType(m.fields ++ eventTs))
+          .option("maxFilesPerTrigger", "1")
+          .parquet(src)
+          .select(m.incoming ++ eventTs.map(f => col(f.name)): _*)
+        if (wm) read.withWatermark("event_ts", s"${WmDelayMs / 1000} seconds") else read
       }
       .select(m.resultCols(schedule.clock).map(col): _*)
       .orderBy(m.id)
@@ -2650,12 +2225,8 @@ object StreamGateQueries {
     * corpus only while `k ≤ H`, and by the ADMITTED fingerprints of
     * groups `[k−H, k−1]` (earlier folds have expired); within a batch
     * the smallest-id holder per surviving fingerprint wins (q73's rule).
-    * Every CTE is MATERIALIZED: the adm chain references each CTE up to
-    * H + 1 times, so default inlining re-expands the whole prefix at
-    * every reference — harmless at n ≤ 6, but the soak's n = 50 unroll
-    * (q123) turns it into an exponential plan that exhausts file
-    * handles re-opening the documents scan; materialization evaluates
-    * each window once, which is also what the recurrence MEANS.
+    * Every CTE is MATERIALIZED ([[LlmQueries.horizonWindow]]'s rule for
+    * every unrolled oracle).
     */
   private def expiringFoldOracle(n: Int, horizon: Long): String = {
     val u = graft.operators.Sampling.duckUniform01("CAST(doc_id AS VARCHAR)")

@@ -838,6 +838,26 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark, ck.toString, "wmfallback_no_such_query", 0L) === None)
   }
 
+  test("stream-gate twins: a restart, a crash replay, a late drop and a disordered feed are invisible in the rows") {
+    // each twin shares its clean gate's oracle (StreamGateQueries.oracles);
+    // here the twin's rows must equal the clean gate's, in order. q70
+    // rides along with q82: at this scale q52 has one row, which a
+    // replayed batch that duplicates its rows need not touch
+    val gate = graft.queries.StreamGateQueries.queries
+    val twins = Seq(
+      "q65_restart_sessionize" -> "q58_streaming_sessionize",
+      "q70_midbatch_failure" -> "q58_streaming_sessionize",
+      "q82_midbatch_failure_join" -> "q52_stream_stream_join",
+      "q77_late_drop_join" -> "q52_stream_stream_join",
+      "q66_disordered_window_sales" -> "q49_append_window_sales")
+    val clean = twins.map(_._2).distinct
+      .map(name => name -> gate(name)(spark, sf).collect().toSeq).toMap
+    twins.foreach { case (twin, of) =>
+      assert(clean(of).nonEmpty, of)
+      assert(gate(twin)(spark, sf).collect().toSeq === clean(of), s"$twin vs $of")
+    }
+  }
+
   test("ST3/ST6/K4: ProcessingTime trigger + queryName on a live query") {
     val ss = spark; import ss.implicits._
     implicit val sqlCtx = spark.sqlContext

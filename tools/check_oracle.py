@@ -5,14 +5,14 @@ Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
 
 Reads each <verifyOutDir>/<name>/ parquet (written by graft.Verify), runs
 the matching SQL from oracle_sql.json in DuckDB over <sfDir>'s tables, and
-compares: schema (column names), row count, exact values (column-name-sorted),
-and row order. Exit code 1 if any query mismatches.
+compares them by tools/compare_tables.py's rules: column names, row count,
+exact values (column-name-sorted), and row order. Exit code 1 if any query
+mismatches.
 """
-import sys, json, glob, os
+import sys, json, os
 import duckdb
-import pyarrow.parquet as pq
-import pandas as pd
-import numpy as np
+
+from compare_tables import compare, read_output
 
 TABLES = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]
@@ -29,53 +29,14 @@ def main():
 
     failures = []
     for name in sorted(oracles):
-        sql = oracles[name]
-        spark_files = sorted(glob.glob(os.path.join(out_dir, name, "*.parquet")))
-        if not spark_files:
+        sdf = read_output(out_dir, name)
+        if sdf is None:
             failures.append(name); print(f"[FAIL] {name}: no spark output"); continue
-        sdf = pd.concat([pq.read_table(f).to_pandas() for f in spark_files],
-                        ignore_index=True)
         try:
-            ddf = con.execute(sql).df()
+            ddf = con.execute(oracles[name]).df()
         except Exception as e:
             failures.append(name); print(f"[FAIL] {name}: duckdb error: {e}"); continue
-
-        s_cols, d_cols = sorted(sdf.columns), sorted(ddf.columns)
-        if s_cols != d_cols:
-            failures.append(name)
-            print(f"[FAIL] {name}: columns differ spark={s_cols} duckdb={d_cols}")
-            continue
-        sdf, ddf = sdf[s_cols], ddf[s_cols]
-        if len(sdf) != len(ddf):
-            failures.append(name)
-            print(f"[FAIL] {name}: rows spark={len(sdf)} duckdb={len(ddf)}")
-            continue
-        ok = True
-        for c in s_cols:
-            a, b = sdf[c].to_numpy(), ddf[c].to_numpy()
-            # the driver's gate hashes typed values: an int64-vs-float64
-            # (e.g. DuckDB HUGEINT sum) mismatch fails there even when the
-            # numbers are equal — catch it here too
-            if a.dtype.kind != b.dtype.kind:
-                print(f"[FAIL] {name}: col {c} dtype kind differs "
-                      f"spark={a.dtype} duckdb={b.dtype}")
-                ok = False
-                continue
-            if a.dtype.kind == 'f' or b.dtype.kind == 'f':
-                eq = (pd.isna(a) & pd.isna(b)) | (a == b)
-                if not eq.all():
-                    i = int(np.argmin(eq))
-                    print(f"[FAIL] {name}: col {c} row {i}: spark={a[i]!r} duckdb={b[i]!r} (diff={a[i]-b[i]!r})")
-                    ok = False
-            else:
-                eq = pd.Series(a).astype(str).eq(pd.Series(b).astype(str)) | (pd.isna(a) & pd.isna(b))
-                if not eq.all():
-                    i = int(eq.idxmin())
-                    print(f"[FAIL] {name}: col {c} row {i}: spark={a[i]!r} duckdb={b[i]!r}")
-                    ok = False
-        if ok:
-            print(f"[ OK ] {name}: {len(sdf)} rows, {len(s_cols)} cols exact match")
-        else:
+        if not compare(name, sdf, ddf, "spark", "duckdb"):
             failures.append(name)
     print(f"\n{len(oracles) - len(failures)}/{len(oracles)} queries match")
     sys.exit(1 if failures else 0)
