@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** The ASYNC-COMPACTOR role of [[graft.operators.StandingIndex]]'s
   * one-writer-per-role deployment shape — its own JVM and SparkSession
   * against the SAME warehouse root as the continuous ingest writer,
@@ -43,15 +41,8 @@ import org.apache.spark.sql.SparkSession
 object AsyncCompactor {
   def main(args: Array[String]): Unit = {
     val Array(wh, name, attemptsStr, marker) = args
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.warehouse.dir", wh)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-async-compactor")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(2,
+      "spark.sql.warehouse.dir" -> wh, "spark.app.name" -> "graft-async-compactor")
     val ix = new graft.operators.StandingIndex(
       spark, name, buckets = 2, keys = Seq("band", "bk"))
     // the same-role single-writer contract, ENFORCED: this process IS

@@ -36,8 +36,8 @@ object SparkEntry {
   /** Gates whose builders run a FULL streaming query on construction
     * (file-stream harness + checkpoint + awaitTermination) — derived
     * from the streaming-gate registry so a new streaming gate is
-    * excluded from every static-plan sweep (NoUdfSweepSpec,
-    * ExchangeAudit, ExchangeBudgetSpec's completeness fence)
+    * excluded from every static-plan sweep (NoUdfSweepSpec and
+    * ExchangeBudgetSpec's completeness fence)
     * automatically instead of via hand-synced lists.
     */
   def streamingGates: Set[String] =

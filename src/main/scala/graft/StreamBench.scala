@@ -2,20 +2,19 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 import graft.streaming.StreamJobs
 
-/** Streaming-throughput micro-bench (TopKBench/AvroBench mold): rows/sec
-  * through the engine's stateful streaming operators, run through the
-  * real streaming engine (file source → stateful exec → noop sink,
-  * AvailableNow) on an events fixture shard-replicated from
-  * SPARK_GRAFT_SF_DIR with per-shard user_id shifts — distinct users
-  * (= state rows) scale with the data, the dimension that matters for a
-  * state backend.
+/** Streaming-throughput micro-bench: rows/sec through the engine's
+  * stateful streaming operators, run through the real streaming engine
+  * (file source → stateful exec → noop sink, AvailableNow) on an events
+  * fixture shard-replicated from SPARK_GRAFT_SF_DIR with per-shard
+  * user_id shifts — distinct users (= state rows) scale with the data,
+  * the dimension that matters for a state backend.
   *
   * Subjects (comma list in SPARK_GRAFT_STREAM_SUBJECTS; default all):
   *
@@ -92,6 +91,11 @@ object StreamBench {
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
+  private val docsSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("text", StringType),
+    StructField("lang", StringType), StructField("source", StringType),
+    StructField("n_chars", LongType)))
+
   private val Hdfs =
     "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
   private val Rocks =
@@ -112,32 +116,55 @@ object StreamBench {
     require(subjects.nonEmpty && subjects.subsetOf(knownSubjects),
       s"unknown/empty SPARK_GRAFT_STREAM_SUBJECTS ${subjects -- knownSubjects}; " +
         s"known: ${knownSubjects.mkString(",")}")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus.toInt, "spark.sql.legacy.parquet.nanosAsLong" -> "true")
     import spark.implicits._
+    import graft.operators.{Sampling, StandingIndex}
+    import graft.queries.{LlmQueries, StreamGateQueries => SGQ}
+
+    // a fixture: `df` as 32 parquet files at `path`, and its row count
+    def stage(df: DataFrame, path: String): (String, Long) = {
+      df.repartition(32).write.mode("overwrite").parquet(path)
+      (path, spark.read.parquet(path).count())
+    }
 
     // fixtures: N shards of the events dump (shared builder — user_id
     // shifts per shard so state rows scale N×; ts normalized to µs
     // TimestampType by the builder), built once per size
     val fixtures = scala.collection.mutable.Map.empty[Int, (String, Long)]
-    def fixture(n: Int): (String, Long) = fixtures.getOrElseUpdate(n, {
-      val path = s"target/streambench$n"
-      Tables.shardedEvents(spark, base, n)
-        .repartition(32).write.mode("overwrite").parquet(path)
-      (path, spark.read.parquet(path).count())
-    })
+    def fixture(n: Int): (String, Long) = fixtures.getOrElseUpdate(n,
+      stage(Tables.shardedEvents(spark, base, n), s"target/streambench$n"))
 
-    def events(path: String, maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-      val r = spark.readStream.schema(eventsSchema)
+    // the N× document fixture (Tables.shardedDocuments, so cross-shard
+    // texts are genuinely distinct and fingerprint work is real) and the
+    // checkpointed fingerprints of the base corpus (q73's `u ≥ 0.3`
+    // side), each built once for every doc subject that runs
+    lazy val docs: (String, Long) =
+      stage(Tables.shardedDocuments(spark, base, shards), s"target/streambench_docs$shards")
+    lazy val corpusFp: DataFrame = SGQ.fingerprintCorpus(spark, base).localCheckpoint()
+
+    def read(schema: StructType, path: String, maxFilesPerTrigger: Option[Int] = None): DataFrame = {
+      val r = spark.readStream.schema(schema)
       maxFilesPerTrigger.foreach(m => r.option("maxFilesPerTrigger", m.toString))
       r.parquet(path)
     }
+    def events(path: String, maxFilesPerTrigger: Option[Int] = None): DataFrame =
+      read(eventsSchema, path, maxFilesPerTrigger)
+
+    // the click → purchase interval join and the 35-day (user, type)
+    // dedup, as the `join`/`dedup` subjects and the `scale` sweep run them
+    def join(path: String): DataFrame = {
+      def side(kind: String, p: String): DataFrame = events(path)
+        .filter($"event_type" === kind)
+        .select($"event_id".as(s"${p}_id"), $"user_id".as(s"${p}_k"),
+          $"ts".as(s"${p}_ts"))
+      StreamJobs.streamStreamCorrelate(
+        side("click", "l"), side("purchase", "r"),
+        window = "10 minutes", delay = "10 minutes")
+    }
+    def dedup(path: String): DataFrame = events(path)
+      .select($"user_id", $"event_type", $"ts")
+      .withWatermark("ts", "35 days")
+      .dropDuplicatesWithinWatermark("user_id", "event_type")
 
     /** One AvailableNow run to a noop sink against a fresh checkpoint;
       * returns wall seconds.
@@ -212,13 +239,7 @@ object StreamBench {
       def run(provider: String): Double =
         Confs.withConf(spark,
           "spark.sql.streaming.stateStore.providerClass" -> provider) {
-          def side(kind: String, p: String): DataFrame = events(path)
-            .filter($"event_type" === kind)
-            .select($"event_id".as(s"${p}_id"), $"user_id".as(s"${p}_k"),
-              $"ts".as(s"${p}_ts"))
-          timeRun(StreamJobs.streamStreamCorrelate(
-            side("click", "l"), side("purchase", "r"),
-            window = "10 minutes", delay = "10 minutes"))
+          timeRun(join(path))
         }
       jsonLine("stream_join", rows, measure(Seq(
         ("hdfs", () => run(Hdfs)),
@@ -230,10 +251,7 @@ object StreamBench {
       def run(provider: String): Double =
         Confs.withConf(spark,
           "spark.sql.streaming.stateStore.providerClass" -> provider) {
-          timeRun(events(path)
-            .select($"user_id", $"event_type", $"ts")
-            .withWatermark("ts", "35 days")
-            .dropDuplicatesWithinWatermark("user_id", "event_type"))
+          timeRun(dedup(path))
         }
       jsonLine("stream_dedup", rows, measure(Seq(
         ("hdfs", () => run(Hdfs)),
@@ -293,35 +311,20 @@ object StreamBench {
     }
 
     if (subjects("admission")) {
-      // streaming ingest admission (q84's shape): an N× document stream
-      // — Tables.shardedDocuments, so cross-shard texts are genuinely
-      // distinct and fingerprint work is real — probed against the BASE
-      // corpus's standing fingerprint index (built once, outside the
-      // timed runs: the pay-once ingest write) via stream-static
-      // left-anti, then the update-mode min/count admission agg. Docs/s
-      // through fingerprint + probe + admission state, HDFS vs RocksDB
-      // on the agg's store.
-      import graft.operators.{Sampling, TextOps}
-      val docsPath = s"target/streambench_docs$shards"
-      Tables.shardedDocuments(spark, base, shards)
-        .repartition(32).write.mode("overwrite").parquet(docsPath)
-      val rows = spark.read.parquet(docsPath).count()
-      val corpus = Tables.documents(spark, base)
-        .filter(Sampling.uniform01($"doc_id") >= 0.3)
-        .select(TextOps.bagFingerprint(TextOps.normText($"text")).as("fingerprint"))
-        .localCheckpoint()
-      val docsSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType),
-        StructField("lang", StringType), StructField("source", StringType),
-        StructField("n_chars", LongType)))
+      // streaming ingest admission (q84's shape): the N× document stream
+      // probed against the BASE corpus's standing fingerprint index
+      // (built once, outside the timed runs: the pay-once ingest write)
+      // via stream-static left-anti, then the update-mode min/count
+      // admission agg. Docs/s through fingerprint + probe + admission
+      // state, HDFS vs RocksDB on the agg's store.
+      val (docsPath, rows) = docs
       def run(provider: String): Double =
         Confs.withConf(spark,
           "spark.sql.streaming.stateStore.providerClass" -> provider) {
-          val incoming = spark.readStream.schema(docsSchema).parquet(docsPath)
-            .select($"doc_id",
-              TextOps.bagFingerprint(TextOps.normText($"text")).as("fingerprint"))
+          val incoming = read(docsSchema, docsPath)
+            .select($"doc_id", SGQ.fingerprint($"text"))
           timeRun(incoming
-            .join(corpus, Seq("fingerprint"), "left_anti")
+            .join(corpusFp, Seq("fingerprint"), "left_anti")
             .groupBy($"fingerprint")
             .agg(min($"doc_id").as("doc_id"), count(lit(1)).as("batch_dups")),
             mode = "update")
@@ -338,8 +341,6 @@ object StreamBench {
     // (StreamGateQueries.FoldStep: cadence, clock, admit-and-fold) over
     // `stream`, so the bench can never price a shape the gates don't
     // verify. Returns the seconds and the step (its policy counter).
-    import graft.operators.{Sampling, StandingIndex, TextOps}
-    import graft.queries.{LlmQueries, StreamGateQueries => SGQ}
     def foldPass(
         name: String, stream: DataFrame, corpus: DataFrame, keys: Seq[String],
         clock: SGQ.Clock, cadence: SGQ.Cadence,
@@ -362,37 +363,16 @@ object StreamBench {
     val admitFp: (DataFrame, StandingIndex, Long, Long) => DataFrame =
       LlmQueries.admitAndFold(_, _, _, _)
 
-    // shared staging for the fold-family subjects (fold/foldexp/foldcmp):
-    // the sharded doc fixture, its count, and the checkpointed corpus
-    // fingerprint frame are built ONCE even when several subjects run
-    lazy val foldFixture: (String, Long, DataFrame) = {
-      val docsPath = s"target/streambench_folddocs$shards"
-      Tables.shardedDocuments(spark, base, shards)
-        .repartition(32).write.mode("overwrite").parquet(docsPath)
-      val rows = spark.read.parquet(docsPath).count()
-      val corpusFp = Tables.documents(spark, base)
-        .filter(Sampling.uniform01($"doc_id") >= 0.3)
-        .select(TextOps.bagFingerprint(TextOps.normText($"text")).as("fingerprint"))
-        .localCheckpoint()
-      (docsPath, rows, corpusFp)
-    }
-    val foldDocsSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("lang", StringType), StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    // the fixture's 32 files as a fingerprinted doc stream
+    // the doc fixture's 32 files as a fingerprinted doc stream
     def fpStream(filesPerTrigger: Int): DataFrame =
-      spark.readStream.schema(foldDocsSchema)
-        .option("maxFilesPerTrigger", filesPerTrigger.toString)
-        .parquet(foldFixture._1)
-        .select($"doc_id",
-          TextOps.bagFingerprint(TextOps.normText($"text")).as("fingerprint"))
+      read(docsSchema, docs._1, Some(filesPerTrigger))
+        .select($"doc_id", SGQ.fingerprint($"text"))
 
     if (subjects("fold")) {
       // continuous ingest with per-batch index folds (q91's shape): the
       // timed run measures fingerprint + segmented probe + the per-batch
       // fold publications only
-      val (_, rows, corpusFp) = foldFixture
+      val rows = docs._2
       jsonLine("stream_fold", rows, measure(Seq(("fold", () =>
         foldPass("sbfold", fpStream(8), corpusFp, Seq("fingerprint"), // 4 batches
           SGQ.Clock.Never, SGQ.Cadence.Never, admitFp)._1))))
@@ -407,7 +387,7 @@ object StreamBench {
       // where a segment crosses the horizon; index state stays
       // O(horizon × batch)). The corpus is stamped pre-batch-0, exactly
       // the gate's clock.
-      val (_, rows, corpusFp) = foldFixture
+      val rows = docs._2
       jsonLine("stream_foldexp", rows, measure(Seq(("foldexp", () =>
         foldPass("sbfoldexp", fpStream(8), corpusFp, Seq("fingerprint"),
           SGQ.Clock.BatchHorizon, SGQ.Cadence.Never, admitFp)._1))))
@@ -422,7 +402,7 @@ object StreamBench {
       // the bounded probe fan-out: the no-policy arm's last batch
       // probes 16 strictly-earlier segments, the policy arm never more
       // than k.
-      val (_, rows, corpusFp) = foldFixture
+      val rows = docs._2
       def run(cadence: SGQ.Cadence, tag: String): Double = {
         val (secs, step) = foldPass(s"sbfoldcmp$tag", fpStream(2), // 16 batches
           corpusFp, Seq("fingerprint"), SGQ.Clock.Never, cadence, admitFp)
@@ -471,21 +451,15 @@ object StreamBench {
         nSlices, filePrefix = "docs")
       val stagedDir = stagedP.toString
       val rows = spark.read.parquet(stagedDir).count()
-      val corpusFp = Tables.documents(spark, base)
-        .filter(Sampling.uniform01($"doc_id") >= 0.3)
-        .select(TextOps.bagFingerprint(TextOps.normText($"text")).as("fingerprint"))
-        .localCheckpoint()
       val wmDocsSchema = StructType(Seq(
         StructField("doc_id", LongType), StructField("text", StringType),
         StructField("event_ts", TimestampType)))
       def run(clock: SGQ.Clock, tag: String): Double = {
-        val read = spark.readStream.schema(wmDocsSchema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(stagedDir)
-        val fp = TextOps.bagFingerprint(TextOps.normText($"text")).as("fingerprint")
+        val in = read(wmDocsSchema, stagedDir, Some(1))
+        val fp = SGQ.fingerprint($"text")
         val stream =
-          if (clock != SGQ.Clock.Watermark) read.select($"doc_id", fp)
-          else read.select($"doc_id", fp, $"event_ts")
+          if (clock != SGQ.Clock.Watermark) in.select($"doc_id", fp)
+          else in.select($"doc_id", fp, $"event_ts")
             .withWatermark("event_ts", s"${SGQ.WmDelayMs / 1000} seconds")
         foldPass(s"sbwm$tag", stream, corpusFp, Seq("fingerprint"), clock,
           SGQ.Cadence.Never, admitFp)._1
@@ -503,10 +477,7 @@ object StreamBench {
       // candidates against the shingle doc store, fold the admitted band
       // keys. Doc-store shingling is the pay-once ingest price OUTSIDE
       // the timed window. Stateless, like `fold`.
-      val docsPath = s"target/streambench_nddocs$shards"
-      Tables.shardedDocuments(spark, base, shards)
-        .repartition(32).write.mode("overwrite").parquet(docsPath)
-      val rows = spark.read.parquet(docsPath).count()
+      val (docsPath, rows) = docs
       // the confirm store: shard 0 is the unmodified base corpus, so one
       // frame serves corpus AND stream blockers (q53's point-lookup role)
       val docStoreSh = LlmQueries.shingleDocs(spark.read.parquet(docsPath))
@@ -515,9 +486,7 @@ object StreamBench {
           LlmQueries.shingleDocs(Tables.documents(spark, base)
             .filter(Sampling.uniform01($"doc_id") >= 0.3)))
         .select($"doc_id", $"band", $"bk").localCheckpoint()
-      def stream = spark.readStream.schema(foldDocsSchema)
-        .option("maxFilesPerTrigger", "8") // 32 fixture files → 4 batches
-        .parquet(docsPath)
+      def stream = read(docsSchema, docsPath, Some(8)) // 32 fixture files → 4 batches
       jsonLine("stream_neardup_fold", rows, measure(Seq(("neardup", () =>
         foldPass("sbndfold", stream, corpusBands, Seq("band", "bk"),
           SGQ.Clock.Never, SGQ.Cadence.Never,
@@ -535,10 +504,8 @@ object StreamBench {
       // preserves within-shard semantic structure bit-exactly, so the
       // probe load is the real admission shape, not a degenerate
       // all-admit.
-      val vecsPath = s"target/streambench_vecs$shards"
-      Tables.shardedEmbeddings(spark, base, shards)
-        .repartition(32).write.mode("overwrite").parquet(vecsPath)
-      val rows = spark.read.parquet(vecsPath).count()
+      val (vecsPath, rows) =
+        stage(Tables.shardedEmbeddings(spark, base, shards), s"target/streambench_vecs$shards")
       val corpusFrame = LlmQueries.vectorIndexRows(LlmQueries.vectorSketch(
           Tables.embeddings(spark, base)
             .filter(Sampling.uniform01($"vec_id") >= 0.5)))
@@ -547,9 +514,7 @@ object StreamBench {
         StructField("vec_id", LongType),
         StructField("embedding", ArrayType(FloatType)),
         StructField("label", IntegerType)))
-      def stream = spark.readStream.schema(vecsSchema)
-        .option("maxFilesPerTrigger", "8") // 32 fixture files → 4 batches
-        .parquet(vecsPath)
+      def stream = read(vecsSchema, vecsPath, Some(8)) // 32 fixture files → 4 batches
       jsonLine("stream_vector_fold", rows, measure(Seq(("vecfold", () =>
         foldPass("sbvecfold", stream, corpusFrame, Seq("bucket"),
           SGQ.Clock.Never, SGQ.Cadence.Never,
@@ -562,19 +527,6 @@ object StreamBench {
       // a 1×-decade warm-up that amortizes codegen/classloading for the
       // whole sweep. Superlinear state behavior shows as sec-per-Mrow
       // GROWING across decades.
-      def dedup(path: String): DataFrame = events(path)
-        .select($"user_id", $"event_type", $"ts")
-        .withWatermark("ts", "35 days")
-        .dropDuplicatesWithinWatermark("user_id", "event_type")
-      def join(path: String): DataFrame = {
-        def side(kind: String, p: String): DataFrame = events(path)
-          .filter($"event_type" === kind)
-          .select($"event_id".as(s"${p}_id"), $"user_id".as(s"${p}_k"),
-            $"ts".as(s"${p}_ts"))
-        StreamJobs.streamStreamCorrelate(
-          side("click", "l"), side("purchase", "r"),
-          window = "10 minutes", delay = "10 minutes")
-      }
       def run(n: Int, subject: String => DataFrame, provider: String): (Long, Double) =
         Confs.withConf(spark,
           "spark.sql.streaming.stateStore.providerClass" -> provider) {

@@ -1,25 +1,18 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val nanos = "spark.sql.legacy.parquet.nanosAsLong" -> "true"
     // SPARK_GRAFT_EXTENSIONS=1 runs the whole gate with GraftExtensions
     // active (optimizer rule + strategy + functions) — a soundness sweep
     // proving the injected rewrites preserve every verified result.
-    val spark = (if (sys.env.contains("SPARK_GRAFT_EXTENSIONS"))
-        builder.withExtensions(new GraftExtensions()(_))
-      else builder).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark =
+      if (sys.env.contains("SPARK_GRAFT_EXTENSIONS")) Sessions.withExtensions(cpus, nanos)
+      else Sessions.local(cpus, nanos)
     new java.io.File(outDir).mkdirs()
     // deterministic name order; SPARK_GRAFT_REVERSE=1 runs the sweep
     // backwards — gates must not be order-coupled (all confs are scoped,

@@ -1,36 +1,31 @@
 package graft.functions
 
-import java.io.ByteArrayOutputStream
 import java.nio.ByteBuffer
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.avro.{LogicalTypes, Schema}
-import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
-import org.apache.avro.io.{DecoderFactory, EncoderFactory}
+import org.apache.avro.generic.{GenericData, GenericRecord}
 import org.apache.avro.util.Utf8
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.api.java.{UDF1 => JUdf1}
-import org.apache.spark.sql.expressions.UserDefinedFunction
-import org.apache.spark.sql.functions.udf
 import org.apache.spark.sql.types._
 
-/** Avro binary codec for the engine (SURVEY F3/F4/S5). The build image has
-  * Avro core (`avro-1.12.1.jar`) but not the spark-avro module, so
-  * `from_avro`/`to_avro` are provided as UDFs over
-  * `GenericDatumWriter`/`GenericDatumReader` — the plan SURVEY §7 step 2
-  * chose (ref `11_incremental_sales_avro.py:76-77`,
-  * `12_streaming_enrichment_avro.py:70,110-111`), and
-  * `structTypeFor` reproduces the registry-schema → StructType derivation
-  * of `11:98-109` directly from the schema JSON instead of the
-  * reference's empty-DataFrame round-trip.
-  *
-  * Scale note: the UDF pair here is the legacy/reference surface (kept
-  * for the external-`Row` API the OCF sink shares); the hot path is
-  * [[AvroExpressions]] — native Catalyst `AvroEncode`/`AvroDecode`
-  * expressions that convert Avro values directly to and from Catalyst
-  * internal representations and stay inside whole-stage codegen. All
-  * query/stream call sites use the expressions.
+/** Avro schema and record conversions for the engine (SURVEY F3/F4/S5).
+  * The build image has Avro core (`avro-1.12.1.jar`) but not the
+  * spark-avro module, so `from_avro`/`to_avro` are the engine's own
+  * Catalyst expressions ([[AvroExpressions]]: `AvroEncode`/`AvroDecode`,
+  * converting Avro values directly to and from Catalyst internal
+  * representations inside whole-stage codegen — every query/stream call
+  * site uses them). This object holds what they and the OCF container
+  * sink ([[graft.sinks.AvroFiles]]) share: `structTypeFor` reproduces
+  * the registry-schema → StructType derivation of the reference
+  * (`11_incremental_sales_avro.py:98-109`) directly from the schema JSON
+  * instead of its empty-DataFrame round-trip, and
+  * `rowToRecord`/`recordToRow` convert external `Row`s. The legacy
+  * per-row UDF pair over `GenericDatumWriter`/`GenericDatumReader` (the
+  * plan SURVEY §7 step 2 chose; ref `11:76-77`,
+  * `12_streaming_enrichment_avro.py:70,110-111`) lives in the tests as
+  * the expressions' differential reference.
   *
   * Type coverage (all the reference's schemas use): null unions,
   * boolean/int/long/float/double/string/bytes/enum, nested records,
@@ -76,8 +71,8 @@ object AvroCodec {
   }
 
   // ------------------------------------------------------------------
-  // Row ⇄ GenericRecord conversion (shared by the binary UDFs below and
-  // the OCF container sink, graft.sinks.AvroFiles)
+  // Row ⇄ GenericRecord conversion (shared by the OCF container sink,
+  // graft.sinks.AvroFiles, and the tests' UDF codec)
 
   private def nonNullBranch(s: Schema): Schema =
     if (s.getType == Schema.Type.UNION)
@@ -141,79 +136,5 @@ object AvroCodec {
         v match { case u: Utf8 => u.toString; case other => other.toString }
       case _ => v
     }
-  }
-
-  /** Serializable per-executor codec; the Avro Schema is re-parsed lazily
-    * on each executor from the captured JSON (Schema equality across JVMs
-    * without relying on Java serialization of parser state).
-    */
-  private class Codec(json: String) extends Serializable {
-    @transient private lazy val schema: Schema = new Schema.Parser().parse(json)
-    @transient private lazy val writer = new GenericDatumWriter[GenericRecord](schema)
-    @transient private lazy val reader = new GenericDatumReader[GenericRecord](schema)
-    // Encoder/decoder + output buffer reused per thread: a fresh
-    // binaryEncoder allocates its internal buffer per call, which at
-    // row granularity is one short-lived allocation per record — pure
-    // GC pressure in the scan hot path.
-    @transient private lazy val outTl =
-      ThreadLocal.withInitial[ByteArrayOutputStream](() => new ByteArrayOutputStream())
-    @transient private lazy val encTl =
-      new ThreadLocal[org.apache.avro.io.BinaryEncoder]()
-    @transient private lazy val decTl =
-      new ThreadLocal[org.apache.avro.io.BinaryDecoder]()
-
-    def encode(row: Row): Array[Byte] = {
-      val out = outTl.get()
-      out.reset()
-      val enc = EncoderFactory.get().binaryEncoder(out, encTl.get())
-      encTl.set(enc)
-      writer.write(rowToRecord(row, schema), enc)
-      enc.flush()
-      out.toByteArray
-    }
-
-    def decode(bytes: Array[Byte]): Row = {
-      val dec = DecoderFactory.get().binaryDecoder(bytes, decTl.get())
-      decTl.set(dec)
-      recordToRow(reader.read(null, dec), schema)
-    }
-  }
-
-  /** `to_avro`-equivalent: a struct column → Avro binary (SURVEY F4).
-    * Kept only as [[graft.AvroBench]]'s comparison baseline and a spec
-    * subject — every engine query path uses the ~3.6× faster Catalyst
-    * expression (pinned by AvroUdfRetirementSpec + the q20 plan
-    * assertion).
-    */
-  @deprecated("use the codegen Catalyst expression AvroExpressions.toAvro; " +
-    "this per-row UDF pair survives only as AvroBench's baseline", "round 7")
-  def toAvroUdf(avroJson: String): UserDefinedFunction = {
-    val codec = new Codec(avroJson)
-    udf(new JUdf1[Row, Array[Byte]] {
-      override def call(r: Row): Array[Byte] = if (r == null) null else codec.encode(r)
-    }, BinaryType)
-  }
-
-  /** `from_avro`-equivalent: Avro binary → struct column (SURVEY F3).
-    * `permissive = true` mirrors spark-avro's PERMISSIVE parse mode:
-    * malformed records decode to null instead of failing the task —
-    * the right default for 100 TB ingestion where one corrupt topic
-    * record must not kill the job. Default is FAILFAST (strict), like
-    * the reference's pipelines.
-    *
-    * Deprecated like [[toAvroUdf]]: engine paths use
-    * [[AvroExpressions.fromAvro]] (codegen, no Row round trip).
-    */
-  @deprecated("use the codegen Catalyst expression AvroExpressions.fromAvro; " +
-    "this per-row UDF pair survives only as AvroBench's baseline", "round 7")
-  def fromAvroUdf(avroJson: String, permissive: Boolean = false): UserDefinedFunction = {
-    val codec = new Codec(avroJson)
-    udf(new JUdf1[Array[Byte], Row] {
-      override def call(b: Array[Byte]): Row =
-        if (b == null) null
-        else if (permissive)
-          try codec.decode(b) catch { case _: Exception => null }
-        else codec.decode(b)
-    }, structTypeFor(avroJson))
   }
 }

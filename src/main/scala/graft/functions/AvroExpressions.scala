@@ -21,8 +21,9 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Catalyst-native Avro binary codec (SURVEY F3/F4) — the promotion of
-  * [[AvroCodec.toAvroUdf]]/[[AvroCodec.fromAvroUdf]] from per-row `ScalaUDF`s
-  * to first-class expressions, mirroring how the (not-shipped-here)
+  * the legacy `toAvroUdf`/`fromAvroUdf` pair (now only the tests'
+  * differential reference) from per-row `ScalaUDF`s to first-class
+  * expressions, mirroring how the (not-shipped-here)
   * spark-avro module structures `AvroDataToCatalyst`/`CatalystDataToAvro`.
   *
   * Why this matters at 100 TB: the reference decodes EVERY streamed record

@@ -527,7 +527,7 @@ class StandingIndex(
   private def dropSegment(table: String): Unit = {
     // in the common publish path the table does NOT exist (fresh segment
     // name) — the in-memory existence probe is ~5x cheaper than parsing
-    // and executing a no-op DROP statement (SegmentProbe), and publishes
+    // and executing a no-op DROP statement (OPTIMIZATION_r18.md), and publishes
     // run once per fold
     if (spark.catalog.tableExists(table)) spark.sql(s"DROP TABLE IF EXISTS `$table`")
     val loc = new org.apache.hadoop.fs.Path(

@@ -1943,12 +1943,12 @@ object StreamGateQueries {
     StructField("doc_id", LongType), StructField("text", StringType))
 
   /** A doc's bag fingerprint — q73's spelling. */
-  private def fingerprint(text: Column): Column =
+  private[graft] def fingerprint(text: Column): Column =
     graft.operators.TextOps.bagFingerprint(
       graft.operators.TextOps.normText(text)).as("fingerprint")
 
   /** q73's corpus side (`u ≥ 0.3`) as fingerprints. */
-  private def fingerprintCorpus(s: SparkSession, dir: String): DataFrame =
+  private[graft] def fingerprintCorpus(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
       .filter(graft.operators.Sampling.uniform01(col("doc_id")) >= 0.3)
       .select(fingerprint(col("text")))

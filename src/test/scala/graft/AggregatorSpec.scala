@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.operators.GroupConcat
 
@@ -11,22 +9,10 @@ import graft.operators.GroupConcat
   * fan-in (§2h — the reference's only union-like construct,
   * `s3_sink_connector_00.json` `"topics.regex": "pagila.public.(.*)"`).
   */
-class AggregatorSpec extends AnyFunSuite with BeforeAndAfterAll {
+class AggregatorSpec extends AnyFunSuite with LocalSpark {
 
   private val sf = "/root/testdata/sf0.001"
-  private var spark: SparkSession = _
 
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .appName("aggregator-spec")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("A6: typed GroupConcat Aggregator matches the built-in collect_list spelling") {
     val ss = spark; import ss.implicits._

@@ -1,35 +1,20 @@
 package graft
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
-import graft.functions.AvroCodec
+import graft.functions.{AvroCodec, AvroUdfCodec}
 
 /** Avro codec laws: schema derivation (S5), lossless round trips (F3/F4)
   * including nulls, nested records, arrays, bytes, and timestamp-millis.
-  * (nowarn: the deprecated UDF pair is deliberately exercised here as
-  * the parity baseline for the Catalyst expressions.)
+  * The per-row UDF pair ([[graft.functions.AvroUdfCodec]]) is the parity
+  * baseline for the Catalyst expressions.
   */
-@scala.annotation.nowarn("cat=deprecation")
-class AvroCodecSpec extends AnyFunSuite with BeforeAndAfterAll {
+class AvroCodecSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("avro-codec-spec")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def cpus: Int = 2
 
   private val schemaJson =
     """{"type":"record","name":"T","fields":[
@@ -65,8 +50,8 @@ class AvroCodecSpec extends AnyFunSuite with BeforeAndAfterAll {
         Array.empty[Byte], Row(8, null)))
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(rows), st)
-    val enc = AvroCodec.toAvroUdf(schemaJson)
-    val dec = AvroCodec.fromAvroUdf(schemaJson)
+    val enc = AvroUdfCodec.toAvroUdf(schemaJson)
+    val dec = AvroUdfCodec.fromAvroUdf(schemaJson)
     val back = df
       .select(dec(enc(struct(df.columns.map(col): _*))).as("d"))
       .select("d.*")
@@ -112,7 +97,7 @@ class AvroCodecSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ss = spark; import ss.implicits._
     val simple = """{"type":"record","name":"S","fields":[
       |{"name":"id","type":"long"},{"name":"tag","type":"string"}]}""".stripMargin
-    val enc = AvroCodec.toAvroUdf(simple)
+    val enc = AvroUdfCodec.toAvroUdf(simple)
     val good = spark.createDataFrame(
         spark.sparkContext.parallelize(Seq(Row(5L, "ok"))),
         AvroCodec.structTypeFor(simple))
@@ -120,11 +105,11 @@ class AvroCodecSpec extends AnyFunSuite with BeforeAndAfterAll {
       .head.getAs[Array[Byte]](0)
     val bad = Array[Byte](-1, -1, -1, -1, -1, -1, -1, -1, -1, -1)
     val df = Seq(good, bad).toDF("value")
-    val lax = AvroCodec.fromAvroUdf(simple, permissive = true)
+    val lax = AvroUdfCodec.fromAvroUdf(simple, permissive = true)
     val out = df.select(lax(col("value")).as("d")).select(col("d.id")).collect()
     assert(out.count(_.isNullAt(0)) === 1)
     assert(out.exists(r => !r.isNullAt(0) && r.getLong(0) === 5L))
-    val strict = AvroCodec.fromAvroUdf(simple)
+    val strict = AvroUdfCodec.fromAvroUdf(simple)
     intercept[Exception] {
       df.select(strict(col("value")).as("d")).collect()
     }
@@ -136,23 +121,11 @@ class AvroCodecSpec extends AnyFunSuite with BeforeAndAfterAll {
     // conf, which this test JVM's pre-existing context lacks, so the
     // builder API is used here; the config-string path is what a
     // spark-submit user sets (verified equivalent in a fresh JVM).
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val ext = SparkSession.builder()
-        .master("local[2]")
-        .config("spark.sql.shuffle.partitions", "2")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new GraftExtensions())
-        .appName("ext-spec")
-        .getOrCreate()
+    withExtensionsSession("ext-spec") { ext =>
       val r = ext.sql(
         "SELECT long_vec_dot(array(1L, 2L, 3L), array(4L, 5L, 6L)) AS d")
         .head.getLong(0)
       assert(r === 32L)
-    } finally {
-      SparkSession.setDefaultSession(spark)
-      SparkSession.setActiveSession(spark)
     }
   }
 
@@ -170,7 +143,7 @@ class AvroCodecSpec extends AnyFunSuite with BeforeAndAfterAll {
     // byte-for-byte parity with the legacy UDF encoder on every row
     val exprBytes = df.select(AvroExpressions.toAvro(all, schemaJson))
       .collect().map(_.getAs[Array[Byte]](0).toSeq).sortBy(_.hashCode)
-    val udfBytes = df.select(AvroCodec.toAvroUdf(schemaJson)(all))
+    val udfBytes = df.select(AvroUdfCodec.toAvroUdf(schemaJson)(all))
       .collect().map(_.getAs[Array[Byte]](0).toSeq).sortBy(_.hashCode)
     assert(exprBytes.toSeq === udfBytes.toSeq)
     // full expression round trip is lossless (incl. nulls, nested, bytes)
@@ -292,16 +265,7 @@ class AvroCodecSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("graft_to_avro / graft_from_avro are SQL-callable via GraftExtensions") {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val ext = SparkSession.builder()
-        .master("local[2]")
-        .config("spark.sql.shuffle.partitions", "2")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new GraftExtensions())
-        .appName("avro-sql-spec")
-        .getOrCreate()
+    withExtensionsSession("avro-sql-spec") { ext =>
       val schema = """{"type":"record","name":"S","fields":[
         |{"name":"id","type":"long"},{"name":"tag","type":"string"}]}""".stripMargin
       val r = ext.sql(
@@ -335,9 +299,6 @@ class AvroCodecSpec extends AnyFunSuite with BeforeAndAfterAll {
       val nulls = ext.sql(
         s"SELECT graft_from_avro(X'FF', '$v2', '$v1', true) AS d").head
       assert(nulls.isNullAt(0))
-    } finally {
-      SparkSession.setDefaultSession(spark)
-      SparkSession.setActiveSession(spark)
     }
   }
 
@@ -346,7 +307,7 @@ class AvroCodecSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ts = java.sql.Timestamp.valueOf("2024-06-01 00:00:00")
     val row = Row(9L, "z", 0.0, false, ts, Seq("t"), Array[Byte](9), Row(1, "b"))
     val df = spark.createDataFrame(spark.sparkContext.parallelize(Seq(row)), st)
-    val enc = AvroCodec.toAvroUdf(schemaJson)
+    val enc = AvroUdfCodec.toAvroUdf(schemaJson)
     val a = df.select(enc(struct(df.columns.map(col): _*))).head.getAs[Array[Byte]](0)
     val b = df.select(enc(struct(df.columns.map(col): _*))).head.getAs[Array[Byte]](0)
     assert(a.toSeq === b.toSeq)

@@ -2,11 +2,9 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.queries.StreamGateQueries.{foldGate, FoldModality, Fingerprints, NearDups, Schedule, Vectors}
 
@@ -17,25 +15,13 @@ import graft.queries.StreamGateQueries.{foldGate, FoldModality, Fingerprints, Ne
   * The reference re-shuffles per job; a lake this engine owns would
   * bucket lineitem/orders once and amortize.
   */
-class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
+class BucketingSpec extends AnyFunSuite with LocalSpark {
 
   private val sf = "/root/testdata/sf0.001"
-  private var spark: SparkSession = _
 
-  override def beforeAll(): Unit = {
-    val wh = Files.createTempDirectory("warehouse").toString
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir", wh)
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1") // force the join to show its shuffle needs
-      .config("spark.ui.enabled", "false")
-      .appName("bucketing-spec")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def confs = Seq(
+    "spark.sql.warehouse.dir" -> Files.createTempDirectory("warehouse").toString,
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1") // force the join to show its shuffle needs
 
   test("bucketed-by-key tables join with zero exchanges; unbucketed join shuffles both sides") {
     val ss = spark; import ss.implicits._

@@ -2,13 +2,12 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.operators.{CdcMerge, CdcTable, InstantUnavailableException}
 
@@ -17,22 +16,7 @@ import graft.operators.{CdcMerge, CdcTable, InstantUnavailableException}
   * and the ScalaCheck merge laws (idempotence, last-write-wins,
   * incremental ≡ full merge) SURVEY §5 promised.
   */
-class CdcLakeSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("cdc-lake-spec")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class CdcLakeSpec extends AnyFunSuite with LocalSpark {
 
   // change image: (artist_id, name, nationality, __deleted, __source_ts_ms)
   private def img(rows: (Long, String, String, String, Long)*): DataFrame = {

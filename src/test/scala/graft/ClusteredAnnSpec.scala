@@ -2,9 +2,7 @@ package graft
 
 import java.nio.file.Paths
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.queries.LlmQueries
 
@@ -25,28 +23,19 @@ import graft.queries.LlmQueries
   * same-cluster neighborhood; the 20 query ids (vec_id % 50 == 0) get
   * pseudo-random clusters. label = cluster id for debuggability.
   */
-class ClusteredAnnSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ClusteredAnnSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
   private val fixDir = Paths.get("target", "annfix").toAbsolutePath.toString
 
+  // the maintained-index law below publishes StandingIndex catalog
+  // tables — keep them out of the repo's default warehouse
+  override protected def confs = Seq("spark.sql.warehouse.dir" ->
+    java.nio.file.Files.createTempDirectory("annwarehouse").toString)
+
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // the maintained-index law below publishes StandingIndex catalog
-      // tables — keep them out of the repo's default warehouse
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("annwarehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .appName("clustered-ann-spec")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     writeFixture()
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private val N = 1000
   private val D = 64

@@ -3,9 +3,7 @@ package graft
 import java.nio.file.Files
 import java.util.concurrent.TimeUnit
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Cross-JVM maintenance concurrency — the deployment shape the
   * reference actually runs (an async Hudi compactor PROCESS beside the
@@ -34,24 +32,11 @@ import org.scalatest.BeforeAndAfterAll
   *      process and cross-JVM; renewal, release handover, and
   *      crash-expiry takeover are each pinned.
   */
-class ConcurrentMaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ConcurrentMaintenanceSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
-  private var wh: String = _
+  private val wh = Files.createTempDirectory("warehouse").toString
 
-  override def beforeAll(): Unit = {
-    wh = Files.createTempDirectory("warehouse").toString
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir", wh)
-      .config("spark.ui.enabled", "false")
-      .appName("concurrent-maintenance-spec")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def confs = Seq("spark.sql.warehouse.dir" -> wh)
 
   test("OCC lost-update law: a commit from a stale pointer read is refused loudly and the racer's committed segment survives") {
     val ss = spark; import ss.implicits._

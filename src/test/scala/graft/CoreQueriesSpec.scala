@@ -1,25 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-  val sf: String = "/root/testdata/sf0.001"
-}
+class CoreQueriesSpec extends AnyFunSuite with LocalSpark {
 
-class CoreQueriesSpec extends AnyFunSuite {
-  import SparkTestSession._
+  private val sf = "/root/testdata/sf0.001"
+
+  override protected def appName = "graft-test"
 
   test("entry returns rows on sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)

@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Shuffle-budget fence: each pinned batch gate's physical plan carries
   * a MAXIMUM number of shuffle exchanges. Every `Exchange` is a full
@@ -17,29 +15,24 @@ import org.scalatest.BeforeAndAfterAll
   * Budgets are pinned from the CURRENT audited plans (AQE off, broadcast
   * on auto — the static planner's shape; AQE can only merge/skip
   * exchanges at runtime, never add them), for EVERY batch gate — the
-  * whole engine surface is fenced, not just the hot list. Re-measure
-  * with `runMain graft.ExchangeAudit` after a planner-visible change and
-  * re-pin deliberately. Streaming-harness gates are excluded (their
+  * whole engine surface is fenced, not just the hot list. The spec is
+  * also the audit: the budget test reports every pinned gate's measured
+  * count (ScalaTest `info`, shown by `testOnly graft.ExchangeBudgetSpec`)
+  * and the completeness test names each unfenced gate's count, so after
+  * a planner-visible change the run itself gives the numbers to re-pin
+  * (downward) deliberately. Streaming-harness gates are excluded (their
   * builders run a full streaming query; their specs + oracles pin them).
   */
-class ExchangeBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ExchangeBudgetSpec extends AnyFunSuite with LocalSpark {
 
   private val sf = "/root/testdata/sf0.001"
-  private var spark: SparkSession = _
 
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "false") // fence the static plan
-      .config("spark.ui.enabled", "false")
-      .appName("exchange-budget-spec")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
+  override protected def confs = Seq("spark.sql.adaptive.enabled" -> "false") // fence the static plan
 
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  private def exchanges(name: String): Int =
+    SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.collect {
+      case e: ShuffleExchangeLike => e
+    }.size
 
   // gate -> max shuffle exchanges in the static physical plan, pinned to
   // the EXACT measured counts of the current audited plans
@@ -102,7 +95,7 @@ class ExchangeBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
     // (BroadcastHashJoin LeftAnti, no join shuffle), leaving the
     // keep-first groupBy + final orderBy exchanges; at a scale where
     // the corpus stops broadcasting, the anti-join adds its per-side
-    // fingerprint shuffles — re-pin deliberately via ExchangeAudit
+    // fingerprint shuffles — re-pin deliberately from this spec's report
     "q73_incremental_dedup" -> 2,
     // ONE band-build agg (r17 single-agg minhash, ReuseExchange-shared
     // across its uses) + candidate distinct + rejected distinct + final
@@ -182,18 +175,16 @@ class ExchangeBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
     val unfenced = SparkEntry.queries.keySet -- SparkEntry.streamingGates --
       budgets.map(_._1).toSet
     assert(unfenced.isEmpty,
-      s"batch gates missing a shuffle budget (run graft.ExchangeAudit " +
-        s"and pin them): ${unfenced.toSeq.sorted.mkString(", ")}")
+      "batch gates missing a shuffle budget (pin them at their measured " +
+        s"counts): ${unfenced.toSeq.sorted.map(n => s"$n -> ${exchanges(n)}").mkString(", ")}")
     val stale = budgets.map(_._1).toSet -- SparkEntry.queries.keySet
     assert(stale.isEmpty, s"budgets for unknown gates: $stale")
   }
 
   test("no pinned gate's static plan exceeds its shuffle budget") {
     val over = budgets.flatMap { case (name, budget) =>
-      val df = SparkEntry.queries(name)(spark, sf)
-      val n = df.queryExecution.executedPlan.collect {
-        case e: ShuffleExchangeLike => e
-      }.size
+      val n = exchanges(name)
+      info(s"$name: $n exchanges (budget $budget)")
       if (n > budget) Some(s"$name: $n exchanges > budget $budget") else None
     }
     assert(over.isEmpty, over.mkString("; "))

@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.sources.IncrementalSource
 
@@ -12,23 +11,10 @@ import graft.sources.IncrementalSource
   * timestamp (the case plain timestamp mode gets wrong and
   * timestamp+incrementing exists for).
   */
-class IncrementalSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
+class IncrementalSourceSpec extends AnyFunSuite with LocalSpark {
 
   private val sf = "/root/testdata/sf0.001"
-  private var spark: SparkSession = _
 
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("incremental-source-spec")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("polls partition a growing table: no re-reads, no gaps") {
     val ss = spark; import ss.implicits._

@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.queries.LlmQueries
 import graft.operators.{TextOps, VectorOps}
@@ -11,23 +9,10 @@ import graft.operators.{TextOps, VectorOps}
 /** Semantic invariants of the LLM-data-pipeline operators (fixture-level
   * correctness lives in the DuckDB oracle gate; these pin the *laws*).
   */
-class LlmQueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
+class LlmQueriesSpec extends AnyFunSuite with LocalSpark {
 
   private val sf = "/root/testdata/sf0.001"
-  private var spark: SparkSession = _
 
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("llm-queries-spec")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("exact dedup: fingerprints are unique in output and cover all docs") {
     val out = LlmQueries.q14DedupExact(spark, sf).cache()

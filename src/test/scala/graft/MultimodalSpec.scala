@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.operators.MultimodalOps
 
@@ -11,22 +9,10 @@ import graft.operators.MultimodalOps
   * the batched decode boundary preserves row count, order, and
   * determinism (the shape a real decoder swaps into).
   */
-class MultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
+class MultimodalSpec extends AnyFunSuite with LocalSpark {
 
   private val sf = "/root/testdata/sf0.001"
-  private var spark: SparkSession = _
 
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .appName("multimodal-spec")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def payloads = {
     val ss = spark; import ss.implicits._

@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.ScalaUDF
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Global "functions, not UDFs" sweep: no gate query may execute a
   * `ScalaUDF` anywhere in its plan. A ScalaUDF is an opaque codegen
@@ -20,25 +18,13 @@ import org.scalatest.BeforeAndAfterAll
   * their builders run a full streaming query on construction, and their
   * plans are pinned by their own specs + oracles.
   */
-class NoUdfSweepSpec extends AnyFunSuite with BeforeAndAfterAll {
+class NoUdfSweepSpec extends AnyFunSuite with LocalSpark {
 
   private val sf = "/root/testdata/sf0.001"
-  private var spark: SparkSession = _
 
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("noudf-wh").toString)
-      .config("spark.ui.enabled", "false")
-      .appName("no-udf-sweep")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def confs = Seq("spark.sql.warehouse.dir" ->
+    java.nio.file.Files.createTempDirectory("noudf-wh").toString)
+  override protected def appName = "no-udf-sweep"
 
   // derived from the streaming-gate registry: a new streaming gate is
   // skipped automatically, never via a hand-synced list

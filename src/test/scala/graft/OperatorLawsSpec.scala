@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.operators.{AsOf, ConnectedComponents, PrefixSum, TopK}
 
@@ -13,22 +11,7 @@ import graft.operators.{AsOf, ConnectedComponents, PrefixSum, TopK}
   * operators must agree with the obviously-correct implementation on
   * every draw, not just on the curated fixtures.
   */
-class OperatorLawsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("operator-laws-spec")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class OperatorLawsSpec extends AnyFunSuite with LocalSpark {
 
   test("TopK.perKey equals the sort-take reference model on random data") {
     val ss = spark; import ss.implicits._

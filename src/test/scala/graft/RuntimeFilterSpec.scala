@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Runtime Bloom-filter join pruning (`InjectRuntimeFilter`) — the third
   * runtime self-healing mechanism this engine leans on at 100 TB,
@@ -16,23 +14,11 @@ import org.scalatest.BeforeAndAfterAll
   * scan) target exactly the cluster scale this engine designs for; the
   * spec shrinks them to fixture scale to pin the mechanism.
   */
-class RuntimeFilterSpec extends AnyFunSuite with BeforeAndAfterAll {
+class RuntimeFilterSpec extends AnyFunSuite with LocalSpark {
 
   private val sf = "/root/testdata/sf0.001"
-  private var spark: SparkSession = _
 
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1") // SMJ, so the filter matters
-      .config("spark.ui.enabled", "false")
-      .appName("runtime-filter-spec")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def confs = Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1") // SMJ, so the filter matters
 
   private def withConf(pairs: (String, String)*)(body: => Unit): Unit = {
     val prev = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }

@@ -2,10 +2,8 @@ package graft
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.operators.Sampling
 
@@ -17,22 +15,7 @@ import graft.operators.Sampling
   * repartitioning and re-evaluation (the reshard-stability property the
   * corpus pipeline's split/sample decisions rely on).
   */
-class SamplingSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("sampling-spec")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class SamplingSpec extends AnyFunSuite with LocalSpark {
 
   /** Reference model: first 15 hex chars of md5(utf8 bytes) as a long. */
   private def refHash60(s: String): Long = {

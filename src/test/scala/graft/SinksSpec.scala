@@ -2,10 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.sinks.Sinks
 import graft.sources.SalesCsv
@@ -14,23 +12,10 @@ import graft.sources.SalesCsv
   * timestamp spellings, separator round trips, JSON sink, and the
   * partitioned gzip lake write with actual partition pruning.
   */
-class SinksSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SinksSpec extends AnyFunSuite with LocalSpark {
 
   private val sf = "/root/testdata/sf0.001"
-  private var spark: SparkSession = _
 
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("sinks-spec")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def tempDir(prefix: String): String =
     Files.createTempDirectory(prefix).toString

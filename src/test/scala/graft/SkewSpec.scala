@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.operators.Skew
 
@@ -11,21 +9,7 @@ import graft.operators.Skew
   * left-outer, including unmatched rows), and actual fan-out of the hot
   * key across salt buckets.
   */
-class SkewSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .appName("skew-spec")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class SkewSpec extends AnyFunSuite with LocalSpark {
 
   test("salted join == plain join on a 90%-hot-key fact table") {
     val ss = spark; import ss.implicits._

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.operators.Smt
 
@@ -10,21 +8,9 @@ import graft.operators.Smt
   * (q08 covers valueToKey/insertFields/renameFields end-to-end; this
   * closes the untested excludeFields and the compose behavior).
   */
-class SmtSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SmtSpec extends AnyFunSuite with LocalSpark {
 
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .appName("smt-spec")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def cpus: Int = 2
 
   test("excludeFields drops exactly the listed columns and keeps values intact") {
     val ss = spark; import ss.implicits._

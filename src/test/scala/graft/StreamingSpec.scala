@@ -2,13 +2,12 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.streaming.{StreamJobs, TopicRecord, TopicStream}
 
@@ -20,22 +19,14 @@ import graft.streaming.{StreamJobs, TopicRecord, TopicStream}
   * IS the streaming oracle — the batch twins are covered by the
   * CORRECTNESS gate (q05/q06 shapes).
   */
-class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamingSpec extends AnyFunSuite with LocalSpark {
 
   private val sf = "/root/testdata/sf0.001"
-  private var spark: SparkSession = _
   private var records: Seq[TopicRecord] = _
   private var recordsDf: DataFrame = _ // batch twin of the stream feed
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("streaming-spec")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
     val ss = spark; import ss.implicits._
     val ev = Tables.events(spark, sf)
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
@@ -46,8 +37,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     records = recordsDf.as[TopicRecord].collect().toSeq
     assert(records.nonEmpty)
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def assertSameRows(streamed: DataFrame, batch: DataFrame): Unit = {
     val a = streamed.collect().map(_.toString).sorted.toSeq

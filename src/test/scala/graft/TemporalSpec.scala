@@ -1,33 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.queries.TemporalQueries
 
 /** Semantic laws of the temporal operators (exact fixture values are the
   * DuckDB gate's job).
   */
-class TemporalSpec extends AnyFunSuite with BeforeAndAfterAll {
+class TemporalSpec extends AnyFunSuite with LocalSpark {
 
   private val sf = "/root/testdata/sf0.001"
-  private var spark: SparkSession = _
 
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .appName("temporal-spec")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def confs = Seq("spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
   test("as-of: signups match themselves, non-negative lag, nulls only before first signup") {
     val ss = spark; import ss.implicits._

@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.operators.TopK
 
@@ -13,24 +11,12 @@ import graft.operators.TopK
   * exists to produce (two bounded-heap phases around one exchange, no
   * WindowExec, no sort).
   */
-class TopKSpec extends AnyFunSuite with BeforeAndAfterAll {
+class TopKSpec extends AnyFunSuite with LocalSpark {
 
   private val sf = "/root/testdata/sf0.001"
-  private var spark: SparkSession = _
 
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .appName("topk-spec")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def confs = Seq("spark.sql.legacy.parquet.nanosAsLong" -> "true")
+  override protected def appName = "topk-spec"
 
   test("perKey(k) equals the window row_number <= k spelling exactly") {
     val ss = spark; import ss.implicits._
@@ -150,31 +136,6 @@ class TopKSpec extends AnyFunSuite with BeforeAndAfterAll {
       .filter($"rk" <= 2).drop("rk")
       .collect().map(_.getLong(0)).sorted
     assert(dense.toSeq === denseW.toSeq)
-  }
-
-  /** getOrCreate() returns the suite's session unless the active/default
-    * session is cleared first; restore it afterwards. `withExtensions`
-    * (not the `spark.sql.extensions` conf) because the conf is static and
-    * silently ignored when the JVM's SparkContext already exists — the
-    * conf path is what production uses, the programmatic path is what a
-    * multi-session test JVM can exercise.
-    */
-  private def withExtensionsSession[T](app: String)(f: SparkSession => T): T = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val ext = SparkSession.builder()
-      .master("local[2]")
-      .withExtensions(new GraftExtensions()(_))
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .appName(app)
-      .getOrCreate()
-    try f(ext)
-    finally {
-      ext.stop()
-      SparkSession.setDefaultSession(spark)
-      SparkSession.setActiveSession(spark)
-    }
   }
 
   test("optimizer rule rewrites row_number()<=k + drop(rank) into TopKPerKey") {
