@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.Files
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 
 /** The one place the engine's mains and specs build a SparkSession.
@@ -7,6 +10,13 @@ import org.apache.spark.sql.SparkSession
   * UTC session time, the UI off and WARN logging; `confs` adds or
   * overrides keys (a warehouse dir, AQE off for the exchange fence,
   * legacy nanos parquet reads).
+  *
+  * The default warehouse is a fresh directory per JVM, removed at exit:
+  * catalog tables and StandingIndex pointers never outlive the run that
+  * wrote them, so a gate's plan (q89 probes `seg0`, not a generation an
+  * earlier run left behind) does not depend on which runs came before
+  * in the same checkout. An explicit `spark.sql.warehouse.dir` in
+  * `confs` wins (AsyncCompactor joins the warehouse it is handed).
   *
   * `getOrCreate` semantics apply: while another session's SparkContext
   * is running, the new session shares that context, so only its
@@ -25,6 +35,14 @@ object Sessions {
   def withExtensions(cpus: Int, confs: (String, String)*): SparkSession =
     create(cpus, confs, extensions = true)
 
+  private val WarehouseKey = "spark.sql.warehouse.dir"
+
+  private lazy val defaultWarehouse: String = {
+    val dir = Files.createTempDirectory("graft-warehouse")
+    sys.addShutdownHook(FileUtils.deleteQuietly(dir.toFile))
+    dir.toString
+  }
+
   private def create(
       cpus: Int, confs: Seq[(String, String)], extensions: Boolean): SparkSession = {
     val builder = SparkSession.builder()
@@ -32,6 +50,7 @@ object Sessions {
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+    if (!confs.exists(_._1 == WarehouseKey)) builder.config(WarehouseKey, defaultWarehouse)
     confs.foreach { case (k, v) => builder.config(k, v) }
     if (extensions) builder.withExtensions(new GraftExtensions())
     val spark = builder.getOrCreate()

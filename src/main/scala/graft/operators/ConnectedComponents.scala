@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Distributed connected components by alternating large-star /
@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * cheap enough to retry; a many-hour CC run on a real cluster should
   * pass `reliable = true` (and `sparkContext.setCheckpointDir` on
   * durable storage first), which swaps in reliable `checkpoint()` at
-  * the same two call sites. On
+  * the one materialization site. On
   * non-convergence within `maxIters` the call THROWS — a silent
   * truncation here would hand wrong cluster labels downstream (the
   * round-4 verdict's scale-killer), and with the O(log² n) bound a cap
@@ -84,26 +84,28 @@ object ConnectedComponents {
       .distinct()
   }
 
-  /** 192-bit content fingerprint of a canonical (distinct) edge set:
-    * (count, xor of salt-1 hashes, xor of salt-2 hashes). XOR over
-    * independent 64-bit hashes is an order-insensitive exact-set
-    * fingerprint; two different edge sets collide with probability
-    * ≈ 2⁻¹²⁸ (and equal counts), far below any hardware error rate.
-    * One map-side action over just-checkpointed blocks — no shuffle
-    * beyond the single-row final aggregate, vs. the `count` +
-    * `exceptAll` pair this replaced (two actions, one a full join).
+  /** `e` checkpointed (durable `checkpoint()` when `reliable`, else
+    * `localCheckpoint`), with the 192-bit content fingerprint of the
+    * canonical (distinct) edge set: (count, xor of salt-1 hashes, xor of
+    * salt-2 hashes). XOR over independent 64-bit hashes is an
+    * order-insensitive exact-set fingerprint; two different edge sets
+    * collide with probability ≈ 2⁻¹²⁸ (and equal counts), far below any
+    * hardware error rate. The fingerprint is an [[Observation]] on the
+    * frame being checkpointed, so the checkpoint's own job computes it
+    * and a round costs one action, with no second scan of the edges.
     * `bit_xor`, not `sum`: ANSI mode (Spark 4 default) would throw on
     * hash-sum overflow; XOR cannot overflow.
     */
-  private def fingerprint(e: DataFrame): (Long, Long, Long) = {
-    val r = e.select(
-        xxhash64(lit(1), col("u"), col("v")).as("h1"),
-        xxhash64(lit(2), col("u"), col("v")).as("h2"))
-      .agg(count(lit(1)), expr("bit_xor(h1)"), expr("bit_xor(h2)"))
-      .head
-    (r.getLong(0),
-      if (r.isNullAt(1)) 0L else r.getLong(1),
-      if (r.isNullAt(2)) 0L else r.getLong(2))
+  private def materialize(
+      e: DataFrame, reliable: Boolean): (DataFrame, (Long, Long, Long)) = {
+    val obs = new Observation()
+    val observed = e.observe(obs, count(lit(1)).as("n"),
+      bit_xor(xxhash64(lit(1), col("u"), col("v"))).as("h1"),
+      bit_xor(xxhash64(lit(2), col("u"), col("v"))).as("h2"))
+    val cp = if (reliable) observed.checkpoint() else observed.localCheckpoint()
+    val m = obs.get
+    def xor(k: String): Long = Option(m(k)).fold(0L)(_.asInstanceOf[Long])
+    (cp, (m("n").asInstanceOf[Long], xor("h1"), xor("h2")))
   }
 
   /** Component labels for `nodes` (a single-column DataFrame of ids)
@@ -121,23 +123,19 @@ object ConnectedComponents {
     require(edges.columns.length == 2,
       s"edges must have exactly two endpoint columns, got ${edges.columns.mkString(",")}")
     val idCol = nodes.columns.head
-    def materialize(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
 
-    var e = materialize(canonical(edges))
-    var fp = fingerprint(e)
+    var (e, fp) = materialize(canonical(edges), reliable)
     // stars are exactly the JOINT fixpoint of the two operations, so
     // convergence = two consecutive unchanged rounds (one of each kind);
     // a composition-only check could in principle accept a 2-cycle.
     // Unchanged = fingerprint equality (see above) — each round costs
-    // one checkpoint materialization plus one cheap scan, and the
-    // previous round's fingerprint is reused, never recomputed.
+    // one checkpoint materialization, whose job also yields the
+    // fingerprint, and the previous round's fingerprint is reused.
     var stable = if (fp._1 == 0L) 2 else 0
     var useLarge = true
     var iters = 0
     while (stable < 2 && iters < maxIters) {
-      val next = materialize(if (useLarge) largeStar(e) else smallStar(e))
-      val nfp = fingerprint(next)
+      val (next, nfp) = materialize(if (useLarge) largeStar(e) else smallStar(e), reliable)
       stable = if (nfp == fp) stable + 1 else 0
       e = next
       fp = nfp

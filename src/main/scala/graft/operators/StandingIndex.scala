@@ -151,13 +151,16 @@ class FileClaimProvider(
   *     beside compaction, `demonstration_notes.md` "Run Hudi DeltaStreamer
   *     Continuously").
   *
-  * Probing a segmented index is sound because candidate generation
-  * DISTRIBUTES over segments: an equi-join of the probe frame against
-  * `seg_0 ∪ … ∪ seg_N` equals the union of the per-segment joins, and
-  * each per-segment join is zero-exchange on the index side (every
-  * segment is bucketed by the join key — plan-verified in BucketingSpec).
-  * The union is of CANDIDATES (probe-bounded, tiny), never of the index
-  * itself, so no fold ever re-shuffles standing data. Segment count is
+  * Probing a segmented index is sound because admission DISTRIBUTES
+  * over segments: NOT EXISTS over `seg_0 ∪ … ∪ seg_N` is the AND of NOT
+  * EXISTS over each segment, so the fingerprint and vector modalities
+  * probe as a chain of left-anti joins, one per segment (`admitAndFold`,
+  * `admitByVectorSegments`), and an equi-join of the probe frame against
+  * the union equals the union of the per-segment joins, so the band
+  * modality unions per-segment CANDIDATES (probe-bounded, tiny), never
+  * the index itself. Each per-segment join is zero-exchange on the index
+  * side (every segment is bucketed by the join key — plan-verified in
+  * BucketingSpec), so no fold ever re-shuffles standing data. Segment count is
   * bounded by [[compact]] (Hudi's compaction) — either harness-invoked or
   * policy-triggered ([[compactIfOver]]: merge the committed prefix when
   * the live count exceeds a cap).

@@ -1628,7 +1628,11 @@ object LlmQueries {
     * rows). `probe` must be `minhashBands(batchSh)` materialized —
     * checkpointed directly, or a filter of a checkpointed superset
     * banding (banding is per-doc, so the two coincide) — the one
-    * banding spelling, same as the index side.
+    * banding spelling, same as the index side. Returns the admitted
+    * (doc_id, n_shingles) rows UNORDERED: every caller checkpoints the
+    * result or re-sorts it, so an order-only range exchange here would
+    * cost a sampling job and a shuffle for nothing; callers that emit
+    * it sort it themselves (q89/q93's final sort, the fold gates').
     */
   def admitByBandFrame(
       batchSh: DataFrame, probe: DataFrame,
@@ -1658,7 +1662,6 @@ object LlmQueries {
     batchSh
       .join(rejected, Seq("doc_id"), "left_anti")
       .select($"doc_id", size($"sh").as("n_shingles"))
-      .orderBy($"doc_id")
   }
 
   /** ONE micro-batch of FOLD-based streaming admission — the
@@ -1713,8 +1716,8 @@ object LlmQueries {
     * index's strictly-earlier segments with the exact-Jaccard confirm
     * served from `docStoreSh`, and fold the ADMITTED docs' band keys as
     * segment `batchId + 1`. Returns the admitted (doc_id, n_shingles)
-    * frame, checkpointed — one computation feeds the caller's sink AND
-    * the fold.
+    * frame, checkpointed and unordered — one computation feeds the
+    * caller's sink AND the fold.
     */
   def neardupAdmitAndFold(
       batch: DataFrame, ix: graft.operators.StandingIndex,
@@ -1734,9 +1737,9 @@ object LlmQueries {
 
   /** The ONE sketch-frame → index-row spelling for the standing VECTOR
     * index: (vec_id, v, nsq, bucket) → (bucket, blocker, bv, bn), the
-    * blocker-side schema [[admitByVectorSegments]] probes. Shared by
-    * q90's batch gate, the streamed q100/q101 gates, and StreamBench's
-    * vecfold subject.
+    * blocker-side schema [[admitByVectorSegments]] probes (and its own
+    * in-batch arm). Shared by q80, q90's batch gate, the streamed
+    * q100/q101 gates, and StreamBench's vecfold subject.
     */
   def vectorIndexRows(sv: DataFrame): DataFrame = {
     import sv.sparkSession.implicits._
@@ -1747,23 +1750,21 @@ object LlmQueries {
     * vector modality's admit-and-fold, called through
     * StreamGateQueries.FoldStep by the gates and StreamBench's `vecfold`
     * subject alike, so bench and gate can never drift: sketch the
-    * arriving batch ONCE ([[vectorSketch]], checkpointed — the frame
-    * serves every per-segment probe branch, the in-batch self-join, AND
-    * the fold), admit against the standing bucket index's
-    * strictly-earlier segments ([[admitByVectorSegments]]), and fold the
-    * ADMITTED vectors' sketch rows as segment `batchId + 1`. Returns the
-    * admitted (vec_id, bucket) frame, checkpointed.
+    * arriving batch ONCE ([[vectorSketch]], checkpointed — the frame is
+    * both the left side of the anti-join chain and its in-batch arm),
+    * anti-join the standing bucket index's strictly-earlier segments
+    * ([[admitByVectorSegments]]), and fold the ADMITTED sketch rows
+    * themselves as segment `batchId + 1`. Returns the admitted
+    * (vec_id, v, nsq, bucket) frame, checkpointed and unordered — one
+    * computation feeds the caller's sink AND the fold.
     */
   def vectorAdmitAndFold(
       batch: DataFrame, ix: graft.operators.StandingIndex,
       batchId: Long, maxEventMs: Long = Long.MaxValue): DataFrame = {
-    import batch.sparkSession.implicits._
-    val batchSv = vectorSketch(batch).localCheckpoint()
     val admitted = admitByVectorSegments(
-        batchSv, ix.segmentsUpTo(batchId)).localCheckpoint()
-    ix.foldAt(
-      vectorIndexRows(batchSv.join(admitted.select($"vec_id"), "vec_id")),
-      batchId + 1, maxEventMs)
+        vectorSketch(batch).localCheckpoint(), ix.segmentsUpTo(batchId))
+      .localCheckpoint()
+    ix.foldAt(vectorIndexRows(admitted), batchId + 1, maxEventMs)
     admitted
   }
 
@@ -1782,45 +1783,48 @@ object LlmQueries {
 
   /** The STANDING-INDEX spelling of q80's embedding admission: probe a
     * materialized sign-LSH bucket index (`bucket`, `blocker`, `bv`,
-    * `bn` — [[vectorSketch]] over the corpus, persisted at ingest) with
-    * a new vector batch ([[vectorSketch]] output), exact-confirm bucket
-    * collisions with the integer-scaled cosine ≥ 0.4, and admit
-    * non-matching vectors first-wins within the batch (q75's pairwise
-    * rule). q80 is the single-table spelling of exactly this plan;
-    * ScaleProbe's ingest axis times THIS function against an index
-    * grown 100× under a fixed batch. Candidates are bounded by the
-    * batch's bucket collisions, never the corpus.
+    * `bn` — [[vectorIndexRows]] over the corpus sketch, persisted at
+    * ingest) with a new vector batch ([[vectorSketch]] output) and admit
+    * a vector unless a bucket collision in the index, or a smaller-id
+    * one in the batch (q75's pairwise first-wins rule), confirms with
+    * the integer-scaled cosine ≥ 0.4 — [[admitByVectorSegments]] on a
+    * one-segment index. q80 is the single-table spelling of exactly this
+    * plan; ScaleProbe's ingest axis times THIS function against an
+    * index grown 100× under a fixed batch. Every join is keyed by the
+    * batch's buckets, never the corpus.
     */
   def admitByVectorIndex(batch: DataFrame, index: DataFrame): DataFrame =
     admitByVectorSegments(batch, Seq(index))
 
-  /** [[admitByVectorIndex]] generalized to a SEGMENTED standing vector
-    * index ([[graft.operators.StandingIndex]]'s read path, q90's
-    * maintenance shape): the batch probes each bucket-keyed segment
-    * separately and the per-segment CANDIDATES union — the same
-    * distribution-over-segments argument as [[admitByBandSegments]],
-    * here on the sign-LSH bucket key. The in-batch earlier-wins branch
-    * is a batch self-join, independent of segmentation.
+  /** [[admitByVectorIndex]] over a SEGMENTED standing vector index
+    * ([[graft.operators.StandingIndex]]'s read path, q90's maintenance
+    * shape), as a chain of left-anti joins: the batch anti-joins each
+    * segment in turn, then the batch itself for the earlier-wins rule.
+    * Every arm's condition is `bucket` equality plus the exact
+    * integer-scaled cosine ≥ 0.4 (and `blocker < vec_id` on the batch
+    * arm), so a vector survives iff no segment row and no smaller-id
+    * batch row is a confirmed near-duplicate. Sound because NOT EXISTS
+    * over `seg_0 ∪ … ∪ seg_N ∪ batch` is the AND of NOT EXISTS over each
+    * part — the same distribution-over-segments argument as
+    * [[admitByBandSegments]], and the shape [[admitAndFold]] uses for
+    * fingerprints. Each arm is one join, zero-exchange on a bucketed
+    * segment's side.
+    *
+    * Returns the admitted batch rows (`vec_id`, `v`, `nsq`, `bucket`),
+    * UNORDERED: [[vectorIndexRows]] of the result is exactly what a fold
+    * appends, and callers that emit it sort it themselves.
     */
   def admitByVectorSegments(
       batch: DataFrame, segments: Seq[DataFrame]): DataFrame = {
     import batch.sparkSession.implicits._
-    val candIndex = segments.map { seg =>
-      batch.join(seg.select($"bucket", $"blocker", $"bv", $"bn"), "bucket")
-    }.reduce(_ unionByName _)
-    val candBatch = batch
-      .join(batch.select($"bucket", $"vec_id".as("blocker"),
-        $"v".as("bv"), $"nsq".as("bn")), "bucket")
-      .filter($"blocker" < $"vec_id")
-    val rejected = candIndex.unionByName(candBatch)
-      .withColumn("cosine",
-        VectorOps.cosineFromParts(VectorOps.dotL($"v", $"bv"), $"nsq", $"bn"))
-      .filter($"cosine" >= 0.4)
-      .select($"vec_id").distinct()
-    batch
-      .join(rejected, Seq("vec_id"), "left_anti")
-      .select($"vec_id", $"bucket")
-      .orderBy($"vec_id")
+    val sketch = batch.select($"vec_id", $"v", $"nsq", $"bucket")
+    val near = VectorOps.cosineFromParts(VectorOps.dotL($"v", $"bv"), $"nsq", $"bn") >= 0.4
+    def antiJoin(b: DataFrame, blockers: DataFrame, cond: Column): DataFrame =
+      b.join(blockers.withColumnRenamed("bucket", "b_bucket"),
+        $"bucket" === $"b_bucket" && cond, "left_anti")
+    val survivors = segments.foldLeft(sketch)((b, seg) =>
+      antiJoin(b, seg.select($"bucket", $"bv", $"bn"), near))
+    antiJoin(survivors, vectorIndexRows(sketch), near && $"blocker" < $"vec_id")
   }
 
   // ---------------------------------------------------------------- q78
@@ -1979,18 +1983,19 @@ object LlmQueries {
     * fingerprints, q75 text near-dup, here semantic near-dup): the
     * arriving batch of vectors probes the standing corpus's sign-LSH
     * bucket index (q28's planes — ONE bucketing spelling for index and
-    * probe), candidates are confirmed with the exact integer-scaled
-    * cosine, and a vector is admitted unless a confirmed semantic
-    * near-duplicate (cosine ≥ 0.4) exists in the corpus or earlier in
-    * the batch (first-wins, q75's pairwise rule). Same corpus/incoming
-    * split primitive as q73/q75 (content-hash uniform over vec_id).
+    * probe), and a vector is admitted unless a bucket collision confirms
+    * as a semantic near-duplicate (exact integer-scaled cosine ≥ 0.4) in
+    * the corpus or earlier in the batch (first-wins, q75's pairwise
+    * rule) — [[admitByVectorIndex]]'s anti-join chain, sorted here for
+    * emission. Same corpus/incoming split primitive as q73/q75
+    * (content-hash uniform over vec_id).
     *
-    * Scale: the probe is a bucket-key equi-join against the standing
-    * index — never all-pairs; cosine confirm touches bucket collisions
-    * only. At 100 TB the index is bucketed by LSH key at ingest (q51's
-    * discipline) and the per-batch probe shuffles only the batch's
-    * bucket ids; multi-probe (q30's bit flips) is the recall knob when
-    * the plane count rises.
+    * Scale: each arm is a bucket-key equi-join against the standing
+    * index with the cosine confirm in the join condition — never
+    * all-pairs, and confirms touch bucket collisions only. At 100 TB the
+    * index is bucketed by LSH key at ingest (q51's discipline) and the
+    * per-batch probe shuffles only the batch; multi-probe (q30's bit
+    * flips) is the recall knob when the plane count rises.
     */
   def q80EmbeddingAdmission(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -1998,9 +2003,10 @@ object LlmQueries {
       .withColumn("incoming", Sampling.uniform01($"vec_id") < 0.3)
       .localCheckpoint()
     admitByVectorIndex(
-      sv.filter($"incoming").drop("incoming"),
-      sv.filter(!$"incoming").select($"bucket", $"vec_id".as("blocker"),
-        $"v".as("bv"), $"nsq".as("bn")))
+        sv.filter($"incoming").drop("incoming"),
+        vectorIndexRows(sv.filter(!$"incoming")))
+      .select($"vec_id", $"bucket")
+      .orderBy($"vec_id")
   }
 
   val q80Oracle: String = {
@@ -2525,10 +2531,14 @@ object LlmQueries {
     * new bucket-keyed [[graft.operators.StandingIndex]] segment, and
     * batch 2 must reject vectors that semantically duplicate a batch-1
     * admission — the unmaintained-index failure, now fenced on both
-    * modalities. One sketch spelling ([[vectorSketch]]) for corpus,
-    * folded segment, and probes; scale story identical to q89's
-    * (O(batch) folds, per-segment zero-exchange probes — q80's
-    * BucketingSpec law covers the bucket-keyed plan).
+    * modalities. Each admission is [[admitByVectorSegments]]'s chain of
+    * left-anti joins (one per segment, then the in-batch arm), and
+    * batch 1's admitted sketch rows are folded as they come out of it
+    * (checkpointed once; no join back to the batch). One sketch
+    * spelling ([[vectorSketch]]) for corpus, folded segment, and probes;
+    * scale story identical to q89's (O(batch) folds, per-segment
+    * zero-exchange probes — BucketingSpec's two-segment anti-join law
+    * pins the plan).
     */
   def q90VectorIndexMaintenance(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -2540,9 +2550,8 @@ object LlmQueries {
     val ix = new StandingIndex(s, "q90_vec_ix", buckets = 4, keys = Seq("bucket"))
     ix.init(vectorIndexRows(corpus))
     val admit1 = admitByVectorSegments(batch1, ix.segments)
-      .localCheckpoint() // emitted AND reused as batch 2's blocker set
-    val admitted1 = batch1.join(admit1.select($"vec_id"), "vec_id")
-    ix.fold(vectorIndexRows(admitted1))
+      .localCheckpoint() // emitted AND folded as batch 2's blocker set
+    ix.fold(vectorIndexRows(admit1))
     val admit2 = admitByVectorSegments(batch2, ix.segments)
     admit1.withColumn("batch", lit(1))
       .unionByName(admit2.withColumn("batch", lit(2)))

@@ -2652,10 +2652,9 @@ object StreamGateQueries {
     * has a streaming realization). Each micro-batch of arriving vectors
     * is sketched IN the stream (integer scaling + squared norm +
     * sign-LSH bucket, ONE [[LlmQueries.vectorSketch]] pass whose
-    * checkpointed frame serves every per-segment probe branch, the
-    * in-batch self-join, AND the fold of the admitted subset), admitted
-    * by q80's exact semantics against the standing bucket index's
-    * strictly-earlier segments
+    * checkpointed frame feeds every anti-join arm, in-batch arm
+    * included), admitted by q80's exact semantics against the standing
+    * bucket index's strictly-earlier segments
     * ([[LlmQueries.admitByVectorSegments]]), and the ADMITTED vectors'
     * sketch rows fold in as segment `batchId + 1` — a later batch
     * rejects vectors semantically duplicating an earlier batch's

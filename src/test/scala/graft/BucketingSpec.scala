@@ -529,6 +529,57 @@ class BucketingSpec extends AnyFunSuite with LocalSpark {
     assert(got.nonEmpty && got === expected)
   }
 
+  test("vector admission anti-joins two bucketed StandingIndex segments with no segment-side exchange (q90's 100 TB shape)") {
+    val ss = spark; import ss.implicits._
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import graft.operators.{Sampling, StandingIndex, VectorOps}
+    import graft.queries.LlmQueries
+    // q90's probe as a plan property: the batch anti-joins each
+    // bucket-keyed segment, then itself, and only the batch side ever
+    // shuffles — every segment is read as its bucketed layout, with no
+    // Exchange anywhere above its scan. Static planner (AQE off), no
+    // broadcast: the shape a corpus too large to broadcast plans.
+    val sv = LlmQueries.vectorSketch(Tables.embeddings(spark, sf))
+    def u = Sampling.uniform01($"vec_id")
+    val ix = new StandingIndex(spark, "law_vec_ix", buckets = 4, keys = Seq("bucket"))
+    ix.init(LlmQueries.vectorIndexRows(sv.filter(u >= 0.6)))
+    ix.fold(LlmQueries.vectorIndexRows(sv.filter(u >= 0.3 && u < 0.6)))
+    assert(ix.segments.size == 2)
+    val batch = sv.filter(u < 0.3)
+    Confs.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
+      val admitted = LlmQueries.admitByVectorSegments(batch, ix.segments)
+      val plan = admitted.queryExecution.executedPlan
+      def segScans(p: SparkPlan) = p.collect {
+        case f: FileSourceScanExec
+            if f.tableIdentifier.exists(_.table.startsWith("law_vec_ix")) => f
+      }
+      val exchanges = plan.collect { case e: ShuffleExchangeLike => e }
+      assert(segScans(plan).size == 2, plan)
+      assert(exchanges.forall(e => segScans(e).isEmpty),
+        s"no Exchange may sit above a segment scan:\n$plan")
+      assert(exchanges.size == 2, s"the batch's two shuffles only:\n$plan")
+      // and it admits exactly what the candidate-union spelling admits:
+      // per-segment and in-batch candidates, cosine-confirmed, distinct
+      // rejected ids, one anti-join on vec_id
+      val cand = ix.segments.map(seg =>
+          batch.join(seg.select($"bucket", $"blocker", $"bv", $"bn"), "bucket"))
+        .reduce(_ unionByName _)
+        .unionByName(batch.join(LlmQueries.vectorIndexRows(batch), "bucket")
+          .filter($"blocker" < $"vec_id"))
+      val rejected = cand
+        .filter(VectorOps.cosineFromParts(
+          VectorOps.dotL($"v", $"bv"), $"nsq", $"bn") >= 0.4)
+        .select($"vec_id").distinct()
+      val expected = batch.join(rejected, Seq("vec_id"), "left_anti")
+        .select($"vec_id").collect().map(_.getLong(0)).toSet
+      val got = admitted.select($"vec_id").collect().map(_.getLong(0)).toSet
+      assert(got === expected)
+      assert(got.nonEmpty && got.size < batch.count(),
+        s"fixture must admit some and reject some, got ${got.size}")
+    }
+  }
+
   test("one-file-per-bucket + legacy outputOrdering flag: SMJ plans with zero Sorts") {
     // The last step of the bucketed-lake story: writeBucketed also
     // sortBy(key)s each bucket and its repartition-first discipline

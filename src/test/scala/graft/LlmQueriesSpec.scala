@@ -279,7 +279,8 @@ class LlmQueriesSpec extends AnyFunSuite with LocalSpark {
     val corpusSh = sh.filter(Sampling.uniform01($"doc_id") >= 0.3).localCheckpoint()
     val probe75 = LlmQueries.admitByBandIndex(
       batchSh, LlmQueries.minhashBands(corpusSh), corpusSh)
-    assert(probe75.collect().toSeq ===
+    // the probe API returns its admissions unordered; the gate sorts
+    assert(probe75.orderBy($"doc_id").collect().toSeq ===
       LlmQueries.q75IncrementalNearDup(spark, sf).collect().toSeq)
   }
 
@@ -299,13 +300,13 @@ class LlmQueriesSpec extends AnyFunSuite with LocalSpark {
     val corpusSh = sh.filter(Sampling.uniform01($"doc_id") >= 0.3).localCheckpoint()
     val bands = LlmQueries.minhashBands(corpusSh).localCheckpoint()
     val whole = LlmQueries.admitByBandIndex(batchSh, bands, corpusSh)
-      .collect().toSeq
+      .orderBy($"doc_id").collect().toSeq
     val segs = Seq(
       bands.filter($"doc_id" % 3 === 0),
       bands.filter($"doc_id" % 3 === 1),
       bands.filter($"doc_id" % 3 === 2))
     val segmented = LlmQueries.admitByBandSegments(batchSh, segs, corpusSh)
-      .collect().toSeq
+      .orderBy($"doc_id").collect().toSeq
     assert(segmented === whole)
     assert(whole.nonEmpty)
   }
