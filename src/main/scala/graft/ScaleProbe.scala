@@ -121,23 +121,21 @@ object ScaleProbe {
     val docs = Tables.documents(spark, docsDir).filter(corpusFlag($"doc_id"))
     docs.select(TextOps.bagFingerprint(TextOps.normText($"text")).as("fingerprint"))
       .repartition(32).write.mode("overwrite").parquet(s"$root/fp.parquet")
-    docs
-      .select($"doc_id", TextOps.tokens(TextOps.normText($"text")).as("toks"))
-      .select($"doc_id", TextOps.shingles($"toks", 3).as("sh"))
+    graft.queries.LlmQueries.shingleDocs(docs)
       .repartition(32).write.mode("overwrite").parquet(s"$root/sh.parquet")
     graft.queries.LlmQueries.minhashBands(spark.read.parquet(s"$root/sh.parquet"))
       .repartition(32).write.mode("overwrite").parquet(s"$root/bands.parquet")
   }
 
   /** Materialize the standing sign-LSH vector index q80's shape probes
-    * (one [[graft.queries.LlmQueries.vectorSketch]] spelling with the
-    * probe side) — built once per corpus version, outside the timed run.
+    * (one [[graft.queries.LlmQueries.vectorSketch]] +
+    * [[graft.queries.LlmQueries.vectorIndexRows]] spelling with the probe
+    * side) — built once per corpus version, outside the timed run.
     */
   private def buildVecIndex(spark: SparkSession, embDir: String, root: String): Unit = {
     import spark.implicits._
-    graft.queries.LlmQueries.vectorSketch(
-        Tables.embeddings(spark, embDir).filter(corpusFlag($"vec_id")))
-      .select($"bucket", $"vec_id".as("blocker"), $"v".as("bv"), $"nsq".as("bn"))
+    graft.queries.LlmQueries.vectorIndexRows(graft.queries.LlmQueries.vectorSketch(
+        Tables.embeddings(spark, embDir).filter(corpusFlag($"vec_id"))))
       .repartition(32).write.mode("overwrite").parquet(s"$root/vecindex.parquet")
   }
 
@@ -152,7 +150,10 @@ object ScaleProbe {
 
   /** Ingest-axis probes, keyed like queries but taking the INDEX root as
     * their dir; batch fingerprint/shingle computation is inside the
-    * timed run (it is per-ingest work), index builds are not.
+    * timed run (it is per-ingest work), index builds are not. Each
+    * probe calls its modality's one admission spelling on a one-segment
+    * index (`LlmQueries.admitByFingerprint`, `admitByBandFrame`,
+    * `admitByVectorSegments`).
     */
   private def ingestProbes(base: String): Map[String, (SparkSession, String) => DataFrame] = {
     import graft.operators.TextOps
@@ -162,16 +163,15 @@ object ScaleProbe {
         graft.queries.LlmQueries.admitByFingerprint(
           ingestBatch(s, base).select($"doc_id",
             TextOps.bagFingerprint(TextOps.normText($"text")).as("fingerprint")),
-          s.read.parquet(s"$root/fp.parquet"))
+          Seq(s.read.parquet(s"$root/fp.parquet")))
       }),
       "q75_ingest_probe" -> ((s, root) => {
         import s.implicits._
-        val batchSh = Tables.spread(s, ingestBatch(s, base))
-          .select($"doc_id", TextOps.tokens(TextOps.normText($"text")).as("toks"))
-          .select($"doc_id", TextOps.shingles($"toks", 3).as("sh"))
-          .localCheckpoint()
-        graft.queries.LlmQueries.admitByBandIndex(batchSh,
-          s.read.parquet(s"$root/bands.parquet"),
+        val batchSh = graft.queries.LlmQueries.shingleDocs(
+          Tables.spread(s, ingestBatch(s, base))).localCheckpoint()
+        graft.queries.LlmQueries.admitByBandFrame(batchSh,
+          graft.queries.LlmQueries.minhashBands(batchSh).localCheckpoint(),
+          Seq(s.read.parquet(s"$root/bands.parquet")),
           s.read.parquet(s"$root/sh.parquet"))
       }),
       "q80_ingest_probe" -> ((s, root) => {
@@ -179,8 +179,8 @@ object ScaleProbe {
         val batch = graft.queries.LlmQueries.vectorSketch(
           Tables.embeddings(s, base)
             .filter(graft.operators.Sampling.uniform01($"vec_id") < 0.3))
-        graft.queries.LlmQueries.admitByVectorIndex(batch,
-          s.read.parquet(s"$root/vecindex.parquet"))
+        graft.queries.LlmQueries.admitByVectorSegments(batch,
+          Seq(s.read.parquet(s"$root/vecindex.parquet")))
       }),
       "q89_compact_probe" -> ((s, root) => {
         // the timed run IS the compaction: merge every live segment of
@@ -217,9 +217,8 @@ object ScaleProbe {
         val tag = if (root.contains("scaleingest1")) "p1" else "pn"
         val ix = new graft.operators.StandingIndex(s, s"probe_fold_$tag", 4,
           Seq("band", "bk"))
-        val batchSh = Tables.spread(s, ingestBatch(s, base))
-          .select($"doc_id", TextOps.tokens(TextOps.normText($"text")).as("toks"))
-          .select($"doc_id", TextOps.shingles($"toks", 3).as("sh"))
+        val batchSh = graft.queries.LlmQueries.shingleDocs(
+          Tables.spread(s, ingestBatch(s, base)))
         ix.fold(graft.queries.LlmQueries.minhashBands(batchSh)
           .select($"doc_id", $"band", $"bk"))
         ix.segments.last
@@ -284,11 +283,9 @@ object ScaleProbe {
       // stamped arm's index is identical except its two segments carry
       // DIFFERING event-time stamps (corpus 0, fold 1), forcing the
       // entry-level `_g_stamp` merge path.
-      import graft.operators.TextOps
       val batchBands = graft.queries.LlmQueries.minhashBands(
-          Tables.spread(spark, ingestBatch(spark, base))
-            .select($"doc_id", TextOps.tokens(TextOps.normText($"text")).as("toks"))
-            .select($"doc_id", TextOps.shingles($"toks", 3).as("sh")))
+          graft.queries.LlmQueries.shingleDocs(
+            Tables.spread(spark, ingestBatch(spark, base))))
         .select($"doc_id", $"band", $"bk")
         .localCheckpoint()
       Seq(("p1", "target/scaleingest1"), ("pn", s"$out/ingest")).foreach {

@@ -154,11 +154,12 @@ class FileClaimProvider(
   * Probing a segmented index is sound because admission DISTRIBUTES
   * over segments: NOT EXISTS over `seg_0 ∪ … ∪ seg_N` is the AND of NOT
   * EXISTS over each segment, so the fingerprint and vector modalities
-  * probe as a chain of left-anti joins, one per segment (`admitAndFold`,
-  * `admitByVectorSegments`), and an equi-join of the probe frame against
-  * the union equals the union of the per-segment joins, so the band
-  * modality unions per-segment CANDIDATES (probe-bounded, tiny), never
-  * the index itself. Each per-segment join is zero-exchange on the index
+  * probe as a chain of left-anti joins, one per segment
+  * (`LlmQueries.admitByFingerprint`, `admitByVectorSegments`), and an
+  * equi-join of the probe frame against the union equals the union of
+  * the per-segment joins, so the band modality (`admitByBandFrame`)
+  * unions per-segment CANDIDATES (probe-bounded, tiny), never the index
+  * itself. Each per-segment join is zero-exchange on the index
   * side (every segment is bucketed by the join key — plan-verified in
   * BucketingSpec), so no fold ever re-shuffles standing data. Segment count is
   * bounded by [[compact]] (Hudi's compaction) — either harness-invoked or
@@ -289,7 +290,6 @@ class StandingIndex(
       "silently degrade to last-write-wins; run on file/hdfs/viewfs or " +
       "pass an external ClaimProvider (the claimProvider constructor " +
       "argument — Hudi's lock-provider rule as a configuration point)")
-  private val legacyPtrPath = new org.apache.hadoop.fs.Path(warehousePath, s"_${name}_segments")
 
   private def segTable(i: Long): String = s"${name}_seg$i"
   private def cmpTable(g: Long): String = s"${name}_cmp$g"
@@ -326,14 +326,13 @@ class StandingIndex(
         suffix.toLongOption.map(_ -> st.getPath)
       }.sortBy(_._1)
 
-  /** Resolve the pointer: the highest committed version file, falling
-    * back to a pre-OCC unversioned pointer (read as version 0) and then
-    * to the empty uninitialized state. Pointer format: line 1 = live
-    * entries `table|cover|maxEventMs|minEventMs` comma-separated (a
-    * 3-field entry parses as `min = max` — the exact semantics those
-    * segments were written under; a bare numeric id as the pre-coverage
-    * form); line 2 = retired tables; line 3 = `hwm|<seg>|<cmp>` (derived
-    * from the table names when absent).
+  /** Resolve the pointer: the highest committed version file, or the
+    * empty uninitialized state when there is none. Pointer format (the
+    * one [[commit]] writes): line 1 = live entries
+    * `table|cover|maxEventMs|minEventMs` comma-separated; line 2 =
+    * retired tables; line 3 = `hwm|<seg>|<cmp>`; line 4 (optional) =
+    * fence epochs. Anything else fails loudly as unparseable, never
+    * read under guessed semantics.
     */
   private def state: State = {
     // a racing pair of commits can delete the version this reader just
@@ -353,16 +352,13 @@ class StandingIndex(
 
   private def stateOnce: State = {
     val versions = listVersions()
-    val (body, version) =
-      if (versions.nonEmpty) { val (v, p) = versions.last; (readFile(p), v) }
-      else if (fs.exists(legacyPtrPath)) (readFile(legacyPtrPath), 0L)
-      else return State(Seq.empty, Seq.empty, 0L, 0L, 0L, Map.empty)
+    if (versions.isEmpty) return State(Seq.empty, Seq.empty, 0L, 0L, 0L, Map.empty)
+    val (version, path) = versions.last
+    val body = readFile(path)
     val lines = body.split("\n", -1)
     val live = lines(0).trim.split(",").filter(_.nonEmpty).toSeq.map { tok =>
       tok.split('|') match {
         case Array(t, c, mx, mn) => Seg(t, c.toLong, mx.toLong, mn.toLong)
-        case Array(t, c, mx)     => Seg(t, c.toLong, mx.toLong, mx.toLong)
-        case Array(id)           => Seg(segTable(id.toLong), id.toLong, Long.MaxValue, Long.MaxValue)
         case _ => throw new IllegalStateException(
           s"StandingIndex '$name' pointer entry unparseable: '$tok'")
       }
@@ -370,19 +366,11 @@ class StandingIndex(
     val retired =
       if (lines.length > 1) lines(1).trim.split(",").filter(_.nonEmpty).toSeq
       else Seq.empty
-    def idOf(prefix: String, t: String): Option[Long] =
-      if (t.startsWith(prefix)) t.stripPrefix(prefix).toLongOption else None
-    val names = live.map(_.table) ++ retired
-    val (hwmSeg, hwmCmp) = lines.lift(2).map(_.trim).filter(_.startsWith("hwm|")) match {
-      case Some(h) => h.split('|') match {
-        case Array(_, s, c) => (s.toLong, c.toLong)
-        case _ => throw new IllegalStateException(
-          s"StandingIndex '$name' pointer hwm line unparseable: '$h'")
-      }
-      case None => // pre-hwm pointer: derive from the committed names
-        (names.flatMap(idOf(s"${name}_seg", _)).maxOption.getOrElse(0L),
-          names.flatMap(t => idOf(s"${name}_cmp", t)
-            .orElse(idOf(s"${name}_exp", t))).maxOption.getOrElse(0L))
+    val hwmLine = lines.lift(2).map(_.trim).getOrElse("")
+    val (hwmSeg, hwmCmp) = hwmLine.split('|') match {
+      case Array("hwm", s, c) => (s.toLong, c.toLong)
+      case _ => throw new IllegalStateException(
+        s"StandingIndex '$name' pointer hwm line unparseable: '$hwmLine'")
     }
     // line 4 (optional): per-role fence epochs `fence|role=epoch,...` —
     // absent on pre-fencing pointers (no role has ever fenced)
@@ -483,7 +471,6 @@ class StandingIndex(
       attempted --= retired
     }
     listVersions().filter(_._1 < prev.version).foreach(p => fs.delete(p._2, false))
-    if (prev.version == 0L && fs.exists(legacyPtrPath)) fs.delete(legacyPtrPath, false)
   }
 
   private def writeSegment(df: DataFrame, table: String): Unit =

@@ -112,6 +112,37 @@ object LlmQueries {
       s"(strpos('0123456789abcdef', substring($hexCol, ${from + k}, 1)) - 1) * $pow"
     }.mkString("(", " + ", ")")
 
+  /** The ONE DuckDB band-key prelude, [[minhashBands]]' oracle
+    * spelling, shared by q16 (and through it q40/q46), q75, q81 and
+    * [[neardupSequentialOracle]]: the CTEs `toks` → `sh` (distinct
+    * word 3-gram shingles per doc) → `shx` (hash-once base value) →
+    * `seeds`/`mh` (the 9 universal-hash minima) → `bandkeys` (doc_id,
+    * band, bk), plus `szs` (doc_id, n = shingle-set size) for the
+    * Jaccard confirms. Every CTE is MATERIALIZED (see [[horizonWindow]]
+    * for why); callers append their own CTEs after it.
+    */
+  private val bandKeyCtes: String = {
+    val abRows = minhashAB.zipWithIndex
+      .map { case ((a, b), i) => s"($i, $a, $b)" }.mkString(", ")
+    s"""toks AS MATERIALIZED (
+      |  SELECT doc_id, string_split(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ' ') AS w
+      |  FROM documents),
+      |sh AS MATERIALIZED (
+      |  SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS s
+      |  FROM toks, unnest(generate_series(1, len(w) - 2)) t(i)),
+      |shx AS MATERIALIZED (
+      |  SELECT doc_id, s, ${duckHex8("md5(s)", 1)} % $MinhashP AS x
+      |  FROM sh),
+      |seeds AS MATERIALIZED (SELECT * FROM (VALUES $abRows) t(seed, a, b)),
+      |mh AS MATERIALIZED (
+      |  SELECT doc_id, seed, min((a * x + b) % $MinhashP) AS m
+      |  FROM shx CROSS JOIN seeds GROUP BY doc_id, seed),
+      |bandkeys AS MATERIALIZED (
+      |  SELECT doc_id, seed // 3 AS band, string_agg(m::VARCHAR, ':' ORDER BY seed) AS bk
+      |  FROM mh GROUP BY doc_id, seed // 3),
+      |szs AS MATERIALIZED (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id)""".stripMargin
+  }
+
   /** (doc_id, band, bk) LSH band keys over a `(doc_id, sh)` shingle
     * frame — the ONE banding spelling shared by the self-join pair
     * finder (q16) and the incremental admission probe (q75), so index
@@ -180,17 +211,9 @@ object LlmQueries {
     */
   def q16NearDupLsh(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // Bind the token array to a column BEFORE shingling: higher-order
-    // lambdas are interpreted with no common-subexpression elimination,
-    // so an inlined tokens expression would re-run the whole
-    // regexp/split pipeline for every element_at reference — measured
-    // ~150 re-evaluations per document. localCheckpoint: the shingle
-    // arrays are read three times (minhash, both Jaccard join-back
-    // sides) — persist the sketch input once.
-    val base = Tables.spread(s, Tables.documents(s, dir))
-      .select($"doc_id", TextOps.tokens(TextOps.normText($"text")).as("toks"))
-      .select($"doc_id", TextOps.shingles($"toks", 3).as("sh"))
-      .localCheckpoint()
+    // localCheckpoint: the shingle arrays are read three times (minhash,
+    // both Jaccard join-back sides) — persist the sketch input once.
+    val base = shingleDocs(Tables.spread(s, Tables.documents(s, dir))).localCheckpoint()
     neardupPairs(base).orderBy($"doc_a", $"doc_b")
   }
 
@@ -210,54 +233,49 @@ object LlmQueries {
         $"a.band" === $"b.band" && $"a.bk" === $"b.bk" && $"a.doc_id" < $"b.doc_id")
       .select($"a.doc_id".as("doc_a"), $"b.doc_id".as("doc_b"))
       .distinct()
-    // size prefilter BELOW the array join-back (optimization round 18,
-    // guide §3.2's shape — drop definitely-non-matching pairs before the
-    // heavy side moves): J ≥ 0.8 forces |∩|/|∪| ≤ min/max, so a pair
-    // whose shingle-set sizes differ by more than 5:4 can never confirm.
-    // The prefilter join carries one int per doc; only survivors pull
-    // full shingle arrays — at 100 TB candidates outgrow broadcast and
-    // the arrays are the shuffle payload (integer-exact: 5·min ≥ 4·max ⟺
-    // ratio ≥ 0.8, no doubles cross the gate).
+    confirmPairs(cand, base)
+      .select($"doc_a", $"doc_b", $"common_shingles", $"union_shingles", $"jaccard")
+  }
+
+  /** The ONE exact-Jaccard PAIR confirm, shared by [[neardupPairs]]
+    * (q16/q40/q46), q81 and the near-dup fold gates' re-admission
+    * fence: candidate pairs (doc_a, doc_b) against a (doc_id, sh)
+    * shingle base → (doc_a, doc_b, sh_a, sh_b, common_shingles,
+    * union_shingles, jaccard) for the pairs with jaccard ≥ 0.8.
+    *
+    * The size prefilter sits BELOW the array join-back (optimization
+    * round 18, guide §3.2's shape — drop definitely-non-matching pairs
+    * before the heavy side moves): J ≥ 0.8 forces |∩|/|∪| ≤ min/max, so
+    * a pair whose shingle-set sizes differ by more than 5:4 can never
+    * confirm. The prefilter join carries one int per doc; only
+    * survivors pull full shingle arrays — at 100 TB candidates outgrow
+    * broadcast and the arrays are the shuffle payload (integer-exact:
+    * 5·min ≥ 4·max ⟺ ratio ≥ 0.8, no doubles cross the gate).
+    * Admission ([[admitByBandFrame]]) confirms without it: there the
+    * prefilter's extra shuffle cost more than it saved (q89/q93).
+    */
+  private[graft] def confirmPairs(cand: DataFrame, base: DataFrame): DataFrame = {
+    import base.sparkSession.implicits._
     val sizes = base.select($"doc_id", size($"sh").as("n"))
-    val slim = cand
+    cand
       .join(sizes.select($"doc_id".as("doc_a"), $"n".as("na")), "doc_a")
       .join(sizes.select($"doc_id".as("doc_b"), $"n".as("nb")), "doc_b")
       .filter(least($"na", $"nb") * 5 >= greatest($"na", $"nb") * 4)
       .select($"doc_a", $"doc_b")
-    slim
       .join(base.select($"doc_id".as("doc_a"), $"sh".as("sh_a")), "doc_a")
       .join(base.select($"doc_id".as("doc_b"), $"sh".as("sh_b")), "doc_b")
       .withColumn("common_shingles", size(array_intersect($"sh_a", $"sh_b")))
       .withColumn("union_shingles", size($"sh_a") + size($"sh_b") - $"common_shingles")
       .withColumn("jaccard", $"common_shingles".cast("double") / $"union_shingles")
       .filter($"jaccard" >= 0.8)
-      .select($"doc_a", $"doc_b", $"common_shingles", $"union_shingles", $"jaccard")
   }
 
-  val q16Oracle: String = {
-    val abRows = minhashAB.zipWithIndex
-      .map { case ((a, b), i) => s"($i, $a, $b)" }.mkString(", ")
-    s"""WITH toks AS (
-      |  SELECT doc_id, string_split(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ' ') AS w
-      |  FROM documents),
-      |sh AS (
-      |  SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS s
-      |  FROM toks, unnest(generate_series(1, len(w) - 2)) t(i)),
-      |shx AS (
-      |  SELECT doc_id, s, ${duckHex8("md5(s)", 1)} % $MinhashP AS x
-      |  FROM sh),
-      |seeds AS (SELECT * FROM (VALUES $abRows) t(seed, a, b)),
-      |mh AS (
-      |  SELECT doc_id, seed, min((a * x + b) % $MinhashP) AS m
-      |  FROM shx CROSS JOIN seeds GROUP BY doc_id, seed),
-      |bandkeys AS (
-      |  SELECT doc_id, seed // 3 AS band, string_agg(m::VARCHAR, ':' ORDER BY seed) AS bk
-      |  FROM mh GROUP BY doc_id, seed // 3),
+  val q16Oracle: String =
+    s"""WITH $bandKeyCtes,
       |cand AS (
       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       |  FROM bandkeys a JOIN bandkeys b
       |    ON a.band = b.band AND a.bk = b.bk AND a.doc_id < b.doc_id),
-      |szs AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
       |inter AS (
       |  SELECT c.doc_a, c.doc_b, count(*) AS i
       |  FROM cand c
@@ -272,7 +290,6 @@ object LlmQueries {
       |JOIN szs nb ON nb.doc_id = doc_b
       |WHERE CAST(i AS DOUBLE) / (na.n + nb.n - i) >= 0.8
       |ORDER BY doc_a, doc_b""".stripMargin
-  }
 
   // ---------------------------------------------------------------- q17
 
@@ -368,6 +385,22 @@ object LlmQueries {
 
   // ---------------------------------------------------------------- q18
 
+  /** The ONE DuckDB vector-sketch prelude, [[vectorSketch]]'s oracle
+    * spelling without the bucket, shared by every embedding oracle
+    * (q18/q19/q28/q30/q31/q32/q80, [[vectorSequentialOracle]]): `sv`
+    * (vec_id, v = the integer-scaled vector) and `nn` (vec_id, v, nsq =
+    * its exact squared norm). Oracles that need the sign-LSH bucket
+    * append [[vecBucketCtes]]. Every CTE is MATERIALIZED (see
+    * [[horizonWindow]] for why).
+    */
+  private val vecSketchCtes: String =
+    """sv AS MATERIALIZED (
+      |  SELECT vec_id,
+      |    list_transform(embedding, x -> CAST(trunc(CAST(x AS DOUBLE) * 10000000.0) AS BIGINT)) AS v
+      |  FROM embeddings),
+      |nn AS MATERIALIZED (SELECT vec_id, v,
+      |         CAST(list_sum(list_transform(v, x -> x * x)) AS BIGINT) AS nsq FROM sv)""".stripMargin
+
   /** q18 — brute-force cosine top-k (k=5) similarity search: every 50th
     * vector is a query; each is scored against the whole table. The query
     * set is broadcast, so scoring is one map-side pass over the base
@@ -395,12 +428,7 @@ object LlmQueries {
   }
 
   val q18Oracle: String =
-    """WITH sv AS (
-      |  SELECT vec_id,
-      |    list_transform(embedding, x -> CAST(trunc(CAST(x AS DOUBLE) * 10000000.0) AS BIGINT)) AS v
-      |  FROM embeddings),
-      |nn AS (SELECT vec_id, v,
-      |         CAST(list_sum(list_transform(v, x -> x * x)) AS BIGINT) AS nsq FROM sv),
+    s"""WITH $vecSketchCtes,
       |pr AS (
       |  SELECT q.vec_id AS qid, b.vec_id AS nid, q.v AS qv, b.v AS bv,
       |         q.nsq AS qn, b.nsq AS bn
@@ -427,6 +455,26 @@ object LlmQueries {
   private val NumPlanes = 4
   private val Dims = 64
   private lazy val planes: Seq[Seq[Int]] = VectorOps.rademacherPlanes(NumPlanes, Dims)
+
+  /** The sign-LSH bucket half of the vector prelude, appended after
+    * [[vecSketchCtes]]: `pl` (the ±1 plane matrix, inlined from
+    * [[planes]]), `proj` (exact integer projections per plane) and
+    * `buck` (vec_id, bucket = the bit string, plane 0 first) — the
+    * oracle spelling of [[VectorOps.signLshBucket]].
+    */
+  private lazy val vecBucketCtes: String = {
+    val planesSql = planes.map(_.mkString("[", ", ", "]")).mkString("[", ", ", "]")
+    s"""pl AS MATERIALIZED (SELECT $planesSql AS m),
+       |proj AS MATERIALIZED (
+       |  SELECT vec_id, p, sum(v[i] * m[p + 1][i]) AS s
+       |  FROM nn, pl,
+       |       unnest(generate_series(0, ${NumPlanes - 1})) tp(p),
+       |       unnest(generate_series(1, len(v))) ti(i)
+       |  GROUP BY vec_id, p),
+       |buck AS MATERIALIZED (
+       |  SELECT vec_id, string_agg(CASE WHEN s > 0 THEN '1' ELSE '0' END, '' ORDER BY p) AS bucket
+       |  FROM proj GROUP BY vec_id)""".stripMargin
+  }
 
   /** q19 — sign-LSH bucketed approximate nearest neighbors, the scale
     * path for q18: vectors hash to a 4-bit bucket (one bit per
@@ -458,23 +506,8 @@ object LlmQueries {
   }
 
   val q19Oracle: String = {
-    val planesSql = planes.map(_.mkString("[", ", ", "]")).mkString("[", ", ", "]")
-    s"""WITH sv AS (
-       |  SELECT vec_id,
-       |    list_transform(embedding, x -> CAST(trunc(CAST(x AS DOUBLE) * 10000000.0) AS BIGINT)) AS v
-       |  FROM embeddings),
-       |nn AS (SELECT vec_id, v,
-       |         CAST(list_sum(list_transform(v, x -> x * x)) AS BIGINT) AS nsq FROM sv),
-       |pl AS (SELECT $planesSql AS m),
-       |proj AS (
-       |  SELECT vec_id, p, sum(v[i] * m[p + 1][i]) AS s
-       |  FROM nn, pl,
-       |       unnest(generate_series(0, ${NumPlanes - 1})) tp(p),
-       |       unnest(generate_series(1, len(v))) ti(i)
-       |  GROUP BY vec_id, p),
-       |buck AS (
-       |  SELECT vec_id, string_agg(CASE WHEN s > 0 THEN '1' ELSE '0' END, '' ORDER BY p) AS bucket
-       |  FROM proj GROUP BY vec_id),
+    s"""WITH $vecSketchCtes,
+       |$vecBucketCtes,
        |cand AS (
        |  SELECT q.vec_id AS qid, b.vec_id AS nid, q.bucket AS bucket
        |  FROM buck q JOIN buck b ON q.bucket = b.bucket AND b.vec_id <> q.vec_id
@@ -517,10 +550,7 @@ object LlmQueries {
     */
   def q27SimhashNearDup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val spread = Tables.spread(s, Tables.documents(s, dir))
-    val base = spread
-      .select($"doc_id", TextOps.tokens(TextOps.normText($"text")).as("toks"))
-      .select($"doc_id", TextOps.shingles($"toks", 3).as("sh"))
+    val base = shingleDocs(Tables.spread(s, Tables.documents(s, dir)))
     // The 64 signature bits are bits 0..31 of i1 and 0..31 of i2, the two
     // 32-bit ints decoded from the first 16 hex chars of the shingle's
     // md5. (Any fixed bit layout works: Hamming distance and the
@@ -669,23 +699,8 @@ object LlmQueries {
   }
 
   val q28Oracle: String = {
-    val planesSql = planes.map(_.mkString("[", ", ", "]")).mkString("[", ", ", "]")
-    s"""WITH sv AS (
-       |  SELECT vec_id,
-       |    list_transform(embedding, x -> CAST(trunc(CAST(x AS DOUBLE) * 10000000.0) AS BIGINT)) AS v
-       |  FROM embeddings),
-       |nn AS (SELECT vec_id, v,
-       |         CAST(list_sum(list_transform(v, x -> x * x)) AS BIGINT) AS nsq FROM sv),
-       |pl AS (SELECT $planesSql AS m),
-       |proj AS (
-       |  SELECT vec_id, p, sum(v[i] * m[p + 1][i]) AS s
-       |  FROM nn, pl,
-       |       unnest(generate_series(0, ${NumPlanes - 1})) tp(p),
-       |       unnest(generate_series(1, len(v))) ti(i)
-       |  GROUP BY vec_id, p),
-       |buck AS (
-       |  SELECT vec_id, string_agg(CASE WHEN s > 0 THEN '1' ELSE '0' END, '' ORDER BY p) AS bucket
-       |  FROM proj GROUP BY vec_id),
+    s"""WITH $vecSketchCtes,
+       |$vecBucketCtes,
        |cand AS (
        |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
        |  FROM buck a JOIN buck b ON a.bucket = b.bucket AND a.vec_id < b.vec_id),
@@ -748,28 +763,13 @@ object LlmQueries {
   }
 
   val q30Oracle: String = {
-    val planesSql = planes.map(_.mkString("[", ", ", "]")).mkString("[", ", ", "]")
     val flips = (1 to NumPlanes).map { i =>
       val pre = if (i > 1) s"substring(bucket, 1, ${i - 1}) || " else ""
       val post = if (i < NumPlanes) s" || substring(bucket, ${i + 1}, ${NumPlanes - i})" else ""
       s"$pre(CASE WHEN substring(bucket, $i, 1) = '1' THEN '0' ELSE '1' END)$post"
     }.mkString(", ")
-    s"""WITH sv AS (
-       |  SELECT vec_id,
-       |    list_transform(embedding, x -> CAST(trunc(CAST(x AS DOUBLE) * 10000000.0) AS BIGINT)) AS v
-       |  FROM embeddings),
-       |nn AS (SELECT vec_id, v,
-       |         CAST(list_sum(list_transform(v, x -> x * x)) AS BIGINT) AS nsq FROM sv),
-       |pl AS (SELECT $planesSql AS m),
-       |proj AS (
-       |  SELECT vec_id, p, sum(v[i] * m[p + 1][i]) AS s
-       |  FROM nn, pl,
-       |       unnest(generate_series(0, ${NumPlanes - 1})) tp(p),
-       |       unnest(generate_series(1, len(v))) ti(i)
-       |  GROUP BY vec_id, p),
-       |buck AS (
-       |  SELECT vec_id, string_agg(CASE WHEN s > 0 THEN '1' ELSE '0' END, '' ORDER BY p) AS bucket
-       |  FROM proj GROUP BY vec_id),
+    s"""WITH $vecSketchCtes,
+       |$vecBucketCtes,
        |probes AS (
        |  SELECT vec_id AS qid, unnest([bucket, $flips]) AS bucket
        |  FROM buck WHERE vec_id % 50 = 0),
@@ -829,12 +829,7 @@ object LlmQueries {
   }
 
   val q31Oracle: String =
-    """WITH sv AS (
-      |  SELECT vec_id,
-      |    list_transform(embedding, x -> CAST(trunc(CAST(x AS DOUBLE) * 10000000.0) AS BIGINT)) AS v
-      |  FROM embeddings),
-      |nn AS (SELECT vec_id, v,
-      |         CAST(list_sum(list_transform(v, x -> x * x)) AS BIGINT) AS nsq FROM sv),
+    s"""WITH $vecSketchCtes,
       |pr AS (
       |  SELECT q.vec_id AS qid, b.vec_id AS nid, q.v AS qv, b.v AS bv,
       |         q.nsq AS qn, b.nsq AS bn
@@ -935,12 +930,7 @@ object LlmQueries {
   }
 
   val q32Oracle: String =
-    s"""WITH sv AS (
-       |  SELECT vec_id,
-       |    list_transform(embedding, x -> CAST(trunc(CAST(x AS DOUBLE) * 10000000.0) AS BIGINT)) AS v
-       |  FROM embeddings),
-       |nn AS (SELECT vec_id, v,
-       |         CAST(list_sum(list_transform(v, x -> x * x)) AS BIGINT) AS nsq FROM sv),
+    s"""WITH $vecSketchCtes,
        |cent AS (
        |  SELECT vec_id AS cid, v AS cv, nsq AS cn FROM nn
        |  WHERE vec_id % $IvfStride = 0 AND vec_id < $IvfMaxCid),
@@ -1077,9 +1067,7 @@ object LlmQueries {
     */
   private def dedupLabels(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = Tables.spread(s, Tables.documents(s, dir))
-      .select($"doc_id", TextOps.tokens(TextOps.normText($"text")).as("toks"))
-      .select($"doc_id", TextOps.shingles($"toks", 3).as("sh"))
+    val base = shingleDocs(Tables.spread(s, Tables.documents(s, dir)))
       .localCheckpoint()
     // the node universe is served from the SAME checkpointed base the
     // shingle pipeline reads (optimization round 18, guide §1.2-1/§2.4):
@@ -1324,7 +1312,8 @@ object LlmQueries {
     * corpus side is the standing fingerprint index, bucketed by
     * fingerprint at ingest (q51's BucketedLake discipline), making each
     * incremental batch's anti-join zero-exchange on the corpus side;
-    * this gate is the unbucketed spelling of that plan.
+    * this gate is [[admitByFingerprint]] on the unbucketed one-segment
+    * spelling of that plan.
     */
   def q73IncrementalDedup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -1332,13 +1321,7 @@ object LlmQueries {
       .select($"doc_id",
         TextOps.bagFingerprint(TextOps.normText($"text")).as("fingerprint"),
         Sampling.uniform01($"doc_id").as("u"))
-    val corpus = docs.filter($"u" >= 0.3).select($"fingerprint")
-    val incoming = docs.filter($"u" < 0.3)
-    incoming
-      .join(corpus, Seq("fingerprint"), "left_anti")
-      .groupBy($"fingerprint")
-      .agg(min($"doc_id").as("doc_id"), count(lit(1)).as("batch_dups"))
-      .select($"doc_id", $"fingerprint", $"batch_dups")
+    admitByFingerprint(docs.filter($"u" < 0.3), Seq(docs.filter($"u" >= 0.3)))
       .orderBy($"doc_id")
   }
 
@@ -1455,75 +1438,27 @@ object LlmQueries {
     * touches candidate pairs only. At 100 TB the corpus side is the
     * standing band index bucketed by (band, bk) at ingest (q51's
     * BucketedLake discipline) making the probe zero-exchange on the
-    * corpus side — plan-verified in BucketingSpec; this gate is the
-    * unbucketed spelling of that plan. Shuffles carry band keys
-    * (~tens of bytes), ids, and — for candidates only — shingle sets.
+    * corpus side — plan-verified in BucketingSpec; this gate is
+    * [[admitByBandFrame]] on the unbucketed one-segment spelling of that
+    * plan. Shuffles carry band keys (~tens of bytes), ids, and — for
+    * candidates only — shingle sets.
     */
   def q75IncrementalNearDup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = Tables.spread(s, Tables.documents(s, dir))
-      .select($"doc_id", TextOps.tokens(TextOps.normText($"text")).as("toks"))
-      .select($"doc_id", TextOps.shingles($"toks", 3).as("sh"))
-      .localCheckpoint()
-    def incomingFlag(c: Column): Column = Sampling.uniform01(c) < 0.3
-    val bands = minhashBands(base)
-      .withColumn("incoming", incomingFlag($"doc_id"))
-    val probe = bands.filter($"incoming").select($"doc_id", $"band", $"bk")
-    // corpus blocker: ANY corpus doc sharing a full band key
-    val candCorpus = probe
-      .join(bands.filter(!$"incoming")
-        .select($"doc_id".as("blocker"), $"band", $"bk"), Seq("band", "bk"))
-      .select($"doc_id", $"blocker")
-    // in-batch blocker: an EARLIER incoming doc sharing a band key
-    val candBatch = probe
-      .join(probe.select($"doc_id".as("blocker"), $"band", $"bk"), Seq("band", "bk"))
-      .filter($"blocker" < $"doc_id")
-      .select($"doc_id", $"blocker")
-    val cand = candCorpus.unionByName(candBatch).distinct()
-    // size prefilter below the array join-back (round 18, guide §3.2):
-    // J ≥ 0.8 needs shingle-set sizes within 5:4, checked on one int per
-    // doc before any candidate pulls full arrays (neardupPairs' rule)
-    val sizes = base.select($"doc_id", size($"sh").as("n"))
-    val slim = cand
-      .join(sizes.select($"doc_id", $"n".as("ni")), "doc_id")
-      .join(sizes.select($"doc_id".as("blocker"), $"n".as("nb")), "blocker")
-      .filter(least($"ni", $"nb") * 5 >= greatest($"ni", $"nb") * 4)
-      .select($"doc_id", $"blocker")
-    val rejected = slim
-      .join(base.select($"doc_id", $"sh".as("sh_i")), "doc_id")
-      .join(base.select($"doc_id".as("blocker"), $"sh".as("sh_b")), "blocker")
-      .withColumn("common", size(array_intersect($"sh_i", $"sh_b")))
-      .withColumn("jaccard", $"common".cast("double") /
-        (size($"sh_i") + size($"sh_b") - $"common"))
-      .filter($"jaccard" >= 0.8)
-      .select($"doc_id").distinct()
-    base
-      .filter(incomingFlag($"doc_id"))
-      .join(rejected, Seq("doc_id"), "left_anti")
-      .select($"doc_id", size($"sh").as("n_shingles"))
+    val base = shingleDocs(Tables.spread(s, Tables.documents(s, dir))).localCheckpoint()
+    // band the whole staged table ONCE and split it by the content-hash
+    // flag (banding is per-doc, so each filter is exactly that subset's
+    // banding — admitByBandFrame's materialized-probe contract)
+    val bands = minhashBands(base).localCheckpoint()
+    val incoming = Sampling.uniform01($"doc_id") < 0.3
+    admitByBandFrame(base.filter(incoming), bands.filter(incoming),
+        Seq(bands.filter(!incoming)), base.filter(!incoming))
       .orderBy($"doc_id")
   }
 
   val q75Oracle: String = {
     val u = Sampling.duckUniform01("CAST(doc_id AS VARCHAR)")
-    val abRows = minhashAB.zipWithIndex
-      .map { case ((a, b), i) => s"($i, $a, $b)" }.mkString(", ")
-    s"""WITH toks AS (
-      |  SELECT doc_id, string_split(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ' ') AS w
-      |  FROM documents),
-      |sh AS (
-      |  SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS s
-      |  FROM toks, unnest(generate_series(1, len(w) - 2)) t(i)),
-      |shx AS (
-      |  SELECT doc_id, s, ${duckHex8("md5(s)", 1)} % $MinhashP AS x
-      |  FROM sh),
-      |seeds AS (SELECT * FROM (VALUES $abRows) t(seed, a, b)),
-      |mh AS (
-      |  SELECT doc_id, seed, min((a * x + b) % $MinhashP) AS m
-      |  FROM shx CROSS JOIN seeds GROUP BY doc_id, seed),
-      |bandkeys AS (
-      |  SELECT doc_id, seed // 3 AS band, string_agg(m::VARCHAR, ':' ORDER BY seed) AS bk
-      |  FROM mh GROUP BY doc_id, seed // 3),
+    s"""WITH $bandKeyCtes,
       |flags AS (SELECT doc_id, $u < 0.3 AS incoming FROM documents),
       |cand AS (
       |  SELECT DISTINCT i.doc_id AS doc_id, c.doc_id AS blocker
@@ -1532,7 +1467,6 @@ object LlmQueries {
       |  JOIN bandkeys c ON c.band = i.band AND c.bk = i.bk
       |  JOIN flags fc ON fc.doc_id = c.doc_id
       |  WHERE (NOT fc.incoming) OR c.doc_id < i.doc_id),
-      |szs AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
       |inter AS (
       |  SELECT c.doc_id, c.blocker, count(*) AS i
       |  FROM cand c
@@ -1555,84 +1489,75 @@ object LlmQueries {
 
   // ---------------------------- standing-index probe API (ingest shape)
 
-  /** The STANDING-INDEX spelling of q73's admission: admit a
-    * fingerprinted batch (`doc_id`, `fingerprint`) against a
-    * materialized corpus fingerprint index (`fingerprint`) — the form a
-    * production ingest actually runs, where the corpus side is a
-    * persisted index (bucketed by fingerprint at 100 TB, q51's
-    * discipline) and only the arriving batch is computed per run. q73
-    * is the single-table spelling of exactly this plan (its corpus side
-    * is derived in-query); LlmQueriesSpec pins the equivalence, and
-    * ScaleProbe's ingest axis times THIS function against a corpus
-    * index grown 100× under a fixed batch — the real ingest ratio.
-    * Shuffles carry 32-char fingerprints + ids only, never text.
+  /** The fingerprint modality's ONE admission spelling, called by q73,
+    * the fold gates' [[admitAndFold]] and ScaleProbe's ingest axis:
+    * admit a fingerprinted batch (`doc_id`, `fingerprint`) against a
+    * SEGMENTED standing fingerprint index (each segment carries
+    * `fingerprint`) — a fingerprint survives iff no segment holds it,
+    * spelled as a chain of left-anti joins, one per segment
+    * ([[graft.operators.StandingIndex]]'s distribution argument) — and
+    * keep the smallest-id holder per surviving fingerprint within the
+    * batch, `batch_dups` its in-batch group size. This is the form a
+    * production ingest actually runs: the corpus side is a persisted
+    * index (bucketed by fingerprint at 100 TB, q51's discipline) and
+    * only the arriving batch is computed per run; ScaleProbe's ingest
+    * axis times it against a corpus index grown 100× under a fixed
+    * batch — the real ingest ratio. Shuffles carry 32-char fingerprints
+    * + ids only, never text. Returns (doc_id, fingerprint, batch_dups)
+    * UNORDERED, like the other two modalities' admissions; callers that
+    * emit it sort it themselves.
     */
-  def admitByFingerprint(batch: DataFrame, index: DataFrame): DataFrame = {
+  def admitByFingerprint(batch: DataFrame, segments: Seq[DataFrame]): DataFrame = {
     import batch.sparkSession.implicits._
-    batch
-      .join(index.select($"fingerprint"), Seq("fingerprint"), "left_anti")
+    segments
+      .foldLeft(batch)((b, seg) =>
+        b.join(seg.select($"fingerprint"), Seq("fingerprint"), "left_anti"))
       .groupBy($"fingerprint")
       .agg(min($"doc_id").as("doc_id"), count(lit(1)).as("batch_dups"))
       .select($"doc_id", $"fingerprint", $"batch_dups")
-      .orderBy($"doc_id")
   }
 
-  /** The STANDING-INDEX spelling of q75's near-dup admission: probe a
-    * materialized MinHash band index (`doc_id`, `band`, `bk` — built by
-    * [[minhashBands]] over the corpus, persisted at ingest) with a new
-    * batch's shingle frame (`doc_id`, `sh`), exact-confirm candidates
-    * against a corpus shingle store (`doc_id`, `sh`), and admit
-    * non-matching docs first-wins within the batch. One banding
-    * spelling ([[minhashBands]]) on both sides, so index and probe can
-    * never drift. The candidate-confirm fetch reads `corpusSh` by
-    * blocker id — at fixture scale a scan-join; at 100 TB that fetch is
-    * the point-lookup step a bucket-pruned doc store (q53's discipline)
-    * or KV store serves, touching candidate buckets only — candidates
-    * are bounded by the batch's band collisions, never the corpus.
-    */
-  def admitByBandIndex(
-      batchSh: DataFrame, corpusBands: DataFrame, corpusSh: DataFrame): DataFrame =
-    admitByBandSegments(batchSh, Seq(corpusBands), corpusSh)
-
-  /** [[admitByBandIndex]] generalized to a SEGMENTED standing index
-    * ([[graft.operators.StandingIndex]]'s read path): candidate
-    * generation distributes over index segments — the probe equi-joins
-    * each segment separately (zero-exchange on the index side when the
-    * segment is (band, bk)-bucketed, BucketingSpec's law) and the
-    * per-segment CANDIDATES (probe-bounded, tiny) union, never the
-    * segments themselves. This is why a fold can be O(batch): appending
-    * a segment changes no standing bytes and the next probe's plan just
-    * gains one more colocated join branch.
-    */
-  def admitByBandSegments(
-      batchSh: DataFrame, corpusSegments: Seq[DataFrame],
-      corpusSh: DataFrame): DataFrame = {
-    import batchSh.sparkSession.implicits._
-    // checkpoint the batch's banding: the lazy frame appears as an
-    // independent subtree in EVERY per-segment join branch and both
-    // sides of the in-batch self-join, so without it the batch is
-    // re-banded (hash per shingle per seed) segments+2 times — probe
-    // cost must stay the batch's own band keys, not grow with fold count
-    val probe = minhashBands(batchSh).select($"doc_id", $"band", $"bk")
-      .localCheckpoint()
-    admitByBandFrame(batchSh, probe, corpusSegments, corpusSh)
-  }
-
-  /** [[admitByBandSegments]] with the probe's band frame supplied by the
-    * caller — the single-banding spelling a maintenance cycle uses: the
-    * caller banding the batch ONCE (checkpointed) can fold the admitted
-    * subset of the SAME frame into the standing index instead of
-    * re-hashing the admitted docs' shingles a second time (q89/q93/q96
-    * pay the banding once per batch; the probe and the fold can never
-    * disagree on a band key because they are the same materialized
-    * rows). `probe` must be `minhashBands(batchSh)` materialized —
-    * checkpointed directly, or a filter of a checkpointed superset
-    * banding (banding is per-doc, so the two coincide) — the one
-    * banding spelling, same as the index side. Returns the admitted
-    * (doc_id, n_shingles) rows UNORDERED: every caller checkpoints the
-    * result or re-sorts it, so an order-only range exchange here would
-    * cost a sampling job and a shuffle for nothing; callers that emit
-    * it sort it themselves (q89/q93's final sort, the fold gates').
+  /** The near-dup modality's ONE admission spelling, called by q75,
+    * q89/q93, the near-dup fold gates' [[neardupAdmitAndFold]] and
+    * ScaleProbe's ingest axis: probe a SEGMENTED standing MinHash band
+    * index (each segment `doc_id`, `band`, `bk` — [[minhashBands]] over
+    * the corpus, persisted at ingest) with a new batch's shingle frame
+    * `batchSh` (`doc_id`, `sh`) and its band frame `probe`,
+    * exact-confirm candidates against the corpus shingle store
+    * `corpusSh` (`doc_id`, `sh`), and admit non-matching docs first-wins
+    * within the batch. One banding spelling ([[minhashBands]]) on both
+    * sides, so index and probe can never drift.
+    *
+    * Candidate generation distributes over index segments: the probe
+    * equi-joins each segment separately (zero-exchange on the index
+    * side when the segment is (band, bk)-bucketed, BucketingSpec's law)
+    * and the per-segment CANDIDATES (probe-bounded, tiny) union, never
+    * the segments themselves. This is why a fold can be O(batch):
+    * appending a segment changes no standing bytes and the next probe's
+    * plan just gains one more colocated join branch. The
+    * candidate-confirm fetch reads `corpusSh` by blocker id — at fixture
+    * scale a scan-join; at 100 TB that fetch is the point-lookup step a
+    * bucket-pruned doc store (q53's discipline) or KV store serves,
+    * touching candidate buckets only — candidates are bounded by the
+    * batch's band collisions, never the corpus.
+    *
+    * `probe` must be `minhashBands(batchSh)` MATERIALIZED — checkpointed
+    * directly, or a filter of a checkpointed superset banding (banding
+    * is per-doc, so the two coincide). A lazy frame would appear as an
+    * independent subtree in EVERY per-segment join branch and both
+    * sides of the in-batch self-join, re-banding the batch segments+2
+    * times — probe cost must stay the batch's own band keys, not grow
+    * with fold count. It is also the single-banding spelling a
+    * maintenance cycle uses: the caller banding the batch ONCE can fold
+    * the admitted subset of the SAME frame into the standing index
+    * instead of re-hashing the admitted docs' shingles a second time
+    * (q89/q93/q96 pay the banding once per batch; the probe and the
+    * fold can never disagree on a band key because they are the same
+    * materialized rows). Returns the admitted (doc_id, n_shingles) rows
+    * UNORDERED: every caller checkpoints the result or re-sorts it, so
+    * an order-only range exchange here would cost a sampling job and a
+    * shuffle for nothing; callers that emit it sort it themselves
+    * (q75/q89/q93's final sort, the fold gates').
     */
   def admitByBandFrame(
       batchSh: DataFrame, probe: DataFrame,
@@ -1664,75 +1589,84 @@ object LlmQueries {
       .select($"doc_id", size($"sh").as("n_shingles"))
   }
 
+  /** The ONE fold tail behind the three modalities' admit-and-fold
+    * steps ([[admitAndFold]], [[neardupAdmitAndFold]],
+    * [[vectorAdmitAndFold]]): `admit` the batch against the standing
+    * index's STRICTLY-EARLIER segments (`segmentsUpTo(batchId)` — a
+    * replayed batch must not even resolve its own crashed fold),
+    * checkpoint the admissions (one computation feeds the caller's sink
+    * AND the fold), and fold `indexRows` of them as segment
+    * `batchId + 1` (the replay-idempotent keyed publish). Returns the
+    * checkpointed admissions, unordered.
+    */
+  private def foldAdmitted(
+      ix: StandingIndex, batchId: Long, maxEventMs: Long,
+      admit: Seq[DataFrame] => DataFrame,
+      indexRows: DataFrame => DataFrame): DataFrame = {
+    val admitted = admit(ix.segmentsUpTo(batchId)).localCheckpoint()
+    ix.foldAt(indexRows(admitted), batchId + 1, maxEventMs)
+    admitted
+  }
+
   /** ONE micro-batch of FOLD-based streaming admission — the
     * fingerprint modality's admit-and-fold, called through the fold-gate
     * driver's per-batch step (StreamGateQueries.FoldStep) by the gates
     * and StreamBench's fold subjects alike, so bench and gate can never
-    * drift: probe the standing fingerprint
-    * index's STRICTLY-EARLIER segments (`segmentsUpTo(batchId)` — a
-    * replayed batch must not even resolve its own crashed fold), keep
-    * the smallest-id holder per fingerprint within the batch, and fold
-    * the admissions as segment `batchId + 1` (the replay-idempotent
-    * keyed publish). Returns the admitted (fingerprint, doc_id) frame,
-    * checkpointed — one computation feeds the caller's sink AND the
-    * fold.
+    * drift: [[admitByFingerprint]] against the standing fingerprint
+    * index, folded by [[foldAdmitted]]. Returns the admitted
+    * (fingerprint, doc_id) frame, checkpointed.
     */
   def admitAndFold(
-      batch: DataFrame, ix: graft.operators.StandingIndex,
+      batch: DataFrame, ix: StandingIndex,
       batchId: Long, maxEventMs: Long = Long.MaxValue): DataFrame = {
     import batch.sparkSession.implicits._
-    val admitted = ix.segmentsUpTo(batchId)
-      .foldLeft(batch)((b, seg) =>
-        b.join(seg.select($"fingerprint"), Seq("fingerprint"), "left_anti"))
-      .groupBy($"fingerprint")
-      .agg(min($"doc_id").as("doc_id"))
-      .localCheckpoint()
-    ix.foldAt(admitted.select($"fingerprint"), batchId + 1, maxEventMs)
-    admitted
+    foldAdmitted(ix, batchId, maxEventMs,
+      admitByFingerprint(batch, _).select($"fingerprint", $"doc_id"),
+      _.select($"fingerprint"))
   }
 
-  /** The ONE (doc_id, text) → (doc_id, sh) shingling spelling behind the
-    * near-dup maintenance cycles: normalized text → tokens → 3-shingles,
-    * exactly the q16/q75 confirm granularity. Shared by the streamed
-    * near-dup gates, their doc stores, and StreamBench's neardup subject
-    * so no caller can shingle differently from the index.
+  /** The ONE (doc_id, text) → (doc_id, sh) shingle base: normalized
+    * text → tokens → 3-shingles, the q16/q75 confirm granularity.
+    * Shared by q16/q27/q40/q75/q89/q93, the streamed near-dup gates and
+    * their doc stores, ScaleProbe's band probes and StreamBench's
+    * neardup subject, so no caller can shingle differently from the
+    * index.
+    *
+    * The token array is bound to a column BEFORE shingling:
+    * higher-order lambdas are interpreted with no
+    * common-subexpression elimination, so an inlined tokens expression
+    * would re-run the whole regexp/split pipeline for every element_at
+    * reference — measured ~150 re-evaluations per document.
     */
   def shingleDocs(df: DataFrame): DataFrame = {
     import df.sparkSession.implicits._
-    df.select($"doc_id",
-        graft.operators.TextOps.tokens(
-          graft.operators.TextOps.normText($"text")).as("toks"))
-      .select($"doc_id", graft.operators.TextOps.shingles($"toks", 3).as("sh"))
+    df.select($"doc_id", TextOps.tokens(TextOps.normText($"text")).as("toks"))
+      .select($"doc_id", TextOps.shingles($"toks", 3).as("sh"))
   }
 
   /** ONE micro-batch of the streamed NEAR-DUP maintenance cycle — the
     * near-dup modality's admit-and-fold, called through
     * StreamGateQueries.FoldStep by the gates and StreamBench's `neardup`
-    * subject alike, so bench and gate can never drift
-    * ([[admitAndFold]]'s discipline on the fuzzy modality): shingle +
-    * band the arriving batch ONCE (the checkpointed band frame serves
-    * every per-segment probe branch, the in-batch self-join, AND the
-    * fold — [[admitByBandFrame]]'s law), admit against the standing band
-    * index's strictly-earlier segments with the exact-Jaccard confirm
-    * served from `docStoreSh`, and fold the ADMITTED docs' band keys as
-    * segment `batchId + 1`. Returns the admitted (doc_id, n_shingles)
-    * frame, checkpointed and unordered — one computation feeds the
-    * caller's sink AND the fold.
+    * subject alike, so bench and gate can never drift: shingle + band
+    * the arriving batch ONCE (the checkpointed band frame serves every
+    * per-segment probe branch, the in-batch self-join, AND the fold —
+    * [[admitByBandFrame]]'s law), admit against the standing band
+    * index with the exact-Jaccard confirm served from `docStoreSh`, and
+    * fold the ADMITTED docs' band keys ([[foldAdmitted]]). Returns the
+    * admitted (doc_id, n_shingles) frame, checkpointed and unordered.
     */
   def neardupAdmitAndFold(
-      batch: DataFrame, ix: graft.operators.StandingIndex,
+      batch: DataFrame, ix: StandingIndex,
       batchId: Long, docStoreSh: DataFrame,
       maxEventMs: Long = Long.MaxValue): DataFrame = {
     import batch.sparkSession.implicits._
     val batchSh = shingleDocs(batch).localCheckpoint()
     val bands = minhashBands(batchSh)
       .select($"doc_id", $"band", $"bk").localCheckpoint()
-    val admitted = admitByBandFrame(
-        batchSh, bands, ix.segmentsUpTo(batchId), docStoreSh)
-      .localCheckpoint()
-    ix.foldAt(bands.join(admitted.select($"doc_id"), "doc_id")
-      .select($"doc_id", $"band", $"bk"), batchId + 1, maxEventMs)
-    admitted
+    foldAdmitted(ix, batchId, maxEventMs,
+      admitByBandFrame(batchSh, bands, _, docStoreSh),
+      admitted => bands.join(admitted.select($"doc_id"), "doc_id")
+        .select($"doc_id", $"band", $"bk"))
   }
 
   /** The ONE sketch-frame → index-row spelling for the standing VECTOR
@@ -1752,20 +1686,17 @@ object LlmQueries {
     * subject alike, so bench and gate can never drift: sketch the
     * arriving batch ONCE ([[vectorSketch]], checkpointed — the frame is
     * both the left side of the anti-join chain and its in-batch arm),
-    * anti-join the standing bucket index's strictly-earlier segments
-    * ([[admitByVectorSegments]]), and fold the ADMITTED sketch rows
-    * themselves as segment `batchId + 1`. Returns the admitted
-    * (vec_id, v, nsq, bucket) frame, checkpointed and unordered — one
-    * computation feeds the caller's sink AND the fold.
+    * anti-join the standing bucket index ([[admitByVectorSegments]]),
+    * and fold the ADMITTED sketch rows themselves ([[foldAdmitted]]).
+    * Returns the admitted (vec_id, v, nsq, bucket) frame, checkpointed
+    * and unordered.
     */
   def vectorAdmitAndFold(
-      batch: DataFrame, ix: graft.operators.StandingIndex,
+      batch: DataFrame, ix: StandingIndex,
       batchId: Long, maxEventMs: Long = Long.MaxValue): DataFrame = {
-    val admitted = admitByVectorSegments(
-        vectorSketch(batch).localCheckpoint(), ix.segmentsUpTo(batchId))
-      .localCheckpoint()
-    ix.foldAt(vectorIndexRows(admitted), batchId + 1, maxEventMs)
-    admitted
+    val sketch = vectorSketch(batch).localCheckpoint()
+    foldAdmitted(ix, batchId, maxEventMs,
+      admitByVectorSegments(sketch, _), vectorIndexRows)
   }
 
   /** The ONE vector-sketch spelling (q28's planes): (vec_id, embedding)
@@ -1781,34 +1712,23 @@ object LlmQueries {
       .withColumn("bucket", VectorOps.signLshBucket($"v", planes))
   }
 
-  /** The STANDING-INDEX spelling of q80's embedding admission: probe a
-    * materialized sign-LSH bucket index (`bucket`, `blocker`, `bv`,
-    * `bn` — [[vectorIndexRows]] over the corpus sketch, persisted at
-    * ingest) with a new vector batch ([[vectorSketch]] output) and admit
-    * a vector unless a bucket collision in the index, or a smaller-id
-    * one in the batch (q75's pairwise first-wins rule), confirms with
-    * the integer-scaled cosine ≥ 0.4 — [[admitByVectorSegments]] on a
-    * one-segment index. q80 is the single-table spelling of exactly this
-    * plan; ScaleProbe's ingest axis times THIS function against an
-    * index grown 100× under a fixed batch. Every join is keyed by the
-    * batch's buckets, never the corpus.
-    */
-  def admitByVectorIndex(batch: DataFrame, index: DataFrame): DataFrame =
-    admitByVectorSegments(batch, Seq(index))
-
-  /** [[admitByVectorIndex]] over a SEGMENTED standing vector index
-    * ([[graft.operators.StandingIndex]]'s read path, q90's maintenance
-    * shape), as a chain of left-anti joins: the batch anti-joins each
-    * segment in turn, then the batch itself for the earlier-wins rule.
-    * Every arm's condition is `bucket` equality plus the exact
-    * integer-scaled cosine ≥ 0.4 (and `blocker < vec_id` on the batch
-    * arm), so a vector survives iff no segment row and no smaller-id
-    * batch row is a confirmed near-duplicate. Sound because NOT EXISTS
-    * over `seg_0 ∪ … ∪ seg_N ∪ batch` is the AND of NOT EXISTS over each
-    * part — the same distribution-over-segments argument as
-    * [[admitByBandSegments]], and the shape [[admitAndFold]] uses for
-    * fingerprints. Each arm is one join, zero-exchange on a bucketed
-    * segment's side.
+  /** The vector modality's ONE admission spelling, called by q80, q90,
+    * the vector fold gates' [[vectorAdmitAndFold]] and ScaleProbe's
+    * ingest axis: probe a SEGMENTED standing sign-LSH bucket index (each
+    * segment `bucket`, `blocker`, `bv`, `bn` — [[vectorIndexRows]] over
+    * the corpus sketch, persisted at ingest) with a new vector batch
+    * ([[vectorSketch]] output) as a chain of left-anti joins: the batch
+    * anti-joins each segment in turn, then the batch itself for the
+    * earlier-wins rule (q75's pairwise first-wins). Every arm's
+    * condition is `bucket` equality plus the exact integer-scaled
+    * cosine ≥ 0.4 (and `blocker < vec_id` on the batch arm), so a vector
+    * survives iff no segment row and no smaller-id batch row is a
+    * confirmed near-duplicate. Sound because NOT EXISTS over
+    * `seg_0 ∪ … ∪ seg_N ∪ batch` is the AND of NOT EXISTS over each part
+    * — the same distribution-over-segments argument as
+    * [[admitByBandFrame]], and the shape [[admitByFingerprint]] uses.
+    * Each arm is one join, keyed by the batch's buckets and
+    * zero-exchange on a bucketed segment's side.
     *
     * Returns the admitted batch rows (`vec_id`, `v`, `nsq`, `bucket`),
     * UNORDERED: [[vectorIndexRows]] of the result is exactly what a fold
@@ -1986,7 +1906,7 @@ object LlmQueries {
     * probe), and a vector is admitted unless a bucket collision confirms
     * as a semantic near-duplicate (exact integer-scaled cosine ≥ 0.4) in
     * the corpus or earlier in the batch (first-wins, q75's pairwise
-    * rule) — [[admitByVectorIndex]]'s anti-join chain, sorted here for
+    * rule) — [[admitByVectorSegments]]'s anti-join chain, sorted here for
     * emission. Same corpus/incoming split primitive as q73/q75
     * (content-hash uniform over vec_id).
     *
@@ -2002,39 +1922,24 @@ object LlmQueries {
     val sv = vectorSketch(Tables.embeddings(s, dir))
       .withColumn("incoming", Sampling.uniform01($"vec_id") < 0.3)
       .localCheckpoint()
-    admitByVectorIndex(
+    admitByVectorSegments(
         sv.filter($"incoming").drop("incoming"),
-        vectorIndexRows(sv.filter(!$"incoming")))
+        Seq(vectorIndexRows(sv.filter(!$"incoming"))))
       .select($"vec_id", $"bucket")
       .orderBy($"vec_id")
   }
 
   val q80Oracle: String = {
-    val planesSql = planes.map(_.mkString("[", ", ", "]")).mkString("[", ", ", "]")
     val u = Sampling.duckUniform01("CAST(vec_id AS VARCHAR)")
-    s"""WITH sv AS (
-       |  SELECT vec_id,
-       |    list_transform(embedding, x -> CAST(trunc(CAST(x AS DOUBLE) * 10000000.0) AS BIGINT)) AS v,
-       |    $u < 0.3 AS incoming
-       |  FROM embeddings),
-       |nn AS (SELECT vec_id, v, incoming,
-       |         CAST(list_sum(list_transform(v, x -> x * x)) AS BIGINT) AS nsq FROM sv),
-       |pl AS (SELECT $planesSql AS m),
-       |proj AS (
-       |  SELECT vec_id, p, sum(v[i] * m[p + 1][i]) AS s
-       |  FROM nn, pl,
-       |       unnest(generate_series(0, ${NumPlanes - 1})) tp(p),
-       |       unnest(generate_series(1, len(v))) ti(i)
-       |  GROUP BY vec_id, p),
-       |buck AS (
-       |  SELECT vec_id, string_agg(CASE WHEN s > 0 THEN '1' ELSE '0' END, '' ORDER BY p) AS bucket
-       |  FROM proj GROUP BY vec_id),
+    s"""WITH $vecSketchCtes,
+       |$vecBucketCtes,
+       |flags AS (SELECT vec_id, $u < 0.3 AS incoming FROM embeddings),
        |cand AS (
        |  SELECT a.vec_id, b.vec_id AS blocker
        |  FROM buck a
-       |  JOIN nn fa ON fa.vec_id = a.vec_id AND fa.incoming
+       |  JOIN flags fa ON fa.vec_id = a.vec_id AND fa.incoming
        |  JOIN buck b ON b.bucket = a.bucket
-       |  JOIN nn fb ON fb.vec_id = b.vec_id
+       |  JOIN flags fb ON fb.vec_id = b.vec_id
        |  WHERE (NOT fb.incoming) OR b.vec_id < a.vec_id),
        |dt AS (
        |  SELECT c.vec_id, c.blocker, na.nsq AS qn, nb.nsq AS bn,
@@ -2047,11 +1952,11 @@ object LlmQueries {
        |rejected AS (
        |  SELECT DISTINCT vec_id FROM dt
        |  WHERE CAST(dot AS DOUBLE) / sqrt(CAST(qn AS DOUBLE)) / sqrt(CAST(bn AS DOUBLE)) >= 0.4)
-       |SELECT s.vec_id, buck.bucket
-       |FROM sv s
-       |JOIN buck ON buck.vec_id = s.vec_id
-       |WHERE s.incoming AND s.vec_id NOT IN (SELECT vec_id FROM rejected)
-       |ORDER BY s.vec_id""".stripMargin
+       |SELECT f.vec_id, buck.bucket
+       |FROM flags f
+       |JOIN buck ON buck.vec_id = f.vec_id
+       |WHERE f.incoming AND f.vec_id NOT IN (SELECT vec_id FROM rejected)
+       |ORDER BY f.vec_id""".stripMargin
   }
 
   // ---------------------------------------------------------------- q81
@@ -2087,64 +1992,33 @@ object LlmQueries {
     val bands = minhashBands(base.select($"doc_id", $"sh"))
       .join(base.select($"doc_id", $"split"), "doc_id")
     val cand = bands.filter($"split" === "test")
-      .select($"doc_id".as("test_doc_id"), $"band", $"bk")
+      .select($"doc_id".as("doc_a"), $"band", $"bk")
       .join(bands.filter($"split" === "train")
-        .select($"doc_id".as("train_doc_id"), $"band", $"bk"), Seq("band", "bk"))
-      .select($"test_doc_id", $"train_doc_id").distinct()
-    // size prefilter below the array join-back (round 18, guide §3.2):
-    // J ≥ 0.8 needs shingle-set sizes within 5:4, checked on one int per
-    // doc before any candidate pulls full arrays (neardupPairs' rule)
-    val sizes = base.select($"doc_id", size($"sh").as("n"))
-    val slim = cand
-      .join(sizes.select($"doc_id".as("test_doc_id"), $"n".as("nt")), "test_doc_id")
-      .join(sizes.select($"doc_id".as("train_doc_id"), $"n".as("nr")), "train_doc_id")
-      .filter(least($"nt", $"nr") * 5 >= greatest($"nt", $"nr") * 4)
-      .select($"test_doc_id", $"train_doc_id")
-    slim
-      .join(base.select($"doc_id".as("test_doc_id"), $"sh".as("sh_t")), "test_doc_id")
-      .join(base.select($"doc_id".as("train_doc_id"), $"sh".as("sh_r")), "train_doc_id")
-      .withColumn("common", size(array_intersect($"sh_t", $"sh_r")))
-      .filter($"common".cast("double") /
-        (size($"sh_t") + size($"sh_r") - $"common") >= 0.8)
-      .select($"test_doc_id", $"train_doc_id", $"common",
-        size($"sh_t").as("n_test_sh"), size($"sh_r").as("n_train_sh"))
+        .select($"doc_id".as("doc_b"), $"band", $"bk"), Seq("band", "bk"))
+      .select($"doc_a", $"doc_b").distinct()
+    confirmPairs(cand, base.select($"doc_id", $"sh"))
+      .select($"doc_a".as("test_doc_id"), $"doc_b".as("train_doc_id"),
+        $"common_shingles".as("common"),
+        size($"sh_a").as("n_test_sh"), size($"sh_b").as("n_train_sh"))
       .orderBy($"test_doc_id", $"train_doc_id")
   }
 
   val q81Oracle: String = {
     val normSql = "lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))"
     val h = Sampling.duckHash60(normSql)
-    val abRows = minhashAB.zipWithIndex
-      .map { case ((a, b), i) => s"($i, $a, $b)" }.mkString(", ")
-    s"""WITH sp AS (
+    s"""WITH $bandKeyCtes,
+      |sp AS (
       |  SELECT doc_id,
       |    CASE WHEN $h % 100 < 80 THEN 'train'
       |         WHEN $h % 100 < 90 THEN 'val'
       |         ELSE 'test' END AS split
       |  FROM documents),
-      |toks AS (
-      |  SELECT doc_id, string_split($normSql, ' ') AS w
-      |  FROM documents),
-      |sh AS (
-      |  SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS s
-      |  FROM toks, unnest(generate_series(1, len(w) - 2)) t(i)),
-      |shx AS (
-      |  SELECT doc_id, s, ${duckHex8("md5(s)", 1)} % $MinhashP AS x
-      |  FROM sh),
-      |seeds AS (SELECT * FROM (VALUES $abRows) t(seed, a, b)),
-      |mh AS (
-      |  SELECT doc_id, seed, min((a * x + b) % $MinhashP) AS m
-      |  FROM shx CROSS JOIN seeds GROUP BY doc_id, seed),
-      |bandkeys AS (
-      |  SELECT doc_id, seed // 3 AS band, string_agg(m::VARCHAR, ':' ORDER BY seed) AS bk
-      |  FROM mh GROUP BY doc_id, seed // 3),
       |cand AS (
       |  SELECT DISTINCT t.doc_id AS test_doc_id, r.doc_id AS train_doc_id
       |  FROM bandkeys t
       |  JOIN sp st ON st.doc_id = t.doc_id AND st.split = 'test'
       |  JOIN bandkeys r ON r.band = t.band AND r.bk = t.bk
       |  JOIN sp sr ON sr.doc_id = r.doc_id AND sr.split = 'train'),
-      |szs AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
       |inter AS (
       |  SELECT c.test_doc_id, c.train_doc_id, count(*) AS i
       |  FROM cand c
@@ -2333,7 +2207,7 @@ object LlmQueries {
     * on the index side (BucketingSpec's maintained-index law), so a
     * 100 TB corpus costs an arriving batch its own band keys, not a
     * corpus re-shuffle. Candidate confirm touches candidate pairs only
-    * (see [[admitByBandSegments]]). The oracle shares q75's band +
+    * (see [[admitByBandFrame]]). The oracle shares q75's band +
     * confirm spellings verbatim and replays the two-phase admission
     * with NOT-EXISTS over confirmed pairs.
     */
@@ -2364,9 +2238,7 @@ object LlmQueries {
       s: SparkSession, dir: String, tag: String,
       compactBetween: Boolean): DataFrame = {
     import s.implicits._
-    val base = Tables.spread(s, Tables.documents(s, dir))
-      .select($"doc_id", TextOps.tokens(TextOps.normText($"text")).as("toks"))
-      .select($"doc_id", TextOps.shingles($"toks", 3).as("sh"))
+    val base = shingleDocs(Tables.spread(s, Tables.documents(s, dir)))
       .localCheckpoint()
     def u: Column = Sampling.uniform01($"doc_id")
     val corpusSh = base.filter(u >= 0.3).select($"doc_id", $"sh")
@@ -2443,48 +2315,11 @@ object LlmQueries {
     * and must match the gate's staging exactly.
     */
   def neardupSequentialOracle(
-      grpCase: String, n: Int, horizon: Option[Long] = None): String = {
-    require(n >= 1, s"need at least one batch, got $n")
-    val abRows = minhashAB.zipWithIndex
-      .map { case ((a, b), i) => s"($i, $a, $b)" }.mkString(", ")
-    val admCtes = (1 to n).map { k =>
-      // the shared expiry window ([[horizonWindow]]) — q104/q105's shape
-      val (corpusBlocks, lo) = horizonWindow(k, horizon)
-      val corpusArm = if (corpusBlocks) Seq(s"gb.g = 0") else Seq.empty
-      val earlier = lo.until(k)
-        .map(j => s"(gb.g = $j AND conf.blocker IN (SELECT doc_id FROM adm$j))")
-      val blockerIs = (corpusArm ++ Seq(s"gb.g = $k") ++ earlier).mkString("\n      OR ")
-      s"""adm$k AS MATERIALIZED (
-         |  SELECT g.doc_id FROM grp g
-         |  WHERE g.g = $k AND NOT EXISTS (
-         |    SELECT 1 FROM conf
-         |    JOIN grp gb ON gb.doc_id = conf.blocker
-         |    WHERE conf.doc_id = g.doc_id
-         |      AND ($blockerIs)))""".stripMargin
-    }.mkString(",\n")
-    val outArms = (1 to n)
-      .map(k => s"  SELECT doc_id, $k AS batch FROM adm$k")
-      .mkString("\n  UNION ALL\n")
-    s"""WITH toks AS MATERIALIZED (
-      |  SELECT doc_id, string_split(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ' ') AS w
-      |  FROM documents),
-      |sh AS MATERIALIZED (
-      |  SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS s
-      |  FROM toks, unnest(generate_series(1, len(w) - 2)) t(i)),
-      |shx AS MATERIALIZED (
-      |  SELECT doc_id, s, ${duckHex8("md5(s)", 1)} % $MinhashP AS x
-      |  FROM sh),
-      |seeds AS MATERIALIZED (SELECT * FROM (VALUES $abRows) t(seed, a, b)),
-      |mh AS MATERIALIZED (
-      |  SELECT doc_id, seed, min((a * x + b) % $MinhashP) AS m
-      |  FROM shx CROSS JOIN seeds GROUP BY doc_id, seed),
-      |bandkeys AS MATERIALIZED (
-      |  SELECT doc_id, seed // 3 AS band, string_agg(m::VARCHAR, ':' ORDER BY seed) AS bk
-      |  FROM mh GROUP BY doc_id, seed // 3),
+      grpCase: String, n: Int, horizon: Option[Long] = None): String =
+    s"""WITH $bandKeyCtes,
       |grp AS MATERIALIZED (
       |  SELECT doc_id, $grpCase AS g
       |  FROM documents),
-      |szs AS MATERIALIZED (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
       |cand AS MATERIALIZED (
       |  SELECT DISTINCT i.doc_id AS doc_id, c.doc_id AS blocker
       |  FROM bandkeys i
@@ -2504,12 +2339,44 @@ object LlmQueries {
       |  JOIN szs na ON na.doc_id = inter.doc_id
       |  JOIN szs nb ON nb.doc_id = inter.blocker
       |  WHERE CAST(i AS DOUBLE) / (na.n + nb.n - i) >= 0.8),
-      |$admCtes,
-      |out AS MATERIALIZED (
-      |$outArms)
+      |${sequentialAdmissionCtes("doc_id", n, horizon)}
       |SELECT out.doc_id, out.batch, CAST(coalesce(szs.n, 0) AS INT) AS n_shingles
       |FROM out LEFT JOIN szs ON szs.doc_id = out.doc_id
       |ORDER BY out.doc_id""".stripMargin
+
+  /** The ONE `adm$k` unroller behind both sequential oracles
+    * ([[neardupSequentialOracle]], [[vectorSequentialOracle]]): over a
+    * `grp` CTE (`id`, g = the doc's group, 0 = corpus) and a `conf` CTE
+    * (`id`, blocker = a confirmed near-duplicate of it), batch k admits
+    * each of its ids that no blocker inside the shared expiry window
+    * ([[horizonWindow]]) confirms — the corpus, a same-batch smaller id
+    * (`conf` only holds those), or an ADMITTED id of an earlier batch.
+    * Returns the CTEs `adm1 … adm<n>` and `out` (`id`, batch), each
+    * MATERIALIZED, ready to follow the caller's `conf`.
+    */
+  private def sequentialAdmissionCtes(
+      id: String, n: Int, horizon: Option[Long]): String = {
+    require(n >= 1, s"need at least one batch, got $n")
+    val admCtes = (1 to n).map { k =>
+      val (corpusBlocks, lo) = horizonWindow(k, horizon)
+      val corpusArm = if (corpusBlocks) Seq(s"gb.g = 0") else Seq.empty
+      val earlier = lo.until(k)
+        .map(j => s"(gb.g = $j AND conf.blocker IN (SELECT $id FROM adm$j))")
+      val blockerIs = (corpusArm ++ Seq(s"gb.g = $k") ++ earlier).mkString("\n      OR ")
+      s"""adm$k AS MATERIALIZED (
+         |  SELECT g.$id FROM grp g
+         |  WHERE g.g = $k AND NOT EXISTS (
+         |    SELECT 1 FROM conf
+         |    JOIN grp gb ON gb.$id = conf.blocker
+         |    WHERE conf.$id = g.$id
+         |      AND ($blockerIs)))""".stripMargin
+    }.mkString(",\n")
+    val outArms = (1 to n)
+      .map(k => s"  SELECT $id, $k AS batch FROM adm$k")
+      .mkString("\n  UNION ALL\n")
+    s"""$admCtes,
+       |out AS MATERIALIZED (
+       |$outArms)""".stripMargin
   }
 
   val q89Oracle: String = {
@@ -2577,43 +2444,9 @@ object LlmQueries {
     * `StandingIndex.expire` enforces at runtime.
     */
   def vectorSequentialOracle(
-      grpCase: String, n: Int, horizon: Option[Long] = None): String = {
-    require(n >= 1, s"need at least one batch, got $n")
-    val planesSql = planes.map(_.mkString("[", ", ", "]")).mkString("[", ", ", "]")
-    val admCtes = (1 to n).map { k =>
-      // the shared expiry window ([[horizonWindow]]) — q102/q103's shape
-      val (corpusBlocks, lo) = horizonWindow(k, horizon)
-      val corpusArm = if (corpusBlocks) Seq(s"gb.g = 0") else Seq.empty
-      val earlier = lo.until(k)
-        .map(j => s"(gb.g = $j AND conf.blocker IN (SELECT vec_id FROM adm$j))")
-      val blockerIs = (corpusArm ++ Seq(s"gb.g = $k") ++ earlier).mkString("\n      OR ")
-      s"""adm$k AS MATERIALIZED (
-         |  SELECT g.vec_id FROM grp g
-         |  WHERE g.g = $k AND NOT EXISTS (
-         |    SELECT 1 FROM conf
-         |    JOIN grp gb ON gb.vec_id = conf.blocker
-         |    WHERE conf.vec_id = g.vec_id
-         |      AND ($blockerIs)))""".stripMargin
-    }.mkString(",\n")
-    val outArms = (1 to n)
-      .map(k => s"  SELECT vec_id, $k AS batch FROM adm$k")
-      .mkString("\n  UNION ALL\n")
-    s"""WITH sv AS MATERIALIZED (
-       |  SELECT vec_id,
-       |    list_transform(embedding, x -> CAST(trunc(CAST(x AS DOUBLE) * 10000000.0) AS BIGINT)) AS v
-       |  FROM embeddings),
-       |nn AS MATERIALIZED (SELECT vec_id, v,
-       |         CAST(list_sum(list_transform(v, x -> x * x)) AS BIGINT) AS nsq FROM sv),
-       |pl AS MATERIALIZED (SELECT $planesSql AS m),
-       |proj AS MATERIALIZED (
-       |  SELECT vec_id, p, sum(v[i] * m[p + 1][i]) AS s
-       |  FROM nn, pl,
-       |       unnest(generate_series(0, ${NumPlanes - 1})) tp(p),
-       |       unnest(generate_series(1, len(v))) ti(i)
-       |  GROUP BY vec_id, p),
-       |buck AS MATERIALIZED (
-       |  SELECT vec_id, string_agg(CASE WHEN s > 0 THEN '1' ELSE '0' END, '' ORDER BY p) AS bucket
-       |  FROM proj GROUP BY vec_id),
+      grpCase: String, n: Int, horizon: Option[Long] = None): String =
+    s"""WITH $vecSketchCtes,
+       |$vecBucketCtes,
        |grp AS MATERIALIZED (
        |  SELECT vec_id, $grpCase AS g
        |  FROM embeddings),
@@ -2635,13 +2468,10 @@ object LlmQueries {
        |conf AS MATERIALIZED (
        |  SELECT vec_id, blocker FROM dt
        |  WHERE CAST(dot AS DOUBLE) / sqrt(CAST(qn AS DOUBLE)) / sqrt(CAST(bn AS DOUBLE)) >= 0.4),
-       |$admCtes,
-       |out AS MATERIALIZED (
-       |$outArms)
+       |${sequentialAdmissionCtes("vec_id", n, horizon)}
        |SELECT out.vec_id, out.batch, buck.bucket
        |FROM out JOIN buck ON buck.vec_id = out.vec_id
        |ORDER BY out.vec_id""".stripMargin
-  }
 
   val q90Oracle: String = {
     val u = Sampling.duckUniform01("CAST(vec_id AS VARCHAR)")

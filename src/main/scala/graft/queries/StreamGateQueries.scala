@@ -313,12 +313,24 @@ object StreamGateQueries {
     // (`eventsSchema`), carry TimestampType.
     withConf(s, "spark.sql.legacy.parquet.nanosAsLong" -> "true") {
       val src = Tables.normalizeTs(
-          s.read.option("basePath", dir).parquet(s"$dir/events*.parquet"))
+          s.read.option("basePath", dir).parquet(globbed(s, s"$dir/events*.parquet"): _*))
         .select($"event_id", $"ts", $"user_id", $"event_type", $"value", $"props")
         .withColumn("_k", sortKey.cast("double"))
       sliceByKey(staged, tag, src, n, filePrefix = "events")
     }
     staged.toString
+  }
+
+  /** The paths `glob` matches, sorted — what the events staging read
+    * and [[streamGate]]'s batch-sink read-back pass to `parquet(...)`
+    * instead of the glob itself: given ONE glob path, Spark's
+    * streaming-sink metadata probe stats it as a literal path and logs
+    * a FileNotFoundException trace per read.
+    */
+  private def globbed(s: SparkSession, glob: String): Seq[String] = {
+    val p = new org.apache.hadoop.fs.Path(glob)
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).globStatus(p)
+      .map(_.getPath.toString).toSeq.sorted
   }
 
   /** The shared quantile slicer behind [[stageTimeSplit]] (events, keyed
@@ -1019,21 +1031,20 @@ object StreamGateQueries {
   }
 
   /** q84's admission stream over a staged doc split: fingerprints
-    * computed map-side, a stream–static LEFT-ANTI probe of the corpus's
-    * fingerprint index, and the update-mode first-wins agg (q84's
+    * computed map-side, then [[LlmQueries.admitByFingerprint]] against
+    * the corpus's fingerprint index as its one segment — a stream–static
+    * LEFT-ANTI probe and the update-mode first-wins agg (q84's
     * scaladoc) — shared by q84 and q87.
     */
   private def admission(s: SparkSession, dir: String)(src: String): DataFrame = {
     import s.implicits._
-    s.readStream
-      .schema(StructType(docFields))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src)
-      .select($"doc_id", fingerprint($"text"))
-      .join(fingerprintCorpus(s, dir), Seq("fingerprint"), "left_anti")
-      .groupBy($"fingerprint")
-      .agg(min($"doc_id").as("doc_id"), count(lit(1)).as("batch_dups"))
-      .select($"doc_id", $"fingerprint", $"batch_dups")
+    LlmQueries.admitByFingerprint(
+      s.readStream
+        .schema(StructType(docFields))
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+        .select($"doc_id", fingerprint($"text")),
+      Seq(fingerprintCorpus(s, dir)))
   }
 
   /** The RocksDB state store provider — the memory-bounded,
@@ -1233,12 +1244,12 @@ object StreamGateQueries {
     dropStaged(staged, src)
     sink match {
       case Sink.Parquet => s.read.parquet(out)
-      case Sink.Batches(_, None) => s.read.parquet(s"$out/batch_*")
-      case Sink.Batches(_, Some(key)) =>
-        s.read.parquet(s"$out/batch_*")
+      case Sink.Batches(_, latestBy) =>
+        val all = s.read.parquet(globbed(s, s"$out/batch_*"): _*)
+        latestBy.fold(all)(key => all
           .withColumn("_latest", max(col("_batch")).over(Window.partitionBy(col(key))))
           .filter(col("_batch") === col("_latest"))
-          .drop("_batch", "_latest")
+          .drop("_batch", "_latest"))
     }
   }
 
@@ -1859,17 +1870,12 @@ object StreamGateQueries {
             .join(result.filter($"batch" > ExpiryHorizon).select($"doc_id"), "doc_id")
             .localCheckpoint()
           val lateCand = LlmQueries.minhashBands(lateSh)
-            .select($"doc_id", $"band", $"bk")
-            .join(corpusBands.select($"doc_id".as("blocker"), $"band", $"bk"),
+            .select($"doc_id".as("doc_a"), $"band", $"bk")
+            .join(corpusBands.select($"doc_id".as("doc_b"), $"band", $"bk"),
               Seq("band", "bk"))
-            .select($"doc_id", $"blocker").distinct()
-          val reopened = lateCand
-            .join(lateSh.select($"doc_id", $"sh".as("sh_i")), "doc_id")
-            .join(docStoreSh.select($"doc_id".as("blocker"), $"sh".as("sh_b")), "blocker")
-            .withColumn("common", size(array_intersect($"sh_i", $"sh_b")))
-            .filter($"common".cast("double") /
-              (size($"sh_i") + size($"sh_b") - $"common") >= 0.8)
-            .select($"doc_id").distinct().count()
+            .select($"doc_a", $"doc_b").distinct()
+          val reopened = LlmQueries.confirmPairs(lateCand, docStoreSh)
+            .select($"doc_a").distinct().count()
           require(reopened > 0,
             s"$tag must admit at least one post-expiry corpus near-duplicate, got none")
         })

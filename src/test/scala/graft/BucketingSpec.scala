@@ -144,7 +144,7 @@ class BucketingSpec extends AnyFunSuite with LocalSpark {
     // standing data is never rewritten, and the next batch's candidate
     // probe plans zero (band, bk) exchanges against EVERY segment,
     // old and folded alike. Candidate generation distributes over
-    // segments (admitByBandSegments' soundness argument), so the union
+    // segments (admitByBandFrame's soundness argument), so the union
     // of per-segment candidates must equal the unbucketed single-join
     // candidates against the full updated index.
     val base = Tables.documents(spark, sf)
@@ -335,18 +335,10 @@ class BucketingSpec extends AnyFunSuite with LocalSpark {
     ix.init(Seq((1L, 0, "x")).toDF("doc_id", "band", "bk"))
     Seq((9L, 1, "q")).toDF("doc_id", "band", "bk")
       .write.mode("overwrite").saveAsTable("law_collide_ix_seg1")
-    val wh = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"))
-    val fs = wh.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val nextVer = fs.globStatus(
-        new org.apache.hadoop.fs.Path(wh, "_law_collide_ix_segments.v*"))
-      .map(_.getPath.getName.takeRight(19).toLong).max + 1
-    val out = fs.create(new org.apache.hadoop.fs.Path(wh,
-      "_law_collide_ix_segments.v" + "%019d".format(nextVer)), false)
     val max = Long.MaxValue
-    try out.write(
-      (s"law_collide_ix_seg0|0|$max|$max,law_collide_ix_seg1|0|$max|$max\n" +
-        "\nhwm|0|0").getBytes("UTF-8"))
-    finally out.close()
+    forgePointer("law_collide_ix",
+      s"law_collide_ix_seg0|0|$max|$max,law_collide_ix_seg1|0|$max|$max\n" +
+        "\nhwm|0|0")
     val e = intercept[IllegalStateException] {
       ix.fold(Seq((2L, 0, "y")).toDF("doc_id", "band", "bk"))
     }
@@ -354,6 +346,33 @@ class BucketingSpec extends AnyFunSuite with LocalSpark {
     // the losing delta was NOT published and the committed segment is intact
     assert(ix.segments.last.collect().map(_.getLong(0)).toSeq === Seq(9L))
     spark.sql("DROP TABLE IF EXISTS law_collide_ix_seg1")
+  }
+
+  /** Commit `body` as index `name`'s next pointer version by hand — a
+    * forged state no fold/compact/expire would write.
+    */
+  private def forgePointer(name: String, body: String): Unit = {
+    val wh = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"))
+    val fs = wh.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val nextVer = fs.globStatus(new org.apache.hadoop.fs.Path(wh, s"_${name}_segments.v*"))
+      .map(_.getPath.getName.takeRight(19).toLong).max + 1
+    val out = fs.create(new org.apache.hadoop.fs.Path(wh,
+      s"_${name}_segments.v" + "%019d".format(nextVer)), false)
+    try out.write(body.getBytes("UTF-8")) finally out.close()
+  }
+
+  test("StandingIndex refuses a pointer entry no writer produces: a forged 3-field entry fails as unparseable") {
+    val ss = spark; import ss.implicits._
+    import graft.operators.StandingIndex
+    // every commit writes 4-field `table|cover|maxEventMs|minEventMs`
+    // entries and an `hwm|` line; any other entry must fail by name
+    // rather than be read under guessed semantics
+    val ix = new StandingIndex(spark, "law_forged_ix", 2, Seq("band", "bk"))
+    ix.init(Seq((1L, 0, "x")).toDF("doc_id", "band", "bk"))
+    val max = Long.MaxValue
+    forgePointer("law_forged_ix", s"law_forged_ix_seg0|0|$max\n\nhwm|0|0")
+    val e = intercept[IllegalStateException](ix.segments)
+    assert(e.getMessage.contains("pointer entry unparseable"), e.getMessage)
   }
 
   test("StandingIndex foldAt is replay-idempotent: same-id refold overwrites, pointer gains the id once, earlier-only reads exclude it") {

@@ -5,6 +5,7 @@ import java.nio.file.Paths
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.LlmQueries
+import graft.queries.LlmQueries.vectorIndexRows
 
 /** ANN recall on STRUCTURED vectors. The testdata embeddings are
   * structure-free random vectors, so the LlmQueriesSpec floors there are
@@ -120,8 +121,6 @@ class ClusteredAnnSpec extends AnyFunSuite with LocalSpark {
       .join(spark.read.parquet(s"$fixDir/embeddings.parquet")
         .select($"vec_id", $"label"), "vec_id")
       .localCheckpoint()
-    def asIndex(df: DataFrame): DataFrame = df.select($"bucket",
-      $"vec_id".as("blocker"), $"v".as("bv"), $"nsq".as("bn"))
     // searchable corpus = clusters 0..13 minus a held-out probe slice;
     // the admission batch = that slice + clusters 14/15 ENTIRELY held
     // out of the index, so admission is non-vacuous both ways: slice
@@ -132,9 +131,9 @@ class ClusteredAnnSpec extends AnyFunSuite with LocalSpark {
       $"label" >= 14)
     val ix = new StandingIndex(spark, "ann_parity_ix", buckets = 4,
       keys = Seq("bucket"))
-    ix.init(asIndex(corpus.filter($"vec_id" % 3 === 0)))
-    ix.fold(asIndex(corpus.filter($"vec_id" % 3 === 1)))
-    ix.fold(asIndex(corpus.filter($"vec_id" % 3 === 2)))
+    ix.init(vectorIndexRows(corpus.filter($"vec_id" % 3 === 0)))
+    ix.fold(vectorIndexRows(corpus.filter($"vec_id" % 3 === 1)))
+    ix.fold(vectorIndexRows(corpus.filter($"vec_id" % 3 === 2)))
     assert(ix.segments.size == 3)
 
     def admission(segs: Seq[DataFrame]): Set[Long] =
@@ -173,7 +172,7 @@ class ClusteredAnnSpec extends AnyFunSuite with LocalSpark {
     // stated in the quality metric the index is judged by)
     val q = sv.filter($"vec_id" % 50 === 0)
       .select($"vec_id", $"v", $"nsq")
-    val exact = q.crossJoin(asIndex(corpus))
+    val exact = q.crossJoin(vectorIndexRows(corpus))
       .filter($"blocker" =!= $"vec_id")
       .withColumn("cosine",
         VectorOps.cosineFromParts(VectorOps.dotL($"v", $"bv"), $"nsq", $"bn"))
@@ -210,17 +209,15 @@ class ClusteredAnnSpec extends AnyFunSuite with LocalSpark {
       .join(spark.read.parquet(s"$fixDir/embeddings.parquet")
         .select($"vec_id", $"label"), "vec_id")
       .localCheckpoint()
-    def asIndex(df: DataFrame): DataFrame = df.select($"bucket",
-      $"vec_id".as("blocker"), $"v".as("bv"), $"nsq".as("bn"))
     val corpus = sv.filter($"label" <= 13 && $"vec_id" % 31 =!= 0)
     val batch = sv.filter(($"label" <= 13 && $"vec_id" % 31 === 0) ||
       $"label" >= 14)
     val ix = new StandingIndex(spark, "ann_expire_ix", buckets = 4,
       keys = Seq("bucket"))
-    ix.init(asIndex(corpus.filter($"label" <= 4)), maxEventMs = 10L)
-    ix.fold(asIndex(corpus.filter($"label" >= 5 && $"label" <= 9)),
+    ix.init(vectorIndexRows(corpus.filter($"label" <= 4)), maxEventMs = 10L)
+    ix.fold(vectorIndexRows(corpus.filter($"label" >= 5 && $"label" <= 9)),
       maxEventMs = 20L)
-    ix.fold(asIndex(corpus.filter($"label" >= 10)), maxEventMs = 30L)
+    ix.fold(vectorIndexRows(corpus.filter($"label" >= 10)), maxEventMs = 30L)
     def admission(segs: Seq[DataFrame]): Set[Long] =
       LlmQueries.admitByVectorSegments(batch, segs)
         .collect().map(_.getLong(0)).toSet
@@ -245,8 +242,8 @@ class ClusteredAnnSpec extends AnyFunSuite with LocalSpark {
     // the fresh-index twin: only the surviving content, built from scratch
     val fresh = new StandingIndex(spark, "ann_expire_fresh_ix", buckets = 4,
       keys = Seq("bucket"))
-    fresh.init(asIndex(corpus.filter($"label" >= 5 && $"label" <= 9)))
-    fresh.fold(asIndex(corpus.filter($"label" >= 10)))
+    fresh.init(vectorIndexRows(corpus.filter($"label" >= 5 && $"label" <= 9)))
+    fresh.fold(vectorIndexRows(corpus.filter($"label" >= 10)))
     assert(admExp === admission(fresh.segments),
       "the expired index must admit exactly what a fresh survivor index admits")
     assert(topExp === topk(fresh.segments),

@@ -99,12 +99,14 @@ class ExchangeBudgetSpec extends AnyFunSuite with LocalSpark {
     // the corpus stops broadcasting, the anti-join adds its per-side
     // fingerprint shuffles — re-pin deliberately from this spec's report
     "q73_incremental_dedup" -> 2,
-    // ONE band-build agg (r17 single-agg minhash, ReuseExchange-shared
-    // across its uses) + candidate distinct + rejected distinct + final
-    // sort; the shingle join-backs and candidate sides broadcast at
-    // fixture scale, and at 100 TB the corpus side is the bucketed
-    // standing band index (BucketingSpec) — zero-exchange there
-    "q75_incremental_neardup" -> 4,
+    // admitByBandFrame on a one-segment index: the left-anti join's
+    // doc_id shuffle of the batch + the presentation sort. The band
+    // build runs once, checkpointed, before the returned plan (the
+    // materialized probe admitByBandFrame requires); at fixture scale
+    // the candidate and confirm joins broadcast and both distincts plan
+    // no shuffle of their own; at 100 TB the corpus side is the
+    // bucketed standing band index (BucketingSpec) — zero-exchange there
+    "q75_incremental_neardup" -> 2,
     // admission keep-first window (fingerprint) + packing window
     // (split, source, shard — groupBy reuses it) + presentation sort;
     // the corpus anti-join broadcasts at fixture scale (bucketed
@@ -128,10 +130,12 @@ class ExchangeBudgetSpec extends AnyFunSuite with LocalSpark {
     // the bucketed standing index and only the batch shuffles
     // (BucketingSpec's two-segment law: 2 exchanges, none on a segment)
     "q80_embedding_admission" -> 1,
-    // band build aggs + split join-back + cross-split candidate join +
-    // pair distinct + the two shingle fetch-backs + final sort over the
-    // checkpointed shingle frame; candidate sides broadcast at fixture
-    // scale, train side = the standing band index at 100 TB (q75's
+    // over the checkpointed shingle frame: ONE band-build agg
+    // (ReuseExchange-shared by both splits) + the two sides of the
+    // cross-split (band, bk) candidate join + pair distinct + the
+    // presentation sort; the split join-back, confirmPairs' size
+    // prefilter and both shingle fetch-backs broadcast at fixture
+    // scale; train side = the standing band index at 100 TB (q75's
     // bucketed discipline)
     "q81_decontamination" -> 5,
     // PrefixSum's two-phase scan over the checkpointed scalar quality
@@ -149,7 +153,7 @@ class ExchangeBudgetSpec extends AnyFunSuite with LocalSpark {
     // TWO q75-shaped admission rounds over the checkpointed shingle
     // frame (batch-2's round reads the folded standing index, so its
     // candidate branch fans over two bucketed segments); each round's
-    // probe bands are checkpointed (admitByBandSegments), which is what
+    // probe bands are checkpointed (admitByBandFrame), which is what
     // keeps the static count bounded — the (r17: single) band-build agg
     // is paid once for the whole staged table, not per join branch or
     // per round. The fold's own segment write

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -258,56 +259,43 @@ class LlmQueriesSpec extends AnyFunSuite with LocalSpark {
     }
   }
 
-  test("standing-index probe APIs reproduce the single-table gates " +
-      "(q73 ≡ admitByFingerprint, q75 ≡ admitByBandIndex on the split inputs)") {
-    val ss = spark; import ss.implicits._
-    import graft.operators.Sampling
-    val docs = Tables.documents(spark, sf)
-    val norm = TextOps.normText($"text")
-
-    val fp = docs.select($"doc_id", TextOps.bagFingerprint(norm).as("fingerprint"),
-      Sampling.uniform01($"doc_id").as("u"))
-    val probe73 = LlmQueries.admitByFingerprint(
-      fp.filter($"u" < 0.3).select($"doc_id", $"fingerprint"),
-      fp.filter($"u" >= 0.3).select($"fingerprint"))
-    assert(probe73.collect().toSeq ===
-      LlmQueries.q73IncrementalDedup(spark, sf).collect().toSeq)
-
-    val sh = docs.select($"doc_id", TextOps.tokens(norm).as("toks"))
-      .select($"doc_id", TextOps.shingles($"toks", 3).as("sh"))
-    val batchSh = sh.filter(Sampling.uniform01($"doc_id") < 0.3).localCheckpoint()
-    val corpusSh = sh.filter(Sampling.uniform01($"doc_id") >= 0.3).localCheckpoint()
-    val probe75 = LlmQueries.admitByBandIndex(
-      batchSh, LlmQueries.minhashBands(corpusSh), corpusSh)
-    // the probe API returns its admissions unordered; the gate sorts
-    assert(probe75.orderBy($"doc_id").collect().toSeq ===
-      LlmQueries.q75IncrementalNearDup(spark, sf).collect().toSeq)
-  }
-
-  test("candidate generation distributes over index segments " +
-      "(admitByBandSegments ≡ admitByBandIndex under any segmentation)") {
+  test("each modality's admission distributes over index segments: a fixed " +
+      "batch admits the same id-sorted rows against its index as 1, 2 and 3 segments") {
     val ss = spark; import ss.implicits._
     import graft.operators.Sampling
     // the soundness argument behind StandingIndex's O(batch) fold
-    // (q89): probing segment-by-segment and unioning CANDIDATES admits
-    // exactly what one join against the concatenated index admits —
-    // so how history happened to arrive (one bulk load vs many folds)
-    // can never change an admission decision
-    val sh = Tables.documents(spark, sf)
-      .select($"doc_id", TextOps.tokens(TextOps.normText($"text")).as("toks"))
-      .select($"doc_id", TextOps.shingles($"toks", 3).as("sh"))
-    val batchSh = sh.filter(Sampling.uniform01($"doc_id") < 0.3).localCheckpoint()
-    val corpusSh = sh.filter(Sampling.uniform01($"doc_id") >= 0.3).localCheckpoint()
-    val bands = LlmQueries.minhashBands(corpusSh).localCheckpoint()
-    val whole = LlmQueries.admitByBandIndex(batchSh, bands, corpusSh)
-      .orderBy($"doc_id").collect().toSeq
-    val segs = Seq(
-      bands.filter($"doc_id" % 3 === 0),
-      bands.filter($"doc_id" % 3 === 1),
-      bands.filter($"doc_id" % 3 === 2))
-    val segmented = LlmQueries.admitByBandSegments(batchSh, segs, corpusSh)
-      .orderBy($"doc_id").collect().toSeq
-    assert(segmented === whole)
-    assert(whole.nonEmpty)
+    // (q89/q90/q91): probing segment-by-segment admits exactly what one
+    // probe of the concatenated index admits — so how history happened
+    // to arrive (one bulk load vs many folds) can never change an
+    // admission decision
+    val docs = Tables.documents(spark, sf)
+    val incoming = Sampling.uniform01($"doc_id") < 0.3
+    val fp = docs.select($"doc_id",
+      TextOps.bagFingerprint(TextOps.normText($"text")).as("fingerprint")).localCheckpoint()
+    val sh = LlmQueries.shingleDocs(docs).localCheckpoint()
+    val (batchSh, corpusSh) = (sh.filter(incoming), sh.filter(!incoming))
+    val probe = LlmQueries.minhashBands(batchSh).localCheckpoint()
+    val sv = LlmQueries.vectorSketch(Tables.embeddings(spark, sf)).localCheckpoint()
+    val vecIncoming = Sampling.uniform01($"vec_id") < 0.3
+    // (modality, index rows, the id column segments split on, segments
+    // => id-sorted admissions)
+    val modalities: Seq[(String, DataFrame, String, Seq[DataFrame] => DataFrame)] = Seq(
+      ("fingerprint", fp.filter(!incoming), "doc_id",
+        LlmQueries.admitByFingerprint(fp.filter(incoming), _).orderBy($"doc_id")),
+      ("band", LlmQueries.minhashBands(corpusSh).localCheckpoint(), "doc_id",
+        LlmQueries.admitByBandFrame(batchSh, probe, _, corpusSh).orderBy($"doc_id")),
+      ("vector", LlmQueries.vectorIndexRows(sv.filter(!vecIncoming)), "blocker",
+        LlmQueries.admitByVectorSegments(sv.filter(vecIncoming), _)
+          .select($"vec_id", $"bucket").orderBy($"vec_id")))
+    val broken = modalities.flatMap { case (name, index, id, admit) =>
+      def rows(k: Int) =
+        admit((0 until k).map(i => index.filter(col(id) % k === i))).collect().toSeq
+      val whole = rows(1)
+      // non-vacuous: the index blocks at least one batch member
+      val unblocked = admit(Seq(index.filter(lit(false)))).count()
+      assert(unblocked > whole.size, s"$name: the index blocks nothing")
+      Seq(2, 3).filter(rows(_) != whole).map(k => s"$name at $k segments")
+    }
+    assert(broken.isEmpty, s"admissions differ from the one-segment index: $broken")
   }
 }
