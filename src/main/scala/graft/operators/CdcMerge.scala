@@ -52,19 +52,4 @@ object CdcMerge {
       case Drop    => latest.filter(col(deletedCol) =!= "true")
     }
   }
-
-  /** Incremental upsert: merge an incoming batch into an existing snapshot.
-    * Existing rows participate with their stored ordering values, so a stale
-    * batch cannot regress a newer stored row (idempotent, last-write-wins).
-    * This is the `foreachBatch` body for the streaming CDC sink (SURVEY E3).
-    */
-  def upsert(
-      existing: DataFrame,
-      batch: DataFrame,
-      keyCols: Seq[String],
-      orderingCols: Seq[String],
-      deletedCol: String = "__deleted",
-      deleteMode: DeleteMode = Drop): DataFrame =
-    mergeByKey(keyCols, orderingCols, deletedCol, deleteMode)(
-      existing.select(batch.columns.map(col): _*).unionByName(batch))
 }

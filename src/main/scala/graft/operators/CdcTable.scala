@@ -1,10 +1,10 @@
 package graft.operators
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.Comparator
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** An [[CdcTable.incremental]] pull or [[CdcTable.asOf]] read named a
@@ -31,6 +31,12 @@ class InstantUnavailableException(msg: String) extends IllegalStateException(msg
   *    timeline instants — the Hudi incremental query type, O(changes).
   *  - [[asOf]] reads the merged snapshot at a past instant — Hudi time
   *    travel, retention-bounded.
+  *
+  * Each step has one spelling: `_rt` and time travel are the same
+  * snapshot read (one pointer read, one log listing, base ∪ pending
+  * deltas, merge), and [[upsert]]'s next seq, [[bulkInsert]]'s discard
+  * point and incremental pulls' upper bound all come from one
+  * newest-instant rule ([[latestCommit]]).
   *
   * Storage keeps Debezium *rewrite-mode* images: tombstones stay as rows
   * flagged `__deleted='true'` (the reference demos query them:
@@ -91,13 +97,18 @@ class CdcTable(
     * a [[bulkInsert]] RESET discarded: those change images were never
     * folded into the new base, so a pull whose range touches them must
     * be refused loudly (ADVICE r16) instead of reading discarded deltas
-    * during their one cleaner cycle of grace. A two-field pointer from
-    * an older table reads as epoch 0 — no reset on its timeline.
+    * during their one cleaner cycle of grace. Only the three-field form
+    * [[commitMeta]] writes parses; anything else fails loudly as
+    * unparseable, never read under guessed semantics.
     */
   private def meta: (Long, Long, Long) =
     if (Files.exists(metaFile)) {
-      val parts = Files.readString(metaFile).trim.split(" ").map(_.toLong)
-      (parts(0), parts(1), if (parts.length > 2) parts(2) else 0L)
+      val text = Files.readString(metaFile).trim
+      text.split(" ").map(_.toLongOption) match {
+        case Array(Some(v), Some(c), Some(epoch)) => (v, c, epoch)
+        case _ => throw new IllegalStateException(
+          s"CdcTable pointer $metaFile unparseable: '$text'")
+      }
     } else (0L, 0L, 0L)
 
   /** Atomic pointer commit — the linearization point of bulkInsert and
@@ -138,6 +149,11 @@ class CdcTable(
   /** Delta commits not yet folded into base version with fold point `c`. */
   private def pendingDeltas(c: Long): Seq[Path] = deltaDirs.filter(deltaSeq(_) > c)
 
+  /** The newest instant over one log listing: the highest delta seq, or
+    * the fold point `c` when the listing holds none above it.
+    */
+  private def newest(deltas: Seq[Path], c: Long): Long = (deltas.map(deltaSeq) :+ c).max
+
   /** The cleaner (retain-one-commit): called AFTER a pointer commit with
     * the state that was already superseded BEFORE this change — so every
     * artifact survives exactly one extra table-state change for in-flight
@@ -155,15 +171,15 @@ class CdcTable(
     */
   private def clean(prevV: Long, prevC: Long,
       stagingCutoff: java.nio.file.attribute.FileTime): Unit = {
-    (1L until prevV).foreach(v => deleteRecursively(Paths.get(baseDir(v))))
-    deltaDirs.filter(deltaSeq(_) <= prevC).foreach(deleteRecursively)
+    (1L until prevV).foreach(v => FileUtils.deleteDirectory(new java.io.File(baseDir(v))))
+    deltaDirs.filter(deltaSeq(_) <= prevC).foreach(d => FileUtils.deleteDirectory(d.toFile))
     val p = Paths.get(logDir)
     if (Files.exists(p)) {
       val st = Files.list(p)
       try st.iterator().asScala.toSeq
         .filter(f => f.getFileName.toString.startsWith(".staging_delta_") &&
           Files.getLastModifiedTime(f).compareTo(stagingCutoff) < 0)
-        .foreach(deleteRecursively)
+        .foreach(f => FileUtils.deleteDirectory(f.toFile))
       finally st.close()
     }
   }
@@ -186,7 +202,7 @@ class CdcTable(
   def bulkInsert(changelog: DataFrame): Unit = {
     val (v, c, _) = meta
     val cutoff = metaMtime
-    val discardThrough = (deltaDirs.map(deltaSeq) :+ c).max
+    val discardThrough = latestCommit
     merge(changelog, CdcMerge.Rewrite).write
       .mode(SaveMode.Overwrite)
       .partitionBy(partitionCol)
@@ -216,7 +232,7 @@ class CdcTable(
     val missing = required.filterNot(batch.columns.contains)
     require(missing.isEmpty,
       s"change batch is missing merge-critical column(s) ${missing.mkString(",")}")
-    commitDelta(batch, (deltaDirs.map(deltaSeq) :+ meta._2).max + 1)
+    commitDelta(batch, latestCommit + 1)
   }
 
   /** Publish a change batch as delta commit `seq`, atomically.
@@ -245,7 +261,7 @@ class CdcTable(
     try Files.move(staging, dst, StandardCopyOption.ATOMIC_MOVE)
     catch {
       case e: java.nio.file.FileSystemException if Files.exists(dst) =>
-        deleteRecursively(staging)
+        FileUtils.deleteDirectory(staging.toFile)
         throw new IllegalStateException(
           s"concurrent writer detected: delta commit $seq already exists — " +
             "CdcTable writes are single-writer (see class doc); this batch was NOT committed", e)
@@ -263,7 +279,7 @@ class CdcTable(
     * commit seq, or the base's fold point when the log is empty — the
     * value an incremental consumer checkpoints as its next `since`.
     */
-  def latestCommit: Long = (deltaDirs.map(deltaSeq) :+ meta._2).max
+  def latestCommit: Long = newest(deltaDirs, meta._2)
 
   /** INCREMENTAL QUERY (the Hudi `incremental` query type with
     * begin/end instants — the read mode chained DeltaStreamer pipelines
@@ -297,7 +313,7 @@ class CdcTable(
     // under a concurrent compact+clean and misreport which bound failed)
     val (_, c, epoch) = meta
     val have = deltaDirs
-    val latest = (have.map(deltaSeq) :+ c).max
+    val latest = newest(have, c)
     if (since < epoch) // the range touches seqs a bulkInsert RESET discarded
       throw new InstantUnavailableException(
         s"incremental pull ($since, $until] predates the timeline reset at " +
@@ -324,7 +340,7 @@ class CdcTable(
   /** TIME TRAVEL (the Hudi `as.of.instant` snapshot read): the full
     * merged table state as of instant `seq` — the live base plus the
     * pending deltas up to and including `seq`, latest image per key.
-    * `asOf(latestCommit)` ≡ [[realTime]].
+    * `asOf(latestCommit)` ≡ [[realTime]]; both are one [[snapshot]] read.
     *
     * Travel depth is bounded by cleaner retention, as in Hudi: an
     * instant that predates the live base's fold point needs a superseded
@@ -334,28 +350,8 @@ class CdcTable(
     * contract as [[realTime]]: the (base, deltas) set resolves once,
     * here, and the returned plan holds immutable files.
     */
-  def asOf(seq: Long, mode: CdcMerge.DeleteMode = CdcMerge.Rewrite): DataFrame = {
-    val (v, c, _) = meta
-    requireBase(v)
-    val latest = latestCommit
-    if (seq > latest)
-      throw new InstantUnavailableException(
-        s"as-of instant $seq is beyond the newest commit $latest")
-    if (seq < c)
-      throw new InstantUnavailableException(
-        s"as-of instant $seq predates the live base's fold point $c — its " +
-          "snapshot artifacts may already be collected (time travel is " +
-          "bounded by cleaner retention; see the class doc)")
-    val base = spark.read.parquet(baseDir(v))
-    val dirs = pendingDeltas(c).filter(deltaSeq(_) <= seq)
-    val all =
-      if (dirs.isEmpty) base
-      else base.unionByName(
-        spark.read.option("mergeSchema", "true")
-          .parquet(dirs.map(_.toString): _*),
-        allowMissingColumns = true)
-    merge(all, mode)
-  }
+  def asOf(seq: Long, mode: CdcMerge.DeleteMode = CdcMerge.Rewrite): DataFrame =
+    snapshot(Some(seq), mode)
 
   /** `_rt` view: base ∪ pending log merged at read, latest image per key.
     * The (base version, fold point) snapshot is resolved HERE, once — the
@@ -369,16 +365,36 @@ class CdcTable(
     * — the same read-side union Hudi's real-time view performs. The
     * column ORDER is the base's, with evolved columns appended.
     */
-  def realTime(mode: CdcMerge.DeleteMode = CdcMerge.Rewrite): DataFrame = {
+  def realTime(mode: CdcMerge.DeleteMode = CdcMerge.Rewrite): DataFrame =
+    snapshot(None, mode)
+
+  /** The ONE snapshot read behind [[realTime]] and [[asOf]]: one pointer
+    * read, one log listing, then the live base ∪ the pending deltas up to
+    * instant `seq` (the newest commit when `None`), merged. The single
+    * listing both bounds `seq` and selects the deltas, so `realTime` —
+    * which [[compact]] runs — lists the log once.
+    */
+  private def snapshot(seq: Option[Long], mode: CdcMerge.DeleteMode): DataFrame = {
     val (v, c, _) = meta
     requireBase(v)
-    val base = spark.read.parquet(baseDir(v))
     val pend = pendingDeltas(c)
+    val latest = newest(pend, c)
+    val at = seq.getOrElse(latest)
+    if (at > latest)
+      throw new InstantUnavailableException(
+        s"as-of instant $at is beyond the newest commit $latest")
+    if (at < c)
+      throw new InstantUnavailableException(
+        s"as-of instant $at predates the live base's fold point $c — its " +
+          "snapshot artifacts may already be collected (time travel is " +
+          "bounded by cleaner retention; see the class doc)")
+    val base = spark.read.parquet(baseDir(v))
+    val dirs = pend.filter(deltaSeq(_) <= at)
     val all =
-      if (pend.isEmpty) base
+      if (dirs.isEmpty) base
       else base.unionByName(
         spark.read.option("mergeSchema", "true")
-          .parquet(pend.map(_.toString): _*),
+          .parquet(dirs.map(_.toString): _*),
         allowMissingColumns = true)
     merge(all, mode)
   }
@@ -410,11 +426,4 @@ class CdcTable(
     readOptimized.createOrReplaceTempView(s"${name}_ro")
     realTime().createOrReplaceTempView(s"${name}_rt")
   }
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      val st = Files.walk(p)
-      try st.sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
-      finally st.close()
-    }
 }

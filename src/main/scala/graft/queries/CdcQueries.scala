@@ -1,7 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.io.File
+import java.nio.file.{Files, Paths}
+
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 
 import graft.Tables
 import graft.operators.{CdcMerge, CdcTable}
@@ -9,27 +14,113 @@ import graft.operators.{CdcMerge, CdcTable}
 /** End-to-end CDC lake queries over [[graft.operators.CdcTable]] — the
   * bulk-insert → incremental-upsert → merged-snapshot lifecycle the
   * reference drives with DeltaStreamer (SURVEY K10/S6/ST9).
+  *
+  * Each step of the lifecycle has ONE spelling here, shared by every
+  * gate: [[eventOp]] is the `event_type → __op` mapping (q12's Debezium
+  * envelope calls it too), [[changelog]] the events changelog built from
+  * it, [[freshTable]] the one `CdcTable` construction (key, ordering and
+  * partition columns), [[staged]] a fresh table with third 0
+  * bulk-inserted, [[lifecycle]] the two delta commits on top of it
+  * (q24, q124, q125 and q126's upstream), [[streamUpserted]] the
+  * file-stream upsert drive of q33 and q86 (q86 is q33 run with one
+  * injected crash) and [[liveImages]] the `_rt` answer q24, q33, q86 and
+  * q126 share. On the oracle side, [[latestImages]] is the one DuckDB
+  * latest-image prelude of q12, q24, q124 and q125.
   */
 object CdcQueries {
 
-  private def scratch(name: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_scratch/$name"
-
-  /** Wipe a gate's scratch root so every run stages a FRESH table (and,
-    * for the streaming gates, a fresh checkpoint): a surviving dir would
-    * re-seat the timeline (a re-staged bulkInsert's fold point advances
-    * past the previous run's deltas) or mark incoming-file offsets as
-    * already committed.
+  /** The ONE `event_type → __op` mapping of the events changelog: a
+    * signup creates the user's image, an error deletes it, any other
+    * event updates it.
     */
-  private def freshDir(path: String): Unit = {
-    val p = java.nio.file.Paths.get(path)
-    if (java.nio.file.Files.exists(p)) {
-      val st = java.nio.file.Files.walk(p)
-      try st.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach((f: java.nio.file.Path) => java.nio.file.Files.delete(f))
-      finally st.close()
-    }
+  private[queries] def eventOp(eventType: Column): Column =
+    when(eventType === "signup", "c")
+      .when(eventType === "error", "d")
+      .otherwise("u")
+
+  /** The events-derived Debezium rewrite-mode changelog (q12's lineage):
+    * one change image per event, delete images kept as
+    * `__deleted='true'` rows, ordered by `(__source_ts_ms, event_id)`.
+    */
+  private def changelog(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val op = eventOp($"event_type")
+    Tables.events(s, dir).select(
+      $"user_id", $"event_id", $"value",
+      op.as("__op"),
+      when(op === "d", "true").otherwise("false").as("__deleted"),
+      unix_millis($"ts").as("__source_ts_ms"),
+      $"event_type")
   }
+
+  /** Third `k` of the changelog, the deterministic `event_id % 3` split:
+    * third 0 is the bulk insert, thirds 1 and 2 the two upserts.
+    */
+  private def third(changelog: DataFrame, k: Int): DataFrame =
+    changelog.filter(col("event_id") % 3 === k)
+
+  /** The ONE `CdcTable` of this family (keyed on `user_id`, latest wins by
+    * `(__source_ts_ms, event_id)`, stored by `event_type`) at `path`,
+    * after wiping it so every run stages a FRESH table (and, for the
+    * streaming gates, a fresh checkpoint): a surviving dir would re-seat
+    * the timeline (a re-staged bulkInsert's fold point advances past the
+    * previous run's deltas, so the timeline gates' absolute instants 1
+    * and 2 would not name THESE upserts' commits) or mark incoming-file
+    * offsets as already committed.
+    */
+  private def freshTable(s: SparkSession, path: String): CdcTable = {
+    FileUtils.deleteDirectory(new File(path))
+    new CdcTable(s, path,
+      keyCols = Seq("user_id"),
+      orderingCols = Seq("__source_ts_ms", "event_id"),
+      partitionCol = "event_type")
+  }
+
+  /** The changelog and a fresh table under gate `gate`'s scratch dir with
+    * third 0 bulk-inserted as its base — the start every gate shares.
+    */
+  private def staged(s: SparkSession, dir: String, gate: String): (CdcTable, DataFrame) = {
+    val cl = changelog(s, dir)
+    val table = freshTable(s, SinkQueries.scratch(gate, dir))
+    table.bulkInsert(third(cl, 0))
+    (table, cl)
+  }
+
+  /** [[staged]] plus thirds 1 and 2 upserted as delta commits 1 and 2 —
+    * the batch lifecycle q24 answers from and the timeline-read gates
+    * travel over.
+    */
+  private def lifecycle(s: SparkSession, dir: String, gate: String): CdcTable = {
+    val (table, cl) = staged(s, dir, gate)
+    table.upsert(third(cl, 1)) // delta commit 1
+    table.upsert(third(cl, 2)) // delta commit 2
+    table
+  }
+
+  /** The `_rt` (real-time, base ∪ log) merged snapshot with hard-delete
+    * visibility — the answer of q24 and of every gate that meets q24's
+    * oracle (q33, q86, q126).
+    */
+  private def liveImages(table: CdcTable): DataFrame =
+    table.realTime(CdcMerge.Drop)
+      .select(col("user_id"), col("event_id"), col("value"), col("__op"))
+      .orderBy(col("user_id"))
+
+  /** The ONE latest-image oracle prelude (DuckDB window merge — the flat
+    * oracle of a snapshot, pull or merge over the events `where`
+    * selects): the latest change image per user, with [[eventOp]]'s
+    * mapping and rewrite-mode `__deleted` flags, tombstones kept.
+    */
+  private[queries] def latestImages(where: String): String =
+    s"""SELECT user_id, event_id, value, __op, __deleted FROM (
+       |  SELECT user_id, event_id, value,
+       |    CASE WHEN event_type='signup' THEN 'c'
+       |         WHEN event_type='error'  THEN 'd' ELSE 'u' END AS __op,
+       |    CASE WHEN event_type='error' THEN 'true' ELSE 'false' END AS __deleted,
+       |    row_number() OVER (PARTITION BY user_id
+       |      ORDER BY epoch_ms(CAST(ts AS TIMESTAMP)) DESC, event_id DESC) AS rn
+       |  FROM events WHERE $where) t
+       |WHERE rn = 1""".stripMargin
 
   /** q24 — CDC lake upsert lifecycle: the events-derived rewrite-mode
     * changelog (q12's lineage) is split into three deterministic batches;
@@ -41,41 +132,13 @@ object CdcQueries {
     * key moves (GLOBAL_BLOOM semantics) for the hash to match the
     * oracle's flat window merge over the full changelog.
     */
-  def q24CdcLakeUpsert(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val path = scratch(s"q24_${dir.replaceAll("[^a-zA-Z0-9]", "_")}")
-    val op = when($"event_type" === "signup", "c")
-      .when($"event_type" === "error", "d")
-      .otherwise("u")
-    val changelog = Tables.events(s, dir).select(
-      $"user_id", $"event_id", $"value",
-      op.as("__op"),
-      when(op === "d", "true").otherwise("false").as("__deleted"),
-      unix_millis($"ts").as("__source_ts_ms"),
-      $"event_type")
-    val table = new CdcTable(s, path,
-      keyCols = Seq("user_id"),
-      orderingCols = Seq("__source_ts_ms", "event_id"),
-      partitionCol = "event_type")
-    table.bulkInsert(changelog.filter($"event_id" % 3 === 0))
-    table.upsert(changelog.filter($"event_id" % 3 === 1))
-    table.upsert(changelog.filter($"event_id" % 3 === 2))
-    table.realTime(CdcMerge.Drop)
-      .select($"user_id", $"event_id", $"value", $"__op")
-      .orderBy($"user_id")
-  }
+  def q24CdcLakeUpsert(s: SparkSession, dir: String): DataFrame =
+    liveImages(lifecycle(s, dir, "q24"))
 
   val q24Oracle: String =
-    """SELECT user_id, event_id, value, __op FROM (
-      |  SELECT user_id, event_id, value,
-      |    CASE WHEN event_type='signup' THEN 'c'
-      |         WHEN event_type='error'  THEN 'd' ELSE 'u' END AS __op,
-      |    CASE WHEN event_type='error' THEN 'true' ELSE 'false' END AS __deleted,
-      |    row_number() OVER (PARTITION BY user_id
-      |      ORDER BY epoch_ms(CAST(ts AS TIMESTAMP)) DESC, event_id DESC) AS rn
-      |  FROM events) t
-      |WHERE rn = 1 AND __deleted = 'false'
-      |ORDER BY user_id""".stripMargin
+    s"""SELECT user_id, event_id, value, __op FROM (${latestImages("true")}) i
+       |WHERE __deleted = 'false'
+       |ORDER BY user_id""".stripMargin
 
   /** q33 — q24's lifecycle driven through Structured Streaming: the same
     * changelog thirds, but batches 1 and 2 arrive through a FILE STREAM
@@ -93,51 +156,8 @@ object CdcQueries {
     * per-third `coalesce(1)` only pins one file = one micro-batch for
     * the gate's determinism; production would stream the real topic.)
     */
-  def q33CdcStreamUpsert(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.sql.streaming.Trigger
-    val path = scratch(s"q33_${dir.replaceAll("[^a-zA-Z0-9]", "_")}")
-    // fresh table AND fresh checkpoint: a stale checkpoint would mark the
-    // incoming files' offsets as already committed and skip batches
-    freshDir(path)
-    val op = when($"event_type" === "signup", "c")
-      .when($"event_type" === "error", "d")
-      .otherwise("u")
-    val changelog = Tables.events(s, dir).select(
-      $"user_id", $"event_id", $"value",
-      op.as("__op"),
-      when(op === "d", "true").otherwise("false").as("__deleted"),
-      unix_millis($"ts").as("__source_ts_ms"),
-      $"event_type")
-    val table = new CdcTable(s, path,
-      keyCols = Seq("user_id"),
-      orderingCols = Seq("__source_ts_ms", "event_id"),
-      partitionCol = "event_type")
-    table.bulkInsert(changelog.filter($"event_id" % 3 === 0))
-    // the incoming "topic": thirds 1 and 2 appended as one file each
-    val incomingDir = s"$path/_incoming"
-    changelog.filter($"event_id" % 3 === 1).coalesce(1)
-      .write.mode("append").parquet(incomingDir)
-    changelog.filter($"event_id" % 3 === 2).coalesce(1)
-      .write.mode("append").parquet(incomingDir)
-    val stream = s.readStream
-      .schema(changelog.schema)
-      .option("maxFilesPerTrigger", "1") // one incoming file = one micro-batch
-      .parquet(incomingDir)
-    val query = stream.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$path/_checkpoint")
-      .foreachBatch { (batch: DataFrame, _: Long) => table.upsert(batch) }
-      .start()
-    query.awaitTermination()
-    // the gate's point is per-micro-batch ingestion: fail loudly if the
-    // two incoming files ever collapse into one batch
-    StreamGateQueries.requireMultiBatch(query, "q33", min = 2)
-    table.realTime(CdcMerge.Drop)
-      .select($"user_id", $"event_id", $"value", $"__op")
-      .orderBy($"user_id")
-  }
+  def q33CdcStreamUpsert(s: SparkSession, dir: String): DataFrame =
+    liveImages(streamUpserted(s, dir, "q33", crashes = Seq.empty))
 
   /** q86 — the mid-batch crash applied to the TRANSACTIONAL-TABLE SINK:
     * q33's streaming CDC upsert pipeline, with the `foreachBatch` sink's
@@ -165,102 +185,76 @@ object CdcQueries {
     * VERBATIM — a replay that skipped the batch would lose images, a
     * merge that failed to collapse duplicates would emit extra rows.
     */
-  def q86CdcStreamUpsertCrash(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import java.nio.file.{Files, Paths}
-    import org.apache.spark.sql.streaming.Trigger
-    val path = scratch(s"q86_${dir.replaceAll("[^a-zA-Z0-9]", "_")}")
-    freshDir(path)
-    val op = when($"event_type" === "signup", "c")
-      .when($"event_type" === "error", "d")
-      .otherwise("u")
-    val changelog = Tables.events(s, dir).select(
-      $"user_id", $"event_id", $"value",
-      op.as("__op"),
-      when(op === "d", "true").otherwise("false").as("__deleted"),
-      unix_millis($"ts").as("__source_ts_ms"),
-      $"event_type")
-    val table = new CdcTable(s, path,
-      keyCols = Seq("user_id"),
-      orderingCols = Seq("__source_ts_ms", "event_id"),
-      partitionCol = "event_type")
-    table.bulkInsert(changelog.filter($"event_id" % 3 === 0))
+  def q86CdcStreamUpsertCrash(s: SparkSession, dir: String): DataFrame =
+    liveImages(streamUpserted(s, dir, "q86", crashes = Seq(1L)))
+
+  /** The file-stream upsert drive of q33 and q86: a [[staged]] table,
+    * thirds 1 and 2 appended to the incoming directory as one file each
+    * (the topic-dump stand-in), read back as a file stream whose
+    * `maxFilesPerTrigger=1` makes each file its own micro-batch, and
+    * landed by the checkpointed `foreachBatch → CdcTable.upsert` sink.
+    * Returns the table once a run has drained the stream.
+    *
+    * `crashes` is the crash schedule: the FIRST attempt of each listed
+    * micro-batch throws AFTER its upsert has published the delta but
+    * BEFORE the engine records the batch commit, which ends that run.
+    * Each scheduled crash must provably fire — the run terminates with
+    * the injected message in its cause chain and the marker file exists
+    * — and the next run replays from the crashed batch. The run that
+    * drains must process at least the batches from the last crash on
+    * (both with no crash — the gates' point is per-micro-batch
+    * ingestion, so fail loudly if the two incoming files ever collapse
+    * into one batch), and the log must hold one delta per micro-batch
+    * attempt, crashed ones included: a replayed duplicate genuinely
+    * landed, so the merge genuinely collapsed it.
+    */
+  private def streamUpserted(
+      s: SparkSession, dir: String, gate: String, crashes: Seq[Long]): CdcTable = {
+    val (table, cl) = staged(s, dir, gate)
+    val path = SinkQueries.scratch(gate, dir)
+    // the incoming "topic": thirds 1 and 2 appended as one file each
     val incomingDir = s"$path/_incoming"
-    changelog.filter($"event_id" % 3 === 1).coalesce(1)
-      .write.mode("append").parquet(incomingDir)
-    changelog.filter($"event_id" % 3 === 2).coalesce(1)
-      .write.mode("append").parquet(incomingDir)
-    val failAt = 1L
-    val injectedMsg = s"q86 injected mid-batch failure (first attempt of batch $failAt)"
-    val failMarker = Paths.get(path, "_fail_injected")
-    def runOnce() = s.readStream
-      .schema(changelog.schema)
-      .option("maxFilesPerTrigger", "1")
+    Seq(1, 2).foreach(k => third(cl, k).coalesce(1).write.mode("append").parquet(incomingDir))
+    def injected(id: Long) = s"$gate injected mid-batch failure (first attempt of batch $id)"
+    def marker(id: Long) = Paths.get(path, s"_fail_injected_$id")
+    def run() = s.readStream
+      .schema(cl.schema)
+      .option("maxFilesPerTrigger", "1") // one incoming file = one micro-batch
       .parquet(incomingDir)
       .writeStream
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", s"$path/_checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      .foreachBatch { (batch: DataFrame, id: Long) =>
         // the delta is durably PUBLISHED first: the crash lands between
         // the table commit and the engine's checkpoint acknowledgment
         table.upsert(batch)
-        if (batchId == failAt && !Files.exists(failMarker)) {
-          Files.createFile(failMarker)
-          throw new RuntimeException(injectedMsg)
+        if (crashes.contains(id) && !Files.exists(marker(id))) {
+          Files.createFile(marker(id))
+          throw new RuntimeException(injected(id))
         }
       }
       .start()
-    val run1 = runOnce()
-    val err = try { run1.awaitTermination(); None } catch {
-      case e: Throwable => Some(e)
+    crashes.foreach { id =>
+      val err = try { run().awaitTermination(); None } catch {
+        case e: Throwable => Some(e)
+      }
+      val chain = err.iterator.flatMap(e =>
+        Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).take(10)).toSeq
+      require(chain.exists(t => Option(t.getMessage).exists(_.contains(injected(id)))),
+        s"$gate run must terminate with the injected mid-batch failure at batch $id, got: " +
+          err.fold("clean termination")(_.toString))
+      require(Files.exists(marker(id)), s"$gate fault injection at batch $id did not fire")
     }
-    val chain = err.iterator.flatMap(e =>
-      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).take(10)).toSeq
-    require(chain.exists(t => Option(t.getMessage).exists(_.contains(injectedMsg))),
-      "q86 run 1 must terminate with the injected mid-batch failure, got: " +
-        err.fold("clean termination")(_.toString))
-    require(Files.exists(failMarker), "q86 fault injection did not fire")
-    val run2 = runOnce()
-    run2.awaitTermination()
-    StreamGateQueries.requireMultiBatch(run2, "q86 run2", min = 1) // the replayed batch
-    // the duplicate delta must have genuinely landed: batch 0's, the
-    // crashed attempt's, and the replay's
-    val deltas = Paths.get(path, "log").toFile.listFiles()
-      .count(f => f.isDirectory && f.getName.startsWith("delta_"))
-    require(deltas == 3,
-      s"q86 expects 3 published deltas (batch 0 + crashed attempt + replay), got $deltas")
-    table.realTime(CdcMerge.Drop)
-      .select($"user_id", $"event_id", $"value", $"__op")
-      .orderBy($"user_id")
-  }
-
-  /** The q24 changelog + table staged fresh under `name` — the shared
-    * lifecycle (bulk third 0, upsert thirds 1 and 2 as delta commits 1
-    * and 2) the timeline-read gates travel over.
-    */
-  private def stagedLifecycle(s: SparkSession, dir: String, name: String): CdcTable = {
-    import s.implicits._
-    val path = scratch(s"${name}_${dir.replaceAll("[^a-zA-Z0-9]", "_")}")
-    // fresh table: the gates' absolute instants 1 and 2 must name THESE
-    // upserts' commits (see freshDir)
-    freshDir(path)
-    val op = when($"event_type" === "signup", "c")
-      .when($"event_type" === "error", "d")
-      .otherwise("u")
-    val changelog = Tables.events(s, dir).select(
-      $"user_id", $"event_id", $"value",
-      op.as("__op"),
-      when(op === "d", "true").otherwise("false").as("__deleted"),
-      unix_millis($"ts").as("__source_ts_ms"),
-      $"event_type")
-    val table = new CdcTable(s, path,
-      keyCols = Seq("user_id"),
-      orderingCols = Seq("__source_ts_ms", "event_id"),
-      partitionCol = "event_type")
-    table.bulkInsert(changelog.filter($"event_id" % 3 === 0))
-    table.upsert(changelog.filter($"event_id" % 3 === 1)) // delta commit 1
-    table.upsert(changelog.filter($"event_id" % 3 === 2)) // delta commit 2
+    val drain = run()
+    drain.awaitTermination()
+    StreamGateQueries.requireMultiBatch(drain, gate,
+      min = (2 - crashes.lastOption.getOrElse(0L)).toInt)
+    // delta seqs are dense from 1 on a fresh table, so the newest commit
+    // counts the published deltas
+    val deltas = 2 + crashes.size
+    require(table.latestCommit == deltas,
+      s"$gate expects $deltas published deltas (one per micro-batch attempt), got ${table.latestCommit}")
     table
   }
 
@@ -280,31 +274,28 @@ object CdcQueries {
     * is the whole point of the read mode at 100 TB.
     */
   def q124CdcIncrementalPull(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val table = stagedLifecycle(s, dir, "q124")
+    val table = lifecycle(s, dir, "q124")
     val until = table.latestCommit // 2: the consumer's next checkpoint
-    def tagged(tag: String, pull: DataFrame): DataFrame =
-      pull.select(lit(tag).as("pull"),
-        $"user_id", $"event_id", $"value", $"__op", $"__deleted")
     tagged("pull_1_2", table.incremental(1, until))
       .unionByName(tagged("pull_0_2", table.incremental(0, until)))
-      .orderBy($"pull", $"user_id")
+      .orderBy(col("pull"), col("user_id"))
   }
 
+  /** A timeline read's change images under a `pull` tag — the rows q124
+    * and q125 union and their oracles' [[lifecycleOracle]] arms match.
+    */
+  private def tagged(tag: String, read: DataFrame): DataFrame =
+    read.select(lit(tag).as("pull"),
+      col("user_id"), col("event_id"), col("value"), col("__op"), col("__deleted"))
+
   /** The latest change image per key among the changelog thirds selected
-    * by `residues` (DuckDB window merge — the flat oracle for a pull or
-    * snapshot covering exactly those thirds).
+    * by `residues`, tagged `tag` — the flat oracle for a pull or snapshot
+    * covering exactly those thirds; a snapshot (`tombstones = false`)
+    * hides keys whose latest image is a delete.
     */
   private def lifecycleOracle(tag: String, residues: String, tombstones: Boolean): String =
-    s"""SELECT '$tag' AS pull, user_id, event_id, value, __op, __deleted FROM (
-       |  SELECT user_id, event_id, value,
-       |    CASE WHEN event_type='signup' THEN 'c'
-       |         WHEN event_type='error'  THEN 'd' ELSE 'u' END AS __op,
-       |    CASE WHEN event_type='error' THEN 'true' ELSE 'false' END AS __deleted,
-       |    row_number() OVER (PARTITION BY user_id
-       |      ORDER BY epoch_ms(CAST(ts AS TIMESTAMP)) DESC, event_id DESC) AS rn
-       |  FROM events WHERE event_id % 3 IN ($residues)) t
-       |WHERE rn = 1${if (tombstones) "" else " AND __deleted = 'false'"}""".stripMargin
+    s"""SELECT '$tag' AS pull, * FROM (${latestImages(s"event_id % 3 IN ($residues)")}) i""" +
+      (if (tombstones) "" else "\nWHERE __deleted = 'false'")
 
   val q124Oracle: String =
     lifecycleOracle("pull_1_2", "2", tombstones = true) +
@@ -322,14 +313,10 @@ object CdcQueries {
     * instant reconstructible at read time.
     */
   def q125CdcTimeTravel(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val table = stagedLifecycle(s, dir, "q125")
-    def tagged(tag: String, snap: DataFrame): DataFrame =
-      snap.select(lit(tag).as("pull"),
-        $"user_id", $"event_id", $"value", $"__op", $"__deleted")
+    val table = lifecycle(s, dir, "q125")
     tagged("asof_1", table.asOf(1, CdcMerge.Drop))
       .unionByName(tagged("asof_2", table.asOf(2, CdcMerge.Drop)))
-      .orderBy($"pull", $"user_id")
+      .orderBy(col("pull"), col("user_id"))
   }
 
   val q125Oracle: String =
@@ -363,14 +350,8 @@ object CdcQueries {
     * pins.
     */
   def q126CdcChainedPipeline(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val upstream = stagedLifecycle(s, dir, "q126up")
-    val dnPath = scratch(s"q126dn_${dir.replaceAll("[^a-zA-Z0-9]", "_")}")
-    freshDir(dnPath)
-    val downstream = new CdcTable(s, dnPath,
-      keyCols = Seq("user_id"),
-      orderingCols = Seq("__source_ts_ms", "event_id"),
-      partitionCol = "event_type")
+    val upstream = lifecycle(s, dir, "q126up")
+    val downstream = freshTable(s, SinkQueries.scratch("q126dn", dir))
     downstream.bulkInsert(upstream.asOf(0))
     var ckpt = 0L // the consumer's durable position on the upstream timeline
     while (ckpt < upstream.latestCommit) {
@@ -380,9 +361,7 @@ object CdcQueries {
     // at-least-once replay of the final pull (crash before the
     // checkpoint write): the merge must collapse the duplicate images
     downstream.upsert(upstream.incremental(ckpt - 1, ckpt))
-    downstream.realTime(CdcMerge.Drop)
-      .select($"user_id", $"event_id", $"value", $"__op")
-      .orderBy($"user_id")
+    liveImages(downstream)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
+import graft.operators.CdcMerge
 
 /** Core batch analytics queries re-expressing the reference's operator
   * inventory (SURVEY.md §2) over the driver testdata.
@@ -113,16 +114,17 @@ object CoreQueries {
   /** q03 — latest-record-per-key dedup via ranking window (SURVEY W3; ref
     * `07_batch_read_kafka.py:65,74-75`, `13_batch_read_results_avro.py:59,69-70`:
     * `row_number() OVER (PARTITION BY key ORDER BY timestamp DESC)` + `row == 1`).
-    * This is the Hudi precombine / last-write-wins primitive. The oracle
-    * casts ts to microsecond TIMESTAMP because Spark truncates parquet ns
-    * to us while DuckDB keeps ns.
+    * This is the Hudi precombine / last-write-wins primitive, so it runs
+    * as the CDC merge itself: [[graft.operators.CdcMerge.mergeByKey]] in
+    * rewrite mode (no tombstones to hide). The oracle casts ts to
+    * microsecond TIMESTAMP because Spark truncates parquet ns to us while
+    * DuckDB keeps ns.
     */
   def q03LatestEventPerUser(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val w = Window.partitionBy($"user_id").orderBy($"ts".desc, $"event_id".desc)
     Tables.events(s, dir)
-      .withColumn("rn", row_number().over(w))
-      .filter($"rn" === 1)
+      .transform(CdcMerge.mergeByKey(Seq("user_id"), Seq("ts", "event_id"),
+        deleteMode = CdcMerge.Rewrite))
       .select($"user_id", $"event_id", $"event_type", $"value")
       .orderBy($"user_id")
   }

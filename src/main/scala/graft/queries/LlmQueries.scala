@@ -1630,7 +1630,8 @@ object LlmQueries {
     * Shared by q16/q27/q40/q75/q89/q93, the streamed near-dup gates and
     * their doc stores, ScaleProbe's band probes and StreamBench's
     * neardup subject, so no caller can shingle differently from the
-    * index.
+    * index. q81 shingles through it too, carrying its `split` column:
+    * each `carry` column rides along next to `doc_id`.
     *
     * The token array is bound to a column BEFORE shingling:
     * higher-order lambdas are interpreted with no
@@ -1638,10 +1639,10 @@ object LlmQueries {
     * would re-run the whole regexp/split pipeline for every element_at
     * reference — measured ~150 re-evaluations per document.
     */
-  def shingleDocs(df: DataFrame): DataFrame = {
-    import df.sparkSession.implicits._
-    df.select($"doc_id", TextOps.tokens(TextOps.normText($"text")).as("toks"))
-      .select($"doc_id", TextOps.shingles($"toks", 3).as("sh"))
+  def shingleDocs(df: DataFrame, carry: String*): DataFrame = {
+    val keep = ("doc_id" +: carry).map(col)
+    df.select(keep :+ TextOps.tokens(TextOps.normText(col("text"))).as("toks"): _*)
+      .select(keep :+ TextOps.shingles(col("toks"), 3).as("sh"): _*)
   }
 
   /** ONE micro-batch of the streamed NEAR-DUP maintenance cycle — the
@@ -1981,13 +1982,10 @@ object LlmQueries {
     */
   def q81Decontamination(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val norm = TextOps.normText($"text")
-    val bucket = Sampling.hash60(norm) % 100
-    val base = Tables.spread(s, Tables.documents(s, dir))
-      .select($"doc_id",
-        TextOps.shingles(TextOps.tokens(norm), 3).as("sh"),
-        when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
-          .as("split"))
+    val bucket = Sampling.hash60(TextOps.normText($"text")) % 100
+    val base = shingleDocs(Tables.spread(s, Tables.documents(s, dir))
+      .withColumn("split",
+        when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")), "split")
       .localCheckpoint()
     val bands = minhashBands(base.select($"doc_id", $"sh"))
       .join(base.select($"doc_id", $"split"), "doc_id")

@@ -172,9 +172,7 @@ object ReferenceQueries {
   def q12CdcMerge(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val image = struct($"user_id", $"event_id", $"value")
-    val op = when($"event_type" === "signup", "c")
-      .when($"event_type" === "error", "d")
-      .otherwise("u")
+    val op = CdcQueries.eventOp($"event_type") // the CDC lake changelog's mapping
     val envelope = Tables.events(s, dir).select(
       struct(
         when(op === "d", image).as("before"),
@@ -192,16 +190,7 @@ object ReferenceQueries {
   }
 
   val q12Oracle: String =
-    """SELECT user_id, event_id, value, __op, __deleted FROM (
-      |  SELECT user_id, event_id, value,
-      |    CASE WHEN event_type='signup' THEN 'c'
-      |         WHEN event_type='error'  THEN 'd' ELSE 'u' END AS __op,
-      |    CASE WHEN event_type='error' THEN 'true' ELSE 'false' END AS __deleted,
-      |    row_number() OVER (PARTITION BY user_id
-      |      ORDER BY epoch_ms(CAST(ts AS TIMESTAMP)) DESC, event_id DESC) AS rn
-      |  FROM events) t
-      |WHERE rn = 1
-      |ORDER BY user_id""".stripMargin
+    CdcQueries.latestImages("true") + "\nORDER BY user_id"
 
   /** q13 — Kafka JSON envelope round-trip (SURVEY F1/F2/F12/P3/P9): encode
     * rows as `to_json(struct(*))` values with an md5-derived key (the

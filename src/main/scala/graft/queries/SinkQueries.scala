@@ -17,8 +17,12 @@ object SinkQueries {
 
   private def dec2(c: org.apache.spark.sql.Column) = c.cast(DecimalType(12, 2))
 
-  private def scratch(name: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_scratch/$name"
+  /** The ONE scratch path of a gate run over input dir `dir`, under the
+    * temp dir: the sink round trips here and the CDC lake gates
+    * ([[CdcQueries]]) write their tables there.
+    */
+  private[queries] def scratch(gate: String, dir: String): String =
+    s"${sys.props("java.io.tmpdir")}/graft_scratch/${gate}_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
 
   /** q22 — partitioned+gzip parquet lake write, then a pruned read-back
     * (SURVEY K8; ref `s3_sink_connector_02.json` FieldPartitioner on
@@ -31,7 +35,7 @@ object SinkQueries {
     */
   def q22PartitionedSink(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val path = scratch(s"q22_${dir.replaceAll("[^a-zA-Z0-9]", "_")}")
+    val path = scratch("q22", dir)
     val enriched = Tables.customer(s, dir)
       .join(broadcast(Tables.nation(s, dir)), $"c_nationkey" === $"n_nationkey")
       .select($"c_custkey", $"c_acctbal", $"c_mktsegment", $"n_name".as("country"))
@@ -63,7 +67,7 @@ object SinkQueries {
     */
   def q23CsvRoundtrip(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val path = scratch(s"q23_${dir.replaceAll("[^a-zA-Z0-9]", "_")}")
+    val path = scratch("q23", dir)
     val summary = Tables.lineitem(s, dir)
       .groupBy($"l_returnflag", $"l_linestatus")
       .agg(sum(dec2($"l_extendedprice")).as("revenue_dec"),

@@ -5,6 +5,7 @@ import java.nio.file.attribute.FileTime
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -229,17 +230,9 @@ object StreamGateQueries {
   private val stagedDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
   locally {
     sys.addShutdownHook {
-      stagedDirs.asScala.foreach(p => try deleteTree(p) catch { case _: Throwable => () })
+      stagedDirs.asScala.foreach(p => FileUtils.deleteQuietly(p.toFile))
     }
   }
-
-  private def deleteTree(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      val st = Files.walk(p)
-      try st.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => Files.deleteIfExists(f))
-      finally st.close()
-    }
 
   /** Delete a gate's staged source dir(s) NOW: once the streaming query
     * has terminated the source files have all been read, and the gate's
@@ -251,7 +244,7 @@ object StreamGateQueries {
   private def dropStaged(paths: String*): Unit = paths.foreach { p =>
     val path = Paths.get(p)
     try {
-      deleteTree(path)
+      FileUtils.deleteDirectory(path.toFile)
       stagedDirs.remove(path)
     } catch { case _: java.io.IOException => () }
   }
@@ -407,7 +400,7 @@ object StreamGateQueries {
       // orders new files by timestamp, so file i IS micro-batch i
       Files.setLastModifiedTime(dst, FileTime.fromMillis(1700000000000L + i * 60000L))
     }
-    deleteTree(scratch) // only empty _slice dirs + _SUCCESS remain
+    FileUtils.deleteDirectory(scratch.toFile) // only empty _slice dirs + _SUCCESS remain
     stagedDirs.add(staged)
   }
 
@@ -1231,7 +1224,7 @@ object StreamGateQueries {
           val dst = Paths.get(src, "events-9999-late.parquet")
           Files.move(part.toPath, dst)
           Files.setLastModifiedTime(dst, FileTime.fromMillis(1700000000000L + 3 * 60000L + 30000L))
-          deleteTree(lateTmp)
+          FileUtils.deleteDirectory(lateTmp.toFile)
           count(s.read.parquet(dst.toString))
         }
         admit(rest)

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -27,8 +27,8 @@ class CdcLakeSpec extends AnyFunSuite with LocalSpark {
   private def rowSet(df: DataFrame): Set[String] =
     df.collect().map(_.toString).toSet
 
-  private def newTable(): CdcTable = new CdcTable(
-    spark, Files.createTempDirectory("cdc_lake").toString,
+  private def newTable(root: Path = Files.createTempDirectory("cdc_lake")): CdcTable = new CdcTable(
+    spark, root.toString,
     keyCols = Seq("artist_id"),
     orderingCols = Seq("__source_ts_ms"),
     partitionCol = "nationality")
@@ -277,6 +277,19 @@ class CdcLakeSpec extends AnyFunSuite with LocalSpark {
     intercept[InstantUnavailableException] { fresh.asOf(0) }
   }
 
+  test("CdcTable refuses a pointer no writer produces: a forged two-field _meta fails as unparseable") {
+    val root = Files.createTempDirectory("cdc_lake")
+    val t = newTable(root)
+    t.bulkInsert(img((1L, "A", "American", "false", 10L)))
+    // every pointer commit writes `version foldPoint epoch`; a pointer
+    // missing the epoch must fail by name rather than be read under a
+    // guessed epoch
+    Files.writeString(root.resolve("_meta"), "1 0")
+    val e = intercept[IllegalStateException](t.realTime())
+    assert(e.getMessage.contains("pointer") && e.getMessage.contains("unparseable"),
+      e.getMessage)
+  }
+
   test("merge laws: idempotence, incremental == full, stale batch cannot regress") {
     val ss = spark; import ss.implicits._
     val rowGen = for {
@@ -293,27 +306,21 @@ class CdcLakeSpec extends AnyFunSuite with LocalSpark {
 
     def toDf(rows: Seq[(Long, String, String, String, Long)]): DataFrame =
       rows.toDF("artist_id", "name", "nationality", "__deleted", "__source_ts_ms")
-    def merged(df: DataFrame): Set[String] = rowSet(
+    def merge(df: DataFrame): DataFrame =
       CdcMerge.mergeByKey(Seq("artist_id"), Seq("__source_ts_ms"),
-        deleteMode = CdcMerge.Rewrite)(df))
+        deleteMode = CdcMerge.Rewrite)(df)
+    def merged(df: DataFrame): Set[String] = rowSet(merge(df))
 
     val prop = Prop.forAll(logGen) { rows =>
       val (a, b) = rows.splitAt(rows.size / 2)
       val full = merged(toDf(rows))
       // idempotence: re-merging the merge (and duplicated input) is a no-op
       val idem = merged(toDf(rows ++ rows)) == full
-      // incremental == full: merge(a) upserted with b == merge(a ∪ b)
-      val incr = rowSet(CdcMerge.upsert(
-        CdcMerge.mergeByKey(Seq("artist_id"), Seq("__source_ts_ms"),
-          deleteMode = CdcMerge.Rewrite)(toDf(a)),
-        toDf(b), Seq("artist_id"), Seq("__source_ts_ms"),
-        deleteMode = CdcMerge.Rewrite)) == full
+      // incremental == full: merge(a) upserted with b (the stored rows
+      // unioned with the batch, then re-merged) == merge(a ∪ b)
+      val incr = merged(merge(toDf(a)).unionByName(toDf(b))) == full
       // stale replay: upserting an old batch after the full merge changes nothing
-      val stale = rowSet(CdcMerge.upsert(
-        CdcMerge.mergeByKey(Seq("artist_id"), Seq("__source_ts_ms"),
-          deleteMode = CdcMerge.Rewrite)(toDf(rows)),
-        toDf(a), Seq("artist_id"), Seq("__source_ts_ms"),
-        deleteMode = CdcMerge.Rewrite)) == full
+      val stale = merged(merge(toDf(rows)).unionByName(toDf(a))) == full
       idem && incr && stale
     }
     val result = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(6), prop)

@@ -14,7 +14,10 @@ which AQE re-planning advances), RDD ids (`RDD[\\d+]`, counting every
 RDD the JVM made before, earlier queries' timed runs included), the
 source line of a checkpoint's call site (`File.scala:\\d+`, which any
 edit above it moves), the checkout path (the directory holding
-`plans/`) and the per-JVM warehouse directory (`graft-warehouse\\d+`).
+`plans/`), the per-JVM warehouse directory (`graft-warehouse\\d+`),
+and CdcTable base versions and delta commit seqs in paths
+(`base_v\\d+`, `delta_\\d+`): like RDD ids, these count earlier runs
+of the same scratch table.
 Prints `[ OK ]` or `[FAIL]` plus a unified diff per query and
 `N/M plans equal`; exit code 1 on any difference or a query dumped on
 one side only.
@@ -40,6 +43,8 @@ def masked(path, root):
     text = re.sub(r"RDD\[\d+\]", "RDD[N]", text)
     text = re.sub(r"\.scala:\d+", ".scala:N", text)
     text = re.sub(r"graft-warehouse\d+", "graft-warehouse", text)
+    text = re.sub(r"base_v\d+", "base_vN", text)
+    text = re.sub(r"delta_\d+", "delta_N", text)
     return text.splitlines(keepends=True)
 
 def main():
