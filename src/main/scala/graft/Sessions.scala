@@ -3,6 +3,8 @@ package graft
 import java.nio.file.Files
 
 import org.apache.commons.io.FileUtils
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.SparkSession
 
 /** The one place the engine's mains and specs build a SparkSession.
@@ -55,6 +57,15 @@ object Sessions {
     if (extensions) builder.withExtensions(new GraftExtensions())
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // Spark 4.1 warns "spark.sql.adaptive.enabled is not supported in
+    // streaming DataFrames/Datasets and will be disabled" at every stream
+    // start on an AQE session, yet turns AQE off only for stateful,
+    // continuous and real-time queries (MicroBatchExecution,
+    // StreamExecution): a stateless micro-batch stream keeps it. Starting
+    // the streams with AQE off would silence it by changing those plans,
+    // so the misleading warning's logger is raised to ERROR instead.
+    Configurator.setLevel(
+      "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream", Level.ERROR)
     spark
   }
 }

@@ -390,8 +390,9 @@ object LlmQueries {
     * (q18/q19/q28/q30/q31/q32/q80, [[vectorSequentialOracle]]): `sv`
     * (vec_id, v = the integer-scaled vector) and `nn` (vec_id, v, nsq =
     * its exact squared norm). Oracles that need the sign-LSH bucket
-    * append [[vecBucketCtes]]. Every CTE is MATERIALIZED (see
-    * [[horizonWindow]] for why).
+    * append [[vecBucketCtes]]; oracles that score pairs append
+    * [[pairCosineCtes]] (and [[rankCtes]] to rank them). Every CTE is
+    * MATERIALIZED (see [[horizonWindow]] for why).
     */
   private val vecSketchCtes: String =
     """sv AS MATERIALIZED (
@@ -401,51 +402,120 @@ object LlmQueries {
       |nn AS MATERIALIZED (SELECT vec_id, v,
       |         CAST(list_sum(list_transform(v, x -> x * x)) AS BIGINT) AS nsq FROM sv)""".stripMargin
 
+  /** The ONE DuckDB pair-cosine generator, the oracle spelling of
+    * `VectorOps.cosineFromParts(VectorOps.dotL(a.v, b.v), a.nsq, b.nsq)`:
+    * over the candidate CTE `cand`, whose `a` and `b` columns are vec_ids
+    * in [[vecSketchCtes]]' `nn`, it emits `<cand>_dot` (cand's columns +
+    * `an`, `bn`, the two squared norms, and `dot`, the exact integer dot
+    * product) and `<cand>_cos` (cand's columns + `cosine`, `a`'s norm
+    * divided out first, as the Spark side does). Every embedding oracle
+    * that scores a pair calls it: the search gates through [[rankCtes]],
+    * q32's cell assignment, q80 and [[vectorSequentialOracle]].
+    */
+  private def pairCosineCtes(cand: String, a: String, b: String): String =
+    s"""${cand}_dot AS MATERIALIZED (
+       |  SELECT c.*, na.nsq AS an, nb.nsq AS bn,
+       |    CAST(sum(na.v[i] * nb.v[i]) AS BIGINT) AS dot
+       |  FROM $cand c
+       |  JOIN nn na ON na.vec_id = c.$a
+       |  JOIN nn nb ON nb.vec_id = c.$b,
+       |       unnest(generate_series(1, len(na.v))) t(i)
+       |  GROUP BY ALL),
+       |${cand}_cos AS MATERIALIZED (
+       |  SELECT * EXCLUDE (an, bn, dot),
+       |    CAST(dot AS DOUBLE) / sqrt(CAST(an AS DOUBLE)) / sqrt(CAST(bn AS DOUBLE)) AS cosine
+       |  FROM ${cand}_dot)""".stripMargin
+
+  /** The ONE DuckDB rank prelude of the search oracles (q18/q19/q30/q31/
+    * q32), the oracle spelling of [[scoredPairs]] + [[windowTopK]]: the
+    * candidate CTE `cand` (`qid`, `nid`, any carried columns) scored by
+    * [[pairCosineCtes]], then `rk` = those rows with `rnk`, the
+    * per-query rank by cosine desc, then neighbour id.
+    */
+  private def rankCtes(cand: String): String =
+    s"""${pairCosineCtes(cand, "qid", "nid")},
+       |rk AS MATERIALIZED (
+       |  SELECT *, row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, nid) AS rnk
+       |  FROM ${cand}_cos)""".stripMargin
+
+  /** Every `QueryStride`-th vector is a query of the search gates
+    * (q18/q19/q30/q31/q32); their oracles interpolate the same constant.
+    */
+  private val QueryStride = 50
+
+  /** The query-set predicate over `vec_id`: q18/q19/q30/q31 filter their
+    * sketch rows by it, [[annIvf]] its cell scores.
+    */
+  private def isQuery: Column = col("vec_id") % QueryStride === 0
+
+  /** The ONE query-row spelling of the search gates: sketch rows as
+    * (`qid`, `qv`, `qn`), then `carry` (q19's bucket, q30's probe
+    * buckets). Callers pass the [[isQuery]] rows; [[annIvf]] joins its
+    * already-filtered probe list to it instead.
+    */
+  private def asQueries(sv: DataFrame, carry: Column*): DataFrame =
+    sv.select(Seq(col("vec_id").as("qid"), col("v").as("qv"), col("nsq").as("qn")) ++ carry: _*)
+
+  /** The ONE neighbour score of the search gates: candidate pairs of a
+    * query (`qid`, `qv`, `qn`) and a sketch row (`vec_id`, `v`, `nsq`),
+    * self-pairs dropped, with `cosine` = the exact integer-scaled cosine,
+    * the query's norm divided out first. Whatever shapes the candidates
+    * (broadcast cross join, bucket join, probe explode, IVF cell join),
+    * this is the score every search gate ranks.
+    */
+  private def scoredPairs(cand: DataFrame): DataFrame =
+    cand.filter(col("vec_id") =!= col("qid"))
+      .withColumn("cosine",
+        VectorOps.cosineFromParts(VectorOps.dotL(col("qv"), col("v")), col("qn"), col("nsq")))
+
+  /** The ONE window top-k of the search gates (q18/q19/q30): per `qid`
+    * the `k` best [[scoredPairs]] rows by cosine desc, then vec_id, as
+    * (`qid`, `carry`…, `rank`, `neighbor_id`, `cosine`) ordered by
+    * (`qid`, `rank`). q31 and q32 rank through the native
+    * [[graft.operators.TopK]] instead, which is those gates' point.
+    */
+  private def windowTopK(scored: DataFrame, k: Int, carry: Column*): DataFrame = {
+    val w = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("vec_id"))
+    scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("qid") +: carry ++: Seq(col("rank"), col("vec_id").as("neighbor_id"), col("cosine")): _*)
+      .orderBy(col("qid"), col("rank"))
+  }
+
+  /** q18's and q31's candidates: every sketch row against the broadcast
+    * query set, scored — brute force, one map-side pass over the base
+    * vectors with no shuffle of embeddings.
+    */
+  private def bruteForceScores(s: SparkSession, dir: String): DataFrame = {
+    val sv = vectorSketch(Tables.embeddings(s, dir))
+    scoredPairs(sv.crossJoin(broadcast(asQueries(sv.filter(isQuery)))))
+  }
+
   /** q18 — brute-force cosine top-k (k=5) similarity search: every 50th
     * vector is a query; each is scored against the whole table. The query
     * set is broadcast, so scoring is one map-side pass over the base
     * vectors (no shuffle of embeddings); only the per-query top-k ranking
     * shuffles, keyed by query id. This is the exhaustive baseline the
     * bucketed q19 is measured against; at 100 TB brute force is O(Q·N)
-    * and q19's bucket path replaces it.
+    * and q19's bucket path replaces it. The sketch's bucket is unused
+    * here, and Catalyst prunes it.
     */
-  def q18CosineTopK(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val sv = Tables.embeddings(s, dir)
-      .select($"vec_id", VectorOps.scaled($"embedding").as("v"))
-      .withColumn("nsq", VectorOps.normSqL($"v"))
-    val q = sv.select($"vec_id".as("qid"), $"v".as("qv"), $"nsq".as("qn"))
-      .filter($"qid" % 50 === 0)
-    val scored = sv.crossJoin(broadcast(q))
-      .filter($"vec_id" =!= $"qid")
-      .withColumn("cosine",
-        VectorOps.cosineFromParts(VectorOps.dotL($"qv", $"v"), $"qn", $"nsq"))
-    val w = Window.partitionBy($"qid").orderBy($"cosine".desc, $"vec_id")
-    scored.withColumn("rank", row_number().over(w))
-      .filter($"rank" <= 5)
-      .select($"qid", $"rank", $"vec_id".as("neighbor_id"), $"cosine")
-      .orderBy($"qid", $"rank")
-  }
+  def q18CosineTopK(s: SparkSession, dir: String): DataFrame =
+    windowTopK(bruteForceScores(s, dir), k = 5)
+
+  /** q18's oracle rank chain, which q31's oracle shares: every
+    * `QueryStride`-th vector against every other vector, ranked.
+    */
+  private val bruteForceRankCtes: String =
+    s"""WITH $vecSketchCtes,
+      |cand AS (
+      |  SELECT q.vec_id AS qid, b.vec_id AS nid
+      |  FROM nn q JOIN nn b ON b.vec_id <> q.vec_id
+      |  WHERE q.vec_id % $QueryStride = 0),
+      |${rankCtes("cand")}""".stripMargin
 
   val q18Oracle: String =
-    s"""WITH $vecSketchCtes,
-      |pr AS (
-      |  SELECT q.vec_id AS qid, b.vec_id AS nid, q.v AS qv, b.v AS bv,
-      |         q.nsq AS qn, b.nsq AS bn
-      |  FROM nn q JOIN nn b ON b.vec_id <> q.vec_id
-      |  WHERE q.vec_id % 50 = 0),
-      |dt AS (
-      |  SELECT qid, nid, qn, bn, CAST(sum(qv[i] * bv[i]) AS BIGINT) AS dot
-      |  FROM pr, unnest(generate_series(1, len(qv))) t(i)
-      |  GROUP BY qid, nid, qn, bn),
-      |sc AS (
-      |  SELECT qid, nid,
-      |    CAST(dot AS DOUBLE) / sqrt(CAST(qn AS DOUBLE)) / sqrt(CAST(bn AS DOUBLE)) AS cosine
-      |  FROM dt),
-      |rk AS (
-      |  SELECT qid, nid, cosine,
-      |    row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, nid) AS rnk
-      |  FROM sc)
+    s"""$bruteForceRankCtes
       |SELECT qid, rnk AS "rank", nid AS neighbor_id, cosine
       |FROM rk WHERE rnk <= 5
       |ORDER BY qid, rnk""".stripMargin
@@ -487,51 +557,22 @@ object LlmQueries {
     * inlines the identical ±1 literals.
     */
   def q19AnnLsh(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val sv = Tables.embeddings(s, dir)
-      .select($"vec_id", VectorOps.scaled($"embedding").as("v"))
-      .withColumn("nsq", VectorOps.normSqL($"v"))
-      .withColumn("bucket", VectorOps.signLshBucket($"v", planes))
-    val q = sv.select($"vec_id".as("qid"), $"v".as("qv"), $"nsq".as("qn"), $"bucket")
-      .filter($"qid" % 50 === 0)
-    val scored = sv.join(q, Seq("bucket"))
-      .filter($"vec_id" =!= $"qid")
-      .withColumn("cosine",
-        VectorOps.cosineFromParts(VectorOps.dotL($"qv", $"v"), $"qn", $"nsq"))
-    val w = Window.partitionBy($"qid").orderBy($"cosine".desc, $"vec_id")
-    scored.withColumn("rank", row_number().over(w))
-      .filter($"rank" <= 3)
-      .select($"qid", $"bucket", $"rank", $"vec_id".as("neighbor_id"), $"cosine")
-      .orderBy($"qid", $"rank")
+    val sv = vectorSketch(Tables.embeddings(s, dir))
+    val q = asQueries(sv.filter(isQuery), col("bucket"))
+    windowTopK(scoredPairs(sv.join(q, Seq("bucket"))), k = 3, col("bucket"))
   }
 
-  val q19Oracle: String = {
+  val q19Oracle: String =
     s"""WITH $vecSketchCtes,
        |$vecBucketCtes,
        |cand AS (
        |  SELECT q.vec_id AS qid, b.vec_id AS nid, q.bucket AS bucket
        |  FROM buck q JOIN buck b ON q.bucket = b.bucket AND b.vec_id <> q.vec_id
-       |  WHERE q.vec_id % 50 = 0),
-       |dt AS (
-       |  SELECT c.qid, c.nid, c.bucket, nq.nsq AS qn, nb.nsq AS bn,
-       |    CAST(sum(nq.v[i] * nb.v[i]) AS BIGINT) AS dot
-       |  FROM cand c
-       |  JOIN nn nq ON nq.vec_id = c.qid
-       |  JOIN nn nb ON nb.vec_id = c.nid,
-       |       unnest(generate_series(1, len(nq.v))) t(i)
-       |  GROUP BY c.qid, c.nid, c.bucket, nq.nsq, nb.nsq),
-       |sc AS (
-       |  SELECT qid, bucket, nid,
-       |    CAST(dot AS DOUBLE) / sqrt(CAST(qn AS DOUBLE)) / sqrt(CAST(bn AS DOUBLE)) AS cosine
-       |  FROM dt),
-       |rk AS (
-       |  SELECT qid, bucket, nid, cosine,
-       |    row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, nid) AS rnk
-       |  FROM sc)
+       |  WHERE q.vec_id % $QueryStride = 0),
+       |${rankCtes("cand")}
        |SELECT qid, bucket, rnk AS "rank", nid AS neighbor_id, cosine
        |FROM rk WHERE rnk <= 3
        |ORDER BY qid, rnk""".stripMargin
-  }
 
   // ---------------------------------------------------------------- q27
 
@@ -668,6 +709,25 @@ object LlmQueries {
 
   // ---------------------------------------------------------------- q28
 
+  /** The exact integer-scaled cosine at or above which two vectors are
+    * semantic near-duplicates; the embedding dedup oracles (q28, q80,
+    * [[vectorSequentialOracle]]) interpolate the same constant.
+    */
+  private[graft] val NearDupCosine = 0.4
+
+  /** The ONE vector near-duplicate confirm, over an exact cosine column:
+    * q28's pair filter, every arm of [[admitByVectorSegments]], and the
+    * `Vectors` fold modality's expiring fence in StreamGateQueries.
+    */
+  private[graft] def nearDup(cosine: Column): Column = cosine >= NearDupCosine
+
+  /** [[nearDup]] of a sketch row (`v`, `nsq`) against a
+    * [[vectorIndexRows]] row (`bv`, `bn`): the confirm of every arm of
+    * [[admitByVectorSegments]] and of the `Vectors` expiring fence.
+    */
+  private[graft] def nearIndexRow: Column =
+    nearDup(VectorOps.cosineFromParts(VectorOps.dotL(col("v"), col("bv")), col("nsq"), col("bn")))
+
   /** q28 — embedding-cosine near-duplicate pairs, the dedup use of the
     * ANN machinery: all pairs sharing a sign-LSH bucket (never all-pairs)
     * whose exact integer-scaled cosine is ≥ 0.4, tagged with the member
@@ -681,11 +741,7 @@ object LlmQueries {
     // localCheckpoint: the self-join would otherwise re-run scan +
     // scale + norm + bucket hashing on both sides (same sketch-persist
     // rationale as q27's signature table).
-    val sv = Tables.embeddings(s, dir)
-      .select($"vec_id", VectorOps.scaled($"embedding").as("v"))
-      .withColumn("nsq", VectorOps.normSqL($"v"))
-      .withColumn("bucket", VectorOps.signLshBucket($"v", planes))
-      .localCheckpoint()
+    val sv = vectorSketch(Tables.embeddings(s, dir)).localCheckpoint()
     val cand = sv.as("a")
       .join(sv.as("b"),
         $"a.bucket" === $"b.bucket" && $"a.vec_id" < $"b.vec_id")
@@ -693,7 +749,7 @@ object LlmQueries {
         $"a.vec_id".as("vec_a"), $"b.vec_id".as("vec_b"),
         VectorOps.cosineFromParts(
           VectorOps.dotL($"a.v", $"b.v"), $"a.nsq", $"b.nsq").as("cosine"))
-    cand.filter($"cosine" >= 0.4)
+    cand.filter(nearDup($"cosine"))
       .withColumn("drop_id", $"vec_b")
       .orderBy($"vec_a", $"vec_b")
   }
@@ -704,20 +760,9 @@ object LlmQueries {
        |cand AS (
        |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
        |  FROM buck a JOIN buck b ON a.bucket = b.bucket AND a.vec_id < b.vec_id),
-       |dt AS (
-       |  SELECT c.vec_a, c.vec_b, na.nsq AS qn, nb.nsq AS bn,
-       |    CAST(sum(na.v[i] * nb.v[i]) AS BIGINT) AS dot
-       |  FROM cand c
-       |  JOIN nn na ON na.vec_id = c.vec_a
-       |  JOIN nn nb ON nb.vec_id = c.vec_b,
-       |       unnest(generate_series(1, len(na.v))) t(i)
-       |  GROUP BY c.vec_a, c.vec_b, na.nsq, nb.nsq),
-       |sc AS (
-       |  SELECT vec_a, vec_b,
-       |    CAST(dot AS DOUBLE) / sqrt(CAST(qn AS DOUBLE)) / sqrt(CAST(bn AS DOUBLE)) AS cosine
-       |  FROM dt)
+       |${pairCosineCtes("cand", "vec_a", "vec_b")}
        |SELECT vec_a, vec_b, cosine, vec_b AS drop_id
-       |FROM sc WHERE cosine >= 0.4
+       |FROM cand_cos WHERE cosine >= $NearDupCosine
        |ORDER BY vec_a, vec_b""".stripMargin
   }
 
@@ -737,29 +782,16 @@ object LlmQueries {
     */
   def q30AnnMultiprobe(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sv = Tables.embeddings(s, dir)
-      .select($"vec_id", VectorOps.scaled($"embedding").as("v"))
-      .withColumn("nsq", VectorOps.normSqL($"v"))
-      .withColumn("bucket", VectorOps.signLshBucket($"v", planes))
-      .localCheckpoint()
+    val sv = vectorSketch(Tables.embeddings(s, dir)).localCheckpoint()
     // probe 0 = own bucket; probe i>0 = bit i-1 flipped
     val flip = (b: org.apache.spark.sql.Column, i: Int) => concat(
       substring(b, 1, i),
       when(substring(b, i + 1, 1) === "1", "0").otherwise("1"),
       substring(b, i + 2, NumPlanes - i - 1))
-    val q = sv.filter($"vec_id" % 50 === 0)
-      .select($"vec_id".as("qid"), $"v".as("qv"), $"nsq".as("qn"),
-        explode(array($"bucket" +: (0 until NumPlanes).map(i => flip($"bucket", i)): _*))
-          .as("bucket"))
-    val scored = sv.join(q, Seq("bucket"))
-      .filter($"vec_id" =!= $"qid")
-      .withColumn("cosine",
-        VectorOps.cosineFromParts(VectorOps.dotL($"qv", $"v"), $"qn", $"nsq"))
-    val w = Window.partitionBy($"qid").orderBy($"cosine".desc, $"vec_id")
-    scored.withColumn("rank", row_number().over(w))
-      .filter($"rank" <= 3)
-      .select($"qid", $"rank", $"vec_id".as("neighbor_id"), $"cosine")
-      .orderBy($"qid", $"rank")
+    val q = asQueries(sv.filter(isQuery),
+      explode(array($"bucket" +: (0 until NumPlanes).map(i => flip($"bucket", i)): _*))
+        .as("bucket"))
+    windowTopK(scoredPairs(sv.join(q, Seq("bucket"))), k = 3)
   }
 
   val q30Oracle: String = {
@@ -772,26 +804,11 @@ object LlmQueries {
        |$vecBucketCtes,
        |probes AS (
        |  SELECT vec_id AS qid, unnest([bucket, $flips]) AS bucket
-       |  FROM buck WHERE vec_id % 50 = 0),
+       |  FROM buck WHERE vec_id % $QueryStride = 0),
        |cand AS (
        |  SELECT p.qid, b.vec_id AS nid
        |  FROM probes p JOIN buck b ON b.bucket = p.bucket AND b.vec_id <> p.qid),
-       |dt AS (
-       |  SELECT c.qid, c.nid, nq.nsq AS qn, nb.nsq AS bn,
-       |    CAST(sum(nq.v[i] * nb.v[i]) AS BIGINT) AS dot
-       |  FROM cand c
-       |  JOIN nn nq ON nq.vec_id = c.qid
-       |  JOIN nn nb ON nb.vec_id = c.nid,
-       |       unnest(generate_series(1, len(nq.v))) t(i)
-       |  GROUP BY c.qid, c.nid, nq.nsq, nb.nsq),
-       |sc AS (
-       |  SELECT qid, nid,
-       |    CAST(dot AS DOUBLE) / sqrt(CAST(qn AS DOUBLE)) / sqrt(CAST(bn AS DOUBLE)) AS cosine
-       |  FROM dt),
-       |rk AS (
-       |  SELECT qid, nid, cosine,
-       |    row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, nid) AS rnk
-       |  FROM sc)
+       |${rankCtes("cand")}
        |SELECT qid, rnk AS "rank", nid AS neighbor_id, cosine
        |FROM rk WHERE rnk <= 3
        |ORDER BY qid, rnk""".stripMargin
@@ -813,40 +830,15 @@ object LlmQueries {
     */
   def q31TopkNative(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sv = Tables.embeddings(s, dir)
-      .select($"vec_id", VectorOps.scaled($"embedding").as("v"))
-      .withColumn("nsq", VectorOps.normSqL($"v"))
-    val q = sv.select($"vec_id".as("qid"), $"v".as("qv"), $"nsq".as("qn"))
-      .filter($"qid" % 50 === 0)
-    val scored = sv.crossJoin(broadcast(q))
-      .filter($"vec_id" =!= $"qid")
-      .select($"qid", $"vec_id".as("neighbor_id"),
-        VectorOps.cosineFromParts(
-          VectorOps.dotL($"qv", $"v"), $"qn", $"nsq").as("cosine"))
+    val scored = bruteForceScores(s, dir)
+      .select($"qid", $"vec_id".as("neighbor_id"), $"cosine")
     graft.operators.TopK.perKey(scored,
         keys = Seq($"qid"), order = Seq($"cosine".desc, $"neighbor_id".asc), k = 5)
       .orderBy($"qid", $"cosine".desc, $"neighbor_id")
   }
 
   val q31Oracle: String =
-    s"""WITH $vecSketchCtes,
-      |pr AS (
-      |  SELECT q.vec_id AS qid, b.vec_id AS nid, q.v AS qv, b.v AS bv,
-      |         q.nsq AS qn, b.nsq AS bn
-      |  FROM nn q JOIN nn b ON b.vec_id <> q.vec_id
-      |  WHERE q.vec_id % 50 = 0),
-      |dt AS (
-      |  SELECT qid, nid, qn, bn, CAST(sum(qv[i] * bv[i]) AS BIGINT) AS dot
-      |  FROM pr, unnest(generate_series(1, len(qv))) t(i)
-      |  GROUP BY qid, nid, qn, bn),
-      |sc AS (
-      |  SELECT qid, nid,
-      |    CAST(dot AS DOUBLE) / sqrt(CAST(qn AS DOUBLE)) / sqrt(CAST(bn AS DOUBLE)) AS cosine
-      |  FROM dt),
-      |rk AS (
-      |  SELECT qid, nid, cosine,
-      |    row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, nid) AS rnk
-      |  FROM sc)
+    s"""$bruteForceRankCtes
       |SELECT qid, nid AS neighbor_id, cosine
       |FROM rk WHERE rnk <= 5
       |ORDER BY qid, cosine DESC, neighbor_id""".stripMargin
@@ -894,11 +886,10 @@ object LlmQueries {
     import s.implicits._
     import graft.operators.TopK
     // localCheckpoint: scan+scale+norms feed assignment, the member side,
-    // and the query side — persist the vector sketch once.
-    val sv = Tables.embeddings(s, dir)
-      .select($"vec_id", VectorOps.scaled($"embedding").as("v"))
-      .withColumn("nsq", VectorOps.normSqL($"v"))
-      .localCheckpoint()
+    // and the query side — persist the vector sketch once, without its
+    // LSH bucket (IVF cells replace it).
+    val sv = vectorSketch(Tables.embeddings(s, dir))
+      .select($"vec_id", $"v", $"nsq").localCheckpoint()
     val cent = sv.filter($"vec_id" % IvfStride === 0 && $"vec_id" < IvfMaxCid)
       .select($"vec_id".as("cid"), $"v".as("cv"), $"nsq".as("cn"))
     val cellScores = sv.crossJoin(broadcast(cent))
@@ -914,16 +905,12 @@ object LlmQueries {
     val member = sv.join(cells, "vec_id").localCheckpoint()
     // a query's probe list = its nprobe nearest centroids; for nprobe=1
     // that is exactly its own assigned cell (same ordering, same top-1)
-    val probes = TopK.perKey(cellScores.filter($"vec_id" % 50 === 0),
+    val probes = TopK.perKey(cellScores.filter(isQuery),
         keys = Seq($"vec_id"), order = Seq($"ccos".desc, $"cid".asc), k = nprobe)
       .select($"vec_id".as("qid"), $"cid".as("cell"))
-    val q = probes.join(
-      sv.select($"vec_id".as("qid"), $"v".as("qv"), $"nsq".as("qn")), "qid")
-    val scored = member.join(q, Seq("cell"))
-      .filter($"vec_id" =!= $"qid")
-      .select($"qid", $"cell", $"vec_id".as("neighbor_id"),
-        VectorOps.cosineFromParts(
-          VectorOps.dotL($"qv", $"v"), $"qn", $"nsq").as("cosine"))
+    val q = probes.join(asQueries(sv), "qid")
+    val scored = scoredPairs(member.join(q, Seq("cell")))
+      .select($"qid", $"cell", $"vec_id".as("neighbor_id"), $"cosine")
     TopK.perKey(scored,
         keys = Seq($"qid"), order = Seq($"cosine".desc, $"neighbor_id".asc), k = 3)
       .orderBy($"qid", $"cosine".desc, $"neighbor_id")
@@ -931,41 +918,21 @@ object LlmQueries {
 
   val q32Oracle: String =
     s"""WITH $vecSketchCtes,
-       |cent AS (
-       |  SELECT vec_id AS cid, v AS cv, nsq AS cn FROM nn
-       |  WHERE vec_id % $IvfStride = 0 AND vec_id < $IvfMaxCid),
-       |ad AS (
-       |  SELECT n.vec_id, c.cid, n.nsq AS vn, c.cn AS cn,
-       |    CAST(sum(n.v[i] * c.cv[i]) AS BIGINT) AS dot
-       |  FROM nn n CROSS JOIN cent c,
-       |       unnest(generate_series(1, len(n.v))) t(i)
-       |  GROUP BY n.vec_id, c.cid, n.nsq, c.cn),
+       |assign AS (
+       |  SELECT n.vec_id, c.vec_id AS cid
+       |  FROM nn n CROSS JOIN nn c
+       |  WHERE c.vec_id % $IvfStride = 0 AND c.vec_id < $IvfMaxCid),
+       |${pairCosineCtes("assign", "vec_id", "cid")},
        |cells AS (
        |  SELECT vec_id, cid AS cell FROM (
-       |    SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY
-       |      CAST(dot AS DOUBLE) / sqrt(CAST(vn AS DOUBLE)) / sqrt(CAST(cn AS DOUBLE)) DESC,
-       |      cid) AS rn
-       |    FROM ad) z WHERE rn = 1),
+       |    SELECT vec_id, cid,
+       |      row_number() OVER (PARTITION BY vec_id ORDER BY cosine DESC, cid) AS rn
+       |    FROM assign_cos) z WHERE rn = 1),
        |cand AS (
        |  SELECT q.vec_id AS qid, q.cell, b.vec_id AS nid
        |  FROM cells q JOIN cells b ON b.cell = q.cell AND b.vec_id <> q.vec_id
-       |  WHERE q.vec_id % 50 = 0),
-       |dt AS (
-       |  SELECT c.qid, c.cell, c.nid, nq.nsq AS qn, nb.nsq AS bn,
-       |    CAST(sum(nq.v[i] * nb.v[i]) AS BIGINT) AS dot
-       |  FROM cand c
-       |  JOIN nn nq ON nq.vec_id = c.qid
-       |  JOIN nn nb ON nb.vec_id = c.nid,
-       |       unnest(generate_series(1, len(nq.v))) t(i)
-       |  GROUP BY c.qid, c.cell, c.nid, nq.nsq, nb.nsq),
-       |sc AS (
-       |  SELECT qid, cell, nid,
-       |    CAST(dot AS DOUBLE) / sqrt(CAST(qn AS DOUBLE)) / sqrt(CAST(bn AS DOUBLE)) AS cosine
-       |  FROM dt),
-       |rk AS (
-       |  SELECT qid, cell, nid, cosine,
-       |    row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, nid) AS rnk
-       |  FROM sc)
+       |  WHERE q.vec_id % $QueryStride = 0),
+       |${rankCtes("cand")}
        |SELECT qid, cell, nid AS neighbor_id, cosine
        |FROM rk WHERE rnk <= 3
        |ORDER BY qid, cosine DESC, neighbor_id""".stripMargin
@@ -1702,9 +1669,13 @@ object LlmQueries {
 
   /** The ONE vector-sketch spelling (q28's planes): (vec_id, embedding)
     * → (vec_id, v, nsq, bucket) — integer-scaled vector, squared norm,
-    * sign-LSH bucket. Used by q80's gate, the standing vector index
-    * build, and ScaleProbe's embedding ingest probe, so index and probe
-    * bucketing can never drift.
+    * sign-LSH bucket. Used by every embedding gate — the search gates
+    * q18/q19/q30/q31 and [[annIvf]] (q32), q28, q80, q90, the vector fold
+    * gates through [[vectorAdmitAndFold]] — the standing vector index
+    * build, StreamBench's vecfold subject and ScaleProbe's embedding
+    * ingest probe, so index and probe bucketing can never drift. Gates
+    * that never read the bucket (q18, q31, [[annIvf]]) leave it to
+    * Catalyst's column pruning.
     */
   def vectorSketch(df: DataFrame): DataFrame = {
     import df.sparkSession.implicits._
@@ -1721,10 +1692,10 @@ object LlmQueries {
     * ([[vectorSketch]] output) as a chain of left-anti joins: the batch
     * anti-joins each segment in turn, then the batch itself for the
     * earlier-wins rule (q75's pairwise first-wins). Every arm's
-    * condition is `bucket` equality plus the exact integer-scaled
-    * cosine ≥ 0.4 (and `blocker < vec_id` on the batch arm), so a vector
-    * survives iff no segment row and no smaller-id batch row is a
-    * confirmed near-duplicate. Sound because NOT EXISTS over
+    * condition is `bucket` equality plus [[nearIndexRow]], the exact
+    * integer-scaled cosine ≥ [[NearDupCosine]] (and `blocker < vec_id`
+    * on the batch arm), so a vector survives iff no segment row and no
+    * smaller-id batch row is a confirmed near-duplicate. Sound because NOT EXISTS over
     * `seg_0 ∪ … ∪ seg_N ∪ batch` is the AND of NOT EXISTS over each part
     * — the same distribution-over-segments argument as
     * [[admitByBandFrame]], and the shape [[admitByFingerprint]] uses.
@@ -1739,13 +1710,12 @@ object LlmQueries {
       batch: DataFrame, segments: Seq[DataFrame]): DataFrame = {
     import batch.sparkSession.implicits._
     val sketch = batch.select($"vec_id", $"v", $"nsq", $"bucket")
-    val near = VectorOps.cosineFromParts(VectorOps.dotL($"v", $"bv"), $"nsq", $"bn") >= 0.4
     def antiJoin(b: DataFrame, blockers: DataFrame, cond: Column): DataFrame =
       b.join(blockers.withColumnRenamed("bucket", "b_bucket"),
         $"bucket" === $"b_bucket" && cond, "left_anti")
     val survivors = segments.foldLeft(sketch)((b, seg) =>
-      antiJoin(b, seg.select($"bucket", $"bv", $"bn"), near))
-    antiJoin(survivors, vectorIndexRows(sketch), near && $"blocker" < $"vec_id")
+      antiJoin(b, seg.select($"bucket", $"bv", $"bn"), nearIndexRow))
+    antiJoin(survivors, vectorIndexRows(sketch), nearIndexRow && $"blocker" < $"vec_id")
   }
 
   // ---------------------------------------------------------------- q78
@@ -1942,17 +1912,9 @@ object LlmQueries {
        |  JOIN buck b ON b.bucket = a.bucket
        |  JOIN flags fb ON fb.vec_id = b.vec_id
        |  WHERE (NOT fb.incoming) OR b.vec_id < a.vec_id),
-       |dt AS (
-       |  SELECT c.vec_id, c.blocker, na.nsq AS qn, nb.nsq AS bn,
-       |    CAST(sum(na.v[i] * nb.v[i]) AS BIGINT) AS dot
-       |  FROM cand c
-       |  JOIN nn na ON na.vec_id = c.vec_id
-       |  JOIN nn nb ON nb.vec_id = c.blocker,
-       |       unnest(generate_series(1, len(na.v))) t(i)
-       |  GROUP BY c.vec_id, c.blocker, na.nsq, nb.nsq),
+       |${pairCosineCtes("cand", "vec_id", "blocker")},
        |rejected AS (
-       |  SELECT DISTINCT vec_id FROM dt
-       |  WHERE CAST(dot AS DOUBLE) / sqrt(CAST(qn AS DOUBLE)) / sqrt(CAST(bn AS DOUBLE)) >= 0.4)
+       |  SELECT DISTINCT vec_id FROM cand_cos WHERE cosine >= $NearDupCosine)
        |SELECT f.vec_id, buck.bucket
        |FROM flags f
        |JOIN buck ON buck.vec_id = f.vec_id
@@ -2455,17 +2417,9 @@ object LlmQueries {
        |  JOIN buck b ON b.bucket = a.bucket
        |  JOIN grp gb ON gb.vec_id = b.vec_id
        |  WHERE gb.g < ga.g OR (gb.g = ga.g AND b.vec_id < a.vec_id)),
-       |dt AS MATERIALIZED (
-       |  SELECT c.vec_id, c.blocker, na.nsq AS qn, nb.nsq AS bn,
-       |    CAST(sum(na.v[i] * nb.v[i]) AS BIGINT) AS dot
-       |  FROM cand c
-       |  JOIN nn na ON na.vec_id = c.vec_id
-       |  JOIN nn nb ON nb.vec_id = c.blocker,
-       |       unnest(generate_series(1, len(na.v))) t(i)
-       |  GROUP BY c.vec_id, c.blocker, na.nsq, nb.nsq),
+       |${pairCosineCtes("cand", "vec_id", "blocker")},
        |conf AS MATERIALIZED (
-       |  SELECT vec_id, blocker FROM dt
-       |  WHERE CAST(dot AS DOUBLE) / sqrt(CAST(qn AS DOUBLE)) / sqrt(CAST(bn AS DOUBLE)) >= 0.4),
+       |  SELECT vec_id, blocker FROM cand_cos WHERE cosine >= $NearDupCosine),
        |${sequentialAdmissionCtes("vec_id", n, horizon)}
        |SELECT out.vec_id, out.batch, buck.bucket
        |FROM out JOIN buck ON buck.vec_id = out.vec_id

@@ -1927,9 +1927,7 @@ object StreamGateQueries {
           val lateSv = LlmQueries.vectorSketch(Tables.embeddings(s, dir))
             .join(result.filter($"batch" > ExpiryHorizon).select($"vec_id"), "vec_id")
           val reopened = lateSv.join(corpusFrame, "bucket")
-            .withColumn("cosine", graft.operators.VectorOps.cosineFromParts(
-              graft.operators.VectorOps.dotL($"v", $"bv"), $"nsq", $"bn"))
-            .filter($"cosine" >= 0.4)
+            .filter(LlmQueries.nearIndexRow)
             .select($"vec_id").distinct().count()
           require(reopened > 0,
             s"$tag must admit at least one post-expiry corpus near-duplicate, got none")

@@ -515,19 +515,17 @@ class BucketingSpec extends AnyFunSuite with LocalSpark {
 
   test("embedding admission probes a bucketed corpus LSH index with zero exchanges (q80's 100 TB shape)") {
     val ss = spark; import ss.implicits._
-    import graft.operators.{Sampling, VectorOps}
+    import graft.operators.Sampling
+    import graft.queries.LlmQueries
     // completes the standing-index discipline across the third admission
     // modality (q73 fingerprints, q75 band keys, here sign-LSH vector
     // buckets): the corpus's bucket index is bucketBy(bucket) at ingest,
     // so the per-batch candidate probe needs no corpus-side shuffle.
-    // Same bucketing spelling as the gate (VectorOps.signLshBucket).
-    val sv = Tables.embeddings(spark, sf)
-      .select($"vec_id", VectorOps.scaled($"embedding").as("v"))
-      .withColumn("nsq", VectorOps.normSqL($"v"))
-      .withColumn("bucket", VectorOps.signLshBucket($"v", VectorOps.rademacherPlanes(4, 64)))
+    // Same sketch and index-row spelling as the gate
+    // (LlmQueries.vectorSketch, LlmQueries.vectorIndexRows).
+    val sv = LlmQueries.vectorSketch(Tables.embeddings(spark, sf))
       .withColumn("incoming", Sampling.uniform01($"vec_id") < 0.3)
-    sv.filter(!$"incoming")
-      .select($"vec_id".as("blocker"), $"bucket", $"v".as("bv"), $"nsq".as("bn"))
+    LlmQueries.vectorIndexRows(sv.filter(!$"incoming"))
       .write.bucketBy(4, "bucket").sortBy("bucket")
       .mode("overwrite").saveAsTable("corpus_vec_ix")
     sv.filter($"incoming").select($"vec_id", $"bucket", $"v", $"nsq")

@@ -78,17 +78,35 @@ class LlmQueriesSpec extends AnyFunSuite with LocalSpark {
   }
 
   test("ANN results are a subset-consistent projection of brute force within the bucket") {
-    // For each query, q19's top-1 must have cosine <= q18's top-1 (brute
-    // force searches a superset), and each q19 neighbor's cosine must
-    // appear among the exact cosines of same-bucket vectors.
+    // Per ANN gate: every returned (qid, neighbor_id, cosine) carries the
+    // pair's exact integer-scaled cosine, and each query's top-1 cosine is
+    // <= q18's top-1 (brute force searches a superset). q31 is q18
+    // re-ranked by the native top-k: the same rows minus the rank column.
     val ss = spark; import ss.implicits._
-    val bf = LlmQueries.q18CosineTopK(spark, sf)
-      .filter($"rank" === 1).select($"qid", $"cosine")
+    val sv = LlmQueries.vectorSketch(Tables.embeddings(spark, sf))
+    val q18 = LlmQueries.q18CosineTopK(spark, sf)
+    val bf = q18.filter($"rank" === 1).select($"qid", $"cosine")
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val ann = LlmQueries.q19AnnLsh(spark, sf)
-      .filter($"rank" === 1).select($"qid", $"cosine")
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    ann.foreach { case (qid, c) => assert(c <= bf(qid) + 1e-12) }
+    Seq(
+      "q19" -> LlmQueries.q19AnnLsh(spark, sf),
+      "q30" -> LlmQueries.q30AnnMultiprobe(spark, sf),
+      "q32" -> LlmQueries.q32AnnIvf(spark, sf)
+    ).foreach { case (gate, ann) =>
+      val inexact = ann
+        .join(sv.select($"vec_id".as("qid"), $"v".as("qv"), $"nsq".as("qn")), "qid")
+        .join(sv.select($"vec_id".as("neighbor_id"), $"v", $"nsq"), "neighbor_id")
+        .filter(VectorOps.cosineFromParts(VectorOps.dotL($"qv", $"v"), $"qn", $"nsq") =!= $"cosine")
+        .select($"qid", $"neighbor_id", $"cosine").collect()
+      assert(inexact.isEmpty, s"$gate rows whose cosine is not the pair's exact cosine: ${inexact.mkString(", ")}")
+      val top1 = ann.groupBy($"qid").agg(max($"cosine"))
+        .collect().map(r => r.getLong(0) -> r.getDouble(1))
+      assert(top1.nonEmpty, s"$gate returned no neighbours")
+      top1.foreach { case (qid, c) =>
+        assert(c <= bf(qid) + 1e-12, s"$gate qid $qid top-1 $c exceeds brute force ${bf(qid)}")
+      }
+    }
+    assert(LlmQueries.q31TopkNative(spark, sf).collect().toSeq ===
+      q18.drop("rank").collect().toSeq)
   }
 
   test("ANN recall@3 vs exact top-k: multi-probe dominates single-probe; floors hold") {
